@@ -30,7 +30,10 @@ Dataflow (all Catalyst-planned except the fused parse kernel):
    regex compiled once per worker. ``matched = fields IS NOT NULL``
    reproduces the reference's Option<Matches> exactly. The original
    ``tokens`` column passes through untouched (per-row token-array
-   equality invariant — never re-encoded from text).
+   equality invariant — never re-encoded from text). The counts-only
+   query (``route_match_counts``) instead runs the mapInArrow counting
+   kernel: it returns per-partition ``(route, matched, n)`` counts, so
+   no per-row output crosses Python → JVM.
 5. **Fan-out sinks**: per (route, pattern) parquet sink, written via a
    staging directory + atomic rename so a crashed unit never leaves
    half-committed rows (the Iceberg-snapshot-commit analogue; with an
@@ -205,24 +208,25 @@ def route_match_counts(
     registry: Optional[GrokRegistry] = None,
     alias_only: bool = True,
     salt_buckets: Optional[int] = None,
-    parse_partitions: Optional[int] = None,
 ) -> DataFrame:
     """Transform-only composition of the pipeline: enrich + parse all
     routed sources and return per-(route, matched) counts. No sinks, no
     actions — callers trigger execution. This is the flagship query.
 
     Single-pass plan: one scan, one broadcast join, one multi-pattern
-    parse kernel, one partial+final count aggregation. Per-pattern
+    counting kernel, one partial+final sum aggregation. Per-pattern
     dispatch happens inside the kernel (dict lookup) instead of as N
     filtered plan branches (N scans). The kernel runs via mapInArrow:
     the token lists cross the JVM->Python boundary as one flat Arrow
     buffer + offsets, decoded with a single slice per row (the pandas
     bridge would materialize a numpy array per row, which costs more
-    than the regex match itself — measured +20% end-to-end). No
-    pre-parse shuffle by default — the scan splitter balances bytes per
-    task; pass ``salt_buckets`` to force a salted repartition for
-    file-clustered pathological skew (costs a row->Arrow conversion,
-    see module docstring)."""
+    than the regex match itself — measured +20% end-to-end). Only
+    per-partition ``(route, matched, n)`` counts come back; no per-row
+    output crosses Python->JVM. No pre-parse shuffle by default — the
+    scan splitter balances bytes per task; pass ``salt_buckets`` to
+    force a salted repartition (into ``defaultParallelism`` partitions)
+    for file-clustered pathological skew (costs a row->Arrow
+    conversion, see module docstring)."""
     from grokspark.udfs import grok_parse_arrow_kernel
 
     registry = registry or GrokRegistry.with_default_patterns()
@@ -231,14 +235,13 @@ def route_match_counts(
         F.col("route").isNotNull()
     )
 
-    nparts = parse_partitions or spark.sparkContext.defaultParallelism
     compiled_by_name = {
         name: registry.compile(expr, with_alias_only=alias_only)
         for name, expr in datagen.pattern_exprs().items()
     }
     if salt_buckets:
         enriched = enriched.repartition(
-            nparts,
+            spark.sparkContext.defaultParallelism,
             F.col("source"),
             F.pmod(F.xxhash64("doc_id"), F.lit(salt_buckets)),
         )
@@ -247,7 +250,7 @@ def route_match_counts(
         enriched.select("route", "pattern_name", "tokens")
         .mapInArrow(kernel, ddl)
         .groupBy("route", "matched")
-        .agg(F.count(F.lit(1)).alias("n"))
+        .agg(F.sum("n").alias("n"))
         .orderBy("route", "matched")
     )
 

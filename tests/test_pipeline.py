@@ -63,6 +63,40 @@ def test_route_match_counts_vs_oracle(spark, seq_df, oracle):
         assert got.get((route, False), 0) == counts["unmatched"], route
 
 
+def test_route_match_counts_across_batches_and_partitions(spark, corpus, oracle):
+    """The kernel counts per partition across many small Arrow batches;
+    the summed counts must equal the oracle's, with one partition
+    empty. An empty input gives an empty result."""
+    schema = "doc_id string, tokens array<int>, n_tok int, source string"
+    sc = spark.sparkContext
+    rdd = (
+        sc.parallelize(corpus[:250], 2)
+        .union(sc.parallelize([], 1))
+        .union(sc.parallelize(corpus[250:], 3))
+    )
+    df = spark.createDataFrame(rdd, schema)
+    assert df.rdd.glom().map(len).collect()[2] == 0
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "7")
+    try:
+        got = {
+            (r["route"], r["matched"]): r["n"]
+            for r in route_match_counts(spark, df).collect()
+        }
+        empty = route_match_counts(spark, spark.createDataFrame([], schema)).collect()
+    finally:
+        spark.conf.set(key, old)
+    want = {
+        (route, matched): n
+        for route, counts in oracle["sink_counts"].items()
+        for matched, n in ((True, counts["matched"]), (False, counts["unmatched"]))
+        if n
+    }
+    assert got == want
+    assert empty == []
+
+
 def test_full_pipeline_counts_and_invariants(spark, seq_df, corpus, oracle, tmp_path):
     out_dir = str(tmp_path / "out")
     pipe = GrokPipeline(

@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import contextlib
 import io
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -42,7 +43,8 @@ def test_enrich_join_is_broadcast(spark, sf_dir):
 
 def test_route_counts_plan_shape(spark):
     """Flagship plan: broadcast enrich, NO exchange before the Arrow
-    parse stage, partial+final aggregation after it."""
+    parse stage, partial+final aggregation after it, and only counts
+    (no per-row fields map) coming out of the Arrow stage."""
     import __spark_entry__ as entry
     from grokspark.pipeline import route_match_counts
 
@@ -61,6 +63,10 @@ def test_route_counts_plan_shape(spark):
         l for l in below_parse.splitlines() if "Exchange" in l and "BroadcastExchange" not in l
     ]
     assert not shuffles_below, shuffles_below
+    # the MapInArrow node's output: per-partition counts, no fields map
+    args = re.search(r"\(\d+\) MapInArrow\n.*\nArguments: .*, \[([^\]]*)\]", plan)
+    assert args, plan
+    assert [a.split("#")[0] for a in args.group(1).split(", ")] == ["route", "matched", "n"]
 
 
 def test_route_counts_with_salt_adds_exactly_one_exchange(spark):

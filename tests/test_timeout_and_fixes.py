@@ -95,42 +95,54 @@ def test_router_status_udf_reports_timeouts(spark, hostile):
     assert by_idx[4]["fields"] is None and by_idx[4]["timed_out"] is False
 
 
-def test_arrow_kernel_null_tokens_and_timeouts(spark, hostile):
-    from grokspark.udfs import grok_parse_arrow_kernel
-
-    kernel, ddl = grok_parse_arrow_kernel(
-        {"pat": hostile}, timeout=TIMEOUT, with_status=True
-    )
-    data = [
-        ("r", "pat", None),  # NULL tokens: no-match, NOT empty-string match
-        ("r", "pat", list(OK_LINE.encode())),
-        ("r", "pat", list(HOSTILE_LINE.encode())),
-    ]
+def _kernel_counts(spark, kernel, ddl, data) -> dict:
+    """Run the counting kernel over ``(route, pattern_name, tokens)``
+    rows and fold its per-partition counts into {(route, matched): n}."""
     df = spark.createDataFrame(
         data, schema="route string, pattern_name string, tokens array<int>"
     )
-    rows = df.mapInArrow(kernel, ddl).collect()
-    assert [r["matched"] for r in rows] == [False, True, False]
-    assert [r["timed_out"] for r in rows] == [False, False, True]
-    assert rows[0]["fields"] is None
-    assert rows[1]["fields"]["f"] == "ok"
+    counts: dict = {}
+    for r in df.mapInArrow(kernel, ddl).collect():
+        key = (r["route"], r["matched"])
+        counts[key] = counts.get(key, 0) + r["n"]
+    return counts
+
+
+def test_arrow_kernel_null_tokens_and_timeouts(spark, hostile):
+    from grokspark.udfs import grok_parse_arrow_kernel
+
+    kernel, ddl = grok_parse_arrow_kernel({"pat": hostile}, timeout=TIMEOUT)
+    data = [
+        ("null", "pat", None),  # NULL tokens: no-match, NOT empty-string match
+        ("ok", "pat", list(OK_LINE.encode())),
+        ("hostile", "pat", list(HOSTILE_LINE.encode())),  # timeout: no-match
+    ]
+    assert _kernel_counts(spark, kernel, ddl, data) == {
+        ("null", False): 1,
+        ("ok", True): 1,
+        ("hostile", False): 1,
+    }
 
 
 def test_arrow_kernel_null_tokens_without_status(spark, registry):
     """Bare GREEDYDATA matches empty text — a NULL tokens row must still
-    report no-match (the round-1 validity-mask bug)."""
+    count as no-match (the round-1 validity-mask bug)."""
     from grokspark.udfs import grok_parse_arrow_kernel
 
     greedy = registry.compile("%{GREEDYDATA:all}", with_alias_only=True)
     kernel, ddl = grok_parse_arrow_kernel({"pat": greedy})
-    df = spark.createDataFrame(
-        [("r", "pat", None), ("r", "pat", list(b"hello"))],
-        schema="route string, pattern_name string, tokens array<int>",
-    )
-    rows = df.mapInArrow(kernel, ddl).collect()
-    assert [r["matched"] for r in rows] == [False, True]
-    assert rows[0]["fields"] is None
-    assert rows[1]["fields"]["all"] == "hello"
+    data = [
+        ("null", "pat", None),
+        ("hello", "pat", list(b"hello")),
+        ("empty", "pat", []),  # an empty line is text, and GREEDYDATA matches it
+        ("unknown", "nope", list(b"hello")),
+    ]
+    assert _kernel_counts(spark, kernel, ddl, data) == {
+        ("null", False): 1,
+        ("hello", True): 1,
+        ("empty", True): 1,
+        ("unknown", False): 1,
+    }
 
 
 # -- sre dialect translation (context-aware) ----------------------------------
