@@ -1198,10 +1198,11 @@ def q_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact integer or an exactly-representable literal; the oracle SQL
     mirrors the IEEE op order, and the integer micro-unit score
     absorbs ln/sum-order ulps."""
+    from grokspark.datagen import local_dim
     from grokspark.operators.retrieval import bm25_topk
 
     docs = _read(spark, sf_dir, "documents")
-    queries = spark.createDataFrame(_BM25_QUERIES, "query_id string, text string")
+    queries = local_dim(spark, _BM25_QUERIES, "query_id string, text string")
     return bm25_topk(docs, queries, k=10).select(
         "query_id", "rank", "doc_id", "score_micro"
     )
@@ -1642,6 +1643,7 @@ def q_ann_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     dependent floats, so the gate checks the property a user relies on
     — the probe search finds the true neighbors — with enough margin
     (nprobe=6 of 8 cells) that k-means tie jitter cannot flip it."""
+    from grokspark.datagen import local_dim
     from grokspark.operators import (
         ann_brute_force_topk,
         build_ivf_index,
@@ -1680,7 +1682,7 @@ def q_ann_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).collect()
         }
         rows.append((qid, len(exact & approx) >= IVF_TRAINED_MIN_HITS))
-    return spark.createDataFrame(rows, "query_id int, recall_ok boolean")
+    return local_dim(spark, rows, "query_id int, recall_ok boolean")
 
 
 @functools.lru_cache(maxsize=1)

@@ -272,5 +272,35 @@ def sequences_df(spark, n: int, partitions: Optional[int] = None, start: int = 0
     )
 
 
+def local_dim(spark, rows, schema):
+    """A small driver-side table as a ``LocalRelation``.
+
+    ``spark.createDataFrame(list)`` plans as a ``LogicalRDD`` over a
+    Python RDD, so every query that reads it (a broadcast build side
+    included) starts a Python-worker job first. An Arrow table becomes
+    a ``LocalRelation`` that the JVM serves from the plan itself.
+    ``rows`` are dicts keyed by column name or tuples in schema order;
+    ``schema`` is a ``StructType`` or a DDL string."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    if not isinstance(schema, StructType):
+        schema = StructType.fromDDL(schema)
+    names = schema.names
+    records = [r if isinstance(r, dict) else dict(zip(names, r)) for r in rows]
+    table = pa.Table.from_pylist(records, schema=to_arrow_schema(schema))
+    return spark.createDataFrame(table, schema)
+
+
+def routes_dim(spark, rows: list[dict]):
+    """The routes dimension for ``rows`` (dicts, e.g. ``routes_rows()``)
+    as a ``LocalRelation``. Its schema is the one
+    ``spark.createDataFrame(rows)`` would infer — names, order and types,
+    so a key that first appears in a later row still comes last — and
+    join outputs and sink files keep their layout."""
+    return local_dim(spark, rows, spark._inferSchemaFromList(rows))
+
+
 def routes_df(spark, sink_root: str = "sinks"):
-    return spark.createDataFrame(routes_rows(sink_root))
+    return routes_dim(spark, routes_rows(sink_root))

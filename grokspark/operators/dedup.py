@@ -24,6 +24,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
+from grokspark.datagen import local_dim
+
 __all__ = [
     "exact_dedup",
     "ngrams",
@@ -351,6 +353,23 @@ def _mask_aggs(n_slots: int = _MASK_SLOTS) -> list:
     ]
 
 
+def _jaccard_precheck(
+    na: Column, nb: Column, union_lb: Column, threshold: float
+) -> Column:
+    """True unless an exact upper bound puts the pair's jaccard below
+    ``threshold``: jaccard <= (na+nb-P)/P with P a union lower bound
+    (the OR-mask popcount), and jaccard <= min/max. Each bound's right
+    side gives up ~1e-9 of its size, because fl((1+t)*P) can round
+    above the exact product (t=0.1, P=50 gives 55.00000000000001) and
+    would drop a pair whose jaccard is exactly ``threshold`` before the
+    exact verify sees it. The slack only admits pairs the verify then
+    rejects."""
+    hi = F.greatest(na, nb)
+    return (
+        (na + nb).cast("double") >= (1.0 + threshold) * union_lb - 1e-9 * union_lb
+    ) & (F.least(na, nb).cast("double") >= threshold * hi - 1e-9 * hi)
+
+
 def minhash_lsh_pairs(
     df: DataFrame,
     threshold: float = 0.5,
@@ -489,16 +508,7 @@ def minhash_lsh_pairs(
     prechecked = (
         pre.join(pa, "id_a")
         .join(pb, "id_b")
-        # jaccard <= (na+nb-P)/P  (exact: P is a union lower bound)
-        .filter(
-            (F.col("na") + F.col("nb")).cast("double")
-            >= (1.0 + threshold) * popcount_or
-        )
-        # jaccard <= min/max (exact size-ratio bound)
-        .filter(
-            F.least("na", "nb").cast("double")
-            >= threshold * F.greatest("na", "nb")
-        )
+        .filter(_jaccard_precheck(F.col("na"), F.col("nb"), popcount_or, threshold))
     )
     cands = prechecked.select("id_a", "id_b").dropDuplicates()
     if materialize:
@@ -871,14 +881,13 @@ def duplicate_clusters(
                 lo, hi = (ra, rb) if ra < rb else (rb, ra)
                 parent[hi] = lo
         rows = [(x, find(x)) for x in parent]
-        spark = pairs.sparkSession
         schema = T.StructType(
             [
                 T.StructField("id", id_type),
                 T.StructField("cluster_id", id_type),
             ]
         )
-        return spark.createDataFrame(rows, schema)
+        return local_dim(pairs.sparkSession, rows, schema)
     sym = edges.unionByName(
         edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     ).localCheckpoint()
@@ -1235,7 +1244,8 @@ def semdedup_lsh(
         # this probe job entirely
         probe = df.select(F.size(F.col(vec_col))).head()
         if probe is None:
-            return df.sparkSession.createDataFrame(
+            return local_dim(
+                df.sparkSession,
                 [],
                 T.StructType(
                     [

@@ -9,8 +9,10 @@ Dataflow (all Catalyst-planned except the fused parse kernel):
    source``, and Catalyst prunes columns + pushes the source filter
    into the scan).
 2. **Enrich**: broadcast hash-join against the small ``routes`` dim
-   (source → route, pattern_name, sink_path). Rows with no dim entry
-   are unroutable and land in a dead-letter sink.
+   (source → route, pattern_name, sink_path), built as a JVM-local
+   ``LocalRelation`` (``datagen.routes_dim``) so no Python job feeds
+   the broadcast. Rows with no dim entry are unroutable and land in a
+   dead-letter sink.
 3. **Skew**: the corpus is deliberately skewed (one hot source ~70%).
    The *primary* skew control is the scan splitter: size-balanced input
    splits (spark.sql.files.maxPartitionBytes / Iceberg split planning)
@@ -210,11 +212,18 @@ def route_match_counts(
     salt_buckets: Optional[int] = None,
 ) -> DataFrame:
     """Transform-only composition of the pipeline: enrich + parse all
-    routed sources and return per-(route, matched) counts. No sinks, no
-    actions — callers trigger execution. This is the flagship query.
+    routed sources and return per-(route, matched) counts, in no
+    particular order (callers fold the rows into a dict or sort them
+    themselves). No sinks, no actions — callers trigger execution. This
+    is the flagship query.
 
     Single-pass plan: one scan, one broadcast join, one multi-pattern
-    counting kernel, one partial+final sum aggregation. Per-pattern
+    counting kernel, one partial+final sum aggregation. The routes
+    dimension is a ``LocalRelation`` (``datagen.local_dim``), so its
+    broadcast starts no Python job and the only Python work is the
+    parse kernel; with no sort, a warm ``collect()`` runs three Spark
+    jobs: the JVM-only broadcast build, the scan→parse→partial-sum
+    stage and the final sum. Per-pattern
     dispatch happens inside the kernel (dict lookup) instead of as N
     filtered plan branches (N scans). The kernel runs via mapInArrow:
     the token lists cross the JVM->Python boundary as one flat Arrow
@@ -251,7 +260,6 @@ def route_match_counts(
         .mapInArrow(kernel, ddl)
         .groupBy("route", "matched")
         .agg(F.sum("n").alias("n"))
-        .orderBy("route", "matched")
     )
 
 
@@ -300,7 +308,7 @@ class GrokPipeline:
         manifest = _Manifest(os.path.join(cfg.out_dir, "manifest.json"))
         result = PipelineResult()
 
-        routes_df = F.broadcast(self.spark.createDataFrame(self.routes))
+        routes_df = F.broadcast(datagen.routes_dim(self.spark, self.routes))
         enriched = seq_df.join(routes_df, "source", "left")
 
         if cfg.range_units:
@@ -593,12 +601,14 @@ class GrokPipeline:
                 continue
             pending.append((i, unit, unit_files, files_sig))
 
-        def run_unit(i: int, unit: str, unit_files: list) -> dict:
-            """Scan, parse, stage-write and PUBLISH one range; returns
-            its observe metrics. Touches only unit-local paths, so
-            units can run concurrently (staging dirs and publish
-            destinations are keyed by unit; parent makedirs are
-            exist_ok)."""
+        def run_unit(
+            i: int, unit: str, unit_files: list, files_sig: str
+        ) -> tuple[dict, list]:
+            """Scan, parse, stage-write, PUBLISH and mark one range;
+            returns its observe metrics and lineage. Touches only
+            unit-local paths, so units can run concurrently (staging
+            dirs and publish destinations are keyed by unit; parent
+            makedirs are exist_ok; marking is lock-serialized)."""
             df = self.spark.read.parquet(*unit_files)
             parsed = (
                 df.join(routes_df, "source", "left")
@@ -652,7 +662,23 @@ class GrokPipeline:
 
             if cfg.write_sinks:
                 self._publish_range(unit, i)
-            return metrics
+            lineage = []
+            for p in patterns:
+                rows_in = metrics[f"m__{p}"] + metrics[f"u__{p}"]
+                if rows_in:
+                    lineage.append(
+                        {
+                            "pattern_name": p,
+                            "part_id": i,
+                            "rows_in": rows_in,
+                            "rows_matched": metrics[f"m__{p}"],
+                            "rows_timeout": metrics[f"t__{p}"],
+                        }
+                    )
+            manifest.mark(
+                unit, metrics=metrics, lineage=lineage, files_sig=files_sig
+            )
+            return metrics, lineage
 
         # Overlap the independent range jobs from a small driver thread
         # pool (each range's scan covers only its file slice, so a
@@ -660,41 +686,25 @@ class GrokPipeline:
         # left most cores idle — measured 5.7 s -> ~2.5 s for 4 ranges
         # of a 100k-row input at local[32]). Spark's scheduler runs
         # concurrent jobs FIFO, which is exactly the tail back-fill
-        # behavior wanted here. Manifest marking and result
-        # accumulation happen AFTER the pool, in range order: lineage
-        # output order stays deterministic, and a unit is marked done
-        # only once its publish succeeded (same crash exposure as the
-        # sequential loop — a published-but-unmarked range just
-        # republishes on resume, which _publish_range makes
-        # idempotent).
+        # behavior wanted here. Each unit is marked done from its
+        # worker right after its publish succeeds, so a failure in one
+        # range never costs the others their manifest record (a
+        # published-but-unmarked range just republishes on resume,
+        # which _publish_range makes idempotent). Result accumulation
+        # happens AFTER the pool, in range order, so lineage output
+        # order stays deterministic.
         if pending:
             from concurrent.futures import ThreadPoolExecutor
 
             with ThreadPoolExecutor(
                 max_workers=min(4, len(pending))
             ) as pool:
-                futs = [
-                    (i, unit, files_sig, pool.submit(run_unit, i, unit, unit_files))
+                futs = {
+                    unit: pool.submit(run_unit, i, unit, unit_files, files_sig)
                     for i, unit, unit_files, files_sig in pending
-                ]
-            for i, unit, files_sig, fut in futs:
-                metrics = fut.result()
-                lineage = []
-                for p in patterns:
-                    rows_in = metrics[f"m__{p}"] + metrics[f"u__{p}"]
-                    if rows_in:
-                        entry = {
-                            "pattern_name": p,
-                            "part_id": i,
-                            "rows_in": rows_in,
-                            "rows_matched": metrics[f"m__{p}"],
-                            "rows_timeout": metrics[f"t__{p}"],
-                        }
-                        lineage.append(entry)
-                accumulate(unit, metrics, lineage)
-                manifest.mark(
-                    unit, metrics=metrics, lineage=lineage, files_sig=files_sig
-                )
+                }
+            for unit, fut in futs.items():
+                accumulate(unit, *fut.result())
 
     def _validate_ranged_input(self, seq_df: DataFrame) -> list[str]:
         """Ranged mode re-plans the scan per file-range, so the input

@@ -46,6 +46,28 @@ def test_minhash_lsh_recall_vs_exact(docs):
         assert len(lsh) / len(exact) >= 0.9
 
 
+@pytest.mark.parametrize(
+    "t, na, nb, union_lb, keep",
+    [
+        (0.1, 27, 28, 50, True),  # (1 + 0.1) * 50 = 55.00000000000001 > na + nb
+        (0.14, 7, 50, 40, True),  # 0.14 * 50 = 7.000000000000001 > min(na, nb)
+        (0.1, 20, 20, 50, False),  # 40 < 55: the union bound is below t
+    ],
+)
+def test_jaccard_precheck_keeps_threshold_boundary(spark, t, na, nb, union_lb, keep):
+    """A pair whose jaccard bound equals the threshold exactly must reach
+    the exact verify, although fl((1+t)*P) and fl(t*max) can round
+    above the exact products."""
+    from grokspark.operators.dedup import _jaccard_precheck
+
+    row = (
+        spark.createDataFrame([(na, nb, union_lb)], "na int, nb int, p int")
+        .select(_jaccard_precheck(F.col("na"), F.col("nb"), F.col("p"), t).alias("k"))
+        .head()
+    )
+    assert row["k"] is keep
+
+
 def test_ann_lsh_recall_vs_brute_force(emb):
     from grokspark.operators import ann_brute_force_topk, lsh_bucketed_topk
 
@@ -891,6 +913,15 @@ def test_semdedup_lsh_matches_fold_twin(spark, emb):
     assert [tuple(r) for r in fast] == [tuple(r) for r in twin]
     kept = sum(r["kept"] for r in fast)
     assert 0 < kept < len(fast)
+
+
+def test_semdedup_lsh_empty_input(emb):
+    """An empty input returns the empty, typed decision table."""
+    from grokspark.operators import semdedup_lsh
+
+    out = semdedup_lsh(emb.limit(0), n_planes=4, threshold=0.3)
+    assert out.schema.simpleString() == "struct<vec_id:bigint,cell:int,kept:int>"
+    assert out.collect() == []
 
 
 def test_dsir_weights_match_python_twin(spark, docs):

@@ -277,6 +277,82 @@ def test_ranged_mode_resume_per_range(spark, seq_parquet, oracle, tmp_path):
     assert third.sink_counts == first.sink_counts
 
 
+def test_ranged_mode_marks_published_range_when_another_fails(
+    spark, seq_parquet, oracle, tmp_path, monkeypatch
+):
+    """A range that published is marked done even when an earlier
+    range's job then fails: the resumed run skips it and re-runs only
+    the failed range."""
+    import threading
+
+    out_dir = str(tmp_path / "ranged")
+    src = spark.read.parquet(seq_parquet)
+    cfg = PipelineConfig(out_dir=out_dir, range_units=2)
+    real_publish = GrokPipeline._publish_range
+    published: list[str] = []
+    range1_published = threading.Event()
+
+    def failing_publish(self, unit, range_id):
+        if unit == "range_0000":
+            assert range1_published.wait(120)
+            raise RuntimeError("injected range_0000 failure")
+        real_publish(self, unit, range_id)
+        published.append(unit)
+        range1_published.set()
+
+    monkeypatch.setattr(GrokPipeline, "_publish_range", failing_publish)
+    with pytest.raises(RuntimeError, match="injected"):
+        GrokPipeline(spark, cfg).run(src)
+    assert published == ["range_0001"]
+
+    def recording_publish(self, unit, range_id):
+        real_publish(self, unit, range_id)
+        published.append(unit)
+
+    monkeypatch.setattr(GrokPipeline, "_publish_range", recording_publish)
+    resumed = GrokPipeline(spark, cfg).run(src)
+    assert resumed.skipped_units == ["range_0001"]
+    assert published == ["range_0001", "range_0000"]
+    assert resumed.sink_counts == oracle["sink_counts"]
+    assert resumed.unroutable_count == oracle["unroutable"]
+
+
+def test_routes_dim_schema_matches_inferred(spark, seq_df, tmp_path, monkeypatch):
+    """The local routes dimension has exactly the columns (names, order,
+    types) and rows that ``spark.createDataFrame(rows)`` gives, for the
+    default routes and for a caller's list whose second row alone has
+    extra keys (one not a string) — so join outputs, sink files and
+    ``unroutable/`` keep their layout."""
+    from grokspark.datagen import routes_df, routes_dim
+
+    assert routes_df(spark).schema == spark.createDataFrame(routes_rows()).schema
+
+    custom = [
+        {"source": "elb", "route": "lb", "pattern_name": "pat_elb",
+         "sink_path": "sinks/lb"},
+        {"source": "syslog", "route": "infra", "pattern_name": "pat_syslog",
+         "sink_path": "sinks/infra", "priority": 2, "owner": "team-b"},
+    ]
+    inferred_dim = spark.createDataFrame(custom)
+    assert inferred_dim.columns[-2:] == ["owner", "priority"]
+    dim = routes_dim(spark, custom)
+    assert dim.schema == inferred_dim.schema
+    assert dim.collect() == inferred_dim.collect()
+    seen = {}
+    monkeypatch.setattr(
+        GrokPipeline,
+        "_run_single_pass",
+        lambda self, enriched, *a: seen.setdefault("enriched", enriched),
+    )
+    cfg = PipelineConfig(out_dir=str(tmp_path / "out"))
+    exprs = {"pat_elb": SOURCES["elb"][2], "pat_syslog": SOURCES["syslog"][2]}
+    GrokPipeline(spark, cfg, routes=custom, pattern_exprs=exprs).run(seq_df)
+    inferred = seq_df.join(inferred_dim, "source", "left")
+    assert seen["enriched"].schema == inferred.schema
+    dead = spark.read.parquet(str(tmp_path / "out" / "unroutable"))
+    assert dead.columns == ["doc_id", "tokens", "n_tok", "source"]
+
+
 def test_ranged_mode_timeout_lineage(spark, tmp_path):
     """A hostile line under a per-row timeout is reported as
     rows_timeout in lineage — distinct from genuine no-matches — and

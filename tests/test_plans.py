@@ -41,17 +41,45 @@ def test_enrich_join_is_broadcast(spark, sf_dir):
     assert "SortMergeJoin" not in plan
 
 
+def _subtree(tree: str, node: str) -> str:
+    """The first ``node`` line of a formatted-explain operator tree and
+    every line nested below it."""
+    def col(line: str) -> int:
+        return len(line) - len(line.lstrip(" :+-|"))
+
+    lines = tree.splitlines()
+    start = next(k for k, line in enumerate(lines) if node in line)
+    out = [lines[start]]
+    for line in lines[start + 1 :]:
+        if col(line) <= col(lines[start]):
+            break
+        out.append(line)
+    return "\n".join(out)
+
+
+def assert_dims_are_local(tree: str) -> None:
+    """The broadcast build side is a JVM-local table: no Python RDD
+    (``createDataFrame(list)`` plans as ``Scan ExistingRDD``, which
+    starts a Python-worker job per query)."""
+    build = _subtree(tree, "BroadcastExchange")
+    assert "LocalTableScan" in build, build
+    assert "ExistingRDD" not in build and "LogicalRDD" not in build, build
+
+
 def test_route_counts_plan_shape(spark):
-    """Flagship plan: broadcast enrich, NO exchange before the Arrow
-    parse stage, partial+final aggregation after it, and only counts
-    (no per-row fields map) coming out of the Arrow stage."""
+    """Flagship plan: broadcast enrich against a local dimension, NO
+    exchange before the Arrow parse stage, partial+final aggregation
+    after it, only counts (no per-row fields map) coming out of the
+    Arrow stage, and no sort of the result."""
     import __spark_entry__ as entry
     from grokspark.pipeline import route_match_counts
 
     seq = entry._grok_seq_df(spark)
-    plan = explain_str(route_match_counts(spark, seq))
+    df = route_match_counts(spark, seq)
+    plan = explain_str(df)
     tree = plan.split("\n\n")[0]  # the numbered operator tree
     assert "BroadcastHashJoin" in tree
+    assert_dims_are_local(tree)
     assert ("MapInArrow" in tree) or ("ArrowEvalPython" in tree)
     # partial+final count aggregation
     assert tree.count("HashAggregate") == 2
@@ -67,6 +95,58 @@ def test_route_counts_plan_shape(spark):
     args = re.search(r"\(\d+\) MapInArrow\n.*\nArguments: .*, \[([^\]]*)\]", plan)
     assert args, plan
     assert [a.split("#")[0] for a in args.group(1).split(", ")] == ["route", "matched", "n"]
+    # the executed plan neither sorts nor range-partitions the counts
+    df.collect()
+    executed = df._jdf.queryExecution().executedPlan().toString()
+    assert "isFinalPlan=true" in executed, executed
+    assert not re.search(r"\bSort\b", executed), executed
+    assert "rangepartitioning" not in executed, executed
+
+
+def test_route_counts_warm_call_job_count(spark):
+    """A warm ``route_match_counts(...).collect()`` runs at most three
+    Spark jobs: the dimension broadcast and the two aggregation stages
+    (a Python-RDD dimension and a trailing sort made it five)."""
+    import __spark_entry__ as entry
+    from grokspark.pipeline import route_match_counts
+
+    seq = entry._grok_seq_df(spark)
+    route_match_counts(spark, seq).collect()  # warm-up
+    sc = spark.sparkContext
+    group = "route_counts_job_count"
+    sc.setJobGroup(group, "warm route_match_counts collect")
+    try:
+        rows = route_match_counts(spark, seq).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert rows
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert 0 < len(jobs) <= 3, jobs
+
+
+def test_pipeline_run_enriches_against_local_dim(spark, tmp_path, monkeypatch):
+    """``GrokPipeline.run`` broadcasts its routes as a local table, not
+    a Python RDD. The seq input here is itself an ExistingRDD, so only
+    the broadcast subtree is checked."""
+    from grokspark.datagen import iter_rows
+    from grokspark.pipeline import GrokPipeline, PipelineConfig
+
+    seen = {}
+    monkeypatch.setattr(
+        GrokPipeline,
+        "_run_single_pass",
+        lambda self, enriched, *a: seen.setdefault("enriched", enriched),
+    )
+    seq = spark.createDataFrame(
+        list(iter_rows(50)), "doc_id string, tokens array<int>, n_tok int, source string"
+    )
+    cfg = PipelineConfig(out_dir=str(tmp_path / "out"), write_sinks=False)
+    GrokPipeline(spark, cfg).run(seq)
+    tree = explain_str(seen["enriched"]).split("\n\n")[0]
+    assert "ExistingRDD" in tree  # the seq side, outside the broadcast
+    assert "BroadcastHashJoin" in tree
+    assert_dims_are_local(tree)
 
 
 def test_route_counts_with_salt_adds_exactly_one_exchange(spark):
