@@ -124,14 +124,16 @@ def _grok_oracle_rows(n: int = GROK_N) -> dict[str, list[tuple]]:
 def _grok_text_df(spark: SparkSession, n: int = GROK_N) -> DataFrame:
     """The grok corpus as a (doc_id, source, text) document table —
     deterministic and sf-independent, so pure-Python VALUES oracles can
-    cover text operators DuckDB cannot express (SimHash, PNG decode)."""
-    from grokspark.datagen import iter_rows
+    cover text operators DuckDB cannot express (SimHash, PNG decode).
+    A ``LocalRelation`` (``local_dim``), so the queries over it start no
+    Python-RDD job."""
+    from grokspark.datagen import iter_rows, local_dim
 
     rows = [
         (r["doc_id"], r["source"], bytes(r["tokens"]).decode("utf-8"))
         for r in iter_rows(n)
     ]
-    return spark.createDataFrame(rows, schema="doc_id string, source string, text string")
+    return local_dim(spark, rows, "doc_id string, source string, text string")
 
 
 @functools.lru_cache(maxsize=1)

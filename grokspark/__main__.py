@@ -3,7 +3,7 @@
   python -m grokspark compile '%{HTTPD_COMBINEDLOG}' [--alias-only]
   python -m grokspark match '%{IPV4:ip} .*' 'text to match'
   python -m grokspark check                      # compile all builtins
-  python -m grokspark pipeline --input DIR --out DIR [--per-pattern | --range-units K]
+  python -m grokspark pipeline --input DIR --out DIR [--range-units K]
 """
 
 from __future__ import annotations
@@ -64,7 +64,6 @@ def cmd_pipeline(args) -> int:
     seq = read_sequences(spark, args.input)
     cfg = PipelineConfig(
         out_dir=args.out,
-        per_pattern=args.per_pattern,
         range_units=args.range_units,
         resume=not args.no_resume,
         salt_buckets=args.salt_buckets,
@@ -107,17 +106,11 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--input", required=True, help="sequences parquet dir")
     p.add_argument("--out", required=True, help="output dir (sinks + manifest)")
     p.add_argument(
-        "--per-pattern",
-        action="store_true",
-        help="opt-in finest-grained mode: one scan+commit per pattern "
-        "(default is single-pass: one scan, one dynamic-partition write)",
-    )
-    p.add_argument(
         "--range-units",
         type=int,
         default=None,
         help="unit = input file-range: K ranges, one total scan, "
-        "per-range resume (the huge-input configuration)",
+        "per-range resume (default: one unit over the whole input)",
     )
     p.add_argument("--no-resume", action="store_true")
     p.add_argument("--salt-buckets", type=int, default=None)

@@ -1,6 +1,6 @@
 """The north-rule job: scan → detokenize+parse → enrich → route →
-fan-out sinks → per-sink aggregate counts, with skew salting, lineage
-metrics, and checkpoint/resume.
+fan-out sinks → per-sink aggregate counts, with lineage metrics and
+checkpoint/resume.
 
 Dataflow (all Catalyst-planned except the fused parse kernel):
 
@@ -27,49 +27,49 @@ Dataflow (all Catalyst-planned except the fused parse kernel):
    so not disk). Reach for salting only when per-row parse cost varies
    wildly by key AND keys are file-clustered; prefer re-splitting the
    input otherwise. AQE skew-join splitting stays on for the join side.
-4. **Parse**: per route-pattern, the fused tokens→map pandas UDF
-   (grokspark.udfs) — one JVM↔Python Arrow round trip per batch,
-   regex compiled once per worker. ``matched = fields IS NOT NULL``
-   reproduces the reference's Option<Matches> exactly. The original
-   ``tokens`` column passes through untouched (per-row token-array
-   equality invariant — never re-encoded from text). The counts-only
-   query (``route_match_counts``) instead runs the mapInArrow counting
+4. **Parse**: one multi-pattern router pandas UDF
+   (``grok_parse_router_status_udf``) — one JVM↔Python Arrow round
+   trip per batch, regex compiled once per worker, the pattern picked
+   per row from the enriched ``pattern_name``. ``matched = fields IS
+   NOT NULL`` reproduces the reference's Option<Matches> exactly. The
+   original ``tokens`` column passes through untouched (per-row
+   token-array equality invariant — never re-encoded from text). Fields
+   stay in the raw string map; consumers apply typed extract casts
+   (``udfs.apply_extracts``) on read. The counts-only query
+   (``route_match_counts``) instead runs the mapInArrow counting
    kernel: it returns per-partition ``(route, matched, n)`` counts, so
    no per-row output crosses Python → JVM.
-5. **Fan-out sinks**: per (route, pattern) parquet sink, written via a
-   staging directory + atomic rename so a crashed unit never leaves
-   half-committed rows (the Iceberg-snapshot-commit analogue; with an
-   Iceberg catalog configured the same unit maps to one append commit).
-6. **Counts & lineage**: per-sink (matched/unmatched) counts are
-   computed from the *committed* sink files — not the in-flight
-   DataFrame — so retries can't double-count; a ``_part_id`` column
-   stamped at parse time gives per-partition lineage (rows in/matched
-   per parse partition) without recomputing the parse.
+5. **Fan-out sinks**: each unit writes once — one
+   ``partitionBy(_route_dir, _pattern_dir)`` write into a staging
+   directory — and then publishes by rename into
+   ``sinks/<route>/<pattern>/<unit>/`` and ``unroutable/<unit>/`` (the
+   dead-letter rows keep the enriched schema with a NULL route). A
+   crashed unit never leaves half-committed rows (the
+   Iceberg-snapshot-commit analogue; with an Iceberg catalog configured
+   the same unit maps to one append commit).
+6. **Counts & lineage** come from ``DataFrame.observe`` metrics
+   collected by the unit's write action itself, so no second pass
+   reads the data. They are recorded in the manifest only after the
+   unit's publish succeeds, so a crashed or retried unit never
+   double-counts. Lineage is one row per (pattern, unit); a per-row
+   regex ``timeout`` surfaces as ``rows_timeout``, distinct from
+   no-matches.
 7. **Resume**: a JSON manifest under the output dir records completed
-   units; a rerun skips them (idempotent).
+   units; a rerun skips them (idempotent), and a published-but-unmarked
+   unit simply republishes.
 
-Three execution modes (PipelineConfig):
+One unit model (``PipelineConfig.range_units``):
 
-- ``single_pass`` (DEFAULT): one scan, one multi-pattern router parse,
-  one dynamic-partition write. Fastest, one commit, coarse resume —
-  the scale-safe default for multi-pattern runs.
-- ``per_pattern=True`` (opt-in): one unit per (route, pattern) with
-  independent staged commits. Finest-grained resume, but each unit
-  filters the root scan — N patterns = N input scans. Keep for small
-  pattern sets / selective re-runs.
-- ``range_units=K``: **unit = input partition-range** — the 10^12-scale
-  design. The input file set is split into K size-balanced contiguous
-  ranges; each range is scanned ONCE, router-parsed for all patterns,
-  and committed independently (staging + rename per range). Total input
-  IO = one scan regardless of pattern count, resume granularity = K.
-  Counts and lineage come from ``DataFrame.observe`` metrics collected
-  by the write action itself (no committed re-read, no second pass);
-  they are recorded in the manifest only after the range's rename
-  commit succeeds, so a crashed/retried range never double-counts. A
-  per-row regex ``timeout`` surfaces as ``rows_timeout`` in lineage,
-  distinct from no-matches. On a real cluster the same unit maps to one
-  Iceberg append commit per range and counts come from the snapshot
-  summary — same keying, same discipline.
+- unset (default): one unit, ``input``, over the caller's DataFrame as
+  given — any plan works (``read_raw_lines``, cached or filtered
+  inputs).
+- ``range_units=K``: **unit = input file-range** — the 10^12-scale
+  design. The parquet input's file set is split into K size-balanced
+  contiguous ranges, each scanned once and committed independently;
+  total input IO is one scan regardless of pattern count, resume
+  granularity is K. Units overlap in a small driver thread pool. On a
+  real cluster each unit maps to one Iceberg append commit and counts
+  come from the snapshot summary — same keying, same discipline.
 """
 
 from __future__ import annotations
@@ -87,16 +87,9 @@ from pyspark.sql import functions as F
 
 from grokspark import datagen
 from grokspark.compiler import CompiledPattern, GrokRegistry
-from grokspark.udfs import (
-    apply_extracts,
-    grok_parse_map_udf,
-    grok_parse_router_status_udf,
-    grok_parse_router_udf,
-)
+from grokspark.udfs import grok_parse_router_status_udf
 
 __all__ = ["PipelineConfig", "PipelineResult", "GrokPipeline", "route_match_counts"]
-
-SALT_BUCKETS = 64
 
 
 @dataclass
@@ -105,31 +98,29 @@ class PipelineConfig:
     alias_only: bool = True
     # None (default) = no pre-parse shuffle; see module docstring
     salt_buckets: Optional[int] = None
-    # partitions for the parse stage; default = one task wave
-    # (parse is a Python-UDF stage: partitions beyond the worker pool
-    # cause worker churn — measured 3.4x slower at 2x cores locally)
+    # partitions of the salted repartition inside each unit; default =
+    # one task wave (parse is a Python-UDF stage: partitions beyond the
+    # worker pool cause worker churn — measured 3.4x slower at 2x cores)
     parse_partitions: Optional[int] = None
     # per-row regex timeout in seconds (None = reference-parity: unbounded)
     timeout: Optional[float] = None
     resume: bool = True
     # write sinks at all (False = counts-only dry run for benches)
     write_sinks: bool = True
-    # Mode selection, most specific wins: range_units > per_pattern >
-    # single_pass. The DEFAULT is single-pass (one scan, one
-    # multi-pattern router parse, one dynamic-partition write) — the
-    # scale-safe choice for multi-pattern runs, since the per-pattern
-    # mode re-scans the input once PER pattern. For 10^12-row inputs
-    # prefer range_units, which adds per-range resume and observe-based
-    # counts on top of the one total scan.
+    # True is the only mode; False selected the removed per-pattern mode
     single_pass: bool = True
-    # per_pattern=True: one unit per (route, pattern) with independent
-    # staging commits and per-unit resume (finest-grained durability /
-    # selective re-runs; costs one input scan per pattern — opt-in).
-    per_pattern: bool = False
     # range_units=K: unit = input file-range (K size-balanced contiguous
-    # ranges, each scanned once and committed independently) — one total
-    # input scan AND per-unit resume. Requires a file-backed input.
+    # ranges, each scanned once and committed independently). Requires a
+    # bare parquet input. None = one unit over the input as given.
     range_units: Optional[int] = None
+
+    def __post_init__(self) -> None:
+        if not self.single_pass:
+            raise ValueError(
+                "single_pass=False selected the per-pattern mode, which was "
+                "removed: every run scans each unit once and writes every "
+                "pattern's sink from that scan"
+            )
 
 
 @dataclass
@@ -140,11 +131,11 @@ class PipelineResult:
     unit_counts: dict[tuple[str, str], dict[str, int]] = field(default_factory=dict)
     unroutable_count: int = 0
     rows_in: int = 0
-    # list of {pattern_name, part_id, rows_in, rows_matched}
-    # (+ rows_timeout in ranged mode when a timeout is configured)
+    # one {pattern_name, part_id, rows_in, rows_matched, rows_timeout}
+    # per (pattern, unit); part_id is the unit's index
     lineage: list[dict] = field(default_factory=list)
     skipped_units: list[str] = field(default_factory=list)
-    # ranged mode: unit -> input files it scanned (disjoint; union = all
+    # range_units: unit -> input files it scanned (disjoint; union = all
     # input files — the scans-input-once evidence, asserted in tests)
     unit_files: dict[str, list[str]] = field(default_factory=dict)
     elapsed_sec: float = 0.0
@@ -184,8 +175,8 @@ class _Manifest:
 
         self.path = path
         self.state: dict[str, dict] = {}
-        # concurrent units (ranged overlap, dead-letter back-fill) may
-        # mark from driver threads; serialize the read-modify-dump
+        # concurrent units mark from driver threads; serialize the
+        # read-modify-dump
         self._lock = threading.Lock()
         if os.path.exists(path):
             with open(path, encoding="utf-8") as f:
@@ -291,277 +282,53 @@ class GrokPipeline:
             )
         return self._compiled[pattern_name]
 
-    # -- paths ----------------------------------------------------------
-
-    def _sink_dir(self, route: str, pattern_name: str) -> str:
-        return os.path.join(self.config.out_dir, "sinks", route, pattern_name)
-
     def _staging_dir(self, unit: str) -> str:
         return os.path.join(self.config.out_dir, "_staging", unit)
 
     # -- run --------------------------------------------------------------
 
     def run(self, seq_df: DataFrame) -> PipelineResult:
+        """Run every unit not yet in the manifest: each scans its input
+        once, parses every pattern, writes once, publishes, and is
+        marked with the observe metrics of that write."""
+        from pyspark.sql import Observation
+
         cfg = self.config
         t0 = time.monotonic()
         os.makedirs(cfg.out_dir, exist_ok=True)
         manifest = _Manifest(os.path.join(cfg.out_dir, "manifest.json"))
         result = PipelineResult()
 
-        routes_df = F.broadcast(datagen.routes_dim(self.spark, self.routes))
-        enriched = seq_df.join(routes_df, "source", "left")
-
+        # unit -> its input files (None: the caller's DataFrame as given)
+        units: dict[str, Optional[list[str]]] = {"input": None}
         if cfg.range_units:
-            self._run_ranged(seq_df, routes_df, manifest, result)
-            return self._finish(result, t0)
-
-        # --- dead-letter: rows whose source has no route -----------------
-        unit = "unroutable"
-        rec = manifest.done(unit) if cfg.resume else None
-        dead_letter_job = None
-        if rec:
-            result.unroutable_count = rec["rows"]
-            result.skipped_units.append(unit)
-        else:
-            unroutable = enriched.filter(F.col("route").isNull()).select(
-                "doc_id", "tokens", "n_tok", "source"
+            ranges = _split_files_by_size(
+                self._validate_ranged_input(seq_df), cfg.range_units
+            )
+            units = {f"range_{i:04d}": files for i, files in enumerate(ranges)}
+            result.unit_files = dict(units)
+        stale = sorted(set(manifest.state) - set(units)) if cfg.resume else []
+        if stale:
+            # e.g. a removed mode's `singlepass`, `unroutable` or
+            # `<route>/<pattern>` units, or another range split: their
+            # sinks use another layout or file assignment, and resuming
+            # would publish this run's units next to them
+            raise ValueError(
+                f"manifest records units this run does not make {stale[:4]} "
+                f"(written by another pipeline mode or range split) — rerun "
+                f"with a fresh out_dir or resume=False"
             )
 
-            def dead_letter_job() -> int:
-                if cfg.write_sinks:
-                    n = self._commit(
-                        unroutable, unit, os.path.join(cfg.out_dir, "unroutable")
-                    )
-                else:
-                    n = unroutable.count()
-                manifest.mark(unit, rows=n)
-                return n
-
-        # --- per-pattern parse + route + sink -----------------------------
-        nparts = cfg.parse_partitions or self.spark.sparkContext.defaultParallelism
-        route_of = {r["pattern_name"]: r["route"] for r in self.routes}
-
-        if cfg.single_pass and not cfg.per_pattern:
-            # the dead-letter unit is an independent scan+filter job —
-            # overlap it with the main single-pass write from a driver
-            # thread (guide-style back-fill; manifest marking is
-            # lock-serialized). Its paths (unroutable/) and result
-            # field are disjoint from the main unit's.
-            if dead_letter_job is not None:
-                from concurrent.futures import ThreadPoolExecutor
-
-                with ThreadPoolExecutor(max_workers=1) as pool:
-                    fut = pool.submit(dead_letter_job)
-                    self._run_single_pass(
-                        enriched, nparts, manifest, result, route_of
-                    )
-                result.unroutable_count = fut.result()
-            else:
-                self._run_single_pass(enriched, nparts, manifest, result, route_of)
-            return self._finish(result, t0)
-
-        if dead_letter_job is not None:
-            result.unroutable_count = dead_letter_job()
-
-        for pattern_name in sorted(self.pattern_exprs):
-            route = route_of[pattern_name]
-            unit = f"{route}/{pattern_name}"
-            rec = manifest.done(unit) if cfg.resume else None
-            if rec:
-                result.unit_counts[(route, pattern_name)] = rec["counts"]
-                result.lineage.extend(rec.get("lineage", []))
-                result.skipped_units.append(unit)
-                continue
-
-            compiled = self.compiled(pattern_name)
-            parse = grok_parse_map_udf(
-                compiled, from_tokens=True, timeout=cfg.timeout
-            )
-            slice_df = enriched.filter(F.col("pattern_name") == pattern_name)
-            if cfg.salt_buckets:
-                slice_df = slice_df.repartition(
-                    nparts,
-                    F.col("source"),
-                    F.pmod(F.xxhash64("doc_id"), F.lit(cfg.salt_buckets)),
-                )
-            slice_df = (
-                slice_df.withColumn("fields", parse(F.col("tokens")))
-                .withColumn("matched", F.col("fields").isNotNull())
-                .withColumn("_part_id", F.spark_partition_id())
-            )
-            slice_df = apply_extracts(slice_df, compiled, "fields")
-
-            sink_dir = self._sink_dir(route, pattern_name)
-            if cfg.write_sinks:
-                self._commit(slice_df, unit, sink_dir, count=False)
-                committed = self.spark.read.parquet(sink_dir)
-            else:
-                committed = slice_df
-
-            # counts + lineage from the committed data (retry-safe)
-            agg = (
-                committed.groupBy("matched", "_part_id")
-                .agg(F.count(F.lit(1)).alias("n"))
-                .collect()
-            )
-            counts = {"matched": 0, "unmatched": 0}
-            lineage_map: dict[int, dict] = {}
-            for row in agg:
-                counts["matched" if row["matched"] else "unmatched"] += row["n"]
-                li = lineage_map.setdefault(
-                    row["_part_id"],
-                    {
-                        "pattern_name": pattern_name,
-                        "part_id": row["_part_id"],
-                        "rows_in": 0,
-                        "rows_matched": 0,
-                    },
-                )
-                li["rows_in"] += row["n"]
-                if row["matched"]:
-                    li["rows_matched"] += row["n"]
-            lineage = sorted(lineage_map.values(), key=lambda d: d["part_id"])
-            result.unit_counts[(route, pattern_name)] = counts
-            result.lineage.extend(lineage)
-            manifest.mark(unit, counts=counts, lineage=lineage)
-
-        return self._finish(result, t0)
-
-    def _finish(self, result: PipelineResult, t0: float) -> PipelineResult:
-        """Roll up per-sink counts from unit counts."""
-        for (route, _pat), counts in result.unit_counts.items():
-            sink = result.sink_counts.setdefault(route, {"matched": 0, "unmatched": 0})
-            sink["matched"] += counts["matched"]
-            sink["unmatched"] += counts["unmatched"]
-        result.rows_in = result.unroutable_count + sum(
-            c["matched"] + c["unmatched"] for c in result.unit_counts.values()
-        )
-        result.elapsed_sec = time.monotonic() - t0
-        return result
-
-    def _run_single_pass(
-        self,
-        enriched: DataFrame,
-        nparts: int,
-        manifest: "_Manifest",
-        result: PipelineResult,
-        route_of: dict[str, str],
-    ) -> None:
-        """One scan, one multi-pattern parse, one dynamic-partition
-        write into sinks/route=<r>/pattern_name=<p>/. Fields stay in the
-        raw string map (typed extract casts are per-pattern and belong
-        to per-sink consumers in this mode)."""
-        cfg = self.config
-        unit = "singlepass"
-        rec = manifest.done(unit) if cfg.resume else None
-        if rec:
-            for key, counts in rec["counts"].items():
-                route, pattern_name = key.split("|", 1)
-                result.unit_counts[(route, pattern_name)] = counts
-            result.lineage.extend(rec.get("lineage", []))
-            result.skipped_units.append(unit)
-            return
-
-        compiled = {
-            name: self.compiled(name) for name in sorted(self.pattern_exprs)
-        }
-        parse = grok_parse_router_udf(compiled, from_tokens=True, timeout=cfg.timeout)
-        parsed = enriched.filter(F.col("route").isNotNull())
-        if cfg.salt_buckets:
-            parsed = parsed.repartition(
-                nparts,
-                F.col("source"),
-                F.pmod(F.xxhash64("doc_id"), F.lit(cfg.salt_buckets)),
-            )
-        parsed = (
-            parsed.withColumn("fields", parse(F.col("pattern_name"), F.col("tokens")))
-            .withColumn("matched", F.col("fields").isNotNull())
-            .withColumn("_part_id", F.spark_partition_id())
-        )
-
-        # NOTE on the committed re-read below: it scans ONLY (route,
-        # pattern_name, matched, _part_id) — parquet column pruning
-        # skips the wide tokens/fields columns entirely, so the "second
-        # pass" reads a few % of written bytes, and it buys exact
-        # per-partition lineage. Ranged mode avoids even that via
-        # write-action observe metrics (pattern-granularity lineage).
-        sink_root = os.path.join(cfg.out_dir, "sinks")
-        if cfg.write_sinks:
-            staging = self._staging_dir(unit)
-            if os.path.exists(staging):
-                shutil.rmtree(staging)
-            (
-                parsed.write.mode("overwrite")
-                .partitionBy("route", "pattern_name")
-                .parquet(staging)
-            )
-            if os.path.exists(sink_root):
-                shutil.rmtree(sink_root)
-            os.makedirs(os.path.dirname(sink_root), exist_ok=True)
-            os.replace(staging, sink_root)
-            committed = self.spark.read.parquet(sink_root)
-        else:
-            committed = parsed
-
-        agg = (
-            committed.groupBy("route", "pattern_name", "matched", "_part_id")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        )
-        lineage_map: dict[tuple, dict] = {}
-        for row in agg:
-            key = (row["route"], row["pattern_name"])
-            counts = result.unit_counts.setdefault(key, {"matched": 0, "unmatched": 0})
-            counts["matched" if row["matched"] else "unmatched"] += row["n"]
-            li = lineage_map.setdefault(
-                (row["pattern_name"], row["_part_id"]),
-                {
-                    "pattern_name": row["pattern_name"],
-                    "part_id": row["_part_id"],
-                    "rows_in": 0,
-                    "rows_matched": 0,
-                },
-            )
-            li["rows_in"] += row["n"]
-            if row["matched"]:
-                li["rows_matched"] += row["n"]
-        lineage = sorted(
-            lineage_map.values(), key=lambda d: (d["pattern_name"], d["part_id"])
-        )
-        result.lineage.extend(lineage)
-        manifest.mark(
-            unit,
-            counts={f"{r}|{p}": c for (r, p), c in result.unit_counts.items()},
-            lineage=lineage,
-        )
-
-    # -- ranged mode ---------------------------------------------------------
-
-    def _run_ranged(
-        self,
-        seq_df: DataFrame,
-        routes_df: DataFrame,
-        manifest: "_Manifest",
-        result: PipelineResult,
-    ) -> None:
-        """Unit = input file-range: each range scanned once, router-
-        parsed for every pattern, committed independently. Counts come
-        from write-action observe metrics — never a committed re-read —
-        and land in the manifest only after the rename commit, so a
-        retried range cannot double-count."""
-        from pyspark.sql import Observation
-
-        cfg = self.config
-        files = self._validate_ranged_input(seq_df)
-        ranges = _split_files_by_size(files, cfg.range_units)
         patterns = sorted(self.pattern_exprs)
         route_of = {r["pattern_name"]: r["route"] for r in self.routes}
-        compiled = {name: self.compiled(name) for name in patterns}
+        routes_df = F.broadcast(datagen.routes_dim(self.spark, self.routes))
         parse = grok_parse_router_status_udf(
-            compiled, from_tokens=True, timeout=cfg.timeout
+            {p: self.compiled(p) for p in patterns}, from_tokens=True,
+            timeout=cfg.timeout,
         )
+        nparts = cfg.parse_partitions or self.spark.sparkContext.defaultParallelism
 
-        def accumulate(unit: str, metrics: dict, lineage: list[dict]) -> None:
+        def accumulate(metrics: dict, lineage: list[dict]) -> None:
             result.unroutable_count += metrics.get("unroutable", 0)
             # .get defaults: a resumed manifest may predate a pattern
             # added since (its rows weren't parsed with it either)
@@ -576,11 +343,9 @@ class GrokPipeline:
                     counts["unmatched"] += u
             result.lineage.extend(lineage)
 
-        pending: list[tuple[int, str, list, str]] = []
-        for i, unit_files in enumerate(ranges):
-            unit = f"range_{i:04d}"
-            result.unit_files[unit] = unit_files
-            files_sig = hashlib.sha1(
+        pending: list[tuple[int, str, Optional[list[str]], Optional[str]]] = []
+        for i, (unit, unit_files) in enumerate(units.items()):
+            files_sig = None if unit_files is None else hashlib.sha1(
                 "\n".join(unit_files).encode("utf-8")
             ).hexdigest()
             rec = manifest.done(unit) if cfg.resume else None
@@ -596,36 +361,28 @@ class GrokPipeline:
                     f"out_dir or resume=False"
                 )
             if rec:
-                accumulate(unit, rec["metrics"], rec.get("lineage", []))
+                accumulate(rec["metrics"], rec.get("lineage", []))
                 result.skipped_units.append(unit)
                 continue
             pending.append((i, unit, unit_files, files_sig))
 
         def run_unit(
-            i: int, unit: str, unit_files: list, files_sig: str
+            i: int, unit: str, unit_files: Optional[list[str]],
+            files_sig: Optional[str],
         ) -> tuple[dict, list]:
-            """Scan, parse, stage-write, PUBLISH and mark one range;
+            """Scan, parse, stage-write, PUBLISH and mark one unit;
             returns its observe metrics and lineage. Touches only
             unit-local paths, so units can run concurrently (staging
             dirs and publish destinations are keyed by unit; parent
             makedirs are exist_ok; marking is lock-serialized)."""
-            df = self.spark.read.parquet(*unit_files)
-            parsed = (
-                df.join(routes_df, "source", "left")
-                .withColumn("st", parse(F.col("pattern_name"), F.col("tokens")))
-                .withColumn("fields", F.col("st.fields"))
-                .withColumn("timed_out", F.col("st.timed_out"))
-                .drop("st")
-                .withColumn("matched", F.col("fields").isNotNull())
-                .withColumn("_range_id", F.lit(i))
-                .withColumn(
-                    "_route_dir", F.coalesce(F.col("route"), F.lit("_unroutable"))
+            df = seq_df if unit_files is None else self.spark.read.parquet(*unit_files)
+            enriched = df.join(routes_df, "source", "left")
+            if cfg.salt_buckets:
+                enriched = enriched.repartition(
+                    nparts,
+                    F.col("source"),
+                    F.pmod(F.xxhash64("doc_id"), F.lit(cfg.salt_buckets)),
                 )
-                .withColumn(
-                    "_pattern_dir",
-                    F.coalesce(F.col("pattern_name"), F.lit("_none")),
-                )
-            )
             obs = Observation(f"grokspark_{unit}")
             exprs = [
                 F.sum(F.when(F.col("route").isNull(), 1).otherwise(0)).alias(
@@ -645,7 +402,7 @@ class GrokPipeline:
                         f"t__{p}"
                     ),
                 ]
-            observed = parsed.observe(obs, *exprs)
+            observed = self._parse(enriched, parse, i).observe(obs, *exprs)
 
             if cfg.write_sinks:
                 staging = self._staging_dir(unit)
@@ -661,7 +418,7 @@ class GrokPipeline:
             metrics = {k: int(v or 0) for k, v in obs.get.items()}
 
             if cfg.write_sinks:
-                self._publish_range(unit, i)
+                self._publish_range(unit)
             lineage = []
             for p in patterns:
                 rows_in = metrics[f"m__{p}"] + metrics[f"u__{p}"]
@@ -680,7 +437,7 @@ class GrokPipeline:
             )
             return metrics, lineage
 
-        # Overlap the independent range jobs from a small driver thread
+        # Overlap the independent unit jobs from a small driver thread
         # pool (each range's scan covers only its file slice, so a
         # single range cannot fill the executor pool; sequential units
         # left most cores idle — measured 5.7 s -> ~2.5 s for 4 ranges
@@ -688,23 +445,45 @@ class GrokPipeline:
         # concurrent jobs FIFO, which is exactly the tail back-fill
         # behavior wanted here. Each unit is marked done from its
         # worker right after its publish succeeds, so a failure in one
-        # range never costs the others their manifest record (a
-        # published-but-unmarked range just republishes on resume,
+        # unit never costs the others their manifest record (a
+        # published-but-unmarked unit just republishes on resume,
         # which _publish_range makes idempotent). Result accumulation
-        # happens AFTER the pool, in range order, so lineage output
+        # happens AFTER the pool, in unit order, so lineage output
         # order stays deterministic.
         if pending:
             from concurrent.futures import ThreadPoolExecutor
 
-            with ThreadPoolExecutor(
-                max_workers=min(4, len(pending))
-            ) as pool:
-                futs = {
-                    unit: pool.submit(run_unit, i, unit, unit_files, files_sig)
-                    for i, unit, unit_files, files_sig in pending
-                }
-            for unit, fut in futs.items():
-                accumulate(unit, *fut.result())
+            with ThreadPoolExecutor(max_workers=min(4, len(pending))) as pool:
+                futs = [pool.submit(run_unit, *args) for args in pending]
+            for fut in futs:
+                accumulate(*fut.result())
+
+        for (route, _pat), counts in result.unit_counts.items():
+            sink = result.sink_counts.setdefault(route, {"matched": 0, "unmatched": 0})
+            sink["matched"] += counts["matched"]
+            sink["unmatched"] += counts["unmatched"]
+        result.rows_in = result.unroutable_count + sum(
+            c["matched"] + c["unmatched"] for c in result.unit_counts.values()
+        )
+        result.elapsed_sec = time.monotonic() - t0
+        return result
+
+    def _parse(self, enriched: DataFrame, parse, unit_index: int) -> DataFrame:
+        """The parse step of a unit: router-parse every row of the
+        enriched input (unroutable rows get NULL fields) and add the
+        publish keys ``_route_dir``/``_pattern_dir``."""
+        return (
+            enriched.withColumn("st", parse(F.col("pattern_name"), F.col("tokens")))
+            .withColumn("fields", F.col("st.fields"))
+            .withColumn("timed_out", F.col("st.timed_out"))
+            .drop("st")
+            .withColumn("matched", F.col("fields").isNotNull())
+            .withColumn("_range_id", F.lit(unit_index))
+            .withColumn("_route_dir", F.coalesce(F.col("route"), F.lit("_unroutable")))
+            .withColumn(
+                "_pattern_dir", F.coalesce(F.col("pattern_name"), F.lit("_none"))
+            )
+        )
 
     def _validate_ranged_input(self, seq_df: DataFrame) -> list[str]:
         """Ranged mode re-plans the scan per file-range, so the input
@@ -712,8 +491,8 @@ class GrokPipeline:
         parquet relation — a filter, computed column, mapInPandas
         ingest (read_raw_lines), or other format would be silently
         dropped by the per-range re-read. Fail loudly instead:
-        materialize such inputs to parquet first, or use
-        single_pass=True which preserves the caller's plan.
+        materialize such inputs to parquet first, or leave range_units
+        unset, which runs one unit over the caller's plan.
 
         Detection walks the analyzed plan (pruning-only Project nodes
         are fine: the re-read restores a column superset; a Project
@@ -766,7 +545,7 @@ class GrokPipeline:
                 "range_units requires the input to be an untransformed "
                 f"parquet scan (got plan node {node_name!r}); "
                 "write transformed/ingested inputs to parquet first, or "
-                "use single_pass=True which preserves the caller's plan"
+                "leave range_units unset, which keeps the caller's plan"
             )
         files = sorted(seq_df.inputFiles())
         if not files:
@@ -796,12 +575,12 @@ class GrokPipeline:
             )
         return files
 
-    def _publish_range(self, unit: str, range_id: int) -> None:
-        """Move each (route, pattern) subtree of the range's staging dir
+    def _publish_range(self, unit: str) -> None:
+        """Move each (route, pattern) subtree of the unit's staging dir
         into sinks/<route>/<pattern>/<unit> (and _unroutable/_none into
         unroutable/<unit>). Renames are idempotent per unit: a rerun
         clears its own target dirs first, so a crash mid-publish just
-        re-runs the range."""
+        re-runs the unit."""
         cfg = self.config
         staging = self._staging_dir(unit)
         for route_ent in sorted(os.listdir(staging)):
@@ -822,21 +601,3 @@ class GrokPipeline:
                 os.makedirs(os.path.dirname(dest), exist_ok=True)
                 os.replace(os.path.join(route_dir, pat_ent), dest)
         shutil.rmtree(staging)
-
-    def _commit(
-        self, df: DataFrame, unit: str, final_dir: str, count: bool = True
-    ) -> int:
-        """Write df to a staging dir, then atomically publish to
-        final_dir. Local-FS analogue of an Iceberg snapshot commit: a
-        crashed run leaves only staging garbage, never a partial sink."""
-        staging = self._staging_dir(unit)
-        if os.path.exists(staging):
-            shutil.rmtree(staging)
-        df.write.mode("overwrite").parquet(staging)
-        if os.path.exists(final_dir):
-            shutil.rmtree(final_dir)
-        os.makedirs(os.path.dirname(final_dir), exist_ok=True)
-        os.replace(staging, final_dir)
-        if count:
-            return self.spark.read.parquet(final_dir).count()
-        return -1

@@ -211,7 +211,7 @@ def stream_route_sinks(
         import shutil
 
         # unroutable rows are dead-lettered under route=_unroutable —
-        # never silently dropped (parity with every batch mode)
+        # never silently dropped (parity with the batch pipeline)
         parsed = (
             batch_df.join(routes, "source", "left")
             .withColumn("fields", parse(F.col("pattern_name"), F.col("tokens")))
@@ -221,10 +221,10 @@ def stream_route_sinks(
                 "pattern_name", F.coalesce(F.col("pattern_name"), F.lit("_none"))
             )
         )
-        # staged write + rename publish (the batch pipeline's _commit
-        # discipline): parquet overwrite is not atomic on a local FS, so
-        # a replay writing in place could expose a partial batch to
-        # concurrent readers of out_dir/sinks. On replay the stale
+        # staged write + rename publish (the batch pipeline's unit
+        # publish discipline): parquet overwrite is not atomic on a
+        # local FS, so a replay writing in place could expose a partial
+        # batch to concurrent readers of out_dir/sinks. On replay the stale
         # batch dir is first renamed ASIDE (to a _tombstone path
         # outside sinks/), then the staged dir renamed into place — a
         # concurrent reader sees old-or-new, never missing-or-partial;

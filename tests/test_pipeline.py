@@ -99,9 +99,7 @@ def test_route_match_counts_across_batches_and_partitions(spark, corpus, oracle)
 
 def test_full_pipeline_counts_and_invariants(spark, seq_df, corpus, oracle, tmp_path):
     out_dir = str(tmp_path / "out")
-    pipe = GrokPipeline(
-        spark, PipelineConfig(out_dir=out_dir, parse_partitions=8, per_pattern=True)
-    )
+    pipe = GrokPipeline(spark, PipelineConfig(out_dir=out_dir, parse_partitions=8))
     result = pipe.run(seq_df)
 
     # per-sink aggregate counts == pure-Python reference
@@ -113,70 +111,84 @@ def test_full_pipeline_counts_and_invariants(spark, seq_df, corpus, oracle, tmp_
     # byte-identical to the input row with the same doc_id
     input_tokens = {row["doc_id"]: row["tokens"] for row in corpus}
     for route in result.sink_counts:
-        sink = spark.read.option("mergeSchema", "true").parquet(
-            f"{out_dir}/sinks/{route}/*"
-        )
+        sink = spark.read.parquet(f"{out_dir}/sinks/{route}/*/input")
         rows = sink.select("doc_id", "tokens", "n_tok", "matched").collect()
         assert len(rows) == sum(result.sink_counts[route].values())
         for r in rows:
             assert r["tokens"] == input_tokens[r["doc_id"]], r["doc_id"]
             assert r["n_tok"] == len(r["tokens"])
 
-    # lineage covers every routed row exactly once
+    # lineage covers every routed row exactly once, one row per
+    # (pattern, unit) of the single whole-input unit
     assert sum(li["rows_in"] for li in result.lineage) == N_ROWS - oracle["unroutable"]
     assert sum(li["rows_matched"] for li in result.lineage) == sum(
         c["matched"] for c in result.sink_counts.values()
     )
+    assert sorted(li["pattern_name"] for li in result.lineage) == sorted(
+        p for _r, p in result.unit_counts
+    )
+    assert {li["part_id"] for li in result.lineage} == {0}
 
     # parsed fields present for matched rows on at least one sink
-    web = spark.read.option("mergeSchema", "true").parquet(f"{out_dir}/sinks/web/*")
+    web = spark.read.parquet(f"{out_dir}/sinks/web/*/*")
     sample = web.filter(F.col("matched")).select("fields").limit(5).collect()
     assert sample and all(r["fields"] for r in sample)
 
 
 def test_resume_skips_completed_units(spark, seq_df, oracle, tmp_path):
     out_dir = str(tmp_path / "out")
-    cfg = PipelineConfig(out_dir=out_dir, parse_partitions=4, per_pattern=True)
+    cfg = PipelineConfig(out_dir=out_dir, parse_partitions=4)
     first = GrokPipeline(spark, cfg).run(seq_df)
     assert not first.skipped_units
 
     second = GrokPipeline(spark, cfg).run(seq_df)
-    # every unit skipped, identical counts, much cheaper
-    assert sorted(second.skipped_units) == sorted(
-        ["unroutable"] + [f"{r}/{p}" for (r, p) in first.unit_counts]
-    )
+    # the whole-input unit is skipped, with identical counts and lineage
+    assert second.skipped_units == ["input"]
     assert second.sink_counts == first.sink_counts == oracle["sink_counts"]
     assert second.unroutable_count == first.unroutable_count
+    assert second.lineage == first.lineage
 
 
 def test_unroutable_dead_letter(spark, seq_df, oracle, tmp_path):
     out_dir = str(tmp_path / "out")
-    GrokPipeline(
-        spark, PipelineConfig(out_dir=out_dir, parse_partitions=4, per_pattern=True)
-    ).run(seq_df)
-    dead = spark.read.parquet(f"{out_dir}/unroutable")
+    GrokPipeline(spark, PipelineConfig(out_dir=out_dir, parse_partitions=4)).run(seq_df)
+    dead = spark.read.parquet(f"{out_dir}/unroutable/input")
     assert dead.count() == oracle["unroutable"]
     assert set(
         r["source"] for r in dead.select("source").distinct().collect()
     ) == {"debug_feed"}
+    assert dead.filter(F.col("route").isNotNull() | F.col("matched")).count() == 0
 
 
 def test_typed_extract_columns_in_elb_sink(spark, seq_df, tmp_path):
+    """Sinks keep the raw fields map; the pattern's typed extract casts
+    apply on read."""
+    from grokspark.udfs import apply_extracts
+
     out_dir = str(tmp_path / "out")
-    GrokPipeline(
-        spark, PipelineConfig(out_dir=out_dir, parse_partitions=4, per_pattern=True)
-    ).run(seq_df)
-    elb = spark.read.parquet(f"{out_dir}/sinks/web/pat_elb")
+    GrokPipeline(spark, PipelineConfig(out_dir=out_dir, parse_partitions=4)).run(seq_df)
+    compiled = GrokRegistry.with_default_patterns().compile(
+        SOURCES["elb"][2], with_alias_only=True
+    )
+    elb = apply_extracts(
+        spark.read.parquet(f"{out_dir}/sinks/web/pat_elb/*"), compiled, "fields"
+    )
     schema = {f.name: f.dataType.simpleString() for f in elb.schema.fields}
     assert schema["clientport"] == "bigint"
     assert schema["request_processing_time"] == "double"
     ok = elb.filter(F.col("matched"))
+    assert ok.count() > 0
     assert ok.filter(F.col("clientport").isNull()).count() == 0
 
 
 def test_single_pass_mode_counts_match(spark, seq_df, corpus, oracle, tmp_path):
-    """single_pass=True: one scan + dynamic-partition fan-out must
-    produce identical per-sink counts, token equality, and resume."""
+    """single_pass=True (the only mode; False named the removed
+    per-pattern mode and is refused): one scan + one partitioned write
+    gives the reference's per-sink counts, token equality, per-route
+    sink dirs and resume."""
+    with pytest.raises(ValueError, match="per-pattern"):
+        PipelineConfig(out_dir=str(tmp_path / "pp"), single_pass=False)
+
     out_dir = str(tmp_path / "sp")
     cfg = PipelineConfig(out_dir=out_dir, parse_partitions=8, single_pass=True)
     result = GrokPipeline(spark, cfg).run(seq_df)
@@ -184,19 +196,82 @@ def test_single_pass_mode_counts_match(spark, seq_df, corpus, oracle, tmp_path):
     assert result.unroutable_count == oracle["unroutable"]
 
     input_tokens = {row["doc_id"]: row["tokens"] for row in corpus}
-    sinks = spark.read.parquet(f"{out_dir}/sinks")
+    sinks = spark.read.parquet(f"{out_dir}/sinks/*/*/*")
     rows = sinks.select("doc_id", "tokens").collect()
     assert len(rows) == N_ROWS - oracle["unroutable"]
     for r in rows:
         assert r["tokens"] == input_tokens[r["doc_id"]]
 
-    # partition pruning: reading one route dir only touches that route
-    web = spark.read.parquet(f"{out_dir}/sinks/route=web")
+    # reading one route dir only touches that route
+    web = spark.read.parquet(f"{out_dir}/sinks/web/*/*")
     assert web.count() == sum(oracle["sink_counts"]["web"].values())
 
     second = GrokPipeline(spark, cfg).run(seq_df)
-    assert "singlepass" in second.skipped_units
+    assert second.skipped_units == ["input"]
     assert second.sink_counts == result.sink_counts
+
+
+def test_whole_input_unit_republishes_after_mark_crash(
+    spark, seq_df, corpus, oracle, tmp_path, monkeypatch
+):
+    """A crash after the whole-input unit published but before its
+    manifest mark: the resumed run republishes over the same unit dirs,
+    so the committed sinks hold every routed row exactly once, and a
+    third run skips the unit."""
+    import os
+
+    from grokspark import pipeline
+
+    out_dir = str(tmp_path / "out")
+    cfg = PipelineConfig(out_dir=out_dir, parse_partitions=4)
+    real_mark = pipeline._Manifest.mark
+    crashed: list[str] = []
+
+    def crash_once(self, unit, **record):
+        if not crashed:
+            crashed.append(unit)
+            assert os.listdir(os.path.join(out_dir, "sinks"))  # published
+            raise RuntimeError("injected crash after publish")
+        real_mark(self, unit, **record)
+
+    monkeypatch.setattr(pipeline._Manifest, "mark", crash_once)
+    with pytest.raises(RuntimeError, match="injected"):
+        GrokPipeline(spark, cfg).run(seq_df)
+    assert crashed == ["input"]
+    assert not os.path.exists(os.path.join(out_dir, "manifest.json"))
+
+    resumed = GrokPipeline(spark, cfg).run(seq_df)
+    assert resumed.skipped_units == []
+    assert resumed.sink_counts == oracle["sink_counts"]
+    assert resumed.unroutable_count == oracle["unroutable"]
+    routed = sorted(
+        r["doc_id"] for r in corpus if r["source"] != "debug_feed"
+    )
+    ids = [r["doc_id"] for r in spark.read.parquet(f"{out_dir}/sinks/*/*/*").collect()]
+    assert sorted(ids) == routed
+    dead = spark.read.parquet(f"{out_dir}/unroutable/*")
+    assert dead.count() == oracle["unroutable"]
+
+    third = GrokPipeline(spark, cfg).run(seq_df)
+    assert third.skipped_units == ["input"]
+    assert third.sink_counts == oracle["sink_counts"]
+
+
+@pytest.mark.parametrize("unit", ["singlepass", "unroutable", "web/pat_elb"])
+def test_resume_refuses_manifest_of_removed_mode(spark, seq_df, tmp_path, unit):
+    """An out_dir whose manifest holds a unit of a removed mode has
+    sinks in another layout: resuming over it is refused before any
+    write, like a changed input file set."""
+    import json
+
+    out_dir = tmp_path / "old"
+    out_dir.mkdir()
+    (out_dir / "manifest.json").write_text(
+        json.dumps({unit: {"status": "done", "rows": 6}}), encoding="utf-8"
+    )
+    with pytest.raises(ValueError, match="does not make"):
+        GrokPipeline(spark, PipelineConfig(out_dir=str(out_dir))).run(seq_df)
+    assert sorted(p.name for p in out_dir.iterdir()) == ["manifest.json"]
 
 
 @pytest.fixture(scope="module")
@@ -292,11 +367,11 @@ def test_ranged_mode_marks_published_range_when_another_fails(
     published: list[str] = []
     range1_published = threading.Event()
 
-    def failing_publish(self, unit, range_id):
+    def failing_publish(self, unit):
         if unit == "range_0000":
             assert range1_published.wait(120)
             raise RuntimeError("injected range_0000 failure")
-        real_publish(self, unit, range_id)
+        real_publish(self, unit)
         published.append(unit)
         range1_published.set()
 
@@ -305,8 +380,8 @@ def test_ranged_mode_marks_published_range_when_another_fails(
         GrokPipeline(spark, cfg).run(src)
     assert published == ["range_0001"]
 
-    def recording_publish(self, unit, range_id):
-        real_publish(self, unit, range_id)
+    def recording_publish(self, unit):
+        real_publish(self, unit)
         published.append(unit)
 
     monkeypatch.setattr(GrokPipeline, "_publish_range", recording_publish)
@@ -339,18 +414,25 @@ def test_routes_dim_schema_matches_inferred(spark, seq_df, tmp_path, monkeypatch
     assert dim.schema == inferred_dim.schema
     assert dim.collect() == inferred_dim.collect()
     seen = {}
+    real_parse = GrokPipeline._parse
     monkeypatch.setattr(
         GrokPipeline,
-        "_run_single_pass",
-        lambda self, enriched, *a: seen.setdefault("enriched", enriched),
+        "_parse",
+        lambda self, enriched, *a: real_parse(
+            self, seen.setdefault("enriched", enriched), *a
+        ),
     )
     cfg = PipelineConfig(out_dir=str(tmp_path / "out"))
     exprs = {"pat_elb": SOURCES["elb"][2], "pat_syslog": SOURCES["syslog"][2]}
     GrokPipeline(spark, cfg, routes=custom, pattern_exprs=exprs).run(seq_df)
     inferred = seq_df.join(inferred_dim, "source", "left")
     assert seen["enriched"].schema == inferred.schema
-    dead = spark.read.parquet(str(tmp_path / "out" / "unroutable"))
-    assert dead.columns == ["doc_id", "tokens", "n_tok", "source"]
+    dead = spark.read.parquet(str(tmp_path / "out" / "unroutable" / "input"))
+    assert dead.columns == [
+        "source", "doc_id", "tokens", "n_tok", "pattern_name", "route",
+        "sink_path", "owner", "priority", "fields", "timed_out", "matched",
+        "_range_id",
+    ]
 
 
 def test_ranged_mode_timeout_lineage(spark, tmp_path):
@@ -439,3 +521,29 @@ def test_ranged_mode_refuses_resume_after_input_change(spark, seq_df, tmp_path):
     seq_df.limit(300).repartition(2).write.mode("append").parquet(src)
     with pytest.raises(ValueError, match="file set changed"):
         GrokPipeline(spark, cfg).run(spark.read.parquet(src))
+
+
+def test_cli_pipeline_subcommand(spark, seq_parquet, oracle, tmp_path, capsys):
+    """``python -m grokspark pipeline`` in-process over a parquet input:
+    its JSON counts equal the reference's; the removed ``--per-pattern``
+    flag is a usage error."""
+    import json
+
+    from grokspark.__main__ import main
+
+    key = "spark.sql.shuffle.partitions"
+    old = spark.conf.get(key)  # the CLI's get_spark re-sets it
+    try:
+        rc = main(["pipeline", "--input", seq_parquet, "--out", str(tmp_path / "out")])
+    finally:
+        spark.conf.set(key, old)
+    assert rc == 0
+    out = json.loads(capsys.readouterr().out)
+    assert out["sink_counts"] == oracle["sink_counts"]
+    assert out["unroutable"] == oracle["unroutable"]
+    assert out["rows_in"] == N_ROWS
+
+    with pytest.raises(SystemExit) as exc:
+        main(["pipeline", "--input", seq_parquet, "--out", str(tmp_path / "o2"),
+              "--per-pattern"])
+    assert exc.value.code == 2

@@ -133,10 +133,13 @@ def test_pipeline_run_enriches_against_local_dim(spark, tmp_path, monkeypatch):
     from grokspark.pipeline import GrokPipeline, PipelineConfig
 
     seen = {}
+    real_parse = GrokPipeline._parse
     monkeypatch.setattr(
         GrokPipeline,
-        "_run_single_pass",
-        lambda self, enriched, *a: seen.setdefault("enriched", enriched),
+        "_parse",
+        lambda self, enriched, *a: real_parse(
+            self, seen.setdefault("enriched", enriched), *a
+        ),
     )
     seq = spark.createDataFrame(
         list(iter_rows(50)), "doc_id string, tokens array<int>, n_tok int, source string"
@@ -147,6 +150,17 @@ def test_pipeline_run_enriches_against_local_dim(spark, tmp_path, monkeypatch):
     assert "ExistingRDD" in tree  # the seq side, outside the broadcast
     assert "BroadcastHashJoin" in tree
     assert_dims_are_local(tree)
+
+
+def test_grok_text_corpus_is_local(spark):
+    """The grok text corpus behind the SimHash, image, audio and video
+    gate queries is a local table: no query over it starts a Python-RDD
+    job first."""
+    import __spark_entry__ as entry
+
+    plan = explain_str(entry.q_simhash_pairs(spark, ""), "extended")
+    assert "LocalRelation" in plan
+    assert "LogicalRDD" not in plan and "ExistingRDD" not in plan, plan
 
 
 def test_route_counts_with_salt_adds_exactly_one_exchange(spark):
