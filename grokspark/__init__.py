@@ -3,7 +3,7 @@
 Built from scratch against the behavior of the Rust ``grok`` crate
 (reference at /root/reference, mmastrac/grok v2.4.1), re-expressed
 Spark-first: the grok→regex compiler runs on the driver, matching runs
-vectorized inside Arrow-batched pandas UDFs on executors, and the
+vectorized inside Arrow-native UDF kernels on executors, and the
 surrounding dataflow (enrich join, skew-salted repartition, fan-out
 sinks, aggregate counts, lineage, resume) is plain Catalyst-optimized
 DataFrame code.
@@ -12,7 +12,7 @@ Layers:
 - ``grokspark.pattern_parser`` — %{name:alias:extract=defn} lexer
 - ``grokspark.compiler``       — pattern registry + grok→regex compiler
 - ``grokspark.matching``       — pure-Python single-row matcher (parity oracle)
-- ``grokspark.udfs``           — vectorized pandas-UDF kernels
+- ``grokspark.udfs``           — Arrow-native parse kernels
 - ``grokspark.pipeline``       — the north-rule parse→enrich→route→aggregate job
 - ``grokspark.datagen``        — deterministic synthetic sequences/routes tables
 - ``grokspark.operators``      — training-data ops (dedup, ANN, quality, ...)

@@ -137,6 +137,6 @@ def jvm_field_col(
 def detokenize_col(tokens: Column) -> Column:
     """JVM-side detokenize for ASCII token streams: each int is a code
     point (== its UTF-8 byte for ASCII). Keeps the whole plan
-    Python-free; non-ASCII corpora must use the Arrow kernel
-    (udfs.detokenize)."""
+    Python-free; non-ASCII corpora must use the Arrow kernels
+    (udfs.grok_parse_router_udf)."""
     return F.array_join(F.transform(tokens, lambda t: F.char(t)), "")

@@ -27,16 +27,17 @@ Dataflow (all Catalyst-planned except the fused parse kernel):
    so not disk). Reach for salting only when per-row parse cost varies
    wildly by key AND keys are file-clustered; prefer re-splitting the
    input otherwise. AQE skew-join splitting stays on for the join side.
-4. **Parse**: one multi-pattern router pandas UDF
-   (``grok_parse_router_status_udf``) — one JVM↔Python Arrow round
-   trip per batch, regex compiled once per worker, the pattern picked
-   per row from the enriched ``pattern_name``. ``matched = fields IS
-   NOT NULL`` reproduces the reference's Option<Matches> exactly. The
-   original ``tokens`` column passes through untouched (per-row
-   token-array equality invariant — never re-encoded from text). Fields
-   stay in the raw string map; consumers apply typed extract casts
-   (``udfs.apply_extracts``) on read. The counts-only query
-   (``route_match_counts``) instead runs the mapInArrow counting
+4. **Parse**: one multi-pattern router ``arrow_udf``
+   (``grok_parse_router_udf``) — one JVM↔Python Arrow round trip per
+   batch, the tokens decoded from one flat buffer, regex compiled once
+   per worker, the pattern picked per row from the enriched
+   ``pattern_name``, and the fields map built in bulk. ``matched =
+   fields IS NOT NULL`` reproduces the reference's Option<Matches>
+   exactly. The original ``tokens`` column passes through untouched
+   (per-row token-array equality invariant — never re-encoded from
+   text). Fields stay in the raw string map; consumers apply typed
+   extract casts (``udfs.apply_extracts``) on read. The counts-only
+   query (``route_match_counts``) instead runs the mapInArrow counting
    kernel: it returns per-partition ``(route, matched, n)`` counts, so
    no per-row output crosses Python → JVM.
 5. **Fan-out sinks**: each unit writes once — one
@@ -87,7 +88,7 @@ from pyspark.sql import functions as F
 
 from grokspark import datagen
 from grokspark.compiler import CompiledPattern, GrokRegistry
-from grokspark.udfs import grok_parse_router_status_udf
+from grokspark.udfs import grok_parse_router_udf
 
 __all__ = ["PipelineConfig", "PipelineResult", "GrokPipeline", "route_match_counts"]
 
@@ -322,7 +323,7 @@ class GrokPipeline:
         patterns = sorted(self.pattern_exprs)
         route_of = {r["pattern_name"]: r["route"] for r in self.routes}
         routes_df = F.broadcast(datagen.routes_dim(self.spark, self.routes))
-        parse = grok_parse_router_status_udf(
+        parse = grok_parse_router_udf(
             {p: self.compiled(p) for p in patterns}, from_tokens=True,
             timeout=cfg.timeout,
         )

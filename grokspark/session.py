@@ -30,11 +30,17 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    """Build (or reuse) a local SparkSession.
+    """Build a local SparkSession, or return the active one unchanged.
 
     ``cores=None`` uses ``local[*]``. On a cluster, master/deploy flags
-    come from spark-submit and this builder only layers SQL conf.
+    come from spark-submit and this builder only layers SQL conf. An
+    active session is returned as is and every argument is ignored:
+    ``builder.getOrCreate()`` would apply this builder's SQL conf (e.g.
+    ``spark.sql.shuffle.partitions``) to the session its owner built.
     """
+    active = SparkSession.getActiveSession()
+    if active is not None:
+        return active
     if cores is None:
         cores_env = os.environ.get("SPARK_GRAFT_CPUS")
         cores = int(cores_env) if cores_env else 0

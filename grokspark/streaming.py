@@ -132,7 +132,9 @@ def stream_windowed_route_counts(
         with_event_time(stream_df)
         .join(routes, "source", "left")
         .filter(F.col("route").isNotNull())
-        .withColumn("fields", parse(F.col("pattern_name"), F.col("tokens")))
+        .withColumn(
+            "fields", parse(F.col("pattern_name"), F.col("tokens"))["fields"]
+        )
         .withColumn("matched", F.col("fields").isNotNull())
     )
     return (
@@ -214,7 +216,9 @@ def stream_route_sinks(
         # never silently dropped (parity with the batch pipeline)
         parsed = (
             batch_df.join(routes, "source", "left")
-            .withColumn("fields", parse(F.col("pattern_name"), F.col("tokens")))
+            .withColumn(
+                "fields", parse(F.col("pattern_name"), F.col("tokens"))["fields"]
+            )
             .withColumn("matched", F.col("fields").isNotNull())
             .withColumn("route", F.coalesce(F.col("route"), F.lit("_unroutable")))
             .withColumn(

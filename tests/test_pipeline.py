@@ -4,6 +4,7 @@ reference semantics, routed-row token-array equality, resume, lineage."""
 from __future__ import annotations
 
 import collections
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -133,6 +134,35 @@ def test_full_pipeline_counts_and_invariants(spark, seq_df, corpus, oracle, tmp_
     web = spark.read.parquet(f"{out_dir}/sinks/web/*/*")
     sample = web.filter(F.col("matched")).select("fields").limit(5).collect()
     assert sample and all(r["fields"] for r in sample)
+
+
+def test_sink_fields_match_pure_python(spark, seq_df, tmp_path):
+    """Every sink row's fields map equals the single-row reference
+    surface on its line, key order included: ``match_against`` with the
+    row's pattern, NULL exactly when the row is unmatched, and no row
+    timed out."""
+    out_dir = str(tmp_path / "out")
+    pipe = GrokPipeline(spark, PipelineConfig(out_dir=out_dir, parse_partitions=8))
+    result = pipe.run(seq_df)
+    rows = []
+    for route in sorted(os.listdir(f"{out_dir}/sinks")):
+        for pattern in sorted(os.listdir(f"{out_dir}/sinks/{route}")):
+            sink = spark.read.parquet(f"{out_dir}/sinks/{route}/{pattern}/input")
+            # collect() turns a map into a dict through an unordered
+            # JVM map, so the key order is read from map_keys
+            keys = F.map_keys("fields").alias("keys")
+            rows += sink.select(
+                "pattern_name", "tokens", "fields", keys, "matched", "timed_out"
+            ).collect()
+    assert len(rows) == sum(sum(c.values()) for c in result.sink_counts.values())
+    assert 0 < sum(r["matched"] for r in rows) < len(rows)
+    for r in rows:
+        line = bytes(r["tokens"]).decode("utf-8")
+        want = pipe.compiled(r["pattern_name"]).match_against(line)
+        assert r["fields"] == want, line
+        assert r["keys"] == (None if want is None else list(want)), line
+        assert r["matched"] == (r["fields"] is not None)
+        assert r["timed_out"] is False
 
 
 def test_resume_skips_completed_units(spark, seq_df, oracle, tmp_path):
@@ -531,12 +561,7 @@ def test_cli_pipeline_subcommand(spark, seq_parquet, oracle, tmp_path, capsys):
 
     from grokspark.__main__ import main
 
-    key = "spark.sql.shuffle.partitions"
-    old = spark.conf.get(key)  # the CLI's get_spark re-sets it
-    try:
-        rc = main(["pipeline", "--input", seq_parquet, "--out", str(tmp_path / "out")])
-    finally:
-        spark.conf.set(key, old)
+    rc = main(["pipeline", "--input", seq_parquet, "--out", str(tmp_path / "out")])
     assert rc == 0
     out = json.loads(capsys.readouterr().out)
     assert out["sink_counts"] == oracle["sink_counts"]
@@ -547,3 +572,21 @@ def test_cli_pipeline_subcommand(spark, seq_parquet, oracle, tmp_path, capsys):
         main(["pipeline", "--input", seq_parquet, "--out", str(tmp_path / "o2"),
               "--per-pattern"])
     assert exc.value.code == 2
+
+
+def test_get_spark_returns_live_session_unchanged(spark):
+    """``get_spark`` on a process with an active session hands it back
+    as is: its SQL settings survive, whatever the call asks for."""
+    from grokspark.session import get_spark
+
+    key = "spark.sql.shuffle.partitions"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "7")
+    try:
+        again = get_spark(cores=2, shuffle_partitions=3)
+        assert again._jsparkSession.equals(spark._jsparkSession)
+        assert spark.conf.get(key) == "7"
+        get_spark()
+        assert spark.conf.get(key) == "7"
+    finally:
+        spark.conf.set(key, old)

@@ -59,22 +59,26 @@ def test_timeout_on_forced_sre_engine(registry, monkeypatch):
     C._ENGINE_CACHE.clear()
 
 
-def test_map_udf_timeout_does_not_fail_task(spark, hostile):
-    from grokspark.udfs import grok_parse_map_udf
+def test_router_timeout_does_not_fail_task(spark, hostile):
+    """A pathological row over token input times out as a NULL map; the
+    task still succeeds and the other rows parse."""
+    from grokspark.udfs import grok_parse_router_udf
 
-    parse = grok_parse_map_udf(hostile, from_tokens=False, timeout=TIMEOUT)
+    parse = grok_parse_router_udf({"pat": hostile}, timeout=TIMEOUT)
     df = spark.createDataFrame(
-        [(HOSTILE_LINE,), (OK_LINE,)], schema="line string"
-    ).withColumn("fields", parse(F.col("line")))
-    rows = {r["line"][:4]: r["fields"] for r in df.collect()}
-    assert rows["a a "] is None
-    assert rows["x y "]["f"] == "ok"
+        [("hostile", list(HOSTILE_LINE.encode())), ("ok", list(OK_LINE.encode()))],
+        schema="key string, tokens array<int>",
+    ).withColumn("st", parse(F.lit("pat"), F.col("tokens")))
+    rows = {r["key"]: r for r in df.select("key", "st.*").collect()}
+    assert rows["hostile"]["fields"] is None and rows["hostile"]["timed_out"] is True
+    assert rows["ok"]["fields"] == hostile.match_against(OK_LINE)
+    assert rows["ok"]["fields"]["f"] == "ok" and rows["ok"]["timed_out"] is False
 
 
 def test_router_status_udf_reports_timeouts(spark, hostile):
-    from grokspark.udfs import grok_parse_router_status_udf
+    from grokspark.udfs import grok_parse_router_udf
 
-    parse = grok_parse_router_status_udf({"pat": hostile}, timeout=TIMEOUT)
+    parse = grok_parse_router_udf({"pat": hostile}, timeout=TIMEOUT)
     data = [
         ("pat", list(HOSTILE_LINE.encode())),
         ("pat", list(OK_LINE.encode())),
@@ -173,28 +177,26 @@ def test_timeout_zero_rejected_everywhere():
     """timeout=0 must be one thing on every path: an error (previously
     'no timeout' in router/arrow kernels but instant TimeoutError in
     the scalar paths)."""
-    from grokspark.udfs import (
-        grok_match_udf,
-        grok_parse_arrow_kernel,
-        grok_parse_map_udf,
-        grok_parse_router_status_udf,
-        grok_parse_router_udf,
-        grok_parse_struct_udf,
-    )
+    from grokspark.udfs import grok_parse_arrow_kernel, grok_parse_router_udf
 
     compiled = GrokRegistry.with_default_patterns().compile("%{INT:n}")
     with pytest.raises(ValueError, match="positive"):
         compiled.search("42", timeout=0.0)
-    for factory in (grok_parse_map_udf, grok_parse_struct_udf, grok_match_udf):
-        with pytest.raises(ValueError, match="positive"):
-            factory(compiled, timeout=0.0)
-    for factory in (
-        grok_parse_router_udf,
-        grok_parse_router_status_udf,
-        grok_parse_arrow_kernel,
-    ):
+    for factory in (grok_parse_router_udf, grok_parse_arrow_kernel):
         with pytest.raises(ValueError, match="positive"):
             factory({"p": compiled}, timeout=0.0)
+
+
+def test_line_input_mode_rejected():
+    """The parse kernels take byte tokens only: from_tokens=False names
+    the removed line-input mode instead of parsing tokens as text."""
+    from grokspark.udfs import grok_parse_map_udf, grok_parse_router_udf
+
+    compiled = GrokRegistry.with_default_patterns().compile("%{INT:n}")
+    with pytest.raises(ValueError, match="line-input mode"):
+        grok_parse_map_udf(compiled, from_tokens=False)
+    with pytest.raises(ValueError, match="line-input mode"):
+        grok_parse_router_udf({"p": compiled}, from_tokens=False)
 
 
 def test_to_sre_source_preserves_literals():
