@@ -25,7 +25,6 @@ from grokspark.operators.dedup import (
     embedding_cosine_pairs,
     exact_dedup,
     jaccard_pairs,
-    minhash_lsh_candidates,
     minhash_lsh_pairs,
     minhash_lsh_pairs_vs,
     semdedup,
@@ -104,7 +103,6 @@ __all__ = [
     "knn_join",
     "knn_join_blocked",
     "jaccard_pairs",
-    "minhash_lsh_candidates",
     "minhash_lsh_pairs",
     "minhash_lsh_pairs_vs",
     "dsir_resample",

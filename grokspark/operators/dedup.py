@@ -5,9 +5,10 @@ except SimHash's bit-vote (a vectorized pandas UDF over numpy).
 Scale notes (the design constraint is 10^9+ documents):
 - exact dedup is one hash-aggregate on a fingerprint (shuffle on the
   fingerprint, not the text);
-- MinHash+LSH shuffles (band_id, band_hash) — candidate generation
-  never compares all pairs; the verify step joins only bucket
-  collisions;
+- MinHash+LSH (one hashed-gram engine behind ``minhash_lsh_pairs``
+  and ``minhash_lsh_pairs_vs``) shuffles only (band_id, band_hash)
+  for candidates; a bloom-mask precheck prunes them and the exact
+  verify streams gram-hash arrays against broadcast survivors;
 - brute-force pair ops (jaccard_pairs, embedding_cosine_pairs) are
   quadratic *within a blocking key* — they exist as the exactness
   baseline for tests/oracles and for small blocks after LSH.
@@ -30,12 +31,8 @@ __all__ = [
     "exact_dedup",
     "ngrams",
     "jaccard_pairs",
-    "minhash_signature",
-    "minhash_signature_from_grams",
-    "minhash_signature_table",
-    "minhash_band_buckets",
-    "minhash_lsh_candidates",
     "minhash_lsh_pairs",
+    "minhash_lsh_pairs_vs",
     "simhash_signatures",
     "simhash_near_dup_pairs",
     "simhash_py",
@@ -155,34 +152,6 @@ def jaccard_pairs(
     )
 
 
-def minhash_signature(
-    text: Column, n: int = 3, num_hashes: int = 128
-) -> Column:
-    """MinHash signature as a single array column: per seed, the min
-    hash over the shingle set. Per-row expression variant for small
-    inputs / single-doc use — the batch path is
-    ``minhash_signature_table`` (same hash family, same values), whose
-    plan avoids repeating this num_hashes-lambda expression tree in
-    every stage that references it."""
-    return minhash_signature_from_grams(ngrams(text, n), num_hashes)
-
-
-def minhash_signature_from_grams(grams: Column, num_hashes: int = 128) -> Column:
-    """MinHash signature from a precomputed shingle-array column.
-
-    Hash family: one 64-bit base hash per gram string, then per seed i
-    the cheap long-hash ``xxhash64(base, i)`` — the string is hashed
-    once, not once per seed (the standard single-base-hash MinHash
-    construction, cf. Spark MLlib's MinHashLSH)."""
-    hs = F.transform(grams, lambda s: F.xxhash64(s))
-    return F.array(
-        *[
-            F.array_min(F.transform(hs, lambda x: F.xxhash64(x, F.lit(seed))))
-            for seed in range(num_hashes)
-        ]
-    )
-
-
 def _ensure_parallelism(df: DataFrame, min_bytes: int = 0) -> DataFrame:
     """Spread a per-row expression stage across the full core pool: a
     small local input (one parquet split) would otherwise evaluate the
@@ -227,115 +196,15 @@ def _ensure_parallelism(df: DataFrame, min_bytes: int = 0) -> DataFrame:
 SPREAD_MIN_BYTES = 4 * 1024 * 1024
 
 
-def _signature_table_from_grams(grams_df: DataFrame, num_hashes: int) -> DataFrame:
-    """(id, m0..m{num_hashes-1}) from a precomputed ``(id, grams)``
-    table — the shared tail of ``minhash_signature_table`` (see its
-    docstring for the shape rationale)."""
-    hashed = grams_df.select(
-        "id", F.explode("grams").alias("gram")
-    ).select("id", F.xxhash64("gram").alias("h"))
-    return hashed.groupBy("id").agg(
-        *[
-            F.min(F.xxhash64(F.col("h"), F.lit(i))).alias(f"m{i}")
-            for i in range(num_hashes)
-        ]
-    )
-
-
-def minhash_signature_table(
-    df: DataFrame,
-    n: int = 3,
-    num_hashes: int = 128,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Per-document MinHash signatures as a WIDE TABLE ``(id, m0 ..
-    m{num_hashes-1})`` — the batch formulation every LSH op builds on.
-
-    Shape rationale (measured, sf0.01/8 cores): the per-row array
-    expression (num_hashes nested lambdas) costs little to execute but
-    its ~1 MB codegen unit is re-compiled in EVERY stage of every plan
-    that embeds it — the old band-bucket self-join spent 86 s on a 500-
-    doc input, almost all of it code generation. This version explodes
-    the shingles, hashes each gram string ONCE, and takes num_hashes
-    plain ``min`` aggregates of seed-mixed long-hashes: small codegen
-    units, JVM-side hashing, and the groupBy's partial aggregation
-    collapses each document to one row map-side (a document's grams
-    never span partitions), so the exchange carries ~8*num_hashes bytes
-    per DOCUMENT, not per gram. 95 s -> 4 s for the full pair op."""
-    grams_df = _ensure_parallelism(df).select(
-        F.col(id_col).alias("id"), ngrams(F.col(text_col), n).alias("grams")
-    )
-    return _signature_table_from_grams(grams_df, num_hashes)
-
-
-def minhash_band_buckets(
-    df: DataFrame,
-    n: int = 3,
-    num_hashes: int = 128,
-    bands: int = 32,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """LSH band-bucket table: ``(id, band_id, band_hash)`` — one row per
-    (document, band). Deliberately NARROW: at 10^9+ docs the band
-    explode multiplies row count by ``bands``, so nothing wide (grams,
-    signatures, text) may ride it — the shuffle below the candidate
-    self-join moves ~24 bytes/row, not the shingle arrays. Band hashes
-    come straight off the signature-table columns (no per-row array
-    rebuild)."""
-    sig = minhash_signature_table(df, n, num_hashes, text_col, id_col)
-    return _band_buckets_from_sig(sig, num_hashes, bands)
-
-
-def _band_buckets_from_sig(sig: DataFrame, num_hashes: int, bands: int) -> DataFrame:
-    rows_per_band = num_hashes // bands
-    return sig.select(
-        "id",
-        F.posexplode(
-            F.array(
-                *[
-                    F.xxhash64(
-                        *[F.col(f"m{b * rows_per_band + r}") for r in range(rows_per_band)]
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("band_id", "band_hash"),
-    )
-
-
-def minhash_lsh_candidates(
-    df: DataFrame,
-    n: int = 3,
-    num_hashes: int = 128,
-    bands: int = 32,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Distinct candidate id-pairs sharing at least one LSH band bucket.
-    The whole stage is hash-narrow: explode ×bands, self-join on
-    (band_id, band_hash), dedupe (id_a, id_b). No gram arrays anywhere
-    in this plan (plan-asserted in tests/test_plans.py)."""
-    banded = minhash_band_buckets(df, n, num_hashes, bands, text_col, id_col)
-    return _candidates_from_banded(banded)
-
-
-def _candidates_from_banded(banded: DataFrame) -> DataFrame:
-    a, b = banded.alias("a"), banded.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_hash") == F.col("b.band_hash"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
-    )
-
-
 _MASK_SLOTS = 8  # 512-bit gram bloom mask (8 longs) per document
+
+# Eager-mode broadcast bounds of both near-dup queries (lazy mode runs
+# no count and broadcasts). Precheck tables are ~80 B/doc (~400 MB at
+# the doc bound); the verify side carries a ~600 B gram-hash array per
+# surviving pair, and survivors can grow quadratically in a dup-heavy
+# corpus, so it has its own bound. Past either, shuffle joins.
+BROADCAST_MAX_DOCS = 5_000_000
+BROADCAST_MAX_PAIRS = 500_000
 
 
 def _mask_aggs(n_slots: int = _MASK_SLOTS) -> list:
@@ -370,82 +239,35 @@ def _jaccard_precheck(
     ) & (F.least(na, nb).cast("double") >= threshold * hi - 1e-9 * hi)
 
 
-def minhash_lsh_pairs(
-    df: DataFrame,
-    threshold: float = 0.5,
-    n: int = 3,
-    num_hashes: int = 128,
-    bands: int = 32,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    materialize: bool = True,
-    broadcast_max_docs: int = 5_000_000,
-) -> DataFrame:
-    """MinHash+LSH near-duplicate pairs, exact-verified.
-
-    Candidate generation is unchanged (band explode + bucket self-join
-    over ``(id, band_id, band_hash)`` only — identical band hashes,
-    identical candidate recall). What changed in round 6 is everything
-    AFTER candidates, because at scale the r=2 bands' false-positive
-    rate makes candidates the dominant term (measured sf1.0/50k docs:
-    78.5M candidate pairs for 2,544 true pairs, and shipping ~600 B
-    gram arrays per candidate through two shuffle joins was ~80% of a
-    127 s runtime):
-
-    1. grams are carried as xxhash64 LONGS (``gh``), not strings — the
-       signature path already hashed every gram, so the verify now
-       intersects the same longs (intersection size is exact modulo
-       64-bit collisions, ~1e-16/pair; output verified equal to the
-       string path on all testdata sfs);
-    2. a 512-bit bloom mask per document (8 longs, built in the SAME
-       groupBy as the 128 signature mins) gives a deterministic bound:
-       every gram of A∪B sets a bit of maskA|maskB, so
-       ``union >= P := popcount(maskA|maskB)`` and
-       ``jaccard <= (na+nb-P)/P`` EXACTLY — no false negatives. The
-       precheck keeps a pair only when ``na+nb >= (1+t)*P`` (plus the
-       free size-ratio bound ``min(na,nb) >= t*max(na,nb)``). Measured
-       at sf1.0 it prunes 78.5M candidates to the 2,544 true pairs
-       before any array is touched;
-    3. the precheck tables are NARROW (id, ng, 8 mask longs ≈ 80 B/doc)
-       and broadcast when the corpus is below ``broadcast_max_docs``
-       (~400 MB at the default; beyond that the precheck falls back to
-       shuffle joins, still narrow). Survivors are distinct-ed and then
-       verified by streaming the gram-hash table against the BROADCAST
-       survivor set — the gram arrays never enter any exchange.
-
-    Measured sf1.0/local[32]: 127 s -> 17 s, identical 2,544-pair
-    output; sf0.1 4.1 s -> ~2.5 s.
-
-    ``materialize=True`` localCheckpoints the gram table, the
-    signature+mask table and the survivor set (the op is eager, same
-    discipline as before); ``materialize=False`` keeps the op fully
-    lazy (documented recompute, used by laziness-sensitive callers).
-
-    Precision is exact (every emitted pair is verified); recall is the
-    LSH collision probability 1-(1-s^r)^b — pick bands/num_hashes for
-    the target threshold (bands=64, num_hashes=128 makes misses at
-    s>=0.5 ~1e-8, used by the driver oracle query)."""
-    n_part = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+def _gram_tables(
+    df, n, num_hashes, bands, text_col, id_col, materialize
+) -> tuple[DataFrame, DataFrame]:
+    """One side's hashed-gram tables: ``grams (id, gh)`` (distinct gram
+    hashes) and ``sig (id, ng, b0..b7, bh0..)`` (gram count, bloom mask,
+    band hashes). The signature is ``num_hashes`` plain ``min``
+    aggregates over the exploded grams — small codegen units (a per-row
+    array of nested lambdas re-compiled in every stage cost 86 s on 500
+    docs), and partial aggregation collapses each document map-side, so
+    no exchange carries gram arrays. The mins fold into band hashes
+    before the checkpoint (73 longs/doc at bands=64, not 137)."""
     grams = _ensure_parallelism(df).select(
         F.col(id_col).alias("id"),
         ngram_hashes(F.col(text_col), n).alias("gh"),
     )
     if materialize:
         grams = grams.localCheckpoint()
-    hashed = grams.select("id", F.explode("gh").alias("h"))
-    sig = hashed.groupBy("id").agg(
-        *[
-            F.min(F.xxhash64(F.col("h"), F.lit(i))).alias(f"m{i}")
-            for i in range(num_hashes)
-        ],
-        *_mask_aggs(),
-        F.count(F.lit(1)).cast("int").alias("ng"),
+    sig = (
+        grams.select("id", F.explode("gh").alias("h"))
+        .groupBy("id")
+        .agg(
+            *[
+                F.min(F.xxhash64(F.col("h"), F.lit(i))).alias(f"m{i}")
+                for i in range(num_hashes)
+            ],
+            *_mask_aggs(),
+            F.count(F.lit(1)).cast("int").alias("ng"),
+        )
     )
-    # fold the signature mins into their band hashes BEFORE the
-    # checkpoint: the downstream consumers need only the 64 band
-    # hashes + the 8 mask slots + ng, so the materialization carries
-    # 73 longs/doc instead of 137 (same band-hash VALUES — identical
-    # candidates) and the band projection becomes a plain posexplode
     rows_per_band = num_hashes // bands
     band_cols = [
         F.xxhash64(
@@ -457,20 +279,129 @@ def minhash_lsh_pairs(
         "id", "ng", *[f"b{i}" for i in range(_MASK_SLOTS)], *band_cols
     )
     if materialize:
-        # one 50k-row-scale table feeds the band explode (read by both
-        # sides of the candidate self-join) AND the precheck tables —
-        # checkpoint it once so the explode + 128-min aggregate runs
-        # exactly once.
+        # feeds the band explode and the precheck tables — checkpoint it
+        # once so the explode + num_hashes-min aggregate runs once
         sig = sig.localCheckpoint()
-    use_broadcast = True
-    if materialize and broadcast_max_docs is not None:
-        use_broadcast = grams.count() <= broadcast_max_docs
-    banded = sig.select(
+    return grams, sig
+
+
+def _band_table(sig: DataFrame, bands: int) -> DataFrame:
+    """``(id, band_id, band_hash)``, one row per (document, band).
+    Deliberately NARROW: the explode multiplies rows by ``bands``, so
+    nothing wide (grams, signatures, text) may ride it."""
+    return sig.select(
         "id",
         F.posexplode(
             F.array(*[F.col(f"bh{b}") for b in range(bands)])
         ).alias("band_id", "band_hash"),
     )
+
+
+def _precheck_verify(
+    pre: DataFrame,
+    side_a: tuple[DataFrame, DataFrame],
+    side_b: tuple[DataFrame, DataFrame],
+    threshold: float,
+    docs_broadcast: bool,
+    materialize: bool,
+) -> DataFrame:
+    """Exact-verified ``(id_a, id_b, jaccard)`` from candidate rows
+    ``pre (id_a, id_b)``, one per shared band, with ``id_a``/``id_b``
+    keyed into ``side_a``/``side_b``'s ``(grams, sig)`` tables. The
+    bloom-mask precheck (narrow tables, broadcast when
+    ``docs_broadcast``) prunes; distinct survivors are verified by
+    streaming each side's gram table against the broadcast survivor
+    set, gated in eager mode on ``BROADCAST_MAX_PAIRS``."""
+    n_part = int(pre.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    slots = [f"b{i}" for i in range(_MASK_SLOTS)]
+
+    def ptab(sig: DataFrame, side: str) -> DataFrame:
+        return sig.select(
+            F.col("id").alias(f"id_{side}"),
+            F.col("ng").alias(f"n{side}"),
+            *[F.col(s).alias(f"{side}_{s}") for s in slots],
+        )
+
+    pa, pb = ptab(side_a[1], "a"), ptab(side_b[1], "b")
+    if docs_broadcast:
+        pa, pb = F.broadcast(pa), F.broadcast(pb)
+    else:
+        pre = pre.repartition(n_part, "id_a")
+    popcount_or = sum(
+        F.bit_count(F.col(f"a_{s}").bitwiseOR(F.col(f"b_{s}"))) for s in slots
+    )
+    cands = (
+        pre.join(pa, "id_a")
+        .join(pb, "id_b")
+        .filter(_jaccard_precheck(F.col("na"), F.col("nb"), popcount_or, threshold))
+        .select("id_a", "id_b")
+        .dropDuplicates()
+    )
+    pairs_broadcast = True
+    if materialize:
+        cands = cands.localCheckpoint()
+        pairs_broadcast = cands.count() <= BROADCAST_MAX_PAIRS
+    cand_b = F.broadcast(cands) if pairs_broadcast else cands
+    left = side_a[0].join(cand_b, F.col("id") == F.col("id_a")).select(
+        "id_a", "id_b", F.col("gh").alias("ha")
+    )
+    left_b = F.broadcast(left) if pairs_broadcast else left
+    ver = side_b[0].join(left_b, F.col("id") == F.col("id_b")).select(
+        "id_a", "id_b", "ha", F.col("gh").alias("hb")
+    )
+    # |A u B| = |A| + |B| - |A n B| (gram arrays are distinct-element),
+    # so one array_intersect does the work of intersect + union
+    inter = F.size(F.array_intersect("ha", "hb"))
+    union = (F.size("ha") + F.size("hb") - inter).cast("double")
+    return (
+        ver.withColumn("jaccard", inter.cast("double") / union)
+        .filter(F.col("jaccard") >= threshold)
+        .select("id_a", "id_b", "jaccard")
+    )
+
+
+def minhash_lsh_pairs(
+    df: DataFrame,
+    threshold: float = 0.5,
+    n: int = 3,
+    num_hashes: int = 128,
+    bands: int = 32,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    materialize: bool = True,
+) -> DataFrame:
+    """MinHash+LSH near-duplicate pairs ``(id_a, id_b, jaccard)``,
+    ``id_a < id_b``, exact-verified.
+
+    Candidates come from the band explode + bucket self-join over
+    ``(id, band_id, band_hash)`` only. At scale the r=2 bands' false
+    positives dominate (sf1.0/50k docs: 78.5M candidates for 2,544 true
+    pairs; shuffling ~600 B gram arrays per candidate was ~80% of a
+    127 s run), so nothing after candidates moves a gram array:
+
+    1. grams are xxhash64 LONGS (``gh``, see ``ngram_hashes``); the
+       verify intersects the same longs (exact modulo 64-bit
+       collisions, ~1e-16/pair);
+    2. a 512-bit bloom mask per document gives an exact bound: every
+       gram of A∪B sets a bit of maskA|maskB, so ``union >= P :=
+       popcount(maskA|maskB)`` and ``jaccard <= (na+nb-P)/P`` — no
+       false negatives. With the size-ratio bound it pruned sf1.0's
+       78.5M candidates to the 2,544 true pairs before any array read;
+    3. the narrow precheck tables and the survivor set are broadcast
+       (bounded by ``BROADCAST_MAX_DOCS`` / ``BROADCAST_MAX_PAIRS``),
+       and the gram tables stream against them.
+
+    Measured sf1.0/local[32]: 127 s -> 17 s, identical output.
+    ``materialize=True`` localCheckpoints the gram, signature and
+    survivor tables (eager); ``materialize=False`` keeps the op lazy.
+
+    Precision is exact (every emitted pair is verified); recall is the
+    LSH collision probability 1-(1-s^r)^b — pick bands/num_hashes for
+    the target threshold (bands=64, num_hashes=128 makes misses at
+    s>=0.5 ~1e-8, used by the driver oracle query)."""
+    n_part = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    side = _gram_tables(df, n, num_hashes, bands, text_col, id_col, materialize)
+    banded = _band_table(side[1], bands)
     # candidate self-join: explicit repartition pins the exchange at
     # the full shuffle width (narrow 24 B rows — AQE's byte-based
     # coalescing would squeeze the CPU-heavy precheck stage fused
@@ -486,52 +417,8 @@ def minhash_lsh_pairs(
         )
         .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
     )
-    slots = [f"b{i}" for i in range(_MASK_SLOTS)]
-    ptab = sig.select("id", "ng", *slots)
-    pa = ptab.select(
-        F.col("id").alias("id_a"),
-        F.col("ng").alias("na"),
-        *[F.col(s).alias(f"a_{s}") for s in slots],
-    )
-    pb = ptab.select(
-        F.col("id").alias("id_b"),
-        F.col("ng").alias("nb"),
-        *[F.col(s).alias(f"b_{s}") for s in slots],
-    )
-    if use_broadcast:
-        pa, pb = F.broadcast(pa), F.broadcast(pb)
-    else:
-        pre = pre.repartition(n_part, "id_a")
-    popcount_or = sum(
-        F.bit_count(F.col(f"a_{s}").bitwiseOR(F.col(f"b_{s}"))) for s in slots
-    )
-    prechecked = (
-        pre.join(pa, "id_a")
-        .join(pb, "id_b")
-        .filter(_jaccard_precheck(F.col("na"), F.col("nb"), popcount_or, threshold))
-    )
-    cands = prechecked.select("id_a", "id_b").dropDuplicates()
-    if materialize:
-        cands = cands.localCheckpoint()
-    # verify: stream the gram-hash table, broadcast the (tiny) survivor
-    # set — gram arrays never cross an exchange
-    cand_b = F.broadcast(cands) if use_broadcast else cands
-    left = grams.join(cand_b, F.col("id") == F.col("id_a")).select(
-        "id_a", "id_b", F.col("gh").alias("ha")
-    )
-    left_b = F.broadcast(left) if use_broadcast else left
-    ver = grams.join(left_b, F.col("id") == F.col("id_b")).select(
-        "id_a", "id_b", "ha", F.col("gh").alias("hb")
-    )
-    # |A u B| = |A| + |B| - |A n B| (gram arrays are distinct-element),
-    # so one array_intersect does the work of intersect + union
-    inter = F.size(F.array_intersect("ha", "hb"))
-    union = (F.size("ha") + F.size("hb") - inter).cast("double")
-    return (
-        ver.withColumn("jaccard", inter.cast("double") / union)
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
+    docs_broadcast = not materialize or side[0].count() <= BROADCAST_MAX_DOCS
+    return _precheck_verify(pre, side, side, threshold, docs_broadcast, materialize)
 
 
 def minhash_lsh_pairs_vs(
@@ -551,75 +438,31 @@ def minhash_lsh_pairs_vs(
     near-duplicate of what we already have?"). Output excludes
     identical ids (a re-ingested row is exact-dedup's job).
 
-    100-TB shape: the corpus is the big side and NEVER shuffles for
-    candidates — the new batch's band table (narrow: 24 bytes x bands
-    per doc) is **broadcast** against the corpus band table, and gram
-    arrays are re-derived only for the corpus docs that actually hit a
-    bucket (semi-join prune). In a deployed pipeline the corpus band
-    table is materialized once (bucketed by band hash) and reused
-    every batch; this function derives it from ``corpus_df`` with the
-    identical plan shape, so swapping in a pre-built table is a
-    one-line change at the call site.
-
-    Recall/precision contract matches ``minhash_lsh_pairs``: precision
-    exact (same array_intersect verify expression), recall set by the
-    band count."""
-    new_grams = _ensure_parallelism(new_df).select(
-        F.col(id_col).alias("id"), ngrams(F.col(text_col), n).alias("grams")
-    ).withColumn("ng", F.size("grams"))
-    if materialize:
-        new_grams = new_grams.localCheckpoint()
-    new_banded = _band_buckets_from_sig(
-        _signature_table_from_grams(new_grams, num_hashes), num_hashes, bands
+    Same engine as ``minhash_lsh_pairs`` (gram tables, band hashes,
+    precheck, verify), so at any ``bands`` the output equals its pairs
+    over the union restricted to cross pairs. Only the candidate join
+    differs: the corpus NEVER shuffles for candidates — its band table
+    streams against the **broadcast** band table of the new batch
+    (24 bytes x bands per doc). The doc-count broadcast bound is
+    counted on the corpus. A deployed pipeline would materialize the
+    corpus tables once and reuse them every batch."""
+    new = _gram_tables(new_df, n, num_hashes, bands, text_col, id_col, materialize)
+    corpus = _gram_tables(
+        corpus_df, n, num_hashes, bands, text_col, id_col, materialize
     )
-    corpus_banded = minhash_band_buckets(
-        corpus_df, n, num_hashes, bands, text_col, id_col
-    )
-    cands = (
-        corpus_banded.alias("c")
-        .join(
-            F.broadcast(new_banded.alias("nw")),
-            (F.col("c.band_id") == F.col("nw.band_id"))
-            & (F.col("c.band_hash") == F.col("nw.band_hash"))
-            & (F.col("c.id") != F.col("nw.id")),
-        )
-        .select(
-            F.col("nw.id").alias("new_id"), F.col("c.id").alias("corpus_id")
-        )
-        .dropDuplicates(["new_id", "corpus_id"])
-    )
-    if materialize:
-        cands = cands.localCheckpoint()
-    hit_grams = (
-        _ensure_parallelism(
-            corpus_df.join(
-                cands.select(F.col("corpus_id").alias(id_col)).distinct(),
-                id_col,
-                "left_semi",
-            )
-        )
-        .select(
-            F.col(id_col).alias("corpus_id"),
-            ngrams(F.col(text_col), n).alias("grams_b"),
-        )
-        .withColumn("nb", F.size("grams_b"))
-    )
-    joined = cands.join(
-        F.broadcast(
-            new_grams.select(
-                F.col("id").alias("new_id"),
-                F.col("grams").alias("grams_a"),
-                F.col("ng").alias("na"),
-            )
-        ),
-        "new_id",
-    ).join(hit_grams, "corpus_id")
-    inter = F.size(F.array_intersect("grams_a", "grams_b"))
-    union = (F.col("na") + F.col("nb") - inter).cast("double")
-    return (
-        joined.withColumn("jaccard", inter.cast("double") / union)
-        .filter(F.col("jaccard") >= threshold)
-        .select("new_id", "corpus_id", "jaccard")
+    c = _band_table(corpus[1], bands).alias("c")
+    nw = F.broadcast(_band_table(new[1], bands).alias("nw"))
+    pre = c.join(
+        nw,
+        (F.col("c.band_id") == F.col("nw.band_id"))
+        & (F.col("c.band_hash") == F.col("nw.band_hash"))
+        & (F.col("c.id") != F.col("nw.id")),
+    ).select(F.col("nw.id").alias("id_a"), F.col("c.id").alias("id_b"))
+    docs_broadcast = not materialize or corpus[0].count() <= BROADCAST_MAX_DOCS
+    return _precheck_verify(
+        pre, new, corpus, threshold, docs_broadcast, materialize
+    ).select(
+        F.col("id_a").alias("new_id"), F.col("id_b").alias("corpus_id"), "jaccard"
     )
 
 
@@ -743,7 +586,7 @@ def simhash_near_dup_pairs(
     Verification is a JVM-side popcount on the XOR. The banded stage
     carries only (id, band_id, band_val, simhash) — ~32 bytes/row
     through the xbands shuffle, same narrow-candidate discipline as
-    ``minhash_lsh_candidates``."""
+    ``minhash_lsh_pairs``' band table."""
     if max_hamming > bands - 1:
         raise ValueError(
             f"banding guarantees recall only for max_hamming <= bands-1 "

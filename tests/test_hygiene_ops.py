@@ -309,31 +309,90 @@ def test_repetition_scores_null_text(spark):
 # -- incremental near-dup (new batch vs existing corpus) ---------------------
 
 
+def _cross_pairs(full, is_new):
+    """``minhash_lsh_pairs`` rows restricted to (new, corpus) pairs, as
+    ``{(new_id, corpus_id): jaccard}``."""
+    want = {}
+    for r in full:
+        a, b = r["id_a"], r["id_b"]
+        if is_new(a) != is_new(b):  # exactly one side is new
+            nid, cid = (a, b) if is_new(a) else (b, a)
+            want[(nid, cid)] = r["jaccard"]
+    return want
+
+
+def _vs_pairs(out):
+    return {(r["new_id"], r["corpus_id"]): r["jaccard"] for r in out.collect()}
+
+
 def test_minhash_lsh_pairs_vs_equals_restricted_full_pairs(spark, sf_dir):
     """The vs-variant's output must equal the full-corpus pair set
     restricted to cross (new, corpus) pairs — same recall contract,
-    same exact verify, same jaccard values."""
+    same exact verify, same jaccard values. Both run one hash family,
+    so this holds exactly at any band count, not only where bands=64
+    makes recall ~1."""
     from grokspark.operators import minhash_lsh_pairs, minhash_lsh_pairs_vs
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     new = docs.filter(F.col("doc_id") % 10 == 0)
     corpus = docs.filter(F.col("doc_id") % 10 != 0)
 
-    got = {
-        (r["new_id"], r["corpus_id"]): r["jaccard"]
-        for r in minhash_lsh_pairs_vs(
-            new, corpus, threshold=0.5, n=2, bands=64
-        ).collect()
-    }
-    full = minhash_lsh_pairs(docs, threshold=0.5, n=2, bands=64).collect()
-    want = {}
-    for r in full:
-        a, b = r["id_a"], r["id_b"]
-        if (a % 10 == 0) != (b % 10 == 0):  # exactly one side is new
-            nid, cid = (a, b) if a % 10 == 0 else (b, a)
-            want[(nid, cid)] = r["jaccard"]
-    assert got == want
-    assert got, "no cross pairs at sf0.001 — test corpus assumption broke"
+    for bands in (64, 32):
+        got = _vs_pairs(
+            minhash_lsh_pairs_vs(new, corpus, threshold=0.5, n=2, bands=bands)
+        )
+        full = minhash_lsh_pairs(docs, threshold=0.5, n=2, bands=bands).collect()
+        assert got == _cross_pairs(full, lambda i: i % 10 == 0), bands
+        assert got, "no cross pairs at sf0.001 — test corpus assumption broke"
+
+
+def test_minhash_lsh_pairs_vs_never_pairs_identical_ids(spark):
+    """A re-ingested corpus row (same doc_id, same text) is exact-dedup's
+    job: its (id, id) pair must not come back, while a near-copy under a
+    fresh id is found with the exact jaccard ``jaccard_pairs`` gives."""
+    from grokspark.operators import jaccard_pairs, minhash_lsh_pairs_vs
+
+    def text(k):
+        return " ".join(f"w{k}_{j}" for j in range(40))
+
+    base = text(3)
+    near = base.replace("w3_39", "other")  # 39 of 40 bigrams shared
+    corpus = spark.createDataFrame(
+        [(k, text(k)) for k in range(1, 6)], "doc_id long, text string"
+    )
+    new = spark.createDataFrame(
+        [(3, base), (100, near)], "doc_id long, text string"
+    )
+    got = _vs_pairs(minhash_lsh_pairs_vs(new, corpus, threshold=0.5, n=2, bands=64))
+    exact = jaccard_pairs(
+        spark.createDataFrame([(3, base), (100, near)], "doc_id long, text string"),
+        threshold=0.5,
+        n=2,
+    ).collect()
+    assert [(r["id_a"], r["id_b"]) for r in exact] == [(3, 100)]
+    assert got == {(100, 3): exact[0]["jaccard"]}
+
+
+def test_minhash_verify_broadcast_bound_fallback(spark, sf_dir, monkeypatch):
+    """With both broadcast bounds at 0 the precheck and the verify take
+    their shuffle-join fallbacks; both near-dup queries must return the
+    same pairs and jaccards as under the default bounds."""
+    from grokspark.operators import dedup, minhash_lsh_pairs, minhash_lsh_pairs_vs
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    new = docs.filter(F.col("doc_id") % 10 == 0)
+    corpus = docs.filter(F.col("doc_id") % 10 != 0)
+
+    def run():
+        full = minhash_lsh_pairs(docs, threshold=0.5, n=2, bands=64).collect()
+        vs = minhash_lsh_pairs_vs(new, corpus, threshold=0.5, n=2, bands=64)
+        return {(r["id_a"], r["id_b"]): r["jaccard"] for r in full}, _vs_pairs(vs)
+
+    default = run()
+    monkeypatch.setattr(dedup, "BROADCAST_MAX_DOCS", 0)
+    monkeypatch.setattr(dedup, "BROADCAST_MAX_PAIRS", 0)
+    assert run() == default
+    assert default[0] and default[1]
 
 
 def test_minhash_lsh_pairs_vs_corpus_side_never_broadcast(spark, sf_dir):

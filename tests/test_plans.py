@@ -209,64 +209,77 @@ def test_exact_dedup_single_shuffle(spark, sf_dir):
 
 def test_minhash_candidate_stage_never_shuffles_grams(spark, sf_dir):
     """The LSH band explode multiplies rows x bands; nothing wide may
-    ride it. The entire candidate plan (explode -> band-bucket self-join
-    -> distinct pairs) must not reference the gram arrays at all — they
-    are joined back only for the verify step."""
-    import re
-
-    from grokspark.operators import minhash_lsh_candidates, minhash_lsh_pairs
+    ride it. In the full lazy plans every exchange of a band table
+    (shuffle or broadcast) carries only (id, band_id, band_hash) —
+    never the gram arrays, which are joined back only for the verify
+    step. The pair self-join shuffles its band table; the incremental
+    variant only broadcasts the new batch's, so its corpus side never
+    shuffles for candidates."""
+    from grokspark.operators import minhash_lsh_pairs, minhash_lsh_pairs_vs
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    # every exchange in the candidate plan must be gram-free (the gram
-    # arrays are consumed by the signature aggregate map-side; only
-    # (id, partial mins) and (id, band_id, band_hash) may shuffle)
-    cand_plan = explain_str(minhash_lsh_candidates(docs, n=2, bands=64), "formatted")
-    blocks = re.split(r"\n(?=\(\d+\) )", cand_plan)
-    exchanges = [b for b in blocks if "Exchange" in b.splitlines()[0]]
-    assert exchanges, "no exchange found — plan shape changed"
-    for b in exchanges:
-        detail = " ".join(
-            l for l in b.splitlines() if l.startswith(("Input", "Arguments"))
-        )
-        assert "grams#" not in detail, b
-    # full pipeline: gram arrays appear only in the verify joins, never
-    # below a band_hash exchange
-    full_plan = explain_str(minhash_lsh_pairs(docs, n=2, bands=64), "simple")
-    for line in full_plan.splitlines():
-        if "Exchange hashpartitioning" in line and "band_hash" in line:
-            assert "grams" not in line, line
+    pairs = minhash_lsh_pairs(docs, n=2, bands=64, materialize=False)
+    pairs_vs = minhash_lsh_pairs_vs(
+        docs.filter(F.col("doc_id") % 10 == 0),
+        docs.filter(F.col("doc_id") % 10 != 0),
+        n=2,
+        bands=64,
+        materialize=False,
+    )
+    for out, shuffles_bands in ((pairs, True), (pairs_vs, False)):
+        blocks = re.split(r"\n(?=\(\d+\) )", explain_str(out, "formatted"))
+        band = [
+            b for b in blocks if "Exchange" in b.splitlines()[0] and "band_hash#" in b
+        ]
+        assert band, "no band_hash exchange found — plan shape changed"
+        for b in band:
+            detail = " ".join(
+                l for l in b.splitlines() if l.startswith(("Input", "Arguments"))
+            )
+            assert "grams#" not in detail and "gh#" not in detail, b
+        shuffled = [b for b in band if "BroadcastExchange" not in b.splitlines()[0]]
+        assert bool(shuffled) == shuffles_bands, shuffled
 
 
 def test_minhash_verify_never_shuffles_gram_arrays(spark, sf_dir):
     """Round-6 invariant: the gram-HASH arrays (``gh``) feed the
     signature aggregate map-side and the final verify via BROADCAST
-    joins only — no Exchange in the full pair plan may carry them.
-    (The old plan shuffled ~600 B of gram array per candidate pair
-    through two joins; at sf1.0 that was 78.5M candidates and ~80% of
-    a 127 s runtime.)"""
+    joins only — no Exchange in the full pair plan may carry them, nor
+    gram strings. (The old plan shuffled ~600 B of gram array per
+    candidate pair through two joins; at sf1.0 that was 78.5M
+    candidates and ~80% of a 127 s runtime.) Both near-dup queries run
+    the same engine, so both plans are checked."""
     import re
 
-    from grokspark.operators import minhash_lsh_pairs
+    from grokspark.operators import minhash_lsh_pairs, minhash_lsh_pairs_vs
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     # materialize=False keeps the WHOLE pipeline in one lazy plan so
     # every exchange is visible (the default eager mode splits it into
     # checkpointed jobs whose final plan has no exchange at all)
-    plan = explain_str(
-        minhash_lsh_pairs(docs, n=2, bands=64, materialize=False), "formatted"
+    pairs = minhash_lsh_pairs(docs, n=2, bands=64, materialize=False)
+    pairs_vs = minhash_lsh_pairs_vs(
+        docs.filter(F.col("doc_id") % 10 == 0),
+        docs.filter(F.col("doc_id") % 10 != 0),
+        n=2,
+        bands=64,
+        materialize=False,
     )
-    blocks = re.split(r"\n(?=\(\d+\) )", plan)
-    exchanges = [
-        b
-        for b in blocks
-        if b.splitlines()[0].split(" ", 1)[-1].startswith("Exchange")
-    ]
-    assert exchanges, "no exchange found — plan shape changed"
-    for b in exchanges:
-        detail = " ".join(
-            l for l in b.splitlines() if l.startswith(("Input", "Arguments"))
-        )
-        assert "gh#" not in detail and "ha#" not in detail and "hb#" not in detail, b
+    for out in (pairs, pairs_vs):
+        plan = explain_str(out, "formatted")
+        blocks = re.split(r"\n(?=\(\d+\) )", plan)
+        exchanges = [
+            b
+            for b in blocks
+            if b.splitlines()[0].split(" ", 1)[-1].startswith("Exchange")
+        ]
+        assert exchanges, "no exchange found — plan shape changed"
+        for b in exchanges:
+            detail = " ".join(
+                l for l in b.splitlines() if l.startswith(("Input", "Arguments"))
+            )
+            for col in ("gh#", "ha#", "hb#", "grams#"):
+                assert col not in detail, b
 
 
 def test_ensure_parallelism_size_floor(spark, sf_dir):
