@@ -198,8 +198,8 @@ SPREAD_MIN_BYTES = 4 * 1024 * 1024
 
 _MASK_SLOTS = 8  # 512-bit gram bloom mask (8 longs) per document
 
-# Eager-mode broadcast bounds of both near-dup queries (lazy mode runs
-# no count and broadcasts). Precheck tables are ~80 B/doc (~400 MB at
+# Broadcast bounds of both near-dup queries, checked against counts of
+# the checkpointed tables. Precheck tables are ~80 B/doc (~400 MB at
 # the doc bound); the verify side carries a ~600 B gram-hash array per
 # surviving pair, and survivors can grow quadratically in a dup-heavy
 # corpus, so it has its own bound. Past either, shuffle joins.
@@ -240,7 +240,7 @@ def _jaccard_precheck(
 
 
 def _gram_tables(
-    df, n, num_hashes, bands, text_col, id_col, materialize
+    df, n, num_hashes, bands, text_col, id_col
 ) -> tuple[DataFrame, DataFrame]:
     """One side's hashed-gram tables: ``grams (id, gh)`` (distinct gram
     hashes) and ``sig (id, ng, b0..b7, bh0..)`` (gram count, bloom mask,
@@ -248,14 +248,15 @@ def _gram_tables(
     aggregates over the exploded grams — small codegen units (a per-row
     array of nested lambdas re-compiled in every stage cost 86 s on 500
     docs), and partial aggregation collapses each document map-side, so
-    no exchange carries gram arrays. The mins fold into band hashes
-    before the checkpoint (73 longs/doc at bands=64, not 137)."""
+    no exchange carries gram arrays. Both tables are localCheckpointed:
+    the grams feed the signature and the verify, the signature feeds
+    the band explode and the precheck, so each scan and aggregate runs
+    once. The mins fold into band hashes before the checkpoint (73
+    longs/doc at bands=64, not 137)."""
     grams = _ensure_parallelism(df).select(
         F.col(id_col).alias("id"),
         ngram_hashes(F.col(text_col), n).alias("gh"),
-    )
-    if materialize:
-        grams = grams.localCheckpoint()
+    ).localCheckpoint()
     sig = (
         grams.select("id", F.explode("gh").alias("h"))
         .groupBy("id")
@@ -277,11 +278,7 @@ def _gram_tables(
     ]
     sig = sig.select(
         "id", "ng", *[f"b{i}" for i in range(_MASK_SLOTS)], *band_cols
-    )
-    if materialize:
-        # feeds the band explode and the precheck tables — checkpoint it
-        # once so the explode + num_hashes-min aggregate runs once
-        sig = sig.localCheckpoint()
+    ).localCheckpoint()
     return grams, sig
 
 
@@ -302,16 +299,15 @@ def _precheck_verify(
     side_a: tuple[DataFrame, DataFrame],
     side_b: tuple[DataFrame, DataFrame],
     threshold: float,
-    docs_broadcast: bool,
-    materialize: bool,
 ) -> DataFrame:
     """Exact-verified ``(id_a, id_b, jaccard)`` from candidate rows
     ``pre (id_a, id_b)``, one per shared band, with ``id_a``/``id_b``
     keyed into ``side_a``/``side_b``'s ``(grams, sig)`` tables. The
-    bloom-mask precheck (narrow tables, broadcast when
-    ``docs_broadcast``) prunes; distinct survivors are verified by
-    streaming each side's gram table against the broadcast survivor
-    set, gated in eager mode on ``BROADCAST_MAX_PAIRS``."""
+    bloom-mask precheck prunes over narrow tables, broadcast while
+    ``side_b``'s doc count is within ``BROADCAST_MAX_DOCS``; the
+    distinct survivors are checkpointed and verified by streaming each
+    side's gram table against them, broadcast while their count is
+    within ``BROADCAST_MAX_PAIRS``."""
     n_part = int(pre.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     slots = [f"b{i}" for i in range(_MASK_SLOTS)]
 
@@ -323,7 +319,7 @@ def _precheck_verify(
         )
 
     pa, pb = ptab(side_a[1], "a"), ptab(side_b[1], "b")
-    if docs_broadcast:
+    if side_b[0].count() <= BROADCAST_MAX_DOCS:
         pa, pb = F.broadcast(pa), F.broadcast(pb)
     else:
         pre = pre.repartition(n_part, "id_a")
@@ -336,11 +332,9 @@ def _precheck_verify(
         .filter(_jaccard_precheck(F.col("na"), F.col("nb"), popcount_or, threshold))
         .select("id_a", "id_b")
         .dropDuplicates()
+        .localCheckpoint()
     )
-    pairs_broadcast = True
-    if materialize:
-        cands = cands.localCheckpoint()
-        pairs_broadcast = cands.count() <= BROADCAST_MAX_PAIRS
+    pairs_broadcast = cands.count() <= BROADCAST_MAX_PAIRS
     cand_b = F.broadcast(cands) if pairs_broadcast else cands
     left = side_a[0].join(cand_b, F.col("id") == F.col("id_a")).select(
         "id_a", "id_b", F.col("gh").alias("ha")
@@ -368,7 +362,6 @@ def minhash_lsh_pairs(
     bands: int = 32,
     text_col: str = "text",
     id_col: str = "doc_id",
-    materialize: bool = True,
 ) -> DataFrame:
     """MinHash+LSH near-duplicate pairs ``(id_a, id_b, jaccard)``,
     ``id_a < id_b``, exact-verified.
@@ -391,16 +384,15 @@ def minhash_lsh_pairs(
        (bounded by ``BROADCAST_MAX_DOCS`` / ``BROADCAST_MAX_PAIRS``),
        and the gram tables stream against them.
 
-    Measured sf1.0/local[32]: 127 s -> 17 s, identical output.
-    ``materialize=True`` localCheckpoints the gram, signature and
-    survivor tables (eager); ``materialize=False`` keeps the op lazy.
+    Measured sf1.0/local[32]: 127 s -> 17 s, identical output. The
+    gram, signature and survivor tables are localCheckpointed (eager).
 
     Precision is exact (every emitted pair is verified); recall is the
     LSH collision probability 1-(1-s^r)^b — pick bands/num_hashes for
     the target threshold (bands=64, num_hashes=128 makes misses at
     s>=0.5 ~1e-8, used by the driver oracle query)."""
     n_part = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    side = _gram_tables(df, n, num_hashes, bands, text_col, id_col, materialize)
+    side = _gram_tables(df, n, num_hashes, bands, text_col, id_col)
     banded = _band_table(side[1], bands)
     # candidate self-join: explicit repartition pins the exchange at
     # the full shuffle width (narrow 24 B rows — AQE's byte-based
@@ -417,8 +409,7 @@ def minhash_lsh_pairs(
         )
         .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
     )
-    docs_broadcast = not materialize or side[0].count() <= BROADCAST_MAX_DOCS
-    return _precheck_verify(pre, side, side, threshold, docs_broadcast, materialize)
+    return _precheck_verify(pre, side, side, threshold)
 
 
 def minhash_lsh_pairs_vs(
@@ -430,7 +421,6 @@ def minhash_lsh_pairs_vs(
     bands: int = 32,
     text_col: str = "text",
     id_col: str = "doc_id",
-    materialize: bool = True,
 ) -> DataFrame:
     """Incremental near-dup: exact-verified pairs ``(new_id,
     corpus_id, jaccard)`` between a NEW batch and an EXISTING corpus —
@@ -446,10 +436,8 @@ def minhash_lsh_pairs_vs(
     (24 bytes x bands per doc). The doc-count broadcast bound is
     counted on the corpus. A deployed pipeline would materialize the
     corpus tables once and reuse them every batch."""
-    new = _gram_tables(new_df, n, num_hashes, bands, text_col, id_col, materialize)
-    corpus = _gram_tables(
-        corpus_df, n, num_hashes, bands, text_col, id_col, materialize
-    )
+    new = _gram_tables(new_df, n, num_hashes, bands, text_col, id_col)
+    corpus = _gram_tables(corpus_df, n, num_hashes, bands, text_col, id_col)
     c = _band_table(corpus[1], bands).alias("c")
     nw = F.broadcast(_band_table(new[1], bands).alias("nw"))
     pre = c.join(
@@ -458,10 +446,7 @@ def minhash_lsh_pairs_vs(
         & (F.col("c.band_hash") == F.col("nw.band_hash"))
         & (F.col("c.id") != F.col("nw.id")),
     ).select(F.col("nw.id").alias("id_a"), F.col("c.id").alias("id_b"))
-    docs_broadcast = not materialize or corpus[0].count() <= BROADCAST_MAX_DOCS
-    return _precheck_verify(
-        pre, new, corpus, threshold, docs_broadcast, materialize
-    ).select(
+    return _precheck_verify(pre, new, corpus, threshold).select(
         F.col("id_a").alias("new_id"), F.col("id_b").alias("corpus_id"), "jaccard"
     )
 

@@ -99,7 +99,6 @@ def train_bigram_lm(
     text_col: str = "text",
     max_vocab: Optional[int] = None,
     max_bigrams: Optional[int] = None,
-    materialize: bool = True,
 ) -> tuple[DataFrame, DataFrame]:
     """Count-train the LM: returns ``(unigrams(w1, cnt),
     bigrams(w1, w2, cnt))``.  One wide aggregate each; the optional
@@ -107,22 +106,21 @@ def train_bigram_lm(
     window is over the ALREADY-AGGREGATED Heaps-bounded key table, not
     the corpus).
 
-    ``materialize`` (default, the repo's eager-heavy-op convention)
-    localCheckpoints the tokenized words table so the corpus is
-    scanned and split ONCE — both count aggregates read the
-    materialization instead of re-running the scan+split each
-    (measured: the double pass was most of the sf1.0 train cost).
-    ``materialize=False`` keeps the op fully lazy."""
+    The tokenized words table is localCheckpointed (the repo's
+    eager-heavy-op convention) so the corpus is scanned and split ONCE
+    — both count aggregates read the materialization instead of
+    re-running the scan+split each (measured: the double pass was most
+    of the sf1.0 train cost)."""
     from grokspark.operators.dedup import SPREAD_MIN_BYTES, _ensure_parallelism
 
     w = lm_words(F.col(text_col))
     # spread a single-split local scan so both count aggregates run at
     # full width (no-op on a cluster where scan splits >> cores)
-    base = _ensure_parallelism(
-        df.filter(F.col(text_col).isNotNull()), SPREAD_MIN_BYTES
-    ).select(w.alias("_w"))
-    if materialize:
-        base = base.localCheckpoint()
+    base = (
+        _ensure_parallelism(df.filter(F.col(text_col).isNotNull()), SPREAD_MIN_BYTES)
+        .select(w.alias("_w"))
+        .localCheckpoint()
+    )
     uni = (
         base.select(F.explode("_w").alias("w1"))
         .groupBy("w1")

@@ -91,7 +91,6 @@ def bm25_topk(
     id_col: str = "doc_id",
     query_id_col: str = "query_id",
     query_text_col: str = "text",
-    materialize: bool = True,
 ) -> DataFrame:
     """Top-``k`` documents per query by BM25: ``(query_id, rank,
     doc_id, score_micro, score)``.  ``queries`` is a (small) DataFrame
@@ -104,21 +103,18 @@ def bm25_topk(
     The corpus is scanned ONCE: the global stats the score needs
     (``n_docs = countDistinct(id)``, ``sum_dl = sum(tf)`` — every
     doc's length is the sum of its term frequencies) are aggregated
-    from the postings themselves, and ``materialize`` (default, the
-    repo's eager-heavy-op convention) localCheckpoints the postings so
-    the stats action, the df-frequency aggregate, and the probe join
-    all reuse one materialization instead of re-running the scan."""
-    post = bm25_postings(df, text_col, id_col)
-    if materialize:
-        post = post.localCheckpoint(eager=True)
+    from the postings themselves, and the postings are
+    localCheckpointed (the repo's eager-heavy-op convention) so the
+    stats action, the df-frequency aggregate, and the probe join all
+    reuse one materialization instead of re-running the scan. An empty
+    corpus (no rows, or only NULL texts) returns no rows."""
+    post = bm25_postings(df, text_col, id_col).localCheckpoint()
     stats = post.agg(
         F.countDistinct("id").alias("n"),
         F.sum("tf").alias("sumdl"),
     ).collect()[0]
     n_docs, sum_dl = int(stats["n"] or 0), int(stats["sumdl"] or 0)
-    if n_docs == 0:
-        raise ValueError("bm25_topk: empty corpus")
-    avgdl = float(sum_dl) / float(n_docs)
+    avgdl = float(sum_dl) / float(n_docs) if n_docs else 1.0
 
     dfreq = post.groupBy("term").agg(F.count(F.lit(1)).cast("long").alias("dft"))
     if max_df_ratio is not None:
@@ -193,7 +189,8 @@ def bm25_topk_py(
         did: _words_py(t) for did, t in docs if t is not None
     }
     n_docs = len(toks)
-    avgdl = float(sum(len(w) for w in toks.values())) / float(n_docs)
+    sum_dl = sum(len(w) for w in toks.values())
+    avgdl = float(sum_dl) / float(n_docs) if n_docs else 1.0
     dfreq: dict = {}
     tfs: dict = {}
     for did, ws in toks.items():

@@ -152,15 +152,14 @@ def heavy_hitters(
     key_col: str = "term",
     phi_ppm: int = 10_000,
     k: "int | None" = None,
-    materialize: bool = True,
 ) -> DataFrame:
     """Exact terms with frequency strictly above ``phi_ppm`` parts-
     per-million of ``tokens`` (one row per occurrence): ``(term,
     cnt)``.  ``k`` (default ``ceil(1e6 / phi_ppm)``) is the per-
     partition counter budget; any ``k >= 1e6/phi_ppm`` preserves the
     superset guarantee, larger k only widens pass 2's candidate set.
-    ``materialize`` localCheckpoints the (tiny) pass-1 summaries so
-    the corpus scan runs exactly twice, never three times."""
+    The (tiny) pass-1 summaries are localCheckpointed so the corpus
+    scan runs exactly twice, never three times."""
     if not 1 <= phi_ppm < 1_000_000:
         raise ValueError(f"phi_ppm must be in [1, 1e6), got {phi_ppm}")
     if k is None:
@@ -170,9 +169,9 @@ def heavy_hitters(
     toks = tokens.select(F.col(key_col).alias("term")).filter(
         F.col("term").isNotNull()
     )
-    summaries = toks.mapInArrow(_mg_kernel(int(k)), "term string, cnt long")
-    if materialize:
-        summaries = summaries.localCheckpoint(eager=True)
+    summaries = toks.mapInArrow(
+        _mg_kernel(int(k)), "term string, cnt long"
+    ).localCheckpoint()
     n_total = summaries.filter(F.col("term").isNull()).agg(
         F.sum("cnt").alias("n")
     ).collect()[0]["n"] or 0

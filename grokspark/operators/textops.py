@@ -402,7 +402,6 @@ def winnow_pairs(
     window: int = WINNOW_W,
     text_col: str = "text",
     id_col: str = "doc_id",
-    materialize: bool = True,
 ) -> DataFrame:
     """Near-duplicate pairs by shared winnowing fingerprints:
     ``(id_a, id_b, n_shared)`` for pairs sharing >= ``min_shared``
@@ -421,15 +420,12 @@ def winnow_pairs(
     literature; None keeps every fp (exactness for small corpora).
 
     The ``(id, fp)`` index is referenced by every join branch (3x with
-    the cap), so by default it is materialized ONCE inside the op
+    the cap), so it is materialized ONCE inside the op
     (``localCheckpoint`` — same discipline as ``duplicate_clusters``'s
     edge set; on a real cluster, a durable checkpoint/table plays the
     same role) instead of re-running the Python fingerprint kernel per
-    branch. ``materialize=False`` keeps the op fully lazy for callers
-    that manage their own caching of a tiny corpus."""
-    fps = winnow_fingerprints(df, k, window, text_col, id_col)
-    if materialize:
-        fps = fps.localCheckpoint()
+    branch."""
+    fps = winnow_fingerprints(df, k, window, text_col, id_col).localCheckpoint()
     if max_fp_df is not None:
         keep = (
             fps.groupBy("fp")

@@ -396,22 +396,35 @@ def test_minhash_verify_broadcast_bound_fallback(spark, sf_dir, monkeypatch):
 
 
 def test_minhash_lsh_pairs_vs_corpus_side_never_broadcast(spark, sf_dir):
-    """Plan shape: the NEW side is the broadcast build side; the corpus
-    band table streams. (If Spark ever flipped this, a 10^12-doc corpus
-    would be collected to the driver.)"""
+    """Plan shape of the candidate join (the checkpointed stage that
+    reads the band tables): the NEW side is the broadcast build side;
+    the corpus band table streams. (If Spark ever flipped this, a
+    10^12-doc corpus would be collected to the driver.) The corpus
+    side is the one the join aliases ``id_b``."""
     from grokspark.operators import minhash_lsh_pairs_vs
+    from tools.capture_plans import record_plans
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    out = minhash_lsh_pairs_vs(
-        docs.filter(F.col("doc_id") % 10 == 0),
-        docs.filter(F.col("doc_id") % 10 != 0),
-        threshold=0.5,
-        n=2,
-        bands=64,
-        materialize=False,
+    stages, _ = record_plans(
+        spark,
+        lambda: minhash_lsh_pairs_vs(
+            docs.filter(F.col("doc_id") % 10 == 0),
+            docs.filter(F.col("doc_id") % 10 != 0),
+            threshold=0.5,
+            n=2,
+            bands=64,
+        ),
     )
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan, plan
+    (cand,) = [p for p in stages if "band_hash#" in p]
+    corpus_id = re.search(r"(\w+#\d+L?) AS id_b#", cand).group(1)
+    band_broadcasts = [
+        b
+        for b in re.split(r"\n(?=\(\d+\) )", cand)
+        if "BroadcastExchange" in b.splitlines()[0] and "band_hash#" in b
+    ]
+    assert band_broadcasts, cand
+    for b in band_broadcasts:
+        assert not re.search(rf"{re.escape(corpus_id)}\b", b), b
 
 
 # ---------------------------------------------------------------------------
@@ -631,6 +644,23 @@ def test_bm25_max_df_prune_and_broadcast_plan(spark):
     # probe side is broadcast: the postings never shuffle for the join
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan, plan
+
+
+@pytest.mark.parametrize(
+    "docs", [[], [(0, None), (1, None)]], ids=["no_rows", "all_null"]
+)
+def test_bm25_empty_corpus_returns_no_rows(spark, docs):
+    """A corpus with no rows, or only NULL texts, has no postings: both
+    paths return no rows (no hard failure) and the Spark path keeps its
+    output columns."""
+    from grokspark.operators.retrieval import bm25_topk, bm25_topk_py
+
+    df = spark.createDataFrame(docs, "doc_id long, text string")
+    qs = spark.createDataFrame(BM25_QUERIES, "query_id string, text string")
+    out = bm25_topk(df, qs, k=3)
+    assert out.columns == ["query_id", "rank", "doc_id", "score_micro", "score"]
+    assert out.collect() == []
+    assert bm25_topk_py(docs, BM25_QUERIES, k=3) == []
 
 
 # ---------------------------------------------------------------------------

@@ -12,6 +12,8 @@ import re
 import pytest
 from pyspark.sql import functions as F
 
+from tools.capture_plans import record_plans
+
 
 def explain_str(df, mode: str = "formatted") -> str:
     buf = io.StringIO()
@@ -207,79 +209,131 @@ def test_exact_dedup_single_shuffle(spark, sf_dir):
     assert plan.count("HashAggregate") == 2  # partial + final
 
 
-def test_minhash_candidate_stage_never_shuffles_grams(spark, sf_dir):
-    """The LSH band explode multiplies rows x bands; nothing wide may
-    ride it. In the full lazy plans every exchange of a band table
-    (shuffle or broadcast) carries only (id, band_id, band_hash) —
-    never the gram arrays, which are joined back only for the verify
-    step. The pair self-join shuffles its band table; the incremental
-    variant only broadcasts the new batch's, so its corpus side never
-    shuffles for candidates."""
+@pytest.fixture(scope="module")
+def minhash_plans(spark, sf_dir) -> dict:
+    """Every plan each near-dup query runs: the formatted plan of each
+    stage it localCheckpoints, then its returned DataFrame's plan.
+    Keyed ``pairs`` / ``pairs_vs``."""
     from grokspark.operators import minhash_lsh_pairs, minhash_lsh_pairs_vs
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    pairs = minhash_lsh_pairs(docs, n=2, bands=64, materialize=False)
-    pairs_vs = minhash_lsh_pairs_vs(
-        docs.filter(F.col("doc_id") % 10 == 0),
-        docs.filter(F.col("doc_id") % 10 != 0),
-        n=2,
-        bands=64,
-        materialize=False,
+    runs = {
+        "pairs": lambda: minhash_lsh_pairs(docs, n=2, bands=64),
+        "pairs_vs": lambda: minhash_lsh_pairs_vs(
+            docs.filter(F.col("doc_id") % 10 == 0),
+            docs.filter(F.col("doc_id") % 10 != 0),
+            n=2,
+            bands=64,
+        ),
+    }
+    out = {}
+    for name, run in runs.items():
+        stages, df = record_plans(spark, run)
+        out[name] = stages + [explain_str(df, "formatted")]
+    return out
+
+
+def _blocks(plan: str) -> list[str]:
+    """A formatted plan's per-operator detail blocks."""
+    return re.split(r"\n(?=\(\d+\) )", plan)
+
+
+def _detail(block: str) -> str:
+    return " ".join(
+        l for l in block.splitlines() if l.startswith(("Input", "Arguments"))
     )
-    for out, shuffles_bands in ((pairs, True), (pairs_vs, False)):
-        blocks = re.split(r"\n(?=\(\d+\) )", explain_str(out, "formatted"))
+
+
+def test_minhash_candidate_stage_never_shuffles_grams(minhash_plans):
+    """The LSH band explode multiplies rows x bands; nothing wide may
+    ride it. In every plan either query runs (each checkpointed stage
+    and the final plan), every exchange of a band table (shuffle or
+    broadcast) carries only (id, band_id, band_hash) — never the gram
+    arrays, which are joined back only for the verify step. The pair
+    self-join shuffles its band table; the incremental variant only
+    broadcasts the NEW batch's band table (the one its candidate join
+    aliases ``id_a``), so its corpus side never shuffles for
+    candidates."""
+    plans = minhash_plans
+    for name, shuffles_bands in (("pairs", True), ("pairs_vs", False)):
         band = [
-            b for b in blocks if "Exchange" in b.splitlines()[0] and "band_hash#" in b
+            b
+            for plan in plans[name]
+            for b in _blocks(plan)
+            if "Exchange" in b.splitlines()[0] and "band_hash#" in b
         ]
         assert band, "no band_hash exchange found — plan shape changed"
         for b in band:
-            detail = " ".join(
-                l for l in b.splitlines() if l.startswith(("Input", "Arguments"))
-            )
+            detail = _detail(b)
             assert "grams#" not in detail and "gh#" not in detail, b
         shuffled = [b for b in band if "BroadcastExchange" not in b.splitlines()[0]]
         assert bool(shuffled) == shuffles_bands, shuffled
+    cand = [p for p in plans["pairs_vs"] if "band_hash#" in p]
+    assert len(cand) == 1, "expected one candidate-join stage"
+    new_ids = set(re.findall(r"(\w+#\d+L?) AS id_a#", cand[0]))
+    assert new_ids, cand[0]
+    for b in _blocks(cand[0]):
+        if "BroadcastExchange" in b.splitlines()[0] and "band_hash#" in b:
+            first = re.search(r"Input \[\d+\]: \[([^,\]]+)", b).group(1)
+            assert first in new_ids, b
 
 
-def test_minhash_verify_never_shuffles_gram_arrays(spark, sf_dir):
+def test_minhash_verify_never_shuffles_gram_arrays(minhash_plans):
     """Round-6 invariant: the gram-HASH arrays (``gh``) feed the
     signature aggregate map-side and the final verify via BROADCAST
-    joins only — no Exchange in the full pair plan may carry them, nor
+    joins only — no Exchange in any plan either near-dup query runs
+    (each checkpointed stage and the final plan) may carry them, nor
     gram strings. (The old plan shuffled ~600 B of gram array per
     candidate pair through two joins; at sf1.0 that was 78.5M
     candidates and ~80% of a 127 s runtime.) Both near-dup queries run
-    the same engine, so both plans are checked."""
-    import re
-
-    from grokspark.operators import minhash_lsh_pairs, minhash_lsh_pairs_vs
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    # materialize=False keeps the WHOLE pipeline in one lazy plan so
-    # every exchange is visible (the default eager mode splits it into
-    # checkpointed jobs whose final plan has no exchange at all)
-    pairs = minhash_lsh_pairs(docs, n=2, bands=64, materialize=False)
-    pairs_vs = minhash_lsh_pairs_vs(
-        docs.filter(F.col("doc_id") % 10 == 0),
-        docs.filter(F.col("doc_id") % 10 != 0),
-        n=2,
-        bands=64,
-        materialize=False,
-    )
-    for out in (pairs, pairs_vs):
-        plan = explain_str(out, "formatted")
-        blocks = re.split(r"\n(?=\(\d+\) )", plan)
+    the same engine, so both are checked."""
+    for plans in minhash_plans.values():
         exchanges = [
             b
-            for b in blocks
+            for plan in plans
+            for b in _blocks(plan)
             if b.splitlines()[0].split(" ", 1)[-1].startswith("Exchange")
         ]
         assert exchanges, "no exchange found — plan shape changed"
         for b in exchanges:
-            detail = " ".join(
-                l for l in b.splitlines() if l.startswith(("Input", "Arguments"))
-            )
+            detail = _detail(b)
             for col in ("gh#", "ha#", "hb#", "grams#"):
                 assert col not in detail, b
+
+
+@pytest.mark.parametrize(
+    "op, marker",
+    [
+        ("winnow_pairs", "fp#"),
+        ("train_bigram_lm", "_w#"),
+        ("heavy_hitters", "MapInArrow"),
+        ("bm25_topk", "tf#"),
+    ],
+)
+def test_heavy_ops_checkpoint_their_reused_stage(spark, sf_dir, op, marker):
+    """Each of these ops reads one stage from several branches (the fp
+    index, the words table, the pass-1 summaries, the postings) and
+    checkpoints it inside the call, so the corpus scan and its kernel
+    run once. Without the checkpoint every branch re-runs them."""
+    from grokspark.operators import winnow_pairs
+    from grokspark.operators.ngram_lm import train_bigram_lm
+    from grokspark.operators.retrieval import bm25_topk
+    from grokspark.operators.sketches import heavy_hitters
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    runs = {
+        "winnow_pairs": lambda: winnow_pairs(docs, min_shared=20, max_fp_df=50),
+        "train_bigram_lm": lambda: train_bigram_lm(docs),
+        "heavy_hitters": lambda: heavy_hitters(
+            docs.select(F.explode(F.split("text", " ")).alias("term"))
+        ),
+        "bm25_topk": lambda: bm25_topk(
+            docs, docs.limit(3).select(F.col("doc_id").alias("query_id"), "text")
+        ),
+    }
+    stages, _ = record_plans(spark, runs[op])
+    assert len(stages) == 1, stages
+    assert marker in stages[0], stages[0]
 
 
 def test_ensure_parallelism_size_floor(spark, sf_dir):

@@ -1,5 +1,9 @@
 """Dump .explain("formatted") for named __spark_entry__ queries to
-plans/r06/<query>_<tag>.txt (judge evidence for plan-shape claims).
+plans/r06/<query>_<tag>.txt (judge evidence for plan-shape claims),
+plus plans/r06/<query>_<tag>.stage<k>.txt for the k-th stage the query
+localCheckpointed while it was built: the eager heavy ops run their
+reused stages as separate jobs, so the final plan alone shows none of
+their exchanges.
 
 Usage: python tools/capture_plans.py <before|after> [query ...]
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1).
@@ -15,6 +19,34 @@ REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 
 
+def explain_formatted(df) -> str:
+    return df._sc._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "formatted"
+    )
+
+
+def record_plans(spark, build):
+    """Run ``build()`` and return ``(stages, out)``: the formatted plan
+    of every DataFrame localCheckpointed while it ran, in call order,
+    and what ``build`` returned. Wraps ``localCheckpoint`` on the
+    session's concrete DataFrame class (Spark 4's classic class, not
+    ``pyspark.sql.DataFrame``) and restores it afterwards."""
+    cls = type(spark.range(1))
+    orig = cls.localCheckpoint
+    stages: list[str] = []
+
+    def recording(self, *args, **kwargs):
+        stages.append(explain_formatted(self))
+        return orig(self, *args, **kwargs)
+
+    cls.localCheckpoint = recording
+    try:
+        out = build()
+    finally:
+        cls.localCheckpoint = orig
+    return stages, out
+
+
 def main() -> None:
     tag = sys.argv[1]
     names = sys.argv[2:]
@@ -28,12 +60,13 @@ def main() -> None:
     out_dir.mkdir(parents=True, exist_ok=True)
     qs = entry.queries()
     for name in names:
-        df = qs[name](spark, sf_dir)
-        plan = df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"
-        )
-        (out_dir / f"{name}_{tag}.txt").write_text(plan)
-        print(f"wrote plans/r06/{name}_{tag}.txt ({len(plan)} bytes)")
+        stages, df = record_plans(spark, lambda: qs[name](spark, sf_dir))
+        files = {f"{name}_{tag}.txt": explain_formatted(df)}
+        for k, plan in enumerate(stages):
+            files[f"{name}_{tag}.stage{k}.txt"] = plan
+        for fname, plan in files.items():
+            (out_dir / fname).write_text(plan)
+            print(f"wrote plans/r06/{fname} ({len(plan)} bytes)")
 
 
 if __name__ == "__main__":
