@@ -28,7 +28,6 @@ from grokspark.operators.dedup import (
     minhash_lsh_pairs,
     minhash_lsh_pairs_vs,
     semdedup,
-    semdedup_join,
     semdedup_lsh,
     simhash_near_dup_pairs,
     simhash_signatures,
@@ -66,7 +65,6 @@ from grokspark.operators.similarity import (
     embedding_lsh_pairs,
     knn_join,
     knn_join_blocked,
-    lsh_bucketed_topk,
     lsh_index_topk,
 )
 from grokspark.operators.decontam import (
@@ -109,7 +107,6 @@ __all__ = [
     "dsir_select",
     "dsir_weights",
     "semdedup",
-    "semdedup_join",
     "semdedup_lsh",
     "simhash_near_dup_pairs",
     "simhash_signatures",
@@ -118,7 +115,6 @@ __all__ = [
     "ann_brute_force_topk",
     "build_lsh_index",
     "lsh_index_topk",
-    "lsh_bucketed_topk",
     "build_ivf_index",
     "ivf_topk",
     "seeded_centroids",

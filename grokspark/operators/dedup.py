@@ -42,7 +42,6 @@ __all__ = [
     "embedding_cosine_pairs",
     "cosine",
     "semdedup",
-    "semdedup_join",
     "semdedup_lsh",
 ]
 
@@ -850,7 +849,10 @@ def dedup_corpus(
 
 def cosine(a: Column, b: Column) -> Column:
     """Cosine similarity of two float arrays, computed in double via
-    zip_with + aggregate (JVM-side, no UDF)."""
+    zip_with + aggregate (JVM-side, no UDF). A zero vector scores -1.0
+    — DuckDB's ``list_cosine_similarity`` rule, which every embedding
+    oracle uses (a bare 0/0 raises DIVIDE_BY_ZERO under ANSI); a NULL
+    side stays NULL."""
     dot = F.aggregate(
         F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
         F.lit(0.0),
@@ -862,7 +864,22 @@ def cosine(a: Column, b: Column) -> Column:
     norm_b = F.sqrt(
         F.aggregate(b, F.lit(0.0), lambda acc, v: acc + v.cast("double") * v.cast("double"))
     )
-    return dot / (norm_a * norm_b)
+    denom = norm_a * norm_b
+    return F.when(denom == 0, F.lit(-1.0)).otherwise(dot / denom)
+
+
+def _cosine_matrix(a: np.ndarray, b: np.ndarray) -> np.ndarray:
+    """All-pairs cosine of the rows of ``a`` against the rows of ``b``
+    as one float64 normalized matmul; a zero row scores -1.0 against
+    everything, the same rule as ``cosine``."""
+    na = np.linalg.norm(a, axis=1)
+    nb = np.linalg.norm(b, axis=1)
+    sims = (a / np.where(na == 0, 1.0, na)[:, None]) @ (
+        b / np.where(nb == 0, 1.0, nb)[:, None]
+    ).T
+    sims[na == 0, :] = -1.0
+    sims[:, nb == 0] = -1.0
+    return sims
 
 
 def embedding_cosine_pairs(
@@ -943,46 +960,13 @@ def semdedup(
     Scoring is one float64 normalized matmul per cell (Arrow-batched,
     C speed); each vector ships exactly once. Dropping is local to a
     cell by construction, so no cross-cell pass or global state is
-    needed. Mirrors the knn_join_blocked policy: matmul sums in a
-    different order than a sequential fold, so scores near the
-    threshold could flip in the last ulp — the gate query's corpus
-    margins are ~1e-4 (checked), and ``semdedup_join`` is the
-    fold-path exactness twin used by the equality test.
+    needed. Mirrors the knn_join policy: matmul sums in a different
+    order than a sequential fold, so scores near the threshold could
+    flip in the last ulp — the gate query's corpus margins are ~1e-4
+    (checked), and the tests compare with the DuckDB oracle.
     """
     cells = _semdedup_cells(df, centroids, vec_col, id_col)
     return _semdedup_prune(cells, threshold, df.schema[id_col].dataType, id_col)
-
-
-def _semdedup_prune_join(cells: DataFrame, threshold: float, id_col: str) -> DataFrame:
-    """Fold-path twin of ``_semdedup_prune``: same drop rule as a
-    self-join + sequential-fold cosine (bit-identical to the SQL
-    oracle's evaluation order). Quadratic within a cell — tests only."""
-    mates = cells.select(
-        F.col("id").alias("id_b"),
-        F.col("vec").alias("vec_b"),
-        F.col("cell").alias("cell_b"),
-    )
-    droppers = (
-        cells.join(
-            mates,
-            (F.col("cell") == F.col("cell_b")) & (F.col("id_b") < F.col("id")),
-        )
-        .filter(cosine(F.col("vec"), F.col("vec_b")) >= float(threshold))
-        .select("id")
-        .distinct()
-        .withColumn("_dropped", F.lit(1))
-    )
-    return (
-        cells.join(droppers, "id", "left")
-        .select(
-            F.col("id").alias(id_col),
-            F.col("cell"),
-            F.when(F.col("_dropped").isNull(), F.lit(1))
-            .otherwise(F.lit(0))
-            .cast("int")
-            .alias("kept"),
-        )
-    )
 
 
 def _semdedup_prune(
@@ -1005,20 +989,7 @@ def _semdedup_prune(
             return pd.DataFrame({"id": [], "cell": [], "kept": []})
         pdf = pdf.sort_values("id", kind="mergesort").reset_index(drop=True)
         V = np.array(pdf["vec"].tolist(), dtype=np.float64)
-        norms = np.linalg.norm(V, axis=1, keepdims=True)
-        zero = (norms == 0.0).ravel()
-        norms[zero] = 1.0
-        N = V / norms
-        S = N @ N.T
-        # zero-vector edge matches the fold/oracle semantics (ADVICE
-        # r5): their cosine is 0/0 = NaN, and NaN compares ABOVE every
-        # double in Spark SQL and DuckDB, so a zero-vector pair
-        # satisfies ">= threshold" there; numpy would say False. Force
-        # +inf on both axes of zero rows so all three paths agree.
-        if zero.any():
-            S[zero, :] = np.inf
-            S[:, zero] = np.inf
-        dropped = np.tril(S >= thr, -1).any(axis=1)
+        dropped = np.tril(_cosine_matrix(V, V) >= thr, -1).any(axis=1)
         return pd.DataFrame(
             {
                 "id": pdf["id"],
@@ -1058,6 +1029,7 @@ def semdedup_lsh(
     ``target_cell_rows`` expected rows per bucket."""
     from grokspark.operators.similarity import (
         _resolve_n_planes,
+        _vector_dim,
         hyperplanes,
         lsh_bucket_col,
     )
@@ -1066,24 +1038,8 @@ def semdedup_lsh(
         df, n_planes, "semdedup_lsh", target_bucket_rows=target_cell_rows
     )
     if dim is None:
-        # empty-input guard (ADVICE r5): head() returns None on an
-        # empty frame — return the empty decision table instead of a
-        # TypeError; callers that know the width pass ``dim`` and skip
-        # this probe job entirely
-        probe = df.select(F.size(F.col(vec_col))).head()
-        if probe is None:
-            return local_dim(
-                df.sparkSession,
-                [],
-                T.StructType(
-                    [
-                        T.StructField("id", df.schema[id_col].dataType),
-                        T.StructField("cell", T.IntegerType()),
-                        T.StructField("kept", T.IntegerType()),
-                    ]
-                ),
-            ).withColumnRenamed("id", id_col)
-        dim = probe[0]
+        # callers that know the width pass ``dim`` and skip this probe job
+        dim = _vector_dim(df, vec_col)
     planes = hyperplanes(dim, n_planes, seed)
     cells = _ensure_parallelism(df, SPREAD_MIN_BYTES).select(
         F.col(id_col).alias("id"),
@@ -1091,19 +1047,3 @@ def semdedup_lsh(
         lsh_bucket_col(vec_col, planes).cast("int").alias("cell"),
     )
     return _semdedup_prune(cells, threshold, df.schema[id_col].dataType, id_col)
-
-
-def semdedup_join(
-    df: DataFrame,
-    centroids: list[list[float]],
-    threshold: float = 0.8,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Fold-path exactness twin of ``semdedup``: the same cell
-    assignment and drop rule expressed as a self-join + the
-    sequential-fold ``cosine`` (bit-identical to the SQL oracle's
-    evaluation order). Quadratic within a cell — baseline for tests,
-    not the scale path."""
-    cells = _semdedup_cells(df, centroids, vec_col, id_col)
-    return _semdedup_prune_join(cells, threshold, id_col)

@@ -8,9 +8,10 @@
   filter becomes real partition pruning (PartitionFilters in the scan;
   non-probed buckets are never read, plan-asserted in
   tests/test_plans.py).
-- ``lsh_bucketed_topk``: the index-free variant — computes buckets on
-  the fly and filters. Same results, but it still scans every vector;
-  use it only when the corpus isn't worth indexing.
+- ``knn_join``: corpus-wide top-k neighbours of every row, scored by
+  one numpy matmul per cogrouped LSH bucket.
+- ``embedding_lsh_pairs``: near-duplicate pairs over the same bucket
+  candidates, verified by exact cosine.
 """
 
 from __future__ import annotations
@@ -24,7 +25,7 @@ from typing import Optional, Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from grokspark.operators.dedup import cosine
+from grokspark.operators.dedup import cosine, _cosine_matrix
 
 __all__ = [
     "ann_brute_force_topk",
@@ -35,7 +36,6 @@ __all__ = [
     "recommended_n_planes",
     "build_lsh_index",
     "lsh_index_topk",
-    "lsh_bucketed_topk",
     "knn_join",
     "knn_join_blocked",
     "embedding_lsh_pairs",
@@ -101,6 +101,15 @@ def _warn_if_buckets_overfull(n_rows: int, n_planes: int, op: str) -> None:
             f"to auto-size)",
             stacklevel=3,
         )
+
+
+def _vector_dim(df: DataFrame, vec_col: str) -> int:
+    """Width of ``vec_col``, read from the first row (one small job).
+    An empty frame has no first row; it gets width 1 — no vector is
+    ever bucketed, so the operator's plan still builds and returns its
+    empty, typed result."""
+    row = df.select(F.size(F.col(vec_col))).head()
+    return 1 if row is None else row[0]
 
 
 def ann_brute_force_topk(
@@ -181,8 +190,8 @@ def _lsh_bucket_udf(planes: list[list[float]]):
     blocked summation can differ from the expression fold in the last
     ulp, so a dot product within ~1e-12 of zero may land in a
     different bucket than the fold path — irrelevant for recall (both
-    are valid LSH assignments) but the reason the exact-oracle queries
-    stay on the fold path."""
+    are valid LSH assignments); the gate corpus's sign margins are
+    ~1e-3, so both paths agree there (test-asserted)."""
     import numpy as np
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
@@ -220,14 +229,10 @@ def _bucketed_vectors(
     return base.withColumn("_bucket", lsh_bucket_col("vec", planes))
 
 
-def _bucket_candidate_pairs(
-    bucketed: DataFrame, masks: list[int], ordered: bool
-) -> DataFrame:
-    """Distinct candidate id pairs whose buckets differ by one of the
-    probe ``masks`` — ONE bucket equi-join over (id, probe) rows; the
-    vectors never ride the xmasks explode. ``ordered=True`` emits each
-    unordered pair once (qid < nid, dedup semantics); ``False`` emits
-    both directions (qid != nid, per-query kNN semantics)."""
+def _bucket_candidate_pairs(bucketed: DataFrame, masks: list[int]) -> DataFrame:
+    """Distinct candidate id pairs (qid < nid) whose buckets differ by
+    one of the probe ``masks`` — ONE bucket equi-join over (id, probe)
+    rows; the vectors never ride the xmasks explode."""
     probes = (
         bucketed.select("id", "_bucket")
         .withColumn("_mask", F.explode(F.array(*[F.lit(m) for m in masks])))
@@ -237,9 +242,11 @@ def _bucket_candidate_pairs(
         )
     )
     right = bucketed.select(F.col("id").alias("nid"), "_bucket")
-    pair_cond = F.col("qid") < F.col("nid") if ordered else F.col("qid") != F.col("nid")
     return (
-        probes.join(right, (probes["_probe"] == right["_bucket"]) & pair_cond)
+        probes.join(
+            right,
+            (probes["_probe"] == right["_bucket"]) & (F.col("qid") < F.col("nid")),
+        )
         .select("qid", "nid")
         .dropDuplicates()
     )
@@ -330,105 +337,44 @@ def knn_join(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     seed: int = 42,
+    salt_members: int = 1,
 ) -> DataFrame:
     """Approximate k-nearest-neighbors for EVERY row (the batch ANN op
     a training pipeline runs corpus-wide): ``(id, neighbor_id, score,
-    rank)`` with rank 1..k by cosine within the probed LSH buckets.
+    rank)`` with rank 1..k by cosine among the rows whose sign-LSH
+    bucket is within ``probe_hamming`` bit flips of the row's own —
+    the same rule as filtering all pairs on hamming(bucket_a,
+    bucket_b) <= h, without the all-pairs plan. Cosine follows
+    ``cosine``'s rule: a zero vector scores -1.0 against every row.
 
-    Scale shape (the same narrow-candidates discipline as the dedup
-    ops): buckets are computed once per row; the query side explodes to
-    C(n_planes, <=h) probe buckets carrying ONLY (id, probe_bucket) —
-    the 256-float embedding never rides the xprobes explode. Candidates
-    come from one equi-join on the bucket (no inequality/cartesian
-    join), then embeddings join back narrowly for scoring, then a
-    per-id top-k window. Semantically identical to filtering all pairs
-    on hamming(bucket_a, bucket_b) <= h, without the all-pairs plan.
+    Scoring is BUCKET-LOCAL and BLOCKED; the data moves bucket-wise:
 
-    ``n_planes`` must GROW with corpus size — the candidate join is
+    - each QUERY vector ships once per probe (``probes x width`` per
+      query, not per candidate), via a cogroup on (probe bucket ==
+      member bucket);
+    - each MEMBER vector ships exactly once;
+    - scoring inside the cogrouped Arrow kernel is one numpy
+      normalized matmul per bucket, emitting only each query's
+      bucket-local top-k;
+    - the global top-k window then sees <= probes x k rows per query.
+
+    A verify join that ships both vectors onto every candidate pair
+    moves ``candidates x 2 x vector_width`` bytes instead — at 50k x
+    64-dim that was ~27 GB through the join, and its per-row cost grew
+    6x superlinearly at 10x corpus (BENCH/SCALE_PROBES.md). Each
+    (query, member) pair lands in exactly one group — the member's
+    bucket, probed by exactly one XOR mask — so no dedup pass is
+    needed. The matmul sums in a different order than DuckDB's
+    sequential fold, so scores can differ from the oracle's in the
+    last ulp; rank-adjacent score gaps on the gate corpus are far
+    wider (test-asserted).
+
+    ``n_planes`` must GROW with corpus size — the candidate work is
     quadratic within a bucket, so it's the expected bucket population
     n_rows/2^n_planes that has to stay bounded (see
     ``recommended_n_planes``). Pass ``n_planes=None`` to auto-size
-    from the corpus rowcount (costs one count() of the id column —
-    noise next to the join); an explicit value is trusted as-is, no
-    extra scan — check it against ``recommended_n_planes`` yourself.
-
-    DEFAULT PATH: prefer ``knn_join_blocked`` for production scoring —
-    identical candidate rule and ranking, but each vector ships once
-    per probe instead of once per candidate (~100x less verify shuffle)
-    and scoring is one BLAS matmul per bucket slice (measured 10x cost
-    curvature 0.17 vs this fold path's 0.56). This fold formulation is
-    retained as the oracle twin: its per-pair ``zip_with`` double fold
-    is the FP-parity reference against DuckDB (rank-equality asserted
-    in tests/test_operators.py), the role ``_lsh_bucket_udf`` plays for
-    bucketing."""
-    n_planes = _resolve_n_planes(
-        df, n_planes, "knn_join", target_bucket_rows=max(64, 16 * k)
-    )
-    planes = hyperplanes(
-        df.select(F.size(F.col(vec_col))).head()[0], n_planes, seed
-    )
-    # the bucketed table is referenced FOUR times below (both sides of
-    # the candidate join, both vector rejoins); the per-row bucket fold
-    # is n_planes x dim interpreted lambda evals, so materialize it
-    # once (measured: the recompute dominated the 10x scale probe)
-    bucketed = _bucketed_vectors(df, vec_col, id_col, planes).localCheckpoint()
-    cand = _bucket_candidate_pairs(
-        bucketed, _probe_masks(n_planes, probe_hamming), ordered=False
-    )
-    scored = _score_candidates(cand, bucketed)
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("qid").orderBy(
-        F.col("score").desc(), F.col("nid").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            F.col("qid").alias(id_col),
-            F.col("nid").alias("neighbor_id"),
-            "score",
-            "rank",
-        )
-    )
-
-
-def knn_join_blocked(
-    df: DataFrame,
-    k: int = 5,
-    n_planes: Optional[int] = 8,
-    probe_hamming: int = 1,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    seed: int = 42,
-    salt_members: int = 1,
-) -> DataFrame:
-    """Corpus-wide kNN with BUCKET-LOCAL BLOCKED SCORING — the
-    100-TB-shaped twin of ``knn_join``.
-
-    ``knn_join``'s verify stage joins BOTH embedding vectors onto every
-    candidate pair, so shuffle volume is ``candidates x 2 x
-    vector_width`` and scoring is an interpreted per-row fold — at 50k
-    x 64-dim that is ~27 GB through the join and the stage spills
-    (measured 6x superlinear per-row cost at 10x corpus,
-    BENCH/SCALE_PROBES.md). Here the data moves bucket-wise instead:
-
-    - each QUERY vector ships once per probe (``probes x width`` per
-      query, not per candidate — ~100x less bytes at the probe's
-      occupancy), via a cogroup on (probe bucket == member bucket);
-    - each MEMBER vector ships exactly once;
-    - scoring inside the cogrouped kernel is one numpy normalized
-      matmul per bucket (C speed, Arrow-batched), emitting only each
-      query's bucket-local top-k;
-    - the global top-k window then sees <= probes x k rows per query.
-
-    Each (query, member) pair lands in exactly one group — the member's
-    bucket, probed by exactly one XOR mask — so no dedup pass is
-    needed. Same candidate rule and same results as ``knn_join`` up to
-    floating-point tie-breaks: blocked matmul sums in a different
-    order than the sequential fold, so scores can differ in the last
-    ulp; the driver-oracle query stays on the fold path for that
-    reason (same policy as ``_lsh_bucket_udf``).
+    from the corpus rowcount (one count(), k-scaled target); an
+    explicit value is trusted as-is, no extra scan.
 
     ``salt_members`` is the skew control: real embedding distributions
     can pile into few buckets (measured: a degenerate corpus put all
@@ -443,18 +389,16 @@ def knn_join_blocked(
     probe-side shuffle xS; use a few slices when bucket histograms are
     known-skewed."""
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
 
     n_planes = _resolve_n_planes(
-        df, n_planes, "knn_join_blocked", target_bucket_rows=max(64, 16 * k)
+        df, n_planes, "knn_join", target_bucket_rows=max(64, 16 * k)
     )
-    planes = hyperplanes(
-        df.select(F.size(F.col(vec_col))).head()[0], n_planes, seed
-    )
-    # bucket via the numpy matrix UDF regardless of literal count: this
-    # path makes no fold-parity promise (scores are blocked matmuls
-    # anyway), and the interpreted per-row fold costs n_planes x dim
-    # lambda evals; materialized once for the two references below
+    planes = hyperplanes(_vector_dim(df, vec_col), n_planes, seed)
+    # bucket via the numpy matrix UDF regardless of literal count: the
+    # scores are blocked matmuls anyway, and the interpreted per-row
+    # fold costs n_planes x dim lambda evals; materialized once for
+    # the two references below
     bucketed = _bucketed_vectors(
         df, vec_col, id_col, planes, via_udf=True
     ).localCheckpoint()
@@ -482,44 +426,56 @@ def knn_join_blocked(
     else:
         group_l, group_r = ["_probe"], ["_bucket"]
 
-    def score(lpdf: pd.DataFrame, rpdf: pd.DataFrame) -> pd.DataFrame:
-        if not len(lpdf) or not len(rpdf):
-            return pd.DataFrame({"qid": [], "nid": [], "score": []})
-        # members sorted by nid so the STABLE score argsort below
+    out_schema = pa.schema(
+        [("qid", pa.int64()), ("nid", pa.int64()), ("score", pa.float64())]
+    )
+
+    def vectors(col: pa.ChunkedArray) -> np.ndarray:
+        # one C-side copy of a list<float> column into an n x dim
+        # matrix — no per-row Python object (a per-row conversion
+        # dominated the whole stage at 550k x 64-dim probe rows)
+        flat = col.combine_chunks().flatten().to_numpy(zero_copy_only=False)
+        return flat.reshape(len(col), -1).astype(np.float64, copy=False)
+
+    def score(left: pa.Table, right: pa.Table) -> pa.Table:
+        if not left.num_rows or not right.num_rows:
+            return out_schema.empty_table()
+        # members in nid order so the STABLE score argsort below
         # inherits nid-ascending tie-break — the same (score desc, nid
         # asc) order the global window uses; an order-oblivious
         # argpartition would keep an arbitrary member of a score tie
         # and make results depend on group slicing (caught by the
         # salting-invariance test: the testdata corpus has duplicate
         # embeddings, i.e. exact ties)
-        rpdf = rpdf.sort_values("nid")
-        # cells arrive as per-row numpy arrays (Arrow list<double>);
-        # np.stack copies them C-side — `np.array(col.tolist())` would
-        # round-trip every float through a Python object (measured: it
-        # dominated the whole stage at 550k x 64-dim probe rows)
-        q = np.stack(lpdf["qv"].to_numpy()).astype(np.float64, copy=False)
-        m = np.stack(rpdf["nv"].to_numpy()).astype(np.float64, copy=False)
-        qn = q / np.linalg.norm(q, axis=1, keepdims=True)
-        mn = m / np.linalg.norm(m, axis=1, keepdims=True)
-        sims = qn @ mn.T  # nq x nm
-        qids = lpdf["qid"].to_numpy()
-        nids = rpdf["nid"].to_numpy()
+        nids = right["nid"].to_numpy()
+        order = np.argsort(nids, kind="stable")
+        nids = nids[order]
+        qids = left["qid"].to_numpy()
+        sims = _cosine_matrix(vectors(left["qv"]), vectors(right["nv"])[order])
         # self-pairs (a query probing its own bucket) are dropped here
         sims[qids[:, None] == nids[None, :]] = -np.inf
         kk = min(k, sims.shape[1])
         top = np.argsort(-sims, axis=1, kind="stable")[:, :kk]
-        rows_q = np.repeat(qids, kk)
-        rows_n = nids[top.ravel()]
         rows_s = np.take_along_axis(sims, top, axis=1).ravel()
         keep = rows_s > -np.inf
-        return pd.DataFrame(
-            {"qid": rows_q[keep], "nid": rows_n[keep], "score": rows_s[keep]}
+        return pa.table(
+            {
+                "qid": np.repeat(qids, kk)[keep],
+                "nid": nids[top.ravel()][keep],
+                "score": rows_s[keep],
+            },
+            schema=out_schema,
         )
 
+    # explicit width: AQE coalesces post-shuffle partitions by bytes,
+    # which on a small corpus runs every bucket's kernel call in one
+    # task (measured on 4 vCPUs at sf0.01: 2.9 -> 2.3 s per knn_join)
+    n_part = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     scored = (
-        probes.groupBy(*group_l)
-        .cogroup(members.groupBy(*group_r))
-        .applyInPandas(score, "qid long, nid long, score double")
+        probes.repartition(n_part, *group_l)
+        .groupBy(*group_l)
+        .cogroup(members.repartition(n_part, *group_r).groupBy(*group_r))
+        .applyInArrow(score, "qid long, nid long, score double")
     )
     from pyspark.sql.window import Window
 
@@ -534,6 +490,10 @@ def knn_join_blocked(
             "rank",
         )
     )
+
+
+# the older gate and bench name of the same engine
+knn_join_blocked = knn_join
 
 
 def embedding_lsh_pairs(
@@ -557,43 +517,12 @@ def embedding_lsh_pairs(
     sizing follows the same rule as ``knn_join`` (None = auto via one
     count(); explicit values are trusted without an extra scan)."""
     n_planes = _resolve_n_planes(df, n_planes, "embedding_lsh_pairs")
-    planes = hyperplanes(
-        df.select(F.size(F.col(vec_col))).head()[0], n_planes, seed
-    )
+    planes = hyperplanes(_vector_dim(df, vec_col), n_planes, seed)
     bucketed = _bucketed_vectors(df, vec_col, id_col, planes)
-    cand = _bucket_candidate_pairs(
-        bucketed, _probe_masks(n_planes, probe_hamming), ordered=True
-    )
+    cand = _bucket_candidate_pairs(bucketed, _probe_masks(n_planes, probe_hamming))
     scored = _score_candidates(cand, bucketed)
     return scored.filter(F.col("score") >= threshold).select(
         F.col("qid").alias("id_a"),
         F.col("nid").alias("id_b"),
         F.col("score").alias("cos"),
-    )
-
-
-def lsh_bucketed_topk(
-    df: DataFrame,
-    query: Sequence[float],
-    k: int = 10,
-    n_planes: int = 8,
-    probe_hamming: int = 1,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    seed: int = 42,
-) -> DataFrame:
-    """Index-free LSH ANN: buckets computed on the fly, probe filter
-    applied per row. Same candidate set and results as
-    ``lsh_index_topk`` but NO pruning — every vector is still scanned;
-    prefer the materialized index at scale."""
-    planes = hyperplanes(len(query), n_planes, seed)
-    probes = hamming_probes(bucket_of(query, planes), n_planes, probe_hamming)
-    bucketed = df.withColumn("_bucket", lsh_bucket_col(vec_col, planes))
-    candidates = bucketed.filter(F.col("_bucket").isin(probes))
-    qlit = F.array(*[F.lit(float(x)) for x in query])
-    return (
-        candidates.withColumn("score", cosine(F.col(vec_col), qlit))
-        .select(id_col, "score")
-        .orderBy(F.col("score").desc(), F.col(id_col).asc())
-        .limit(k)
     )

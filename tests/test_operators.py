@@ -17,6 +17,36 @@ def emb(spark, sf_dir):
     return spark.read.parquet(f"{sf_dir}/embeddings.parquet").cache()
 
 
+@pytest.fixture(scope="module")
+def oracles():
+    import __spark_entry__ as entry
+
+    return entry.oracle_sql()
+
+
+@pytest.fixture(scope="module")
+def lsh_index(emb, tmp_path_factory):
+    """The testdata embeddings as an 8-plane LSH index (seed 42)."""
+    from grokspark.operators import build_lsh_index
+
+    index = str(tmp_path_factory.mktemp("ann") / "index")
+    build_lsh_index(emb, index, n_planes=8, seed=42)
+    return index
+
+
+def _oracle_rows(sf_dir, sql):
+    """Run a gate oracle in DuckDB over ``sf_dir``'s embeddings table;
+    returns (column names, rows)."""
+    import duckdb
+
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW embeddings AS SELECT * FROM read_parquet('{sf_dir}/embeddings.parquet')"
+    )
+    rel = con.sql(sql)
+    return [d[0] for d in rel.description], rel.fetchall()
+
+
 def test_exact_dedup_counts(docs):
     from grokspark.operators import exact_dedup
 
@@ -68,14 +98,14 @@ def test_jaccard_precheck_keeps_threshold_boundary(spark, t, na, nb, union_lb, k
     assert row["k"] is keep
 
 
-def test_ann_lsh_recall_vs_brute_force(emb):
-    from grokspark.operators import ann_brute_force_topk, lsh_bucketed_topk
+def test_ann_lsh_recall_vs_brute_force(spark, emb, lsh_index):
+    from grokspark.operators import ann_brute_force_topk, lsh_index_topk
 
     query = emb.filter(F.col("vec_id") == 1).head()["embedding"]
     exact = [r["vec_id"] for r in ann_brute_force_topk(emb, query, k=10).collect()]
     approx = [
         r["vec_id"]
-        for r in lsh_bucketed_topk(emb, query, k=10, probe_hamming=2).collect()
+        for r in lsh_index_topk(spark, lsh_index, query, k=10, probe_hamming=2).collect()
     ]
     # the query's own vector must rank first in both
     assert exact[0] == 1 and approx[0] == 1
@@ -174,23 +204,33 @@ def test_simhash_pairs_rejects_unguaranteed_hamming(spark):
         simhash_near_dup_pairs(df, max_hamming=4, bands=4)
 
 
-def test_ann_index_topk_equals_bucketed_variant(spark, emb, tmp_path):
-    """The materialized-index path returns exactly what the on-the-fly
-    bucket filter returns (same planes, same probes)."""
-    from grokspark.operators import build_lsh_index, lsh_bucketed_topk, lsh_index_topk
+def test_ann_index_topk_equals_reference(spark, emb, lsh_index):
+    """The materialized-index path returns exactly the numpy reference:
+    rows whose ``bucket_of`` is among the query's ``hamming_probes``,
+    ranked by exact cosine (ties by id)."""
+    import numpy as np
 
-    index = str(tmp_path / "ann_index")
-    build_lsh_index(emb, index, n_planes=8, seed=42)
+    from grokspark.operators import lsh_index_topk
+    from grokspark.operators.similarity import bucket_of, hamming_probes, hyperplanes
+
     query = emb.filter(F.col("vec_id") == 1).head()["embedding"]
     via_index = [
-        (r["vec_id"], round(r["score"], 9))
-        for r in lsh_index_topk(spark, index, query, k=10, probe_hamming=2).collect()
+        (r["vec_id"], r["score"])
+        for r in lsh_index_topk(spark, lsh_index, query, k=10, probe_hamming=2).collect()
     ]
-    via_filter = [
-        (r["vec_id"], round(r["score"], 9))
-        for r in lsh_bucketed_topk(emb, query, k=10, probe_hamming=2).collect()
-    ]
-    assert via_index == via_filter
+
+    planes = hyperplanes(len(query), 8, 42)
+    probes = set(hamming_probes(bucket_of(query, planes), 8, 2))
+    q = np.array(query, dtype=np.float64)
+    scored = []
+    for r in emb.select("vec_id", "embedding").collect():
+        if bucket_of(r["embedding"], planes) in probes:
+            v = np.array(r["embedding"], dtype=np.float64)
+            scored.append((float(v @ q / (np.linalg.norm(v) * np.linalg.norm(q))), r["vec_id"]))
+    want = [(i, s) for s, i in sorted(scored, key=lambda t: (-t[0], t[1]))[:10]]
+    assert [i for i, _ in via_index] == [i for i, _ in want]
+    for (_, got), (_, ref) in zip(via_index, want):
+        assert abs(got - ref) < 1e-9
     assert via_index[0][0] == 1  # the query's own vector ranks first
 
 
@@ -252,38 +292,45 @@ def test_duplicate_clusters_components(spark):
 
 
 def test_knn_join_matches_reference(spark, emb):
-    """Bucket-equi-join kNN == brute-force pairs filtered on bucket
-    hamming (the semantics the equi-join plan implements)."""
+    """Cogrouped matmul kNN == numpy brute-force pairs filtered on
+    bucket hamming (the candidate rule the bucket cogroup implements):
+    same (query, neighbor, rank) triples, scores within summation-order
+    ulps — on a 120-row sample at 8 planes and on the whole table at 6
+    planes (fuller buckets, many probes per group)."""
     import numpy as np
 
     from grokspark.operators import knn_join
     from grokspark.operators.similarity import bucket_of, hyperplanes
 
-    sample = emb.limit(120).cache()
-    rows = sample.select("vec_id", "embedding").collect()
-    planes = hyperplanes(len(rows[0]["embedding"]), 8, 42)
-    buckets = {r["vec_id"]: bucket_of(r["embedding"], planes) for r in rows}
-    vecs = {r["vec_id"]: np.array(r["embedding"], dtype=np.float64) for r in rows}
-
     def cos(a, b):
         return float(a @ b / (np.linalg.norm(a) * np.linalg.norm(b)))
 
-    want = {}
-    for q in vecs:
-        cands = [
-            c for c in vecs
-            if c != q and bin(buckets[q] ^ buckets[c]).count("1") <= 1
-        ]
-        ranked = sorted(cands, key=lambda c: (-cos(vecs[q], vecs[c]), c))[:3]
-        for rank, c in enumerate(ranked, 1):
-            want[(q, c)] = rank
+    for frame, n_planes in ((emb.limit(120), 8), (emb, 6)):
+        frame = frame.localCheckpoint()
+        rows = frame.select("vec_id", "embedding").collect()
+        planes = hyperplanes(len(rows[0]["embedding"]), n_planes, 42)
+        buckets = {r["vec_id"]: bucket_of(r["embedding"], planes) for r in rows}
+        vecs = {r["vec_id"]: np.array(r["embedding"], dtype=np.float64) for r in rows}
 
-    got = {
-        (r["vec_id"], r["neighbor_id"]): r["rank"]
-        for r in knn_join(sample, k=3, n_planes=8, probe_hamming=1).collect()
-    }
-    assert got == want
-    sample.unpersist()
+        want = {}
+        for q in vecs:
+            scored = [
+                (cos(vecs[q], vecs[c]), c)
+                for c in vecs
+                if c != q and bin(buckets[q] ^ buckets[c]).count("1") <= 1
+            ]
+            ranked = sorted(scored, key=lambda t: (-t[0], t[1]))[:3]
+            for rank, (score, c) in enumerate(ranked, 1):
+                want[(q, c)] = (rank, score)
+
+        got = {
+            (r["vec_id"], r["neighbor_id"]): (r["rank"], r["score"])
+            for r in knn_join(frame, k=3, n_planes=n_planes, probe_hamming=1).collect()
+        }
+        assert got.keys() == want.keys(), n_planes
+        for pair, (rank, score) in got.items():
+            assert rank == want[pair][0], (n_planes, pair)
+            assert abs(score - want[pair][1]) < 1e-9, (n_planes, pair)
 
 
 def test_embedding_lsh_pairs_precision_and_semantics(spark, emb):
@@ -855,18 +902,23 @@ def test_exact_quantiles_matches_sorted_definition(spark):
         exact_quantiles(df, "v", (0,))
 
 
-def test_semdedup_matmul_matches_fold_twin(spark, emb):
-    """The grouped-matmul scale path and the JVM fold-path twin agree
-    row-for-row (cell AND kept flag) on the testdata corpus — the
-    threshold margins (>=1e-3 at sf0.001, measured) dwarf the
-    matmul-vs-sequential-fold rounding difference the two paths have."""
-    from grokspark.operators import semdedup, semdedup_join
+def test_semdedup_matches_oracle(spark, emb, sf_dir, oracles):
+    """The grouped-matmul scale path equals DuckDB running the gate
+    oracle (a sequential-fold cosine) row-for-row, cell AND kept flag —
+    the threshold margins (>=1e-3 at sf0.001, measured) dwarf the
+    matmul-vs-fold rounding difference."""
+    import __spark_entry__ as entry
+    from grokspark.operators import semdedup
     from grokspark.operators.ivf import seeded_centroids
 
-    centroids = seeded_centroids(64, 16, seed=42)
-    fast = semdedup(emb, centroids, threshold=0.3).orderBy("vec_id").collect()
-    twin = semdedup_join(emb, centroids, threshold=0.3).orderBy("vec_id").collect()
-    assert [tuple(r) for r in fast] == [tuple(r) for r in twin]
+    centroids = seeded_centroids(64, entry.SEMDEDUP_CELLS, seed=42)
+    fast = semdedup(
+        emb, centroids, threshold=entry.SEMDEDUP_THRESHOLD
+    ).orderBy("vec_id").collect()
+    _, want = _oracle_rows(
+        sf_dir, f"SELECT * FROM ({oracles['semdedup']}) ORDER BY vec_id"
+    )
+    assert [tuple(r) for r in fast] == want
     n = emb.count()
     assert len(fast) == n  # every input row classified exactly once
     kept = sum(r["kept"] for r in fast)
@@ -891,26 +943,20 @@ def test_semdedup_smallest_id_per_cell_is_kept(spark, emb):
     assert firsts and all(r["first_kept"] == 1 for r in firsts)
 
 
-def test_semdedup_lsh_matches_fold_twin(spark, emb):
-    """The LSH-cell variant's matmul prune agrees with the fold-path
-    join twin over the SAME cells frame — isolates the prune kernel;
-    the bucket expression itself is the already-parity-tested
-    lsh_bucket_col fold."""
+def test_semdedup_lsh_matches_oracle(spark, emb, sf_dir, oracles):
+    """The LSH-cell variant (fold bucket expression + matmul prune)
+    equals DuckDB running the gate oracle, which recomputes both the
+    buckets and the drop rule."""
+    import __spark_entry__ as entry
     from grokspark.operators import semdedup_lsh
-    from grokspark.operators.dedup import _semdedup_prune_join
-    from grokspark.operators.similarity import hyperplanes, lsh_bucket_col
 
-    fast = semdedup_lsh(emb, n_planes=4, threshold=0.3).orderBy("vec_id").collect()
-    planes = hyperplanes(64, 4, seed=42)
-    cells = emb.select(
-        F.col("vec_id").alias("id"),
-        F.col("embedding").alias("vec"),
-        lsh_bucket_col("embedding", planes).cast("int").alias("cell"),
+    fast = semdedup_lsh(
+        emb, n_planes=entry.SEMDEDUP_LSH_PLANES, threshold=entry.SEMDEDUP_THRESHOLD
+    ).orderBy("vec_id").collect()
+    _, want = _oracle_rows(
+        sf_dir, f"SELECT * FROM ({oracles['semdedup_lsh']}) ORDER BY vec_id"
     )
-    twin = (
-        _semdedup_prune_join(cells, 0.3, "vec_id").orderBy("vec_id").collect()
-    )
-    assert [tuple(r) for r in fast] == [tuple(r) for r in twin]
+    assert [tuple(r) for r in fast] == want
     kept = sum(r["kept"] for r in fast)
     assert 0 < kept < len(fast)
 
@@ -922,6 +968,83 @@ def test_semdedup_lsh_empty_input(emb):
     out = semdedup_lsh(emb.limit(0), n_planes=4, threshold=0.3)
     assert out.schema.simpleString() == "struct<vec_id:bigint,cell:int,kept:int>"
     assert out.collect() == []
+
+
+def test_knn_join_and_embedding_lsh_pairs_empty_input(emb):
+    """An empty input returns the empty, typed result: the dim probe
+    finds no first row, and no vector is ever bucketed."""
+    from grokspark.operators import embedding_lsh_pairs, knn_join
+
+    empty = emb.limit(0)
+    knn = knn_join(empty, k=3, n_planes=None)
+    assert knn.schema.simpleString() == (
+        "struct<vec_id:bigint,neighbor_id:bigint,score:double,rank:int>"
+    )
+    assert knn.collect() == []
+    pairs = embedding_lsh_pairs(empty, threshold=0.5, n_planes=4)
+    assert pairs.schema.simpleString() == "struct<id_a:bigint,id_b:bigint,cos:double>"
+    assert pairs.collect() == []
+
+
+EMBEDDING_GATE_QUERIES = (
+    "knn_join",
+    "knn_join_blocked",
+    "dedup_embedding_pairs",
+    "dedup_embedding_lsh",
+    "semdedup",
+    "semdedup_lsh",
+    "ann_topk",
+    "ann_lsh_topk",
+    "ann_ivf_topk",
+    "ann_ivf_trained",
+)
+
+
+def test_embedding_gate_queries_match_oracles_with_zero_vectors(
+    spark, sf_dir, oracles, tmp_path
+):
+    """All-zero embeddings are legal input. With two of them added to
+    the table, every embedding gate query still equals its DuckDB
+    oracle, whose ``list_cosine_similarity`` scores a zero vector -1.0
+    against every row (the rule ``cosine`` and both numpy kernels
+    follow). The base is the oracle sweep's sf0.01 table (500 rows,
+    like sf0.001's): ann_ivf_trained pins recall@10 >= 8 for every
+    query, which sf0.001's table misses even without zero rows (one
+    query finds 6-7 of 10)."""
+    from pathlib import Path
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    import __spark_entry__ as entry
+    from tools.check_oracles import normalize
+
+    base = Path(sf_dir).parent / "sf0.01"
+    if not base.exists():
+        pytest.skip("sf0.01 testdata absent")
+    table = pq.read_table(base / "embeddings.parquet")
+    dim = len(table.column("embedding")[0])
+    next_id = max(table.column("vec_id").to_pylist()) + 1
+    zeros = pa.Table.from_pydict(
+        {
+            "vec_id": [next_id, next_id + 1],
+            "embedding": [[0.0] * dim] * 2,
+            "label": [0, 1],
+        },
+        schema=table.schema,
+    )
+    pq.write_table(pa.concat_tables([table, zeros]), tmp_path / "embeddings.parquet")
+
+    qs = entry.queries()
+    failures = []
+    for name in EMBEDDING_GATE_QUERIES:
+        df = qs[name](spark, str(tmp_path))
+        got = (sorted(df.columns), normalize([tuple(r) for r in df.collect()], df.columns))
+        cols, rows = _oracle_rows(tmp_path, oracles[name])
+        want = (sorted(cols), normalize(rows, cols))
+        if got != want:
+            failures.append((name, f"{len(got[1])} rows vs oracle {len(want[1])}"))
+    assert not failures, failures
 
 
 def test_dsir_weights_match_python_twin(spark, docs):

@@ -408,31 +408,48 @@ def _executed_scan_metrics(df) -> list[dict]:
 
 
 def test_similarity_bucket_exchanges_never_carry_vectors(spark, sf_dir):
-    """knn_join / embedding_lsh_pairs candidate stages shuffle on the
-    LSH bucket; the 64-float embedding arrays must be pruned out of
-    those exchanges (they rejoin narrowly for scoring only)."""
+    """embedding_lsh_pairs' candidate stage shuffles on the LSH bucket
+    with the 64-float embedding arrays pruned out (they rejoin narrowly
+    for scoring only). knn_join ships vectors by design, but only
+    through its two cogroup sides — query vectors hash-partitioned on
+    ``_probe``, member vectors on ``_bucket`` — and the post-scoring
+    window exchange carries (qid, nid, score) alone: joining vectors
+    back after scoring would add a vector-carrying exchange."""
     import re
 
     from grokspark.operators import embedding_lsh_pairs, knn_join
 
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    for df in (
-        knn_join(emb, k=3, probe_hamming=1),
-        embedding_lsh_pairs(emb, threshold=0.5, probe_hamming=2),
-    ):
-        plan = explain_str(df, "formatted")
-        blocks = re.split(r"\n(?=\(\d+\) )", plan)
-        bucket_exchanges = [
-            b
+    def exchanges(df):
+        blocks = re.split(r"\n(?=\(\d+\) )", explain_str(df, "formatted"))
+        return [
+            (b, " ".join(l for l in b.splitlines() if l.startswith(("Input", "Arguments"))))
             for b in blocks
-            if "Exchange" in b.splitlines()[0] and ("_probe" in b or "_bucket" in b)
+            if "Exchange" in b.splitlines()[0]
         ]
-        assert bucket_exchanges, "no bucket exchange found — plan shape changed"
-        for b in bucket_exchanges:
-            detail = " ".join(
-                l for l in b.splitlines() if l.startswith(("Input", "Arguments"))
-            )
-            assert "embedding#" not in detail and "vec#" not in detail, b
+
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    pairs = embedding_lsh_pairs(emb, threshold=0.5, probe_hamming=2)
+    bucket_exchanges = [
+        (b, d) for b, d in exchanges(pairs) if "_probe" in b or "_bucket" in b
+    ]
+    assert bucket_exchanges, "no bucket exchange found — plan shape changed"
+    for b, detail in bucket_exchanges:
+        assert "embedding#" not in detail and "vec#" not in detail, b
+
+    def partition_key(detail):
+        m = re.search(r"hashpartitioning\((\w+)#", detail)
+        return m.group(1) if m else detail
+
+    knn = exchanges(knn_join(emb, k=3, probe_hamming=1))
+    vector_keys = sorted(
+        partition_key(detail)
+        for _, detail in knn
+        if re.search(r"\b(qv|nv|vec|embedding)#", detail)
+    )
+    assert vector_keys == ["_bucket", "_probe"], knn
+    window = [detail for _, detail in knn if "hashpartitioning(qid#" in detail]
+    assert window, "no post-scoring window exchange — plan shape changed"
+    assert all(re.search(r"\b(qv|nv|vec)#", d) is None for d in window), window
 
 
 def test_winnow_pair_exchanges_never_carry_text(spark, sf_dir):

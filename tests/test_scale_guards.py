@@ -59,48 +59,21 @@ def test_knn_join_auto_sized_runs_at_10x(spark):
     assert all(r["count"] <= 3 for r in counts)
 
 
-def test_knn_join_blocked_matches_fold_path(spark, sf_dir):
-    """knn_join_blocked (cogrouped bucket-local matmul) must agree with
-    knn_join (per-candidate fold scoring) on the real embeddings table:
-    same candidate rule, so identical neighbor sets per query; scores
-    equal to within summation-order ulps."""
-    from grokspark.operators import knn_join, knn_join_blocked
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").localCheckpoint()
-    a = knn_join(emb, k=3, n_planes=6, probe_hamming=1).collect()
-    b = knn_join_blocked(emb, k=3, n_planes=6, probe_hamming=1).collect()
-
-    def by_query(rows):
-        out: dict = {}
-        for r in rows:
-            out.setdefault(r["vec_id"], []).append(
-                (r["rank"], r["neighbor_id"], r["score"])
-            )
-        return {q: sorted(v) for q, v in out.items()}
-
-    qa, qb = by_query(a), by_query(b)
-    assert qa.keys() == qb.keys()
-    for q in qa:
-        for (ra, na, sa), (rb, nb, sb) in zip(qa[q], qb[q]):
-            assert (ra, na) == (rb, nb), (q, qa[q], qb[q])
-            assert abs(sa - sb) < 1e-9
-
-
 def test_knn_blocked_member_salting_is_result_invariant(spark, sf_dir):
     """salt_members only changes group fan-out (skew control): the
     returned (query, neighbor, rank) triples must be identical for any
     S; scores agree to within BLAS-blocking ulps (matmul vectorization
     depends on matrix shape, so the last bit can differ)."""
-    from grokspark.operators import knn_join_blocked
+    from grokspark.operators import knn_join
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").localCheckpoint()
     base = sorted(
         (r["vec_id"], r["neighbor_id"], r["rank"], r["score"])
-        for r in knn_join_blocked(emb, k=3, n_planes=5, probe_hamming=1).collect()
+        for r in knn_join(emb, k=3, n_planes=5, probe_hamming=1).collect()
     )
     salted = sorted(
         (r["vec_id"], r["neighbor_id"], r["rank"], r["score"])
-        for r in knn_join_blocked(
+        for r in knn_join(
             emb, k=3, n_planes=5, probe_hamming=1, salt_members=4
         ).collect()
     )
