@@ -291,46 +291,24 @@ def test_duplicate_clusters_components(spark):
     assert dist == want
 
 
-def test_knn_join_matches_reference(spark, emb):
+def test_knn_join_matches_reference(spark, emb, knn_reference):
     """Cogrouped matmul kNN == numpy brute-force pairs filtered on
     bucket hamming (the candidate rule the bucket cogroup implements):
     same (query, neighbor, rank) triples, scores within summation-order
-    ulps — on a 120-row sample at 8 planes and on the whole table at 6
-    planes (fuller buckets, many probes per group)."""
-    import numpy as np
-
+    ulps, on a 120-row sample at 8 planes. The whole table at 6 planes
+    is tests/test_scale_guards.py::test_knn_join_blocked_matches_fold_path."""
     from grokspark.operators import knn_join
-    from grokspark.operators.similarity import bucket_of, hyperplanes
 
-    def cos(a, b):
-        return float(a @ b / (np.linalg.norm(a) * np.linalg.norm(b)))
-
-    for frame, n_planes in ((emb.limit(120), 8), (emb, 6)):
-        frame = frame.localCheckpoint()
-        rows = frame.select("vec_id", "embedding").collect()
-        planes = hyperplanes(len(rows[0]["embedding"]), n_planes, 42)
-        buckets = {r["vec_id"]: bucket_of(r["embedding"], planes) for r in rows}
-        vecs = {r["vec_id"]: np.array(r["embedding"], dtype=np.float64) for r in rows}
-
-        want = {}
-        for q in vecs:
-            scored = [
-                (cos(vecs[q], vecs[c]), c)
-                for c in vecs
-                if c != q and bin(buckets[q] ^ buckets[c]).count("1") <= 1
-            ]
-            ranked = sorted(scored, key=lambda t: (-t[0], t[1]))[:3]
-            for rank, (score, c) in enumerate(ranked, 1):
-                want[(q, c)] = (rank, score)
-
-        got = {
-            (r["vec_id"], r["neighbor_id"]): (r["rank"], r["score"])
-            for r in knn_join(frame, k=3, n_planes=n_planes, probe_hamming=1).collect()
-        }
-        assert got.keys() == want.keys(), n_planes
-        for pair, (rank, score) in got.items():
-            assert rank == want[pair][0], (n_planes, pair)
-            assert abs(score - want[pair][1]) < 1e-9, (n_planes, pair)
+    frame = emb.limit(120).localCheckpoint()
+    want = knn_reference(frame.select("vec_id", "embedding").collect(), 8)
+    got = {
+        (r["vec_id"], r["neighbor_id"]): (r["rank"], r["score"])
+        for r in knn_join(frame, k=3, n_planes=8, probe_hamming=1).collect()
+    }
+    assert got.keys() == want.keys()
+    for pair, (rank, score) in got.items():
+        assert rank == want[pair][0], pair
+        assert abs(score - want[pair][1]) < 1e-9, pair
 
 
 def test_embedding_lsh_pairs_precision_and_semantics(spark, emb):

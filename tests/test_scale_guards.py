@@ -59,6 +59,27 @@ def test_knn_join_auto_sized_runs_at_10x(spark):
     assert all(r["count"] <= 3 for r in counts)
 
 
+def test_knn_join_blocked_matches_fold_path(spark, sf_dir, knn_reference):
+    """knn_join (the cogrouped bucket-local matmul engine, also exported
+    as knn_join_blocked) on the whole embeddings table at 6 planes —
+    fuller buckets, many probes per group — must return exactly the
+    (query, neighbor, rank) triples of the per-candidate reference
+    (numpy cosine over every pair within one bucket bit); scores equal
+    to within summation-order ulps."""
+    from grokspark.operators import knn_join
+
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").localCheckpoint()
+    want = knn_reference(emb.select("vec_id", "embedding").collect(), 6)
+    got = {
+        (r["vec_id"], r["neighbor_id"]): (r["rank"], r["score"])
+        for r in knn_join(emb, k=3, n_planes=6, probe_hamming=1).collect()
+    }
+    assert got.keys() == want.keys()
+    for pair, (rank, score) in got.items():
+        assert rank == want[pair][0], pair
+        assert abs(score - want[pair][1]) < 1e-9, pair
+
+
 def test_knn_blocked_member_salting_is_result_invariant(spark, sf_dir):
     """salt_members only changes group fan-out (skew control): the
     returned (query, neighbor, rank) triples must be identical for any
