@@ -34,6 +34,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from grokspark.plan_policy import spread
+
 # ---------------------------------------------------------------------------
 # Grok corpus (fixed-size deterministic; independent of sf_dir)
 # ---------------------------------------------------------------------------
@@ -235,9 +237,8 @@ def q_grok_unroutable(spark: SparkSession, sf_dir: str) -> DataFrame:
     from grokspark.datagen import routes_df
 
     seq = _grok_seq_df(spark)
-    routes = F.broadcast(routes_df(spark))
     return (
-        seq.join(routes, "source", "left_anti")
+        seq.join(routes_df(spark), "source", "left_anti")
         .groupBy("source")
         .agg(F.count(F.lit(1)).alias("n"))
     )
@@ -347,7 +348,7 @@ def q_join_segment_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = _read(spark, sf_dir, "orders")
     customer = _read(spark, sf_dir, "customer")
     return (
-        orders.join(F.broadcast(customer), orders.o_custkey == customer.c_custkey)
+        orders.join(customer, orders.o_custkey == customer.c_custkey)
         .groupBy("c_mktsegment")
         .agg(
             F.count(F.lit(1)).alias("n_orders"),
@@ -1298,11 +1299,10 @@ def q_c4_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
     built-in.  Oracle: the pure-Python twin over the same parquet, as
     VALUES."""
     from grokspark.operators.clean import c4_clean
-    from grokspark.operators.dedup import _ensure_parallelism
 
     # spread the single-split local scan BEFORE the page projection so
     # the fabrication + cleaning chain runs on the full core pool
-    docs = _ensure_parallelism(_read(spark, sf_dir, "documents"))
+    docs = spread(_read(spark, sf_dir, "documents"))
     pages = docs.select(
         "doc_id", _c4_page_col(F.col("text"), F.col("doc_id")).alias("text")
     )

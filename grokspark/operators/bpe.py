@@ -43,6 +43,8 @@ from typing import Iterable, Optional
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from grokspark.plan_policy import SPREAD_MIN_BYTES, spread
+
 __all__ = [
     "pretokenize",
     "cap_word_counts",
@@ -214,10 +216,8 @@ def word_counts_df(df: DataFrame, text_col: str = "text") -> DataFrame:
     corpus-scale pass of BPE training (explode + partial/final count
     aggregate; the exchange carries (word, partial count), never
     text)."""
-    from grokspark.operators.dedup import SPREAD_MIN_BYTES, _ensure_parallelism
-
     return (
-        _ensure_parallelism(df, SPREAD_MIN_BYTES)
+        spread(df, SPREAD_MIN_BYTES)
         .select(F.explode(_pieces_col(F.col(text_col))).alias("word"))
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("n"))
@@ -271,9 +271,7 @@ def apply_bpe(
             out.append(pieces)
         return pd.Series(out)
 
-    from grokspark.operators.dedup import SPREAD_MIN_BYTES, _ensure_parallelism
-
-    return _ensure_parallelism(df, SPREAD_MIN_BYTES).withColumn(
+    return spread(df, SPREAD_MIN_BYTES).withColumn(
         out_col, bpe(F.col(text_col))
     )
 
@@ -312,8 +310,6 @@ def apply_bpe_ids(
             out.append(ids)
         return pd.Series(out)
 
-    from grokspark.operators.dedup import SPREAD_MIN_BYTES, _ensure_parallelism
-
-    return _ensure_parallelism(df, SPREAD_MIN_BYTES).withColumn(
+    return spread(df, SPREAD_MIN_BYTES).withColumn(
         out_col, bpe_ids(F.col(text_col))
     )

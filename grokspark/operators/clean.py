@@ -41,6 +41,8 @@ from typing import Iterable, Optional
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from grokspark.plan_policy import spread
+
 __all__ = ["c4_clean", "c4_clean_py", "TERMINAL_CHARS"]
 
 # period / exclamation / question mark / closing double quote, per C4
@@ -70,8 +72,6 @@ def c4_clean(
     empty string and ``kept = false``.  Document-level substring drops
     match on the lowercased ORIGINAL text, so pass the substrings in
     lowercase."""
-    from grokspark.operators.dedup import _ensure_parallelism
-
     text = F.col(text_col)
     lines = F.split(text, "\n")
 
@@ -96,7 +96,7 @@ def c4_clean(
     # is referenced more than once downstream), so the chain runs ONCE
     # per row. Still one fused map stage, zero exchanges. Combined
     # with the scan spread below: sf1.0 13 s -> ~1 s, identical rows.
-    staged = _ensure_parallelism(df).select(
+    staged = spread(df).select(
         F.col(id_col).alias("id"),
         text.alias("_text"),
         F.size(lines).alias("_nl"),

@@ -36,6 +36,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from grokspark import plan_policy
 from grokspark.operators.dedup import ngrams
 
 __all__ = ["benchmark_grams", "decontaminate", "decontaminate_corpus"]
@@ -64,16 +65,18 @@ def decontaminate(
     """Per-document contamination hits: ``(doc_id, n_hits)`` for every
     training document sharing >= 1 word n-gram with the benchmark set,
     ``n_hits`` = number of DISTINCT shared grams. Exact (hash
-    candidates, string-verified)."""
-    from grokspark.operators.dedup import _ensure_parallelism
-
+    candidates, string-verified). The benchmark grams are counted once
+    and broadcast to both joins while within ``BROADCAST_MAX_KEYS``."""
     bench = benchmark_grams(bench_df, n, text_col)
+    n_bench, max_keys = bench.count(), plan_policy.BROADCAST_MAX_KEYS
+    bench_h = plan_policy.broadcast(bench.select("h"), n_bench, max_keys)
+    bench_g = plan_policy.broadcast(bench.select("gram"), n_bench, max_keys)
 
     # both corpus passes are scan-fused ngram explodes — spread the
     # single-split local scan across the pool first (no-op on a
     # cluster); the explode + zip_with shingle chain was running
     # single-core at sf1.0 (one parquet row group)
-    train_wide = _ensure_parallelism(train_df)
+    train_wide = plan_policy.spread(train_df)
 
     # corpus pass: 8-byte hashes only through the explode
     train_hashes = train_wide.select(
@@ -81,20 +84,18 @@ def decontaminate(
         F.explode(ngrams(F.col(text_col), n)).alias("gram"),
     ).select(id_col, F.xxhash64("gram").alias("h"))
     candidate_ids = (
-        train_hashes.join(F.broadcast(bench.select("h")), "h", "left_semi")
+        train_hashes.join(bench_h, "h", "left_semi")
         .select(id_col)
         .distinct()
     )
 
     # verify pass: gram strings, but only for candidate documents
-    candidate_docs = train_wide.join(
-        F.broadcast(candidate_ids), id_col, "left_semi"
-    )
+    candidate_docs = train_wide.join(candidate_ids, id_col, "left_semi")
     cand_grams = candidate_docs.select(
         F.col(id_col), F.explode(ngrams(F.col(text_col), n)).alias("gram")
     )
     return (
-        cand_grams.join(F.broadcast(bench.select("gram")), "gram", "left_semi")
+        cand_grams.join(bench_g, "gram", "left_semi")
         .groupBy(id_col)
         .agg(F.count(F.lit(1)).alias("n_hits"))
     )

@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
+from grokspark import plan_policy
 from grokspark.datagen import local_dim
 
 __all__ = [
@@ -124,7 +125,7 @@ def jaccard_pairs(
     # whose stream side inherits the scan's partitioning — spread a
     # single-split local input or the whole quadratic verify runs on
     # one core (measured 8.1 s -> <1 s at the gate sf)
-    g = _ensure_parallelism(df).select(
+    g = plan_policy.spread(df).select(
         F.col(id_col).alias("id"),
         *( [F.col(block_col).alias("_blk")] if block_col else [] ),
         ngrams(F.col(text_col), n).alias("grams"),
@@ -151,59 +152,7 @@ def jaccard_pairs(
     )
 
 
-def _ensure_parallelism(df: DataFrame, min_bytes: int = 0) -> DataFrame:
-    """Spread a per-row expression stage across the full core pool: a
-    small local input (one parquet split) would otherwise evaluate the
-    whole map stage — the n-gram shingle expression is the dominant
-    cost of the MinHash path, measured ~6 s single-core at sf0.1 — on
-    one core. No-op when the input already has >= defaultParallelism
-    partitions, which is always true at real scale (scan splits >>
-    cores), so no shuffle is added on a cluster.
-
-    ``min_bytes``: only spread when the optimizer's input size
-    estimate reaches this many bytes. For operators whose per-row work
-    is CHEAP relative to bytes (a split+count, one md5), the spread's
-    shuffle costs more than single-core execution saves on tiny local
-    inputs (measured: heavy_hitters at sf0.1 0.72 s plain vs 1.19 s
-    spread, but 2.40 s plain vs 1.64 s spread at sf1.0 — the
-    crossover sits around a few MB). Expression-heavy operators
-    (MinHash shingles, rolling hashes, salted-md5 buckets) keep the
-    default 0 = always spread. An unknown estimate (e.g. a
-    localCheckpointed input) spreads — matching prior behavior."""
-    p = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() >= p:
-        return df
-    if min_bytes:
-        try:
-            est = int(
-                str(
-                    df._jdf.queryExecution()
-                    .optimizedPlan()
-                    .stats()
-                    .sizeInBytes()
-                )
-            )
-            if est < min_bytes:
-                return df
-        except Exception:
-            pass
-    return df.repartition(p)
-
-
-# input-size floor for spreads guarding byte-cheap map work (see
-# _ensure_parallelism's min_bytes doc)
-SPREAD_MIN_BYTES = 4 * 1024 * 1024
-
-
 _MASK_SLOTS = 8  # 512-bit gram bloom mask (8 longs) per document
-
-# Broadcast bounds of both near-dup queries, checked against counts of
-# the checkpointed tables. Precheck tables are ~80 B/doc (~400 MB at
-# the doc bound); the verify side carries a ~600 B gram-hash array per
-# surviving pair, and survivors can grow quadratically in a dup-heavy
-# corpus, so it has its own bound. Past either, shuffle joins.
-BROADCAST_MAX_DOCS = 5_000_000
-BROADCAST_MAX_PAIRS = 500_000
 
 
 def _mask_aggs(n_slots: int = _MASK_SLOTS) -> list:
@@ -252,7 +201,7 @@ def _gram_tables(
     the band explode and the precheck, so each scan and aggregate runs
     once. The mins fold into band hashes before the checkpoint (73
     longs/doc at bands=64, not 137)."""
-    grams = _ensure_parallelism(df).select(
+    grams = plan_policy.spread(df).select(
         F.col(id_col).alias("id"),
         ngram_hashes(F.col(text_col), n).alias("gh"),
     ).localCheckpoint()
@@ -306,7 +255,7 @@ def _precheck_verify(
     ``side_b``'s doc count is within ``BROADCAST_MAX_DOCS``; the
     distinct survivors are checkpointed and verified by streaming each
     side's gram table against them, broadcast while their count is
-    within ``BROADCAST_MAX_PAIRS``."""
+    within ``BROADCAST_MAX_PAIRS`` (both bounds in ``plan_policy``)."""
     n_part = int(pre.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     slots = [f"b{i}" for i in range(_MASK_SLOTS)]
 
@@ -317,10 +266,10 @@ def _precheck_verify(
             *[F.col(s).alias(f"{side}_{s}") for s in slots],
         )
 
-    pa, pb = ptab(side_a[1], "a"), ptab(side_b[1], "b")
-    if side_b[0].count() <= BROADCAST_MAX_DOCS:
-        pa, pb = F.broadcast(pa), F.broadcast(pb)
-    else:
+    n_docs, max_docs = side_b[0].count(), plan_policy.BROADCAST_MAX_DOCS
+    pa = plan_policy.broadcast(ptab(side_a[1], "a"), n_docs, max_docs)
+    pb = plan_policy.broadcast(ptab(side_b[1], "b"), n_docs, max_docs)
+    if n_docs > max_docs:
         pre = pre.repartition(n_part, "id_a")
     popcount_or = sum(
         F.bit_count(F.col(f"a_{s}").bitwiseOR(F.col(f"b_{s}"))) for s in slots
@@ -333,15 +282,13 @@ def _precheck_verify(
         .dropDuplicates()
         .localCheckpoint()
     )
-    pairs_broadcast = cands.count() <= BROADCAST_MAX_PAIRS
-    cand_b = F.broadcast(cands) if pairs_broadcast else cands
-    left = side_a[0].join(cand_b, F.col("id") == F.col("id_a")).select(
-        "id_a", "id_b", F.col("gh").alias("ha")
-    )
-    left_b = F.broadcast(left) if pairs_broadcast else left
-    ver = side_b[0].join(left_b, F.col("id") == F.col("id_b")).select(
-        "id_a", "id_b", "ha", F.col("gh").alias("hb")
-    )
+    n_pairs, max_pairs = cands.count(), plan_policy.BROADCAST_MAX_PAIRS
+    left = side_a[0].join(
+        plan_policy.broadcast(cands, n_pairs, max_pairs), F.col("id") == F.col("id_a")
+    ).select("id_a", "id_b", F.col("gh").alias("ha"))
+    ver = side_b[0].join(
+        plan_policy.broadcast(left, n_pairs, max_pairs), F.col("id") == F.col("id_b")
+    ).select("id_a", "id_b", "ha", F.col("gh").alias("hb"))
     # |A u B| = |A| + |B| - |A n B| (gram arrays are distinct-element),
     # so one array_intersect does the work of intersect + union
     inter = F.size(F.array_intersect("ha", "hb"))
@@ -432,13 +379,16 @@ def minhash_lsh_pairs_vs(
     over the union restricted to cross pairs. Only the candidate join
     differs: the corpus NEVER shuffles for candidates — its band table
     streams against the **broadcast** band table of the new batch
-    (24 bytes x bands per doc). The doc-count broadcast bound is
+    (24 bytes x bands per doc), while that table's docs x bands rows
+    are within ``plan_policy.BROADCAST_MAX_DOCS`` (~120 MB, the
+    precheck tables' byte budget). The precheck's doc-count bound is
     counted on the corpus. A deployed pipeline would materialize the
     corpus tables once and reuse them every batch."""
     new = _gram_tables(new_df, n, num_hashes, bands, text_col, id_col)
     corpus = _gram_tables(corpus_df, n, num_hashes, bands, text_col, id_col)
     c = _band_table(corpus[1], bands).alias("c")
-    nw = F.broadcast(_band_table(new[1], bands).alias("nw"))
+    nw = _band_table(new[1], bands).alias("nw")
+    nw = plan_policy.broadcast(nw, new[0].count() * bands, plan_policy.BROADCAST_MAX_DOCS)
     pre = c.join(
         nw,
         (F.col("c.band_id") == F.col("nw.band_id"))
@@ -894,7 +844,7 @@ def embedding_cosine_pairs(
     ``block_col`` at scale)."""
     # same stream-side spread rationale as jaccard_pairs: the
     # interpreted cosine fold otherwise evaluates every pair on one core
-    a = _ensure_parallelism(df).select(
+    a = plan_policy.spread(df).select(
         F.col(id_col).alias("id_a"),
         F.col(vec_col).alias("va"),
         *( [F.col(block_col).alias("_blk")] if block_col else [] ),
@@ -922,7 +872,7 @@ def _semdedup_cells(
     # assignment is an interpreted expression chain and would run on
     # one core (no-op on a cluster; size-floored so tiny local inputs
     # skip the shuffle)
-    return _ensure_parallelism(df, SPREAD_MIN_BYTES).select(
+    return plan_policy.spread(df, plan_policy.SPREAD_MIN_BYTES).select(
         F.col(id_col).alias("id"),
         F.col(vec_col).alias("vec"),
         ivf_assign_col(vec_col, centroids).alias("cell"),
@@ -1041,7 +991,7 @@ def semdedup_lsh(
         # callers that know the width pass ``dim`` and skip this probe job
         dim = _vector_dim(df, vec_col)
     planes = hyperplanes(dim, n_planes, seed)
-    cells = _ensure_parallelism(df, SPREAD_MIN_BYTES).select(
+    cells = plan_policy.spread(df, plan_policy.SPREAD_MIN_BYTES).select(
         F.col(id_col).alias("id"),
         F.col(vec_col).alias("vec"),
         lsh_bucket_col(vec_col, planes).cast("int").alias("cell"),

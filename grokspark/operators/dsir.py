@@ -38,7 +38,8 @@ from typing import Optional
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from grokspark.operators.ngram_lm import lm_words
+from grokspark.operators.ngram_lm import _words_py, lm_words
+from grokspark.plan_policy import spread
 
 __all__ = [
     "dsir_gram_col",
@@ -93,11 +94,9 @@ def dsir_bucket_counts(
     parquet split and the explode+md5 projection would otherwise run
     single-core (measured 8.5 s of the 34 s sf1.0 build; no-op on a
     cluster where scan splits >> cores)."""
-    from grokspark.operators.dedup import _ensure_parallelism
-
-    grams = _ensure_parallelism(
-        df.where(F.col(text_col).isNotNull())
-    ).select(F.explode(dsir_gram_col(F.col(text_col))).alias("gram"))
+    grams = spread(df.where(F.col(text_col).isNotNull())).select(
+        F.explode(dsir_gram_col(F.col(text_col))).alias("gram")
+    )
     return (
         grams.select(dsir_bucket_col(F.col("gram"), n_buckets).alias("bucket"))
         .groupBy("bucket")
@@ -146,12 +145,8 @@ def dsir_weights(
     """``(id_col, n_grams, weight_micro)`` for every raw document with
     non-NULL text: the exact-integer sum of broadcast per-bucket
     log-ratio micro-nats over the doc's grams."""
-    from grokspark.operators.dedup import _ensure_parallelism
-
     spark = raw_df.sparkSession
-    grams = _ensure_parallelism(
-        raw_df.where(F.col(text_col).isNotNull())
-    ).select(
+    grams = spread(raw_df.where(F.col(text_col).isNotNull())).select(
         F.col(id_col),
         F.explode(dsir_gram_col(F.col(text_col))).alias("gram"),
     )
@@ -181,7 +176,7 @@ def dsir_weights(
             spark, target_counts, raw_counts, n_buckets
         )
     return (
-        bucketed.join(F.broadcast(ratio), "bucket")
+        bucketed.join(ratio, "bucket")
         .groupBy(id_col)
         .agg(
             F.count(F.lit(1)).alias("n_grams"),
@@ -247,12 +242,6 @@ def dsir_resample(
 
 
 # --- single-process twin (tests / margin audits) ---------------------
-
-
-def _words_py(text: str) -> list[str]:
-    import re as _re
-
-    return _re.split(r"\s+", text.strip().lower(), flags=_re.ASCII)
 
 
 def _grams_py(text: str) -> list[str]:

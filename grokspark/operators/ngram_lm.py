@@ -4,12 +4,15 @@ The classic LLM-pipeline quality filter (Wenzek et al., "CCNet", 2020)
 scores each document by the perplexity of a small n-gram LM and drops
 the tail.  This module trains an add-one-smoothed bigram LM over a
 corpus with plain distributed aggregates and scores documents with a
-broadcast join — no Python in the data path.
+join — no Python in the data path.
 
-Tokenization convention (shared with the DuckDB oracle bit-for-bit):
-lowercased whitespace words, ``split(lower(trim(text)), '\\s+')`` —
-Java and RE2 ``\\s`` are both ASCII, so the engines agree (the Python
-twin must compile with ``re.ASCII``; see ADVICE r4).
+Tokenization convention: lowercased whitespace words,
+``array_remove(split(lower(text), '\\s+'), '')`` — no empty word, so a
+blank text has none. Java and RE2 ``\\s`` are both ASCII (the Python
+twin must compile with ``re.ASCII``; see ADVICE r4). The DuckDB
+oracles' ``string_split_regex(lower(trim(text)), '\\s+')`` gives the
+same words for every text that neither is blank nor starts or ends
+with a non-space whitespace character (every gate corpus).
 
 100-TB design:
 - Training is ONE corpus-scale aggregate per table (unigrams, bigrams)
@@ -21,10 +24,9 @@ twin must compile with ``re.ASCII``; see ADVICE r4).
   Pruned/unseen keys fall back to count 0, which the add-one smoothing
   already prices — the standard pruned-backoff trade, documented
   rather than hidden.
-- Scoring is explode -> two BROADCAST joins -> one groupBy(doc_id):
-  the corpus shuffles once, on its natural key.  If the bigram table
-  outgrows broadcast at some corpus size, the same plan runs as a
-  shuffle join without code changes (drop the hint).
+- Scoring is explode -> two joins -> one groupBy(doc_id): the model
+  tables broadcast while Spark's threshold admits them (no hint), so
+  a model that outgrows it runs the same plan as a shuffle join.
 - Bigrams are built with the (n-1)-deep ``zip_with`` fold over shifted
   slices (see ``dedup.ngrams`` for the measured 7x vs the
   transform+slice form).
@@ -51,6 +53,8 @@ from typing import Optional
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from grokspark.plan_policy import SPREAD_MIN_BYTES, spread
+
 __all__ = [
     "lm_words",
     "bigrams_col",
@@ -64,8 +68,9 @@ __all__ = [
 
 
 def lm_words(text: Column) -> Column:
-    """Lowercased whitespace tokens (ASCII ``\\s``, both engines)."""
-    return F.split(F.lower(F.trim(text)), r"\s+")
+    """Lowercased whitespace tokens (ASCII ``\\s``, both engines); a
+    text with no word gives an empty array."""
+    return F.array_remove(F.split(F.lower(text), r"\s+"), "")
 
 
 def bigrams_col(w: Column) -> Column:
@@ -111,13 +116,11 @@ def train_bigram_lm(
     — both count aggregates read the materialization instead of
     re-running the scan+split each (measured: the double pass was most
     of the sf1.0 train cost)."""
-    from grokspark.operators.dedup import SPREAD_MIN_BYTES, _ensure_parallelism
-
     w = lm_words(F.col(text_col))
     # spread a single-split local scan so both count aggregates run at
     # full width (no-op on a cluster where scan splits >> cores)
     base = (
-        _ensure_parallelism(df.filter(F.col(text_col).isNotNull()), SPREAD_MIN_BYTES)
+        spread(df.filter(F.col(text_col).isNotNull()), SPREAD_MIN_BYTES)
         .select(w.alias("_w"))
         .localCheckpoint()
     )
@@ -153,31 +156,17 @@ def perplexity_scores(
     length first — see ``quality_scores``).  Pass ``vocab_size``
     (= ``unigrams.count()``) to skip the counting job when the caller
     already materialized the model."""
-    from grokspark.operators.dedup import SPREAD_MIN_BYTES, _ensure_parallelism
-
     v = (vocab_size if vocab_size is not None else unigrams.count()) + 1
     toks = (
-        _ensure_parallelism(
-            df.filter(F.col(text_col).isNotNull()), SPREAD_MIN_BYTES
-        )
+        spread(df.filter(F.col(text_col).isNotNull()), SPREAD_MIN_BYTES)
         .select(F.col(id_col).alias("id"), lm_words(F.col(text_col)).alias("_w"))
         .filter(F.size("_w") >= 2)
         .select("id", F.explode(bigrams_col(F.col("_w"))).alias("_g"))
         .select("id", F.col("_g.w1").alias("w1"), F.col("_g.w2").alias("w2"))
     )
     scored = (
-        toks.join(
-            F.broadcast(bigrams.withColumnRenamed("cnt", "_c12")),
-            ["w1", "w2"],
-            "left",
-        )
-        .join(
-            F.broadcast(
-                unigrams.select("w1", F.col("cnt").alias("_c1"))
-            ),
-            "w1",
-            "left",
-        )
+        toks.join(bigrams.withColumnRenamed("cnt", "_c12"), ["w1", "w2"], "left")
+        .join(unigrams.select("w1", F.col("cnt").alias("_c1")), "w1", "left")
         .select(
             "id",
             (
@@ -211,20 +200,14 @@ def familiarity_scores(
     division of two BIGINTs (bit-equal across engines).  Low
     familiarity = rare word sequences, the same tail a perplexity
     filter trims; exact at any scale without FP-parity caveats."""
-    from grokspark.operators.dedup import SPREAD_MIN_BYTES, _ensure_parallelism
-
     toks = (
-        _ensure_parallelism(
-            df.filter(F.col(text_col).isNotNull()), SPREAD_MIN_BYTES
-        )
+        spread(df.filter(F.col(text_col).isNotNull()), SPREAD_MIN_BYTES)
         .select(F.col(id_col).alias("id"), lm_words(F.col(text_col)).alias("_w"))
         .filter(F.size("_w") >= 2)
         .select("id", F.explode(bigrams_col(F.col("_w"))).alias("_g"))
         .select("id", F.col("_g.w1").alias("w1"), F.col("_g.w2").alias("w2"))
     )
-    joined = toks.join(
-        F.broadcast(bigrams.withColumnRenamed("cnt", "_c12")), ["w1", "w2"], "left"
-    )
+    joined = toks.join(bigrams.withColumnRenamed("cnt", "_c12"), ["w1", "w2"], "left")
     return (
         joined.groupBy("id")
         .agg(
@@ -262,8 +245,7 @@ _WS_ASCII = re.compile(r"\s+", re.ASCII)
 
 
 def _words_py(text: str) -> list[str]:
-    t = text.strip().lower()
-    return _WS_ASCII.split(t) if t else [""]
+    return [w for w in _WS_ASCII.split(text.lower()) if w]
 
 
 def train_bigram_lm_py(

@@ -10,8 +10,8 @@ This is the classic inverted-index formulation as dataflow:
    corpus' single shuffle.  Document length rides along (functionally
    dependent on id, grouped not re-joined).
 2. TERM STATS: document frequency per term — a groupBy over the
-   ALREADY-AGGREGATED postings (Heaps-bounded key table, broadcast to
-   the scoring join).
+   ALREADY-AGGREGATED postings (Heaps-bounded key table; Spark's
+   broadcast threshold decides its scoring join).
 3. SCORE: query terms broadcast against postings; per-(query, doc)
    sum of ``idf(t) * tf_weight(tf, dl)``; top-k per query under a
    window with a total tie-break (score desc, id asc).
@@ -46,6 +46,7 @@ from typing import Optional
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from grokspark import plan_policy
 from grokspark.operators.ngram_lm import lm_words
 
 __all__ = [
@@ -65,10 +66,8 @@ def bm25_postings(
 ) -> DataFrame:
     """Inverted postings ``(id, term, tf, dl)`` — lowercased ASCII-
     whitespace terms (the shared ``lm_words`` convention), one shuffle."""
-    from grokspark.operators.dedup import SPREAD_MIN_BYTES, _ensure_parallelism
-
-    base = _ensure_parallelism(
-        df.filter(F.col(text_col).isNotNull()), SPREAD_MIN_BYTES
+    base = plan_policy.spread(
+        df.filter(F.col(text_col).isNotNull()), plan_policy.SPREAD_MIN_BYTES
     ).select(F.col(id_col).alias("id"), lm_words(F.col(text_col)).alias("_ws"))
     toks = base.select(
         "id",
@@ -94,7 +93,8 @@ def bm25_topk(
 ) -> DataFrame:
     """Top-``k`` documents per query by BM25: ``(query_id, rank,
     doc_id, score_micro, score)``.  ``queries`` is a (small) DataFrame
-    of ``(query_id, text)``; its distinct terms are broadcast, so the
+    of ``(query_id, text)``; its distinct terms are counted and
+    broadcast while within ``BROADCAST_MAX_KEYS``, so the
     corpus-side postings never shuffle for the probe.  Optional
     ``max_df_ratio`` drops terms present in more than that fraction of
     documents (exact integer threshold: ``df_t * 1000000 > N *
@@ -131,6 +131,7 @@ def bm25_topk(
             F.array_distinct(lm_words(F.col(query_text_col)))
         ).alias("term"),
     )
+    qt = plan_policy.broadcast(qt, qt.count(), plan_policy.BROADCAST_MAX_KEYS)
 
     # idf = ln(1 + (N - df + 0.5)/(df + 0.5)); integer subtraction
     # first, then one cast each — the SQL oracle mirrors this op order
@@ -145,8 +146,8 @@ def bm25_topk(
         tfd + F.lit(k1) * (F.lit(1.0 - b) + (F.lit(b) * dld) / F.lit(avgdl))
     )
     scored = (
-        post.join(F.broadcast(qt), "term")
-        .join(F.broadcast(dfreq), "term")
+        post.join(qt, "term")
+        .join(dfreq, "term")
         .select("query_id", "id", (idf * tfw).alias("_s"))
         .groupBy("query_id", "id")
         .agg(F.sum("_s").alias("score"))
@@ -182,12 +183,11 @@ def bm25_topk_py(
     b: float = B,
 ) -> list[tuple]:
     """``(query_id, rank, doc_id, score_micro)`` — same tokenization,
-    op order, and tie-break as the distributed path."""
+    op order, and tie-break as the distributed path; a document with no
+    word has no postings, so it counts in neither ``N`` nor avgdl."""
     from grokspark.operators.ngram_lm import _words_py
 
-    toks = {
-        did: _words_py(t) for did, t in docs if t is not None
-    }
+    toks = {did: ws for did, t in docs if t is not None and (ws := _words_py(t))}
     n_docs = len(toks)
     sum_dl = sum(len(w) for w in toks.values())
     avgdl = float(sum_dl) / float(n_docs) if n_docs else 1.0

@@ -285,18 +285,18 @@ def build_lsh_index(
 
     Returns the hyperplanes used (regenerate with ``hyperplanes(dim,
     n_planes, seed)`` — they are a pure function of the seed)."""
-    dim = df.select(F.size(F.col(vec_col))).head()[0]
-    planes = hyperplanes(dim, n_planes, seed)
-    (
+    planes = hyperplanes(_vector_dim(df, vec_col), n_planes, seed)
+    writer = (
         df.withColumn("_bucket", lsh_bucket_col(vec_col, planes))
         # cluster rows by bucket before the partitioned write: one file
         # per bucket instead of (input partitions x buckets) shards —
         # index builds shuffle once so every probe later reads one file
         .repartition(F.col("_bucket"))
         .write.mode("overwrite")
-        .partitionBy("_bucket")
-        .parquet(index_path)
     )
+    # a partitioned write of no rows leaves no file to read a schema
+    # from; an empty index is one unpartitioned, schema-only file
+    (writer if df.isEmpty() else writer.partitionBy("_bucket")).parquet(index_path)
     return planes
 
 

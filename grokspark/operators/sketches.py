@@ -28,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from grokspark import plan_policy
+
 __all__ = [
     "kmv_distinct",
     "KMV_SPACE_BITS",
@@ -57,14 +59,13 @@ def kmv_distinct(df: DataFrame, col: str, k: int = 256) -> DataFrame:
       KMV, relative error ~1/sqrt(k-2)."""
     if not 2 <= k <= (1 << 20):
         raise ValueError(f"k must be in [2, 2^20], got {k}")
-    from grokspark.operators.dedup import SPREAD_MIN_BYTES, _ensure_parallelism
 
     space = 1 << KMV_SPACE_BITS
     # project the key column FIRST, then spread a single-split local
     # scan so the md5 pass runs at full width (narrow shuffle; no-op
     # on a cluster)
     mins = (
-        _ensure_parallelism(df.select(F.col(col)), SPREAD_MIN_BYTES)
+        plan_policy.spread(df.select(F.col(col)), plan_policy.SPREAD_MIN_BYTES)
         .select(kmv_hash_col(col).alias("h"))
         .distinct()
         .orderBy("h")
@@ -172,12 +173,18 @@ def heavy_hitters(
     summaries = toks.mapInArrow(
         _mg_kernel(int(k)), "term string, cnt long"
     ).localCheckpoint()
-    n_total = summaries.filter(F.col("term").isNull()).agg(
-        F.sum("cnt").alias("n")
-    ).collect()[0]["n"] or 0
-    candidates = summaries.filter(F.col("term").isNotNull()).select("term").distinct()
+    tot = summaries.agg(
+        F.sum(F.when(F.col("term").isNull(), F.col("cnt"))).alias("n"),
+        F.countDistinct("term").alias("n_cand"),
+    ).collect()[0]
+    n_total = tot["n"] or 0
+    candidates = plan_policy.broadcast(
+        summaries.filter(F.col("term").isNotNull()).select("term").distinct(),
+        tot["n_cand"],
+        plan_policy.BROADCAST_MAX_KEYS,
+    )
     exact = (
-        toks.join(F.broadcast(candidates), "term")
+        toks.join(candidates, "term")
         .groupBy("term")
         .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
     )
@@ -198,15 +205,14 @@ def heavy_hitter_tokens(
 ) -> DataFrame:
     """Heavy-hitter WORDS of a text corpus (lowercased ASCII-whitespace
     tokens, the shared ``lm_words`` convention): ``(term, cnt)``."""
-    from grokspark.operators.dedup import SPREAD_MIN_BYTES, _ensure_parallelism
     from grokspark.operators.ngram_lm import lm_words
 
     # spread a single-split local scan: both Misra-Gries passes explode
     # from this plan, and one partition means one Arrow worker in pass
     # 1 (no-op on a cluster)
     toks = (
-        _ensure_parallelism(
-            df.filter(F.col(text_col).isNotNull()), SPREAD_MIN_BYTES
+        plan_policy.spread(
+            df.filter(F.col(text_col).isNotNull()), plan_policy.SPREAD_MIN_BYTES
         )
         .select(F.explode(lm_words(F.col(text_col))).alias("term"))
     )

@@ -60,6 +60,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from grokspark.operators.textops import WINNOW_B, WINNOW_M
+from grokspark.plan_policy import spread
 
 _PACK_LIM = 1 << 21  # packed-key codepoint bound per document
 
@@ -156,14 +157,12 @@ def duplicate_spans(
 
     h_udf = pandas_udf(hashes, T.ArrayType(T.LongType()))
 
-    from grokspark.operators.dedup import _ensure_parallelism
-
     # spread a single-split local scan across the pool BEFORE the
     # Arrow hash stage: one partition means ONE Python worker rolls
     # the whole corpus (measured 10.2 s -> 1.5 s at sf1.0; the
     # row-shuffle-before-Arrow penalty is dwarfed at this row width).
     # No-op on a cluster where scan splits >> cores.
-    base = _ensure_parallelism(
+    base = spread(
         df.filter(F.col(text_col).isNotNull()).select(
             F.col(id_col).alias("id"), F.col(text_col).alias("_t")
         )
@@ -247,8 +246,6 @@ def remove_spans(
     ``n_spans`` / ``n_removed_chars``.  The cut is one JVM ``aggregate``
     fold over the doc's sorted interval list — no Python, no shuffle
     beyond the per-doc span collect."""
-    from grokspark.operators.dedup import _ensure_parallelism
-
     ivs = spans.groupBy(id_col).agg(
         F.array_sort(
             F.collect_list(F.struct(F.col("start"), F.col("end")))
@@ -258,7 +255,7 @@ def remove_spans(
     )
     # spread the corpus side so the interpreted cut fold runs at full
     # width (single parquet split locally; no-op at real scale)
-    joined = _ensure_parallelism(df).join(ivs, id_col, "left")
+    joined = spread(df).join(ivs, id_col, "left")
     text = F.col(text_col)
     cut = F.aggregate(
         F.col("_ivs"),

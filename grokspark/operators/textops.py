@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from grokspark.plan_policy import SPREAD_MIN_BYTES, spread
+
 __all__ = [
     "words",
     "token_count",
@@ -42,12 +44,10 @@ def token_count(df: DataFrame, text_col: str = "text") -> DataFrame:
     (word-boundary regex pieces: runs of letters, digits, or single
     punctuation — a deterministic stand-in for a tokenizer's piece
     count)."""
-    from grokspark.operators.dedup import SPREAD_MIN_BYTES, _ensure_parallelism
-
     w = words(F.col(text_col))
     pieces = F.split(F.trim(F.regexp_replace(F.col(text_col), r"([a-zA-Z]+|[0-9]+|[^a-zA-Z0-9\s])", r"$1 ")), r"\s+")
     return (
-        _ensure_parallelism(df, SPREAD_MIN_BYTES)
+        spread(df, SPREAD_MIN_BYTES)
         .withColumn("n_words", F.size(w))
         .withColumn("n_pieces", F.size(pieces))
     )
@@ -64,9 +64,7 @@ def quality_scores(df: DataFrame, text_col: str = "text") -> DataFrame:
     - quality = 1 if 20 <= n_words and punct_ratio < 0.2
                 and stop_ratio >= 0.03 else 0   (binary keep-flag)
     """
-    from grokspark.operators.dedup import SPREAD_MIN_BYTES, _ensure_parallelism
-
-    df = _ensure_parallelism(df, SPREAD_MIN_BYTES)
+    df = spread(df, SPREAD_MIN_BYTES)
     text = F.col(text_col)
     w = words(text)
     n_words = F.size(w)
@@ -116,9 +114,7 @@ def repetition_scores(df: DataFrame, text_col: str = "text") -> DataFrame:
     flag, no Python) is what carries over. NULL text scores as empty
     (dup 0, ratio 0, keep 1) rather than poisoning the keep flag to
     NULL."""
-    from grokspark.operators.dedup import SPREAD_MIN_BYTES, _ensure_parallelism
-
-    df = _ensure_parallelism(df, SPREAD_MIN_BYTES)
+    df = spread(df, SPREAD_MIN_BYTES)
     text = F.coalesce(F.col(text_col), F.lit(""))
     w = words(F.lower(text))
     n_words = F.size(w)
@@ -228,9 +224,7 @@ def content_fingerprint_col(text: Column) -> Column:
 
 def fingerprint(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Content fingerprint column (see ``content_fingerprint_col``)."""
-    from grokspark.operators.dedup import SPREAD_MIN_BYTES, _ensure_parallelism
-
-    return _ensure_parallelism(df, SPREAD_MIN_BYTES).withColumn(
+    return spread(df, SPREAD_MIN_BYTES).withColumn(
         "fp", content_fingerprint_col(F.col(text_col))
     )
 

@@ -231,7 +231,7 @@ def route_match_counts(
     from grokspark.udfs import grok_parse_arrow_kernel
 
     registry = registry or GrokRegistry.with_default_patterns()
-    routes = F.broadcast(datagen.routes_df(spark))
+    routes = datagen.routes_df(spark)
     enriched = seq_df.join(routes, "source", "left").filter(
         F.col("route").isNotNull()
     )
@@ -322,7 +322,7 @@ class GrokPipeline:
 
         patterns = sorted(self.pattern_exprs)
         route_of = {r["pattern_name"]: r["route"] for r in self.routes}
-        routes_df = F.broadcast(datagen.routes_dim(self.spark, self.routes))
+        routes_df = datagen.routes_dim(self.spark, self.routes)
         parse = grok_parse_router_udf(
             {p: self.compiled(p) for p in patterns}, from_tokens=True,
             timeout=cfg.timeout,

@@ -122,7 +122,7 @@ def stream_windowed_route_counts(
     streaming twin of pipeline.route_match_counts."""
     spark = stream_df.sparkSession
     registry = registry or GrokRegistry.with_default_patterns()
-    routes = F.broadcast(datagen.routes_df(spark))
+    routes = datagen.routes_df(spark)
     compiled = {
         name: registry.compile(expr, with_alias_only=alias_only)
         for name, expr in datagen.pattern_exprs().items()
@@ -206,7 +206,7 @@ def stream_route_sinks(
         for name, expr in datagen.pattern_exprs().items()
     }
     parse = grok_parse_router_udf(compiled, from_tokens=True)
-    routes = F.broadcast(datagen.routes_df(spark))
+    routes = datagen.routes_df(spark)
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         import os

@@ -373,28 +373,6 @@ def test_minhash_lsh_pairs_vs_never_pairs_identical_ids(spark):
     assert got == {(100, 3): exact[0]["jaccard"]}
 
 
-def test_minhash_verify_broadcast_bound_fallback(spark, sf_dir, monkeypatch):
-    """With both broadcast bounds at 0 the precheck and the verify take
-    their shuffle-join fallbacks; both near-dup queries must return the
-    same pairs and jaccards as under the default bounds."""
-    from grokspark.operators import dedup, minhash_lsh_pairs, minhash_lsh_pairs_vs
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    new = docs.filter(F.col("doc_id") % 10 == 0)
-    corpus = docs.filter(F.col("doc_id") % 10 != 0)
-
-    def run():
-        full = minhash_lsh_pairs(docs, threshold=0.5, n=2, bands=64).collect()
-        vs = minhash_lsh_pairs_vs(new, corpus, threshold=0.5, n=2, bands=64)
-        return {(r["id_a"], r["id_b"]): r["jaccard"] for r in full}, _vs_pairs(vs)
-
-    default = run()
-    monkeypatch.setattr(dedup, "BROADCAST_MAX_DOCS", 0)
-    monkeypatch.setattr(dedup, "BROADCAST_MAX_PAIRS", 0)
-    assert run() == default
-    assert default[0] and default[1]
-
-
 def test_minhash_lsh_pairs_vs_corpus_side_never_broadcast(spark, sf_dir):
     """Plan shape of the candidate join (the checkpointed stage that
     reads the band tables): the NEW side is the broadcast build side;
@@ -612,16 +590,44 @@ BM25_QUERIES = [("qa", "hash join"), ("qb", "window"), ("qc", "absent term")]
 
 
 def test_bm25_matches_python_twin(spark):
+    """Spark and the twins agree on the ``lm_words`` rule (bm25, the
+    bigram LM, the DSIR grams), also for a blank doc and a doc edged by
+    tabs and newlines (Spark ``trim`` strips only spaces); a doc with
+    no word changes none of BM25's ``N``/avgdl or the LM's ``V``."""
+    from grokspark.operators.dsir import _grams_py, dsir_gram_col
+    from grokspark.operators.ngram_lm import train_bigram_lm, train_bigram_lm_py
     from grokspark.operators.retrieval import bm25_topk, bm25_topk_py
 
-    df = spark.createDataFrame(BM25_DOCS, "doc_id long, text string")
+    docs = BM25_DOCS + [(7, " \t\n "), (8, "\tJoin hash\n")]
+    worded = [(i, t) for i, t in docs if t is not None and t.strip()]
     qs = spark.createDataFrame(BM25_QUERIES, "query_id string, text string")
-    got = sorted(
-        (r["query_id"], r["rank"], r["doc_id"], r["score_micro"])
-        for r in bm25_topk(df, qs, k=3).collect()
+
+    def frame(rows):
+        return spark.createDataFrame(rows, "doc_id long, text string")
+
+    def spark_bm25(rows):
+        return sorted(
+            (r["query_id"], r["rank"], r["doc_id"], r["score_micro"])
+            for r in bm25_topk(frame(rows), qs, k=3).collect()
+        )
+
+    got = spark_bm25(docs)
+    assert got == sorted(bm25_topk_py(docs, BM25_QUERIES, k=3))
+    assert got == spark_bm25(worded)
+    assert 8 in {d for q, _, d, _ in got if q == "qa"}
+
+    uni, bi = train_bigram_lm(frame(docs))
+    u_py, b_py = train_bigram_lm_py([t for _, t in docs])
+    assert {r["w1"]: r["cnt"] for r in uni.collect()} == u_py
+    assert {(r["w1"], r["w2"]): r["cnt"] for r in bi.collect()} == b_py
+    assert "" not in u_py and uni.count() == train_bigram_lm(frame(worded))[0].count()
+
+    grams = frame(docs).where(F.col("text").isNotNull()).select(
+        "doc_id", dsir_gram_col(F.col("text")).alias("g")
     )
-    want = sorted(bm25_topk_py(BM25_DOCS, BM25_QUERIES, k=3))
-    assert got == want
+    assert {r["doc_id"]: r["g"] for r in grams.collect()} == {
+        i: _grams_py(t) for i, t in docs if t is not None
+    }
     # qc has no matching docs at all
     assert not any(q == "qc" for q, *_ in got)
     # qb: only doc 3 contains "window"

@@ -964,6 +964,20 @@ def test_knn_join_and_embedding_lsh_pairs_empty_input(emb):
     assert pairs.collect() == []
 
 
+def test_lsh_index_empty_input(spark, emb, tmp_path):
+    """A zero-row input builds an index (the planes come back, no
+    TypeError from the dim probe) that probes to zero rows instead of
+    failing schema inference on a directory with no data file."""
+    from grokspark.operators import build_lsh_index, lsh_index_topk
+
+    index = str(tmp_path / "index")
+    planes = build_lsh_index(emb.limit(0), index, n_planes=8, seed=42)
+    assert len(planes) == 8
+    top = lsh_index_topk(spark, index, [1.0] * len(planes[0]), k=10, n_planes=8)
+    assert top.columns == ["vec_id", "score"]
+    assert top.collect() == []
+
+
 EMBEDDING_GATE_QUERIES = (
     "knn_join",
     "knn_join_blocked",

@@ -336,25 +336,6 @@ def test_heavy_ops_checkpoint_their_reused_stage(spark, sf_dir, op, marker):
     assert marker in stages[0], stages[0]
 
 
-def test_ensure_parallelism_size_floor(spark, sf_dir):
-    """Round-6 invariant: the scan spread fires unconditionally by
-    default (expression-heavy stages), but a ``min_bytes`` floor keeps
-    tiny local inputs unshuffled for byte-cheap map work — the
-    optimizer's size estimate for the sf0.001 documents table is far
-    below SPREAD_MIN_BYTES, so the floored call must be a no-op while
-    the unfloored call spreads to the core pool."""
-    from grokspark.operators.dedup import SPREAD_MIN_BYTES, _ensure_parallelism
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    before = docs.rdd.getNumPartitions()
-    p = spark.sparkContext.defaultParallelism
-    floored = _ensure_parallelism(docs, SPREAD_MIN_BYTES)
-    spread = _ensure_parallelism(docs)
-    assert floored.rdd.getNumPartitions() == before
-    if before < p:
-        assert spread.rdd.getNumPartitions() == p
-
-
 def test_ann_index_scan_prunes_partitions(spark, sf_dir, tmp_path):
     """lsh_index_topk over the materialized bucket-partitioned index
     must push the probe set into PartitionFilters (real pruning: the
