@@ -659,8 +659,8 @@ def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_dedup_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXACTNESS BASELINE — quadratic within a block; at scale use
-    dedup_minhash_lsh (same output here) or pass block_col."""
+    """EXACTNESS BASELINE — quadratic over the corpus; at scale use
+    dedup_minhash_lsh (same output here)."""
     from grokspark.operators import jaccard_pairs
 
     return jaccard_pairs(_read(spark, sf_dir, "documents"), threshold=0.5, n=2)
@@ -814,8 +814,8 @@ def q_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_dedup_embedding_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXACTNESS BASELINE — quadratic within a block; at scale use
-    dedup_embedding_lsh or pass block_col."""
+    """EXACTNESS BASELINE — quadratic over the table; at scale use
+    dedup_embedding_lsh."""
     from grokspark.operators import embedding_cosine_pairs
 
     return embedding_cosine_pairs(
@@ -825,8 +825,8 @@ def q_dedup_embedding_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding near-dup pairs via sign-LSH candidates (bucket hamming
-    <= 2, one equi-join over id-only probes) + exact cosine verify —
-    the scale path the quadratic dedup_embedding_pairs baselines.
+    <= 2) scored by knn_join's bucket-local matmul engine — the scale
+    path the quadratic dedup_embedding_pairs baselines.
     Oracle: DuckDB recomputes the buckets and applies the identical
     candidate + verify rule."""
     from grokspark.operators import embedding_lsh_pairs
@@ -1769,7 +1769,7 @@ def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     from grokspark.operators.multimodal import extract_image_features, png_payload_df
 
     payloads = png_payload_df(_grok_text_df(spark))
-    feats = extract_image_features(payloads, fake=False)
+    feats = extract_image_features(payloads)
     return feats.groupBy("modality").agg(
         F.count(F.lit(1)).alias("n"),
         F.sum("width").cast("long").alias("sum_width"),
@@ -1882,7 +1882,7 @@ def q_multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     payloads = png_payload_df(_grok_text_df(spark))
     thumbs = resize_images(payloads, max_dim=RESIZE_MAX_DIM)
-    return _feature_agg(extract_image_features(thumbs, fake=False))
+    return _feature_agg(extract_image_features(thumbs))
 
 
 JPEG_N = 500  # oracle fabricates+decodes JPEGs at oracle_sql() build
@@ -1927,7 +1927,7 @@ def q_multimodal_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     payloads = jpeg_payload_df(_grok_text_df(spark, JPEG_N))
-    return _feature_agg(extract_image_features(payloads, fake=False))
+    return _feature_agg(extract_image_features(payloads))
 
 
 def q_video_frame_features(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1945,7 +1945,7 @@ def q_video_frame_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         _grok_text_df(spark, VIDEO_N), n_frames=VIDEO_FRAMES
     )
     frames = sample_video_frames(videos, stride=VIDEO_STRIDE)
-    return _feature_agg(extract_image_features(frames, fake=False))
+    return _feature_agg(extract_image_features(frames))
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

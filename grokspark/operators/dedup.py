@@ -10,8 +10,7 @@ Scale notes (the design constraint is 10^9+ documents):
   for candidates; a bloom-mask precheck prunes them and the exact
   verify streams gram-hash arrays against broadcast survivors;
 - brute-force pair ops (jaccard_pairs, embedding_cosine_pairs) are
-  quadratic *within a blocking key* — they exist as the exactness
-  baseline for tests/oracles and for small blocks after LSH.
+  quadratic — they exist as the exactness baseline for tests/oracles.
 """
 
 from __future__ import annotations
@@ -20,10 +19,12 @@ from typing import Optional
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from grokspark import plan_policy
 from grokspark.datagen import local_dim
@@ -116,32 +117,20 @@ def jaccard_pairs(
     n: int = 3,
     text_col: str = "text",
     id_col: str = "doc_id",
-    block_col: Optional[str] = None,
 ) -> DataFrame:
     """Exact n-gram Jaccard similar pairs (id_a < id_b, jaccard >=
-    threshold). Quadratic within a block — pass ``block_col`` (e.g.
-    lang, or an LSH bucket) to bound the pair space at scale."""
+    threshold). Quadratic over the whole input: the exactness baseline
+    of ``minhash_lsh_pairs``, which is the scale path."""
     # the theta-join (id_a < id_b) executes as a nested-loop join
     # whose stream side inherits the scan's partitioning — spread a
     # single-split local input or the whole quadratic verify runs on
     # one core (measured 8.1 s -> <1 s at the gate sf)
     g = plan_policy.spread(df).select(
-        F.col(id_col).alias("id"),
-        *( [F.col(block_col).alias("_blk")] if block_col else [] ),
-        ngrams(F.col(text_col), n).alias("grams"),
+        F.col(id_col).alias("id"), ngrams(F.col(text_col), n).alias("grams")
     )
-    a = g.select(
-        F.col("id").alias("id_a"),
-        *( [F.col("_blk")] if block_col else [] ),
-        F.col("grams").alias("grams_a"),
-    )
-    b = g.select(
-        F.col("id").alias("id_b"),
-        *( [F.col("_blk").alias("_blk_b")] if block_col else [] ),
-        F.col("grams").alias("grams_b"),
-    )
-    cond = F.col("id_a") < F.col("id_b")
-    joined = a.join(b, cond & (F.col("_blk") == F.col("_blk_b")) if block_col else cond)
+    a = g.select(F.col("id").alias("id_a"), F.col("grams").alias("grams_a"))
+    b = g.select(F.col("id").alias("id_b"), F.col("grams").alias("grams_b"))
+    joined = a.join(b, F.col("id_a") < F.col("id_b"))
     inter = F.size(F.array_intersect("grams_a", "grams_b"))
     union = F.size(F.array_union("grams_a", "grams_b"))
     jac = inter.cast("double") / union.cast("double")
@@ -818,6 +807,24 @@ def cosine(a: Column, b: Column) -> Column:
     return F.when(denom == 0, F.lit(-1.0)).otherwise(dot / denom)
 
 
+def _vectors(col, dim: int) -> np.ndarray:
+    """n x ``dim`` float64 matrix of a ``list<float>`` Arrow column in
+    one C-side copy — the only list->matrix decode of the numpy
+    kernels (a per-row Python conversion dominated a whole kNN stage at
+    550k x 64-dim probe rows). A NULL vector decodes to a NaN row,
+    which compares false against everything: it sets no LSH sign bit
+    (bucket 0, as ``lsh_bucket_col``'s fold gives it) and never scores
+    >= a threshold, so it is never a pair or a dropping cell-mate."""
+    if isinstance(col, pa.ChunkedArray):
+        col = col.combine_chunks()
+    flat = col.flatten().to_numpy(zero_copy_only=False).astype(np.float64, copy=False)
+    if not col.null_count:
+        return flat.reshape(-1, dim)
+    out = np.full((len(col), dim), np.nan)
+    out[col.is_valid().to_numpy(zero_copy_only=False)] = flat.reshape(-1, dim)
+    return out
+
+
 def _cosine_matrix(a: np.ndarray, b: np.ndarray) -> np.ndarray:
     """All-pairs cosine of the rows of ``a`` against the rows of ``b``
     as one float64 normalized matmul; a zero row scores -1.0 against
@@ -837,27 +844,19 @@ def embedding_cosine_pairs(
     threshold: float = 0.9,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    block_col: Optional[str] = None,
 ) -> DataFrame:
     """Embedding near-duplicate pairs by cosine >= threshold.
-    Brute-force within a block (pass an LSH bucket / label as
-    ``block_col`` at scale)."""
+    Brute force over the whole input: the exactness baseline of
+    ``embedding_lsh_pairs``, which is the scale path."""
     # same stream-side spread rationale as jaccard_pairs: the
     # interpreted cosine fold otherwise evaluates every pair on one core
     a = plan_policy.spread(df).select(
-        F.col(id_col).alias("id_a"),
-        F.col(vec_col).alias("va"),
-        *( [F.col(block_col).alias("_blk")] if block_col else [] ),
+        F.col(id_col).alias("id_a"), F.col(vec_col).alias("va")
     )
-    b = df.select(
-        F.col(id_col).alias("id_b"),
-        F.col(vec_col).alias("vb"),
-        *( [F.col(block_col).alias("_blk_b")] if block_col else [] ),
-    )
-    cond = F.col("id_a") < F.col("id_b")
-    joined = a.join(b, cond & (F.col("_blk") == F.col("_blk_b")) if block_col else cond)
+    b = df.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb"))
     return (
-        joined.withColumn("cos", cosine(F.col("va"), F.col("vb")))
+        a.join(b, F.col("id_a") < F.col("id_b"))
+        .withColumn("cos", cosine(F.col("va"), F.col("vb")))
         .filter(F.col("cos") >= threshold)
         .select("id_a", "id_b", "cos")
     )
@@ -901,7 +900,7 @@ def semdedup(
     drop a row iff some SMALLER-id cell-mate has cosine >=
     ``threshold`` — the paper's upper-triangular max-similarity rule
     with id order as the scan order. Returns ``(id_col, cell, kept)``
-    for every input row.
+    for every input row; a NULL vector is kept and drops no cell-mate.
 
     100-TB shape: one scan assigns cells (pure JVM expressions), one
     shuffle groups by cell, and the quadratic similarity work is
@@ -916,11 +915,13 @@ def semdedup(
     (checked), and the tests compare with the DuckDB oracle.
     """
     cells = _semdedup_cells(df, centroids, vec_col, id_col)
-    return _semdedup_prune(cells, threshold, df.schema[id_col].dataType, id_col)
+    return _semdedup_prune(
+        cells, threshold, df.schema[id_col].dataType, id_col, len(centroids[0])
+    )
 
 
 def _semdedup_prune(
-    cells: DataFrame, threshold: float, id_type, id_col: str
+    cells: DataFrame, threshold: float, id_type, id_col: str, dim: int
 ) -> DataFrame:
     """Shared prune stage over a prepared ``(id, vec, cell)`` frame:
     one shuffle by cell into a grouped float64 matmul applying the
@@ -932,23 +933,23 @@ def _semdedup_prune(
             T.StructField("kept", T.IntegerType()),
         ]
     )
+    arrow_schema = to_arrow_schema(out_schema)
     thr = float(threshold)
 
-    def prune(pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(pdf) == 0:  # empty Arrow batch guard
-            return pd.DataFrame({"id": [], "cell": [], "kept": []})
-        pdf = pdf.sort_values("id", kind="mergesort").reset_index(drop=True)
-        V = np.array(pdf["vec"].tolist(), dtype=np.float64)
+    def prune(cell: pa.Table) -> pa.Table:
+        cell = cell.sort_by("id")
+        V = _vectors(cell["vec"], dim)
         dropped = np.tril(_cosine_matrix(V, V) >= thr, -1).any(axis=1)
-        return pd.DataFrame(
+        return pa.table(
             {
-                "id": pdf["id"],
-                "cell": pdf["cell"].astype("int32"),
-                "kept": (~dropped).astype("int32"),
-            }
+                "id": cell["id"],
+                "cell": cell["cell"],
+                "kept": (~dropped).astype(np.int32),
+            },
+            schema=arrow_schema,
         )
 
-    out = cells.groupBy("cell").applyInPandas(prune, out_schema)
+    out = cells.groupBy("cell").applyInArrow(prune, out_schema)
     return out.select(
         F.col("id").alias(id_col), F.col("cell"), F.col("kept")
     )
@@ -974,14 +975,15 @@ def semdedup_lsh(
     Same per-cell drop rule and prune kernel as ``semdedup``; cells
     are hyperplane buckets, so the partition differs from k-means
     cells (near-dups across bucket boundaries are missed by BOTH
-    methods by design — the paper's accepted approximation). Buckets
+    methods by design — the paper's accepted approximation); a NULL
+    vector lands in bucket 0, as with ``lsh_bucket_col``. Buckets
     are less balanced than trained cells; auto-sizing targets
     ``target_cell_rows`` expected rows per bucket."""
     from grokspark.operators.similarity import (
+        _bucketed_vectors,
         _resolve_n_planes,
         _vector_dim,
         hyperplanes,
-        lsh_bucket_col,
     )
 
     n_planes = _resolve_n_planes(
@@ -991,9 +993,7 @@ def semdedup_lsh(
         # callers that know the width pass ``dim`` and skip this probe job
         dim = _vector_dim(df, vec_col)
     planes = hyperplanes(dim, n_planes, seed)
-    cells = plan_policy.spread(df, plan_policy.SPREAD_MIN_BYTES).select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).alias("vec"),
-        lsh_bucket_col(vec_col, planes).cast("int").alias("cell"),
+    cells = _bucketed_vectors(df, vec_col, id_col, planes).select(
+        "id", "vec", F.col("_bucket").cast("int").alias("cell")
     )
-    return _semdedup_prune(cells, threshold, df.schema[id_col].dataType, id_col)
+    return _semdedup_prune(cells, threshold, df.schema[id_col].dataType, id_col, dim)

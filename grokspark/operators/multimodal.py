@@ -7,12 +7,8 @@ baseline JPEG payloads get a REAL decode via the pure-Python codec in
 ``grokspark.operators.jpeg`` (huffman + IDCT; 4:4:4/4:2:2/4:2:0 +
 restart markers; progressive rejected loudly), and WAV audio gets a
 REAL decode via the stdlib ``wave`` codec (see
-``grokspark.operators.audio``). Remaining formats (compressed audio,
-non-GSV1 video) need codecs this container lacks, so they go through a
-clearly-marked deterministic fake (``fake=True``) or raise
-NotImplementedError; the distributed plumbing — schema, Arrow batch
-iteration, partition sizing, column pass-through — is identical for
-both and fully tested.
+``grokspark.operators.audio``). Remaining image formats need codecs
+this container lacks, so they raise NotImplementedError.
 
 Payload-table shape: (item_id string, modality string, payload binary,
 meta struct<mime:string, n_bytes:long>).
@@ -41,7 +37,6 @@ __all__ = [
     "decode_image",
     "extract_image_features",
     "jpeg_payload_df",
-    "payload_df_from_text",
     "png_payload_df",
     "resize_images",
     "video_payload_df",
@@ -54,54 +49,34 @@ FEATURE_SCHEMA = (
 )
 
 
-def decode_image(payload: bytes, fake: bool = False) -> dict:
+def decode_image(payload: bytes) -> dict:
     """Decode an image payload into (width, height, mean_luma,
     luma_milli).
 
     PNG and baseline-JPEG payloads (signature-detected) decode for
-    real via the pure-Python codecs (``png.py`` / ``jpeg.py``). For
-    other formats: ``fake=True`` produces deterministic
-    pseudo-features from the bytes (stable across runs/processes) so
-    the distributed plumbing stays testable end-to-end; ``fake=False``
-    raises NotImplementedError (compressed-audio etc. need codecs not
-    present in this container)."""
+    real via the pure-Python codecs (``png.py`` / ``jpeg.py``); any
+    other format raises NotImplementedError (its codec is not present
+    in this container)."""
     if payload[: len(PNG_MAGIC)] == PNG_MAGIC:
         return png_features(bytes(payload))
     if payload[: len(JPEG_MAGIC)] == JPEG_MAGIC:
         return jpeg_features(bytes(payload))
-    if not fake:
-        raise NotImplementedError(
-            "only PNG and baseline JPEG decode natively here; other "
-            "image codecs are not available in this environment — pass "
-            "fake=True for a deterministic pseudo-decode"
-        )
-    digest = hashlib.sha1(payload).digest()
-    width = 16 + digest[0] % 240
-    height = 16 + digest[1] % 240
-    # same units as the real PNG path: mean_luma in 0..255,
-    # luma_milli = 1000 * sum(per-pixel luma) — mixing fake and real
-    # rows in one aggregation must not mix scales
-    mean_luma = float(digest[2])
-    return {
-        "width": width,
-        "height": height,
-        "mean_luma": mean_luma,
-        "luma_milli": 1000 * digest[2] * width * height,
-    }
+    raise NotImplementedError(
+        "only PNG and baseline JPEG decode natively here; other "
+        "image codecs are not available in this environment"
+    )
 
 
-def extract_image_features(df: DataFrame, fake: bool = True) -> DataFrame:
+def extract_image_features(df: DataFrame) -> DataFrame:
     """mapInPandas feature extraction over binary payloads.
 
     Batches arrive as Arrow record batches (bounded by
     spark.sql.execution.arrow.maxRecordsPerBatch); each batch is decoded
-    in one Python call — the pattern a real codec plugs into. PNGs and
-    baseline JPEGs always decode for real; ``fake`` only governs
-    payloads in formats without a native codec here."""
+    in one Python call — the pattern a real codec plugs into."""
 
     def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            feats = [decode_image(p, fake=fake) for p in pdf["payload"]]
+            feats = [decode_image(p) for p in pdf["payload"]]
             out = pd.DataFrame(
                 {
                     "item_id": pdf["item_id"].values,
@@ -220,20 +195,6 @@ def sample_video_frames(df: DataFrame, stride: int = 1) -> DataFrame:
         "payload",
         F.struct(
             F.lit("image/png").alias("mime"), F.col("n_bytes").alias("n_bytes")
-        ).alias("meta"),
-    )
-
-
-def payload_df_from_text(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Derive a deterministic binary-payload table from a text table
-    (test/bench scaffolding: payload = UTF-8 bytes of the text)."""
-    return df.select(
-        F.col(id_col).cast("string").alias("item_id"),
-        F.lit("image").alias("modality"),
-        F.encode(F.col(text_col), "utf-8").alias("payload"),
-        F.struct(
-            F.lit("application/octet-stream").alias("mime"),
-            F.length(F.col(text_col)).cast("long").alias("n_bytes"),
         ).alias("meta"),
     )
 

@@ -8,10 +8,11 @@
   filter becomes real partition pruning (PartitionFilters in the scan;
   non-probed buckets are never read, plan-asserted in
   tests/test_plans.py).
-- ``knn_join``: corpus-wide top-k neighbours of every row, scored by
-  one numpy matmul per cogrouped LSH bucket.
-- ``embedding_lsh_pairs``: near-duplicate pairs over the same bucket
-  candidates, verified by exact cosine.
+- ``knn_join`` and ``embedding_lsh_pairs``: one bucket-local matmul
+  engine (``_bucket_cogroup``) serves both: every probe bucket is
+  cogrouped with its member bucket and scored by one numpy matmul;
+  ``knn_join`` keeps each row's top-k, ``embedding_lsh_pairs`` every
+  pair at or over a cosine threshold.
 """
 
 from __future__ import annotations
@@ -22,10 +23,16 @@ import random
 import warnings
 from typing import Optional, Sequence
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.functions import arrow_udf
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.window import Window
 
-from grokspark.operators.dedup import cosine, _cosine_matrix
+from grokspark.operators.dedup import _cosine_matrix, _vectors, cosine
 
 __all__ = [
     "ann_brute_force_topk",
@@ -40,11 +47,6 @@ __all__ = [
     "knn_join_blocked",
     "embedding_lsh_pairs",
 ]
-
-# dim * n_planes above which the per-plane literal-array fold would
-# bloat the plan (and its codegen) — switch to a broadcast numpy matrix
-# inside an Arrow-batched pandas UDF instead
-LSH_UDF_LITERAL_THRESHOLD = 4096
 
 # candidate joins go effectively quadratic when buckets get this full
 MAX_BUCKET_ROWS = 10_000
@@ -104,11 +106,11 @@ def _warn_if_buckets_overfull(n_rows: int, n_planes: int, op: str) -> None:
 
 
 def _vector_dim(df: DataFrame, vec_col: str) -> int:
-    """Width of ``vec_col``, read from the first row (one small job).
-    An empty frame has no first row; it gets width 1 — no vector is
+    """Width of ``vec_col``, read from the first non-NULL row (one
+    small job). A frame with no such row gets width 1 — no vector is
     ever bucketed, so the operator's plan still builds and returns its
     empty, typed result."""
-    row = df.select(F.size(F.col(vec_col))).head()
+    row = df.where(F.col(vec_col).isNotNull()).select(F.size(F.col(vec_col))).head()
     return 1 if row is None else row[0]
 
 
@@ -182,89 +184,134 @@ def hamming_probes(qb: int, n_planes: int, probe_hamming: int) -> list[int]:
     return sorted({qb ^ m for m in _probe_masks(n_planes, probe_hamming)})
 
 
-def _lsh_bucket_udf(planes: list[list[float]]):
-    """Bucket assignment via one broadcast numpy matrix product per
-    Arrow batch — the high-dim path: ``lsh_bucket_col`` embeds
-    dim x n_planes float literals in the plan, which past
-    ``LSH_UDF_LITERAL_THRESHOLD`` bloats analysis/codegen. numpy's
-    blocked summation can differ from the expression fold in the last
-    ulp, so a dot product within ~1e-12 of zero may land in a
-    different bucket than the fold path — irrelevant for recall (both
-    are valid LSH assignments); the gate corpus's sign margins are
-    ~1e-3, so both paths agree there (test-asserted)."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    mat = np.array(planes, dtype=np.float64).T  # dim x n_planes
-    weights = (np.int64(1) << np.arange(len(planes))).astype(np.int64)
-
-    def bucket(vecs):
-        if len(vecs) == 0:
-            # np.array([]) is shape (0,), not (0, dim) — `@ mat` raises
-            return pd.Series([], dtype="int64")
-        arr = np.array(vecs.tolist(), dtype=np.float64)
-        return pd.Series(((arr @ mat >= 0) * weights).sum(axis=1))
-
-    return pandas_udf(bucket, "long")
-
-
 def _bucketed_vectors(
+    df: DataFrame, vec_col: str, id_col: str, planes: list[list[float]]
+) -> DataFrame:
+    """(id, vec, _bucket) — the shared first stage of every bucket-LSH
+    batch operator: the bucket is the sign pattern of one numpy matmul
+    per Arrow batch against the planes. numpy's blocked summation can
+    differ from ``lsh_bucket_col``'s sequential fold in the last ulp,
+    so a dot product within ~1e-12 of zero may land in a different
+    bucket than the fold and ``bucket_of`` (which the materialized
+    index and the oracles use) — both are valid LSH assignments; the
+    gate corpus's sign margins are ~1e-3, so all three agree there
+    (test-asserted). A NULL vector gets bucket 0, as with the fold."""
+    mat = np.array(planes, dtype=np.float64).T  # dim x n_planes
+    weights = np.int64(1) << np.arange(len(planes), dtype=np.int64)
+    dim = len(planes[0])
+
+    @arrow_udf("long")
+    def bucket(vecs: pa.Array) -> pa.Array:
+        return pa.array(((_vectors(vecs, dim) @ mat >= 0) * weights).sum(axis=1))
+
+    return df.select(
+        F.col(id_col).alias("id"),
+        F.col(vec_col).alias("vec"),
+        bucket(F.col(vec_col)).alias("_bucket"),
+    )
+
+
+def _bucket_cogroup(
     df: DataFrame,
     vec_col: str,
     id_col: str,
-    planes: list[list[float]],
-    via_udf: Optional[bool] = None,
+    n_planes: int,
+    probe_hamming: int,
+    seed: int,
+    salt_members: int,
+    kernel,
 ) -> DataFrame:
-    """(id, vec, _bucket) — the shared first stage of every bucket-LSH
-    batch operator. ``via_udf=None`` auto-selects: the JVM literal fold
-    below ``LSH_UDF_LITERAL_THRESHOLD`` plan literals (bit-reproducible
-    vs driver-side ``bucket_of``), the broadcast-matrix pandas UDF
-    above it."""
-    if via_udf is None:
-        via_udf = len(planes) * len(planes[0]) > LSH_UDF_LITERAL_THRESHOLD
-    base = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec"))
-    if via_udf:
-        return base.withColumn("_bucket", _lsh_bucket_udf(planes)(F.col("vec")))
-    return base.withColumn("_bucket", lsh_bucket_col("vec", planes))
+    """The bucket-local matmul engine under ``knn_join`` and
+    ``embedding_lsh_pairs``: ``(qid, nid, score)`` for the pairs that
+    ``kernel(qids, nids, sims)`` keeps, where ``sims`` is the cosine
+    matrix of one cogroup's queries against its members and the kernel
+    returns (query, member) index arrays into it. The candidates of a
+    query are the rows whose sign-LSH bucket is within
+    ``probe_hamming`` bit flips of its own, and the data moves
+    bucket-wise:
 
+    - each QUERY vector ships once per probe (``probes x width`` per
+      query, not per candidate), via a cogroup on (probe bucket ==
+      member bucket);
+    - each MEMBER vector ships exactly once;
+    - a NULL vector is neither, so it is never a candidate.
 
-def _bucket_candidate_pairs(bucketed: DataFrame, masks: list[int]) -> DataFrame:
-    """Distinct candidate id pairs (qid < nid) whose buckets differ by
-    one of the probe ``masks`` — ONE bucket equi-join over (id, probe)
-    rows; the vectors never ride the xmasks explode."""
+    Each (query, member) pair lands in exactly one group — the
+    member's bucket, probed by exactly one XOR mask — so no dedup pass
+    is needed. ``salt_members`` splits each bucket's members into S
+    slices (hash of the member id) and replicates the probe side xS;
+    a pair still lands in exactly one (bucket, slice) group. The
+    output ids keep ``id_col``'s type."""
+    planes = hyperplanes(_vector_dim(df, vec_col), n_planes, seed)
+    dim = len(planes[0])
+    # bucket via the numpy matrix UDF: the scores are blocked matmuls
+    # anyway, and the interpreted per-row fold costs n_planes x dim
+    # lambda evals; materialized once for the two references below
+    bucketed = _bucketed_vectors(
+        df.where(F.col(vec_col).isNotNull()), vec_col, id_col, planes
+    ).localCheckpoint()
+    masks = _probe_masks(n_planes, probe_hamming)
     probes = (
-        bucketed.select("id", "_bucket")
-        .withColumn("_mask", F.explode(F.array(*[F.lit(m) for m in masks])))
+        bucketed.withColumn("_mask", F.explode(F.array(*[F.lit(m) for m in masks])))
         .select(
             F.col("id").alias("qid"),
+            F.col("vec").alias("qv"),
             F.col("_bucket").bitwiseXOR(F.col("_mask")).alias("_probe"),
         )
     )
-    right = bucketed.select(F.col("id").alias("nid"), "_bucket")
-    return (
-        probes.join(
-            right,
-            (probes["_probe"] == right["_bucket"]) & (F.col("qid") < F.col("nid")),
-        )
-        .select("qid", "nid")
-        .dropDuplicates()
+    members = bucketed.select(
+        F.col("id").alias("nid"), F.col("vec").alias("nv"), "_bucket"
     )
+    if salt_members > 1:
+        members = members.withColumn(
+            "_salt", F.pmod(F.xxhash64("nid"), F.lit(salt_members)).cast("int")
+        )
+        probes = probes.withColumn(
+            "_salt",
+            F.explode(F.array(*[F.lit(s) for s in range(salt_members)])),
+        )
+        group_l, group_r = ["_probe", "_salt"], ["_bucket", "_salt"]
+    else:
+        group_l, group_r = ["_probe"], ["_bucket"]
 
+    id_type = df.schema[id_col].dataType
+    out_type = T.StructType(
+        [
+            T.StructField("qid", id_type),
+            T.StructField("nid", id_type),
+            T.StructField("score", T.DoubleType()),
+        ]
+    )
+    out_schema = to_arrow_schema(out_type)
 
-def _score_candidates(cand: DataFrame, bucketed: DataFrame) -> DataFrame:
-    """Join vectors back narrowly for both pair sides and score cosine
-    — (qid, nid, score)."""
+    def score(left: pa.Table, right: pa.Table) -> pa.Table:
+        if not left.num_rows or not right.num_rows:
+            return out_schema.empty_table()
+        # members in nid order, so a kernel's STABLE sort over a row
+        # inherits the nid-ascending tie-break the callers' global
+        # order uses
+        nids = right["nid"].to_numpy()
+        order = np.argsort(nids, kind="stable")
+        nids = nids[order]
+        qids = left["qid"].to_numpy()
+        sims = _cosine_matrix(
+            _vectors(left["qv"], dim), _vectors(right["nv"], dim)[order]
+        )
+        qi, ni = kernel(qids, nids, sims)
+        return pa.table(
+            {"qid": qids[qi], "nid": nids[ni], "score": sims[qi, ni]},
+            schema=out_schema,
+        )
+
+    # explicit width: AQE coalesces post-shuffle partitions by bytes,
+    # which on a small corpus runs every bucket's kernel call in one
+    # task (measured on 4 vCPUs at sf0.01: 2.9 -> 2.3 s per knn_join)
+    n_part = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     return (
-        cand.join(
-            bucketed.select(F.col("id").alias("qid"), F.col("vec").alias("qv")),
-            "qid",
-        )
-        .join(
-            bucketed.select(F.col("id").alias("nid"), F.col("vec").alias("nv")),
-            "nid",
-        )
-        .withColumn("score", cosine(F.col("qv"), F.col("nv")))
+        probes.repartition(n_part, *group_l)
+        .groupBy(*group_l)
+        .cogroup(members.repartition(n_part, *group_r).groupBy(*group_r))
+        .applyInArrow(score, out_type)
     )
 
 
@@ -345,29 +392,20 @@ def knn_join(
     bucket is within ``probe_hamming`` bit flips of the row's own —
     the same rule as filtering all pairs on hamming(bucket_a,
     bucket_b) <= h, without the all-pairs plan. Cosine follows
-    ``cosine``'s rule: a zero vector scores -1.0 against every row.
+    ``cosine``'s rule: a zero vector scores -1.0 against every row; a
+    NULL vector has no neighbours and is nobody's neighbour.
 
-    Scoring is BUCKET-LOCAL and BLOCKED; the data moves bucket-wise:
-
-    - each QUERY vector ships once per probe (``probes x width`` per
-      query, not per candidate), via a cogroup on (probe bucket ==
-      member bucket);
-    - each MEMBER vector ships exactly once;
-    - scoring inside the cogrouped Arrow kernel is one numpy
-      normalized matmul per bucket, emitting only each query's
-      bucket-local top-k;
-    - the global top-k window then sees <= probes x k rows per query.
-
-    A verify join that ships both vectors onto every candidate pair
-    moves ``candidates x 2 x vector_width`` bytes instead — at 50k x
-    64-dim that was ~27 GB through the join, and its per-row cost grew
-    6x superlinearly at 10x corpus (BENCH/SCALE_PROBES.md). Each
-    (query, member) pair lands in exactly one group — the member's
-    bucket, probed by exactly one XOR mask — so no dedup pass is
-    needed. The matmul sums in a different order than DuckDB's
-    sequential fold, so scores can differ from the oracle's in the
-    last ulp; rank-adjacent score gaps on the gate corpus are far
-    wider (test-asserted).
+    Scoring is BUCKET-LOCAL and BLOCKED (``_bucket_cogroup``): one
+    numpy normalized matmul per cogrouped bucket emits only each
+    query's bucket-local top-k, so the global top-k window then sees
+    <= probes x k rows per query. A verify join that ships both
+    vectors onto every candidate pair moves ``candidates x 2 x
+    vector_width`` bytes instead — at 50k x 64-dim that was ~27 GB
+    through the join, and its per-row cost grew 6x superlinearly at
+    10x corpus (BENCH/SCALE_PROBES.md). The matmul sums in a different
+    order than DuckDB's sequential fold, so scores can differ from the
+    oracle's in the last ulp; rank-adjacent score gaps on the gate
+    corpus are far wider (test-asserted).
 
     ``n_planes`` must GROW with corpus size — the candidate work is
     quadratic within a bucket, so it's the expected bucket population
@@ -379,106 +417,35 @@ def knn_join(
     ``salt_members`` is the skew control: real embedding distributions
     can pile into few buckets (measured: a degenerate corpus put all
     50k vectors into 20 of 1024 buckets and one straggler task carried
-    the stage). Salting splits each bucket's MEMBERS into S slices
-    (hash of the member id) and replicates the probe side xS; each
-    pair still lands in exactly one (bucket, slice) group, per-slice
-    top-k stays correct because top-k merges (the global window sees
-    every slice's winners). Neighbor sets and ranks are IDENTICAL for
-    any S (ties break on nid via the stable sort below); scores can
-    move by a BLAS-blocking ulp since the matmul shape changes. Cost:
-    probe-side shuffle xS; use a few slices when bucket histograms are
-    known-skewed."""
-    import numpy as np
-    import pyarrow as pa
-
+    the stage). Salting splits each bucket's MEMBERS into S slices;
+    per-slice top-k stays correct because top-k merges (the global
+    window sees every slice's winners). Neighbor sets and ranks are
+    IDENTICAL for any S (ties break on nid via the stable sort below);
+    scores can move by a BLAS-blocking ulp since the matmul shape
+    changes. Cost: probe-side shuffle xS; use a few slices when bucket
+    histograms are known-skewed."""
     n_planes = _resolve_n_planes(
         df, n_planes, "knn_join", target_bucket_rows=max(64, 16 * k)
     )
-    planes = hyperplanes(_vector_dim(df, vec_col), n_planes, seed)
-    # bucket via the numpy matrix UDF regardless of literal count: the
-    # scores are blocked matmuls anyway, and the interpreted per-row
-    # fold costs n_planes x dim lambda evals; materialized once for
-    # the two references below
-    bucketed = _bucketed_vectors(
-        df, vec_col, id_col, planes, via_udf=True
-    ).localCheckpoint()
-    masks = _probe_masks(n_planes, probe_hamming)
-    probes = (
-        bucketed.withColumn("_mask", F.explode(F.array(*[F.lit(m) for m in masks])))
-        .select(
-            F.col("id").alias("qid"),
-            F.col("vec").alias("qv"),
-            F.col("_bucket").bitwiseXOR(F.col("_mask")).alias("_probe"),
-        )
-    )
-    members = bucketed.select(
-        F.col("id").alias("nid"), F.col("vec").alias("nv"), "_bucket"
-    )
-    if salt_members > 1:
-        members = members.withColumn(
-            "_salt", F.pmod(F.xxhash64("nid"), F.lit(salt_members)).cast("int")
-        )
-        probes = probes.withColumn(
-            "_salt",
-            F.explode(F.array(*[F.lit(s) for s in range(salt_members)])),
-        )
-        group_l, group_r = ["_probe", "_salt"], ["_bucket", "_salt"]
-    else:
-        group_l, group_r = ["_probe"], ["_bucket"]
 
-    out_schema = pa.schema(
-        [("qid", pa.int64()), ("nid", pa.int64()), ("score", pa.float64())]
-    )
-
-    def vectors(col: pa.ChunkedArray) -> np.ndarray:
-        # one C-side copy of a list<float> column into an n x dim
-        # matrix — no per-row Python object (a per-row conversion
-        # dominated the whole stage at 550k x 64-dim probe rows)
-        flat = col.combine_chunks().flatten().to_numpy(zero_copy_only=False)
-        return flat.reshape(len(col), -1).astype(np.float64, copy=False)
-
-    def score(left: pa.Table, right: pa.Table) -> pa.Table:
-        if not left.num_rows or not right.num_rows:
-            return out_schema.empty_table()
-        # members in nid order so the STABLE score argsort below
-        # inherits nid-ascending tie-break — the same (score desc, nid
-        # asc) order the global window uses; an order-oblivious
-        # argpartition would keep an arbitrary member of a score tie
-        # and make results depend on group slicing (caught by the
-        # salting-invariance test: the testdata corpus has duplicate
-        # embeddings, i.e. exact ties)
-        nids = right["nid"].to_numpy()
-        order = np.argsort(nids, kind="stable")
-        nids = nids[order]
-        qids = left["qid"].to_numpy()
-        sims = _cosine_matrix(vectors(left["qv"]), vectors(right["nv"])[order])
-        # self-pairs (a query probing its own bucket) are dropped here
+    def top_k(qids, nids, sims):
+        # self-pairs (a query probing its own bucket) are dropped here;
+        # the STABLE argsort over nid-ordered members keeps the
+        # (score desc, nid asc) order of the global window — an
+        # order-oblivious argpartition would keep an arbitrary member
+        # of a score tie and make results depend on group slicing
+        # (caught by the salting-invariance test: the testdata corpus
+        # has duplicate embeddings, i.e. exact ties)
         sims[qids[:, None] == nids[None, :]] = -np.inf
-        kk = min(k, sims.shape[1])
-        top = np.argsort(-sims, axis=1, kind="stable")[:, :kk]
-        rows_s = np.take_along_axis(sims, top, axis=1).ravel()
-        keep = rows_s > -np.inf
-        return pa.table(
-            {
-                "qid": np.repeat(qids, kk)[keep],
-                "nid": nids[top.ravel()][keep],
-                "score": rows_s[keep],
-            },
-            schema=out_schema,
-        )
+        top = np.argsort(-sims, axis=1, kind="stable")[:, :k]
+        qi = np.repeat(np.arange(len(qids)), top.shape[1])
+        ni = top.ravel()
+        keep = sims[qi, ni] > -np.inf
+        return qi[keep], ni[keep]
 
-    # explicit width: AQE coalesces post-shuffle partitions by bytes,
-    # which on a small corpus runs every bucket's kernel call in one
-    # task (measured on 4 vCPUs at sf0.01: 2.9 -> 2.3 s per knn_join)
-    n_part = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    scored = (
-        probes.repartition(n_part, *group_l)
-        .groupBy(*group_l)
-        .cogroup(members.repartition(n_part, *group_r).groupBy(*group_r))
-        .applyInArrow(score, "qid long, nid long, score double")
+    scored = _bucket_cogroup(
+        df, vec_col, id_col, n_planes, probe_hamming, seed, salt_members, top_k
     )
-    from pyspark.sql.window import Window
-
     w = Window.partitionBy("qid").orderBy(F.col("score").desc(), F.col("nid").asc())
     return (
         scored.withColumn("rank", F.row_number().over(w))
@@ -507,21 +474,31 @@ def embedding_lsh_pairs(
 ) -> DataFrame:
     """Embedding near-duplicate pairs at scale: the LSH twin of
     ``grokspark.operators.dedup.embedding_cosine_pairs`` (which is the
-    quadratic exactness baseline). Candidates are pairs whose sign-LSH
-    buckets differ in <= ``probe_hamming`` bits — produced by ONE
-    bucket equi-join over XOR-mask probes carrying ids only — then
-    verified by exact cosine >= threshold (precision is exact; recall
-    is governed by n_planes/probe_hamming and measured against the
-    baseline in tests). Deterministic: the candidate rule itself is
-    recomputable (the driver oracle mirrors it in SQL). ``n_planes``
-    sizing follows the same rule as ``knn_join`` (None = auto via one
-    count(); explicit values are trusted without an extra scan)."""
+    quadratic exactness baseline). ``(id_a, id_b, cos)`` with id_a <
+    id_b for every candidate pair at cosine >= ``threshold``, on the
+    same engine as ``knn_join`` (``_bucket_cogroup``): candidates are
+    pairs whose sign-LSH buckets differ in <= ``probe_hamming`` bits,
+    and one numpy matmul per cogrouped bucket scores them. Precision
+    is exact; recall is governed by n_planes/probe_hamming (at
+    probe_hamming = n_planes every pair is a candidate, test-asserted
+    equal to the baseline). The matmul sums in a different order than
+    a sequential fold, so a cosine within an ulp of the threshold
+    could flip; the gate corpus's threshold margins are >= 1e-3
+    (test-asserted). The candidate rule is recomputable: the driver
+    oracle mirrors it in SQL. A NULL vector is never in a pair.
+    ``n_planes`` sizing follows the same rule as ``knn_join`` (None =
+    auto via one count(); explicit values are trusted without an extra
+    scan)."""
     n_planes = _resolve_n_planes(df, n_planes, "embedding_lsh_pairs")
-    planes = hyperplanes(_vector_dim(df, vec_col), n_planes, seed)
-    bucketed = _bucketed_vectors(df, vec_col, id_col, planes)
-    cand = _bucket_candidate_pairs(bucketed, _probe_masks(n_planes, probe_hamming))
-    scored = _score_candidates(cand, bucketed)
-    return scored.filter(F.col("score") >= threshold).select(
+    thr = float(threshold)
+
+    def over_threshold(qids, nids, sims):
+        return np.nonzero((qids[:, None] < nids[None, :]) & (sims >= thr))
+
+    scored = _bucket_cogroup(
+        df, vec_col, id_col, n_planes, probe_hamming, seed, 1, over_threshold
+    )
+    return scored.select(
         F.col("qid").alias("id_a"),
         F.col("nid").alias("id_b"),
         F.col("score").alias("cos"),

@@ -154,9 +154,7 @@ def test_jpeg_decode_distributed_matches_pure_python(spark):
     df = spark.createDataFrame(rows, "doc_id string, text string")
     got = {
         r["item_id"]: r
-        for r in extract_image_features(
-            jpeg_payload_df(df), fake=False
-        ).collect()
+        for r in extract_image_features(jpeg_payload_df(df)).collect()
     }
     assert len(got) == 40
     for doc_id, text in rows:

@@ -136,23 +136,23 @@ def test_multimodal_stub_and_plumbing(spark, docs):
     from grokspark.operators.multimodal import (
         decode_image,
         extract_image_features,
-        payload_df_from_text,
+        png_payload_df,
     )
 
     with pytest.raises(NotImplementedError):
-        decode_image(b"\x00\x01", fake=False)
+        decode_image(b"\x00\x01")
 
-    payloads = payload_df_from_text(docs.limit(50))
-    feats = extract_image_features(payloads, fake=True)
+    payloads = png_payload_df(docs.limit(50))
+    feats = extract_image_features(payloads)
     rows = feats.collect()
     assert len(rows) == 50
     for r in rows:
-        assert 16 <= r["width"] <= 255 and 16 <= r["height"] <= 255
-        assert 0.0 <= r["mean_luma"] <= 255.0  # same scale as real PNG decode
-        assert r["luma_milli"] == int(r["mean_luma"]) * 1000 * r["width"] * r["height"]
+        assert 4 <= r["width"] <= 11 and 4 <= r["height"] <= 11  # fake_png dims
+        assert 0.0 <= r["mean_luma"] <= 255.0
+        assert 0 <= r["luma_milli"] <= 255_000 * r["width"] * r["height"]
         assert len(r["sha1"]) == 40
     # deterministic across runs
-    again = {r["item_id"]: r["sha1"] for r in extract_image_features(payloads, fake=True).collect()}
+    again = {r["item_id"]: r["sha1"] for r in extract_image_features(payloads).collect()}
     assert all(again[r["item_id"]] == r["sha1"] for r in rows)
 
 
@@ -248,7 +248,7 @@ def test_png_decode_distributed_matches_pure_python(spark):
     df = spark.createDataFrame(rows, "doc_id string, text string")
     feats = {
         r["item_id"]: r
-        for r in extract_image_features(png_payload_df(df), fake=False).collect()
+        for r in extract_image_features(png_payload_df(df)).collect()
     }
     assert len(feats) == 80
     for doc_id, text in rows:
@@ -350,6 +350,85 @@ def test_embedding_lsh_pairs_precision_and_semantics(spark, emb):
     sample.unpersist()
 
 
+@pytest.mark.parametrize("id_type", ["bigint", "string"])
+def test_embedding_lsh_pairs_full_probe_equals_exact_baseline(spark, emb, id_type):
+    """At probe_hamming = n_planes every pair is a candidate, so the
+    matmul engine returns exactly the pairs of the JVM-fold baseline
+    ``embedding_cosine_pairs``, scores within summation-order ulps —
+    for long and string ids alike, and in the input's id type."""
+    from grokspark.operators import embedding_cosine_pairs, embedding_lsh_pairs
+
+    sample = (
+        emb.limit(150)
+        .select(F.col("vec_id").cast(id_type).alias("vec_id"), "embedding")
+        .localCheckpoint()
+    )
+    exact = {
+        (r["id_a"], r["id_b"]): r["cos"]
+        for r in embedding_cosine_pairs(sample, threshold=0.3).collect()
+    }
+    # 0.3, not the gate's 0.5: no pair of this sample reaches 0.5
+    pairs = embedding_lsh_pairs(sample, threshold=0.3, n_planes=4, probe_hamming=4)
+    got = {(r["id_a"], r["id_b"]): r["cos"] for r in pairs.collect()}
+    assert exact and got.keys() == exact.keys()
+    for pair, cos in got.items():
+        assert abs(cos - exact[pair]) < 1e-9, pair
+    assert pairs.schema["id_a"].dataType == sample.schema["vec_id"].dataType
+
+
+def test_embedding_lsh_pairs_threshold_margins(spark, emb):
+    """dedup_embedding_lsh's matmul verify gives the DuckDB oracle's
+    pair set only while no candidate's cosine sits within summation-
+    order ulps of the threshold: pin the minimum |cos - threshold| over
+    the gate query's candidates (threshold 0.5, 8 planes, hamming 2)
+    on the testdata."""
+    from grokspark.operators import embedding_lsh_pairs
+
+    cand = embedding_lsh_pairs(
+        emb, threshold=float("-inf"), n_planes=8, probe_hamming=2, seed=42
+    )
+    margin = cand.agg(F.min(F.abs(F.col("cos") - 0.5))).head()[0]
+    assert margin > 1e-9, margin
+
+
+def test_embedding_operators_ignore_null_vectors(spark, emb):
+    """A NULL embedding is legal input. It is never a neighbour, a
+    pair or a dropping cell-mate: ``knn_join`` and
+    ``embedding_lsh_pairs`` return exactly the rows they return
+    without it, and SemDeDup keeps it (``semdedup_lsh`` in bucket 0,
+    the fold's bucket of a NULL). The NULL row comes first, so the
+    width probe must skip it, and has the smallest id, so it would be
+    the dropping mate of its whole cell."""
+    from grokspark.operators import embedding_lsh_pairs, knn_join, semdedup, semdedup_lsh
+    from grokspark.operators.ivf import seeded_centroids
+
+    sample = emb.select("vec_id", "embedding").limit(120).localCheckpoint()
+    null_row = spark.createDataFrame([(-1, None)], sample.schema)
+    with_null = null_row.union(sample).localCheckpoint()
+
+    def rows(op, frame):
+        return sorted(tuple(r) for r in op(frame).collect())
+
+    def knn(frame):
+        return knn_join(frame, k=3, n_planes=8, probe_hamming=1)
+
+    def pairs(frame):
+        return embedding_lsh_pairs(frame, threshold=0.3, n_planes=4, probe_hamming=1)
+
+    def lsh_cells(frame):
+        return semdedup_lsh(frame, n_planes=4, threshold=0.3)
+
+    def centroid_cells(frame):
+        return semdedup(frame, seeded_centroids(64, 16, seed=42), threshold=0.3)
+
+    assert rows(knn, with_null) == rows(knn, sample)
+    assert rows(pairs, with_null) == rows(pairs, sample)
+    assert rows(lsh_cells, with_null) == sorted(rows(lsh_cells, sample) + [(-1, 0, 1)])
+    got = rows(centroid_cells, with_null)
+    assert [r for r in got if r[0] != -1] == rows(centroid_cells, sample)
+    assert [r[2] for r in got if r[0] == -1] == [1]
+
+
 def test_duplicate_clusters_raises_on_non_convergence(spark):
     from grokspark.operators import duplicate_clusters
 
@@ -390,21 +469,27 @@ def test_n_planes_guard_and_autosizing(spark, emb):
 
 
 def test_lsh_bucket_udf_path_matches_fold(spark, emb):
-    """The high-dim broadcast-matrix UDF bucket must agree with the
-    plan-literal fold on the testdata embeddings (sign margins ~1e-3,
-    far beyond any summation-order ulp difference)."""
-    from grokspark.operators.similarity import _bucketed_vectors, hyperplanes
+    """The Arrow matmul bucket the batch operators use agrees with the
+    plan-literal fold (``lsh_bucket_col``) and the driver-side
+    ``bucket_of`` that the materialized index and the oracles use, on
+    the testdata embeddings (sign margins ~1e-3, far beyond any
+    summation-order ulp difference)."""
+    from grokspark.operators.similarity import (
+        _bucketed_vectors,
+        bucket_of,
+        hyperplanes,
+        lsh_bucket_col,
+    )
 
     planes = hyperplanes(64, 8, seed=42)
-    fold = {
-        r["id"]: r["_bucket"]
-        for r in _bucketed_vectors(emb, "embedding", "vec_id", planes, via_udf=False).collect()
-    }
-    udf = {
-        r["id"]: r["_bucket"]
-        for r in _bucketed_vectors(emb, "embedding", "vec_id", planes, via_udf=True).collect()
-    }
-    assert fold == udf and len(fold) == emb.count()
+    rows = (
+        _bucketed_vectors(emb, "embedding", "vec_id", planes)
+        .withColumn("fold", lsh_bucket_col("vec", planes))
+        .collect()
+    )
+    assert len(rows) == emb.count()
+    for r in rows:
+        assert r["_bucket"] == r["fold"] == bucket_of(r["vec"], planes), r["id"]
 
 
 def test_knn_rank_margins_survive_engine_fp_differences(spark, emb):

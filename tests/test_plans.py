@@ -388,49 +388,39 @@ def _executed_scan_metrics(df) -> list[dict]:
     return out
 
 
-def test_similarity_bucket_exchanges_never_carry_vectors(spark, sf_dir):
-    """embedding_lsh_pairs' candidate stage shuffles on the LSH bucket
-    with the 64-float embedding arrays pruned out (they rejoin narrowly
-    for scoring only). knn_join ships vectors by design, but only
-    through its two cogroup sides — query vectors hash-partitioned on
-    ``_probe``, member vectors on ``_bucket`` — and the post-scoring
-    window exchange carries (qid, nid, score) alone: joining vectors
-    back after scoring would add a vector-carrying exchange."""
-    import re
-
-    from grokspark.operators import embedding_lsh_pairs, knn_join
+@pytest.mark.parametrize("op", ["knn_join", "embedding_lsh_pairs"])
+def test_similarity_vectors_ship_only_through_the_cogroup(spark, sf_dir, op):
+    """Both bucket-LSH operators run on one engine that ships vectors
+    by design, but only through its two cogroup sides — query vectors
+    hash-partitioned on ``_probe``, member vectors on ``_bucket`` — and
+    any post-scoring exchange (knn_join's window) carries (qid, nid,
+    score) alone: joining vectors back after scoring would add a
+    vector-carrying exchange."""
+    from grokspark import operators
 
     def exchanges(df):
         blocks = re.split(r"\n(?=\(\d+\) )", explain_str(df, "formatted"))
         return [
-            (b, " ".join(l for l in b.splitlines() if l.startswith(("Input", "Arguments"))))
+            " ".join(l for l in b.splitlines() if l.startswith(("Input", "Arguments")))
             for b in blocks
             if "Exchange" in b.splitlines()[0]
         ]
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    pairs = embedding_lsh_pairs(emb, threshold=0.5, probe_hamming=2)
-    bucket_exchanges = [
-        (b, d) for b, d in exchanges(pairs) if "_probe" in b or "_bucket" in b
-    ]
-    assert bucket_exchanges, "no bucket exchange found — plan shape changed"
-    for b, detail in bucket_exchanges:
-        assert "embedding#" not in detail and "vec#" not in detail, b
 
     def partition_key(detail):
         m = re.search(r"hashpartitioning\((\w+)#", detail)
         return m.group(1) if m else detail
 
-    knn = exchanges(knn_join(emb, k=3, probe_hamming=1))
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    args = {"k": 3} if op == "knn_join" else {"threshold": 0.5}
+    details = exchanges(getattr(operators, op)(emb, probe_hamming=1, **args))
     vector_keys = sorted(
-        partition_key(detail)
-        for _, detail in knn
-        if re.search(r"\b(qv|nv|vec|embedding)#", detail)
+        partition_key(d) for d in details if re.search(r"\b(qv|nv|vec|embedding)#", d)
     )
-    assert vector_keys == ["_bucket", "_probe"], knn
-    window = [detail for _, detail in knn if "hashpartitioning(qid#" in detail]
-    assert window, "no post-scoring window exchange — plan shape changed"
-    assert all(re.search(r"\b(qv|nv|vec)#", d) is None for d in window), window
+    assert vector_keys == ["_bucket", "_probe"], details
+    if op == "knn_join":
+        window = [d for d in details if "hashpartitioning(qid#" in d]
+        assert window, "no post-scoring window exchange — plan shape changed"
+        assert all(re.search(r"\b(qv|nv|vec)#", d) is None for d in window), window
 
 
 def test_winnow_pair_exchanges_never_carry_text(spark, sf_dir):
