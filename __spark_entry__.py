@@ -1570,8 +1570,8 @@ def q_corpus_prepare(spark: SparkSession, sf_dir: str) -> DataFrame:
     # scales ~quadratically with it, so the build this query actually
     # pays (the bench clears the shared cache per sample, and the
     # sweep's sharing saved less than the oversized build cost) drops
-    # ~2x. The artifact-reuse pattern itself stays available via the
-    # precomputed_pairs parameter and the three dedup gate queries.
+    # ~2x. The artifact-reuse pattern stays with the dedup gate queries:
+    # q_dedup_corpus passes _doc_pairs as dedup_corpus's precomputed_pairs.
     packed = prepare_corpus(
         docs,
         max_len=CORPUS_MAX_LEN,

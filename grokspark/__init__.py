@@ -11,7 +11,6 @@ DataFrame code.
 Layers:
 - ``grokspark.pattern_parser`` — %{name:alias:extract=defn} lexer
 - ``grokspark.compiler``       — pattern registry + grok→regex compiler
-- ``grokspark.matching``       — pure-Python single-row matcher (parity oracle)
 - ``grokspark.udfs``           — Arrow-native parse kernels
 - ``grokspark.pipeline``       — the north-rule parse→enrich→route→aggregate job
 - ``grokspark.datagen``        — deterministic synthetic sequences/routes tables

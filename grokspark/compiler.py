@@ -30,7 +30,6 @@ Semantics preserved from the reference (each covered by tests):
 
 from __future__ import annotations
 
-import os
 import re as _sre
 from dataclasses import dataclass, field
 from typing import Iterable, Iterator, Optional
@@ -112,9 +111,7 @@ _ENGINE_CACHE: dict[tuple, "_EnginePattern"] = {}
 # set or (if translated to ASCII ranges) with silently-narrower
 # matches on non-ASCII text — so any POSIX class inside a bracket
 # expression forces the regex-engine fallback (only 1 of the 320
-# builtins uses one). Override with GROKSPARK_ENGINE=regex|sre|auto
-# (default auto).
-_ENGINE_PREF = os.environ.get("GROKSPARK_ENGINE", "auto")
+# builtins uses one).
 
 
 class _NotSreExpressible(Exception):
@@ -195,13 +192,13 @@ class _EnginePattern:
     regex_src: str = ""  # compiler IR source (reference dialect)
     # the reference engine pattern (regex module), compiled on demand
     # when a per-call timeout is requested (sre has no timeout support)
-    ref_pattern: object = None
+    ref_pattern: object = field(default=None, init=False)
 
     def timeout_pattern(self):
         """The engine pattern whose ``search`` accepts ``timeout=``.
         Always the ``regex``-module pattern — sre has no timeout support
-        — compiled lazily here when the fast path (or a forced
-        GROKSPARK_ENGINE=sre) skipped it at engine-compile time."""
+        — compiled lazily here when the sre fast path skipped it at
+        engine-compile time."""
         if self.flavor == "regex":
             return self.pattern
         if self.ref_pattern is None:
@@ -211,24 +208,21 @@ class _EnginePattern:
 
 def _compile_preferred(regex_src: str):
     """Compile on the fastest engine whose semantics hold; returns
-    (compiled, flavor, ref_or_None). The reference engine pattern is
-    never compiled eagerly — ``timeout_pattern()`` compiles it lazily
-    on the first timeout-bounded call (most workloads never pay for
-    both engines)."""
-    if _ENGINE_PREF != "regex":
-        try:
-            import warnings
+    (compiled, flavor): sre when the pattern is expressible in it,
+    otherwise ``regex``. The reference engine pattern is never compiled
+    eagerly — ``timeout_pattern()`` compiles it lazily on the first
+    timeout-bounded call (most workloads never pay for both engines)."""
+    try:
+        import warnings
 
-            with warnings.catch_warnings():
-                # literal '[' inside classes triggers a benign
-                # "possible nested set" FutureWarning
-                warnings.simplefilter("ignore", FutureWarning)
-                sre_pat = _sre.compile(_to_sre_source(regex_src))
-        except Exception:  # noqa: BLE001 — dialect not sre-expressible
-            sre_pat = None
-        if sre_pat is not None:
-            return sre_pat, "sre", None
-    return _regex.compile(regex_src), "regex", None
+        with warnings.catch_warnings():
+            # literal '[' inside classes triggers a benign
+            # "possible nested set" FutureWarning
+            warnings.simplefilter("ignore", FutureWarning)
+            return _sre.compile(_to_sre_source(regex_src)), "sre"
+    except Exception:  # noqa: BLE001 — dialect not sre-expressible
+        pass
+    return _regex.compile(regex_src), "regex"
 
 
 def _engine_compile(regex_src: str, aliases: dict[str, str]) -> _EnginePattern:
@@ -237,7 +231,7 @@ def _engine_compile(regex_src: str, aliases: dict[str, str]) -> _EnginePattern:
     if cached is not None:
         return cached
     try:
-        pat, flavor, ref = _compile_preferred(regex_src)
+        pat, flavor = _compile_preferred(regex_src)
     except Exception as e:  # noqa: BLE001 — regex raises plain error types
         raise RegexCompilationFailed(f"{e}:\n{regex_src}") from e
     names: dict[str, int] = {}
@@ -254,7 +248,6 @@ def _engine_compile(regex_src: str, aliases: dict[str, str]) -> _EnginePattern:
         sorted_names=sorted_names,
         indices=tuple(names[k] for k in sorted_names),
         regex_src=regex_src,
-        ref_pattern=ref,
     )
     _ENGINE_CACHE[cache_key] = engine
     return engine

@@ -3,10 +3,6 @@ pipeline actually materializes, chaining the individually-verified
 operators:
 
     quality filter  (textops.quality_scores keep rule)
- -> repetition filter (optional: textops.repetition_scores keep rule —
-                     the Gopher-style second quality gate)
- -> decontamination (optional: decontam.decontaminate against a
-                     benchmark table — contaminated docs dropped)
  -> near-dup dedup  (dedup.dedup_corpus: exact collapse + MinHash-LSH
                      + connected components; keep one rep per cluster)
  -> hash split      (sampling.hash_split train/val/test)
@@ -77,11 +73,6 @@ def prepare_corpus(
     bands: int = 64,
     id_col: str = "doc_id",
     text_col: str = "text",
-    line_clean: bool = False,
-    repetition_filter: bool = False,
-    bench_df: Optional[DataFrame] = None,
-    decontam_n: int = 3,
-    precomputed_pairs: Optional[DataFrame] = None,
 ) -> DataFrame:
     """Quality-filter, dedup, split, BPE-tokenize and pack a raw
     ``(id, text)`` corpus into training rows (module doc has the full
@@ -90,59 +81,27 @@ def prepare_corpus(
     desc, word asc) — at corpus scale the distinct-word tail is
     Heaps-bounded but not driver-bounded without it.
 
-    ``line_clean=True`` runs C4-style line-level cleaning FIRST
-    (``clean.c4_clean``): non-kept documents drop and every surviving
-    document's text is replaced by its cleaned lines before any other
-    stage sees it (map-only, fuses into the quality scan).
-    ``repetition_filter=True`` adds the Gopher-style repetition keep
-    rule after the base quality gate (both are map-only, so they fuse
-    into one scan). ``bench_df`` drops every document sharing a word
-    ``decontam_n``-gram with the benchmark table BEFORE dedup (the
-    cheap filters shrink what LSH chews). Domain-mixture downsampling
-    (``sampling.mixture_sample``) composes upstream of this job — the
-    packed output drops the group column, so mix first.
-
-    ``precomputed_pairs`` forwards to ``dedup_corpus``: a sibling
-    job's exact-recall pair graph over a SUPERSET of this corpus (same
-    threshold/n recall contract) skips the whole LSH stage — the
-    cross-job artifact-reuse pattern a real pipeline runs (compute the
-    pair graph once, share it between the dedup report and corpus
-    prep)."""
-    from grokspark.operators.textops import repetition_scores
-
+    Other document filters compose upstream of this job: C4 line
+    cleaning (``clean.c4_clean(df).filter("kept")``, its ``text_clean``
+    as the text), the Gopher repetition rule
+    (``textops.repetition_scores`` with ``repetition_keep == 1``),
+    decontamination (``decontam.decontaminate_corpus(...).filter("keep")``)
+    and domain-mixture downsampling (``sampling.mixture_sample`` — the
+    packed output drops the group column, so mix first). Each keeps or
+    rewrites one document at a time, so it commutes with the quality
+    gate and gives the same packs as a stage inside the job."""
     weights = split_weights or DEFAULT_SPLITS
     if max_len < 1:
         raise ValueError(f"max_len must be >= 1, got {max_len}")
 
-    if line_clean:
-        # C4-style line-level cleanup first (map-only, fuses into the
-        # same scan as the quality gate): downstream stages see the
-        # CLEANED text of surviving documents
-        from grokspark.operators.clean import c4_clean
-
-        df = (
-            c4_clean(df, text_col=text_col, id_col=id_col)
-            .filter(F.col("kept"))
-            .select(F.col(id_col), F.col("text_clean").alias(text_col))
-        )
     quality = quality_scores(df, text_col).filter(F.col("quality_keep") == 1)
-    if repetition_filter:
-        quality = repetition_scores(quality, text_col).filter(
-            F.col("repetition_keep") == 1
-        )
-    if bench_df is not None:
-        from grokspark.operators.decontam import decontaminate
-
-        hits = decontaminate(quality, bench_df, decontam_n, text_col, id_col)
-        quality = quality.join(hits, id_col, "left_anti")
-    # the filtered set feeds dedup (fingerprints + LSH input), the
-    # pair restriction, and the kept semi-join — materialize it once
-    # so the map-only filter chain isn't re-scanned per consumer
+    # the filtered set feeds dedup (fingerprints + LSH input) and the
+    # kept semi-join — materialize it once so the map-only filter
+    # isn't re-scanned per consumer
     quality = quality.select(id_col, text_col).localCheckpoint()
     decisions = dedup_corpus(
         quality, threshold=threshold, n=n, bands=bands,
         text_col=text_col, id_col=id_col,
-        precomputed_pairs=precomputed_pairs,
     )
     kept = quality.join(
         decisions.filter(F.col("keep")).select(id_col), id_col, "left_semi"
@@ -282,12 +241,12 @@ def _grams_py(text: str, n: int) -> set:
 
 
 def _decontam_clean_py(
-    docs: list[tuple[int, str]], bench_texts: list[str], n: int
+    docs: list[tuple[int, str]], benchmark: list[str], n: int
 ) -> list[tuple[int, str]]:
-    """Mirror of decontam.decontaminate + left_anti: keep docs sharing
-    NO word n-gram with the benchmark set."""
+    """Mirror of decontam.decontaminate_corpus' keep flag: keep docs
+    sharing NO word n-gram with the benchmark texts."""
     bench: set = set()
-    for t in bench_texts:
+    for t in benchmark:
         bench |= _grams_py(t, n)
     return [(i, t) for i, t in docs if not (_grams_py(t, n) & bench)]
 
@@ -374,10 +333,6 @@ def prepare_corpus_py(
     max_words: Optional[int] = None,
     threshold: float = 0.5,
     n: int = 2,
-    line_clean: bool = False,
-    repetition_filter: bool = False,
-    bench_texts: Optional[list[str]] = None,
-    decontam_n: int = 3,
 ) -> list[dict]:
     """Single-process reference of ``prepare_corpus``: returns the
     packed rows as dicts with the same fields (pack ordering follows
@@ -385,19 +340,7 @@ def prepare_corpus_py(
     docs = [(i, t) for i, t in docs]
     weights = split_weights or DEFAULT_SPLITS
 
-    if line_clean:
-        from grokspark.operators.clean import c4_clean_py
-
-        docs = [
-            (did, clean)
-            for did, clean, _nin, _nk, _ns, kept in c4_clean_py(docs)
-            if kept
-        ]
     quality = [(i, t) for i, t in docs if _quality_keep_py(t)]
-    if repetition_filter:
-        quality = [(i, t) for i, t in quality if _repetition_keep_py(t)]
-    if bench_texts is not None:
-        quality = _decontam_clean_py(quality, bench_texts, decontam_n)
     keep_ids = _dedup_keep_py(quality, threshold, n)
     kept = [(i, t) for i, t in quality if i in keep_ids]
     split_of = {i: _split_of_py(i, weights) for i, _ in kept}

@@ -701,7 +701,6 @@ def dedup_corpus(
     bands: int = 32,
     text_col: str = "text",
     id_col: str = "doc_id",
-    collapse_exact: bool = True,
     max_iterations: int = 20,
     precomputed_pairs: Optional[DataFrame] = None,
 ) -> DataFrame:
@@ -716,10 +715,9 @@ def dedup_corpus(
     that shrinks the LSH input; duplicate-heavy corpora are mostly
     EXACT duplicates) -> MinHash-LSH near-dup pairs over the
     representatives -> iterative connected components -> decisions
-    broadcast back to all members. Output is IDENTICAL with
-    ``collapse_exact=False`` (byte-equal docs have Jaccard 1 >=
-    threshold, so they cluster anyway — asserted in tests); the flag
-    only changes how much text the LSH stage chews.
+    broadcast back to all members. The collapse changes no decision
+    (byte-equal docs have Jaccard 1 >= threshold, so they cluster
+    anyway); it only shrinks the text the LSH stage chews.
 
     ``precomputed_pairs``: an already-materialized exact-recall pair
     set (``id_a, id_b, ...``) over a SUPERSET of ``df``'s ids — e.g.
@@ -737,15 +735,12 @@ def dedup_corpus(
         F.col(id_col).alias("id"),
         content_fingerprint_col(F.col(text_col)).alias("_fp"),
     )
-    if collapse_exact:
-        reps = ids.groupBy("_fp").agg(F.min("id").alias("rep_id"))
-        # narrow (id, rep_id) map, checkpointed once: it feeds the
-        # representative set, the pair restriction and the final
-        # cluster rejoin — lazily each consumer re-ran the md5
-        # fingerprint aggregate (the reused-subplan pattern)
-        doc_rep = ids.join(reps, "_fp").select("id", "rep_id").localCheckpoint()
-    else:
-        doc_rep = ids.select("id", F.col("id").alias("rep_id"))
+    reps = ids.groupBy("_fp").agg(F.min("id").alias("rep_id"))
+    # narrow (id, rep_id) map, checkpointed once: it feeds the
+    # representative set, the pair restriction and the final cluster
+    # rejoin — lazily each consumer re-ran the md5 fingerprint
+    # aggregate (the reused-subplan pattern)
+    doc_rep = ids.join(reps, "_fp").select("id", "rep_id").localCheckpoint()
     # representative ids come from the narrow map — no text join
     rep_ids_frame = doc_rep.select("rep_id").distinct()
     if precomputed_pairs is not None:
@@ -761,14 +756,10 @@ def dedup_corpus(
             )
         )
     else:
-        rep_docs = (
-            df.join(
-                rep_ids_frame.select(F.col("rep_id").alias(id_col)),
-                id_col,
-                "left_semi",
-            )
-            if collapse_exact
-            else df
+        rep_docs = df.join(
+            rep_ids_frame.select(F.col("rep_id").alias(id_col)),
+            id_col,
+            "left_semi",
         )
         pairs = minhash_lsh_pairs(
             rep_docs, threshold, n, num_hashes, bands, text_col, id_col

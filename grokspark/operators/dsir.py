@@ -39,6 +39,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from grokspark.operators.ngram_lm import _words_py, lm_words
+from grokspark.operators.sampling import _salted_hash
 from grokspark.plan_policy import spread
 
 __all__ = [
@@ -74,15 +75,9 @@ def dsir_gram_col(text: Column) -> Column:
 
 
 def dsir_bucket_col(gram: Column, n_buckets: int) -> Column:
-    """Cross-engine bucket id: salted 48-bit md5 prefix mod n_buckets
-    (same trick as sampling._salted_hash — DuckDB recomputes it
-    bit-for-bit)."""
-    h = F.conv(
-        F.substring(F.md5(F.concat(F.lit(DSIR_SALT + ":"), gram)), 1, 12),
-        16,
-        10,
-    ).cast("long")
-    return h % n_buckets
+    """Cross-engine bucket id: ``sampling._salted_hash`` mod n_buckets
+    (DuckDB recomputes it bit-for-bit)."""
+    return _salted_hash(gram, DSIR_SALT) % n_buckets
 
 
 def dsir_bucket_counts(
@@ -210,9 +205,7 @@ def gumbel_micro_col(id_col: str, salt: str = GUMBEL_SALT) -> Column:
     -ln(-ln(u))``, quantized like the log ratios so selection keys
     stay exact integers. Rounding margins on the gate corpus:
     2.1e-5 micro-units vs ~1e-8 double-ln noise (measured)."""
-    from grokspark.operators.sampling import _salted_hash
-
-    u = (_salted_hash(id_col, salt).cast("double") + F.lit(0.5)) / F.lit(
+    u = (_salted_hash(F.col(id_col), salt).cast("double") + F.lit(0.5)) / F.lit(
         float(1 << 48)
     )
     return F.round(-F.log(-F.log(u)) * F.lit(1000000.0)).cast("bigint")

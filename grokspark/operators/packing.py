@@ -32,6 +32,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from grokspark.operators.sampling import _salted_hash
+
 __all__ = ["pack_sequences", "pack_sequences_py", "pack_bucket_of"]
 
 
@@ -47,13 +49,7 @@ def pack_bucket_col(id_col: str, n_buckets: int) -> F.Column:
     """The Spark-side bucket assignment as a Column (one md5, JVM-
     side) — shared by ``pack_sequences`` and the composed corpus job
     so the two can never drift from ``pack_bucket_of``."""
-    h = F.conv(
-        F.substring(
-            F.md5(F.concat(F.lit("pack:"), F.col(id_col).cast("string"))), 1, 12
-        ),
-        16,
-        10,
-    ).cast("long")
+    h = _salted_hash(F.col(id_col), "pack")
     return F.pmod(h, F.lit(n_buckets)).cast("int")
 
 _PACK_SCHEMA = (

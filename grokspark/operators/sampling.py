@@ -36,12 +36,13 @@ _SPACE = 1 << KMV_SPACE_BITS
 _PPM = 1_000_000
 
 
-def _salted_hash(id_col: str, salt: str) -> Column:
+def _salted_hash(key: Column, salt: str) -> Column:
+    """The 48-bit md5 prefix of ``"<salt>:<key>"`` as a long — every
+    salted hash here, in ``dsir`` and in ``packing`` (DuckDB recomputes
+    it bit-for-bit)."""
     return F.conv(
         F.substring(
-            F.md5(F.concat(F.lit(salt + ":"), F.col(id_col).cast("string"))),
-            1,
-            12,
+            F.md5(F.concat(F.lit(salt + ":"), key.cast("string"))), 1, 12
         ),
         16,
         10,
@@ -74,7 +75,7 @@ def hash_split(
     """Adds a ``split`` label column assigning each row to one of the
     ``weights`` keys by salted id hash — deterministic, partition-
     independent, stable under corpus growth."""
-    h = _salted_hash(id_col, salt)
+    h = _salted_hash(F.col(id_col), salt)
     expr = None
     for label, bound in split_thresholds(weights):
         cond = h < F.lit(bound)
@@ -95,7 +96,7 @@ def hash_sample(
     if not 0.0 <= fraction <= 1.0:
         raise ValueError(f"fraction must be in [0, 1], got {fraction}")
     bound = _SPACE * round(fraction * _PPM) // _PPM
-    return df.filter(_salted_hash(id_col, salt) < F.lit(bound))
+    return df.filter(_salted_hash(F.col(id_col), salt) < F.lit(bound))
 
 
 def mixture_sample(
@@ -132,7 +133,7 @@ def mixture_sample(
         )
     else:
         bound = F.lit(default_bound)
-    return df.filter(_salted_hash(id_col, salt) < bound)
+    return df.filter(_salted_hash(F.col(id_col), salt) < bound)
 
 
 def reservoir_sample(
@@ -170,7 +171,7 @@ def reservoir_sample(
 
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
-    h = _salted_hash(id_col, salt)
+    h = _salted_hash(F.col(id_col), salt)
     ids = df.select(
         *([group_col] if group_col else []), id_col
     ).withColumn("_h", h)

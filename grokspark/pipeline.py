@@ -96,7 +96,6 @@ __all__ = ["PipelineConfig", "PipelineResult", "GrokPipeline", "route_match_coun
 @dataclass
 class PipelineConfig:
     out_dir: str
-    alias_only: bool = True
     # None (default) = no pre-parse shuffle; see module docstring
     salt_buckets: Optional[int] = None
     # partitions of the salted repartition inside each unit; default =
@@ -106,8 +105,6 @@ class PipelineConfig:
     # per-row regex timeout in seconds (None = reference-parity: unbounded)
     timeout: Optional[float] = None
     resume: bool = True
-    # write sinks at all (False = counts-only dry run for benches)
-    write_sinks: bool = True
     # True is the only mode; False selected the removed per-pattern mode
     single_pass: bool = True
     # range_units=K: unit = input file-range (K size-balanced contiguous
@@ -200,7 +197,6 @@ def route_match_counts(
     spark: SparkSession,
     seq_df: DataFrame,
     registry: Optional[GrokRegistry] = None,
-    alias_only: bool = True,
     salt_buckets: Optional[int] = None,
 ) -> DataFrame:
     """Transform-only composition of the pipeline: enrich + parse all
@@ -237,7 +233,7 @@ def route_match_counts(
     )
 
     compiled_by_name = {
-        name: registry.compile(expr, with_alias_only=alias_only)
+        name: registry.compile(expr, with_alias_only=True)
         for name, expr in datagen.pattern_exprs().items()
     }
     if salt_buckets:
@@ -277,9 +273,8 @@ class GrokPipeline:
 
     def compiled(self, pattern_name: str) -> CompiledPattern:
         if pattern_name not in self._compiled:
-            expr = self.pattern_exprs[pattern_name]
             self._compiled[pattern_name] = self.registry.compile(
-                expr, with_alias_only=self.config.alias_only
+                self.pattern_exprs[pattern_name], with_alias_only=True
             )
         return self._compiled[pattern_name]
 
@@ -405,21 +400,17 @@ class GrokPipeline:
                 ]
             observed = self._parse(enriched, parse, i).observe(obs, *exprs)
 
-            if cfg.write_sinks:
-                staging = self._staging_dir(unit)
-                if os.path.exists(staging):
-                    shutil.rmtree(staging)
-                (
-                    observed.write.mode("overwrite")
-                    .partitionBy("_route_dir", "_pattern_dir")
-                    .parquet(staging)
-                )
-            else:
-                observed.count()  # counts-only dry run still one scan
+            staging = self._staging_dir(unit)
+            if os.path.exists(staging):
+                shutil.rmtree(staging)
+            (
+                observed.write.mode("overwrite")
+                .partitionBy("_route_dir", "_pattern_dir")
+                .parquet(staging)
+            )
             metrics = {k: int(v or 0) for k, v in obs.get.items()}
 
-            if cfg.write_sinks:
-                self._publish_range(unit)
+            self._publish_range(unit)
             lineage = []
             for p in patterns:
                 rows_in = metrics[f"m__{p}"] + metrics[f"u__{p}"]

@@ -28,7 +28,6 @@ __all__ = [
     "is_table_identifier",
     "read_sequences",
     "read_raw_lines",
-    "write_sink",
 ]
 
 
@@ -125,18 +124,3 @@ def read_raw_lines(
     return lines.mapInPandas(
         encode, schema="doc_id string, tokens array<int>, n_tok int, source string"
     )
-
-
-def write_sink(df: DataFrame, location: str, mode: str = "append") -> None:
-    """Write a sink: Iceberg append (atomic snapshot commit) for table
-    identifiers, parquet for paths. The pipeline's staging+rename
-    commit protocol applies only to the parquet branch — Iceberg
-    commits are already atomic."""
-    if is_table_identifier(location):
-        writer = df.writeTo(location)
-        if mode == "append":
-            writer.append()
-        else:
-            writer.createOrReplace()
-        return
-    df.write.mode(mode).parquet(location)

@@ -116,7 +116,6 @@ def stream_windowed_route_counts(
     registry: Optional[GrokRegistry] = None,
     window: str = "10 minutes",
     watermark: str = "5 minutes",
-    alias_only: bool = True,
 ) -> DataFrame:
     """Watermarked tumbling-window per-(route, matched) counts — the
     streaming twin of pipeline.route_match_counts."""
@@ -124,7 +123,7 @@ def stream_windowed_route_counts(
     registry = registry or GrokRegistry.with_default_patterns()
     routes = datagen.routes_df(spark)
     compiled = {
-        name: registry.compile(expr, with_alias_only=alias_only)
+        name: registry.compile(expr, with_alias_only=True)
         for name, expr in datagen.pattern_exprs().items()
     }
     parse = grok_parse_router_udf(compiled, from_tokens=True)
@@ -181,7 +180,6 @@ def stream_route_sinks(
     out_dir: str,
     checkpoint_dir: str,
     registry: Optional[GrokRegistry] = None,
-    alias_only: bool = True,
 ):
     """Streaming fan-out sinks: the foreachBatch twin of the batch
     pipeline's dynamic-partition write. Each micro-batch is broadcast-
@@ -202,7 +200,7 @@ def stream_route_sinks(
     spark = stream_df.sparkSession
     registry = registry or GrokRegistry.with_default_patterns()
     compiled = {
-        name: registry.compile(expr, with_alias_only=alias_only)
+        name: registry.compile(expr, with_alias_only=True)
         for name, expr in datagen.pattern_exprs().items()
     }
     parse = grok_parse_router_udf(compiled, from_tokens=True)

@@ -237,9 +237,11 @@ def test_prepare_corpus_max_words_cap_matches_twin(spark, sf_dir):
 
 
 def test_prepare_corpus_hygiene_stages_match_twin(spark, sf_dir):
-    """repetition_filter + decontamination stages: Spark job == twin
-    bit-for-bit, and each stage actually drops documents on this
-    corpus (non-vacuous flags)."""
+    """Repetition + decontamination filters composed upstream of the
+    job: Spark == twin bit-for-bit, each stage actually drops
+    documents on this corpus (non-vacuous), and the twin packs the same
+    whether the quality gate runs before or after the two filters —
+    the per-document commutation that lets them live outside the job."""
     from grokspark.operators.corpus import (
         _decontam_clean_py,
         _quality_keep_py,
@@ -247,6 +249,8 @@ def test_prepare_corpus_hygiene_stages_match_twin(spark, sf_dir):
         prepare_corpus,
         prepare_corpus_py,
     )
+    from grokspark.operators.decontam import decontaminate_corpus
+    from grokspark.operators.textops import repetition_scores
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     py = [(r["doc_id"], r["text"]) for r in docs.select("doc_id", "text").collect()]
@@ -255,19 +259,31 @@ def test_prepare_corpus_hygiene_stages_match_twin(spark, sf_dir):
     train_df = docs.filter(F.col("doc_id") % 50 != 0)
     train_py = [(i, t) for i, t in py if i % 50 != 0]
 
+    repeated = repetition_scores(train_df.select("doc_id", "text")).filter(
+        F.col("repetition_keep") == 1
+    )
+    filtered_df = (
+        decontaminate_corpus(repeated.select("doc_id", "text"), bench_df, n=3)
+        .filter("keep")
+        .select("doc_id", "text")
+    )
+    filtered_py = _decontam_clean_py(
+        [(i, t) for i, t in train_py if _repetition_keep_py(t)], bench_texts, 3
+    )
+
     kw = dict(max_len=128, n_buckets=4, n_merges=40)
+
+    def packs_py(corpus):
+        return sorted(
+            (r["split"], r["bucket"], r["pack_id"], tuple(map(int, r["tokens"])))
+            for r in prepare_corpus_py(corpus, **kw)
+        )
+
     got = sorted(
         (r["split"], r["bucket"], r["pack_id"], tuple(r["tokens"]))
-        for r in prepare_corpus(
-            train_df, repetition_filter=True, bench_df=bench_df, **kw
-        ).collect()
+        for r in prepare_corpus(filtered_df, **kw).collect()
     )
-    want = sorted(
-        (r["split"], r["bucket"], r["pack_id"], tuple(map(int, r["tokens"])))
-        for r in prepare_corpus_py(
-            train_py, repetition_filter=True, bench_texts=bench_texts, **kw
-        )
-    )
+    want = packs_py(filtered_py)
     assert got == want and got
 
     # each stage is non-vacuous on this corpus
@@ -276,15 +292,17 @@ def test_prepare_corpus_hygiene_stages_match_twin(spark, sf_dir):
     assert 0 < len(rep) < len(q), (len(rep), len(q))
     dec = _decontam_clean_py(rep, bench_texts, 3)
     assert 0 < len(dec) < len(rep), (len(dec), len(rep))
+    # quality first (inside-the-job order) == quality last (upstream)
+    assert packs_py(dec) == want
 
 
 def test_prepare_corpus_line_clean_matches_twin(spark, sf_dir):
-    """line_clean stage: the Spark job and the twin run the same
-    C4 cleanup first (docs drop, surviving text replaced by cleaned
-    lines) and stay bit-identical; the stage is non-vacuous on the
-    fabricated multi-line pages."""
+    """C4 line cleaning composed upstream of the job: the Spark side
+    and the twin run the same cleanup first (docs drop, surviving text
+    replaced by cleaned lines) and stay bit-identical; the stage is
+    non-vacuous on the fabricated multi-line pages."""
     import __spark_entry__ as entry
-    from grokspark.operators.clean import c4_clean_py
+    from grokspark.operators.clean import c4_clean, c4_clean_py
     from grokspark.operators.corpus import prepare_corpus, prepare_corpus_py
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
@@ -292,24 +310,32 @@ def test_prepare_corpus_line_clean_matches_twin(spark, sf_dir):
         "doc_id",
         entry._c4_page_col(F.col("text"), F.col("doc_id")).alias("text"),
     )
+    cleaned_df = (
+        c4_clean(pages)
+        .filter(F.col("kept"))
+        .select("doc_id", F.col("text_clean").alias("text"))
+    )
     kw = dict(max_len=128, n_buckets=4, n_merges=40)
     got = sorted(
         (r["split"], r["bucket"], r["pack_id"], tuple(r["tokens"]))
-        for r in prepare_corpus(pages, line_clean=True, **kw).collect()
+        for r in prepare_corpus(cleaned_df, **kw).collect()
     )
     py = [
         (r["doc_id"], entry._c4_page_py(r["doc_id"], r["text"]))
         for r in docs.select("doc_id", "text").collect()
     ]
+    cleaned = c4_clean_py(py)
     want = sorted(
         (r["split"], r["bucket"], r["pack_id"], tuple(map(int, r["tokens"])))
-        for r in prepare_corpus_py(py, line_clean=True, **kw)
+        for r in prepare_corpus_py(
+            [(did, clean) for did, clean, *_rest, kept in cleaned if kept], **kw
+        )
     )
     assert got == want and got
     # non-vacuous: the cleanup drops documents AND rewrites text
-    cleaned = c4_clean_py(py)
     assert any(not kept for *_, kept in cleaned)
     assert any(
         kept and clean != text
         for (_, text), (_, clean, *_rest, kept) in zip(py, cleaned)
     )
+

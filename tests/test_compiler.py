@@ -284,42 +284,37 @@ def test_compiled_pattern_is_picklable():
 
 
 def test_engine_parity_sre_vs_regex():
-    """The auto-selected fast engine (stdlib re) must agree with the
-    reference engine (regex module) on every corpus line of every route
-    pattern (match success AND every captured field)."""
-    import grokspark.compiler as C
+    """The auto-selected engine must agree with the reference engine
+    (regex module, which every timeout-bounded call runs) on every
+    corpus line of every route pattern (match success AND every
+    captured field), and number fields as the reference pattern's
+    groupindex does (the numbering jvmgrok and the timeout path use)."""
     from grokspark.datagen import SOURCES, iter_rows
 
     g = GrokRegistry.with_default_patterns()
-    exprs = {s: e for s, (_w, r, e) in SOURCES.items() if r}
-
-    C._ENGINE_CACHE.clear()
-    old = C._ENGINE_PREF
-    try:
-        C._ENGINE_PREF = "sre"
-        fast = {s: g.compile(e, True) for s, e in exprs.items()}
-        # bacula expands through UNIXPATH's [[:alnum:]] — POSIX classes
-        # are Unicode-aware on the reference engine with NO exact sre
-        # equivalent (verified exhaustively over all codepoints), so it
-        # must fall back to the regex engine even under forced sre
-        flavors = {s: p.engine.flavor for s, p in fast.items()}
-        assert flavors.pop("bacula") == "regex"
-        assert all(f == "sre" for f in flavors.values()), flavors
-        C._ENGINE_CACHE.clear()
-        C._ENGINE_PREF = "regex"
-        ref = {s: g.compile(e, True) for s, e in exprs.items()}
-        assert all(p.engine.flavor == "regex" for p in ref.values())
-    finally:
-        C._ENGINE_PREF = old
-        C._ENGINE_CACHE.clear()
+    compiled = {s: g.compile(e, True) for s, (_w, r, e) in SOURCES.items() if r}
+    # bacula expands through UNIXPATH's [[:alnum:]] — POSIX classes are
+    # Unicode-aware on the reference engine with NO exact sre
+    # equivalent (verified exhaustively over all codepoints), so it
+    # must stay on the regex engine
+    flavors = {s: p.engine.flavor for s, p in compiled.items()}
+    assert flavors.pop("bacula") == "regex"
+    assert all(f == "sre" for f in flavors.values()), flavors
+    for s, p in compiled.items():
+        ref_names: dict[str, int] = {}
+        for group_name, idx in p.engine.timeout_pattern().groupindex.items():
+            key = p.aliases.get(group_name, group_name)
+            ref_names[key] = max(idx, ref_names.get(key, idx))
+        assert ref_names == p.engine.names, s
 
     checked = 0
     for row in iter_rows(1500):
         s = row["source"]
-        if s not in exprs:
+        if s not in compiled:
             continue
         line = bytes(row["tokens"]).decode()
-        assert fast[s].match_against(line) == ref[s].match_against(line), (s, line)
+        got = compiled[s].match_against(line)
+        assert got == compiled[s].match_against(line, timeout=60.0), (s, line)
         checked += 1
     assert checked > 1000
 

@@ -314,7 +314,8 @@ def test_knn_join_matches_reference(spark, emb, knn_reference):
 def test_embedding_lsh_pairs_precision_and_semantics(spark, emb):
     """LSH embedding pairs: exact precision (subset of the brute-force
     pairs at the same threshold) and exact candidate-rule semantics
-    (equals brute force filtered on bucket hamming <= h)."""
+    (equals brute force filtered on bucket hamming <= h). No pair of
+    this sample reaches 0.5, so the threshold is 0.3."""
     import numpy as np
 
     from grokspark.operators import embedding_cosine_pairs, embedding_lsh_pairs
@@ -323,12 +324,12 @@ def test_embedding_lsh_pairs_precision_and_semantics(spark, emb):
     sample = emb.limit(150).cache()
     exact = {
         (r["id_a"], r["id_b"])
-        for r in embedding_cosine_pairs(sample, threshold=0.5).collect()
+        for r in embedding_cosine_pairs(sample, threshold=0.3).collect()
     }
     got = {
         (r["id_a"], r["id_b"])
         for r in embedding_lsh_pairs(
-            sample, threshold=0.5, n_planes=8, probe_hamming=1
+            sample, threshold=0.3, n_planes=8, probe_hamming=1
         ).collect()
     }
     assert got <= exact  # precision: every emitted pair is a true pair
@@ -344,8 +345,9 @@ def test_embedding_lsh_pairs_precision_and_semantics(spark, emb):
             if bin(buckets[a] ^ buckets[b]).count("1") > 1:
                 continue
             cos = float(vecs[a] @ vecs[b] / (np.linalg.norm(vecs[a]) * np.linalg.norm(vecs[b])))
-            if cos >= 0.5:
+            if cos >= 0.3:
                 want.add((a, b))
+    assert want  # 0.3 keeps the check non-vacuous on this sample
     assert got == want
     sample.unpersist()
 
@@ -651,11 +653,10 @@ def test_winnow_pairs_df_cap_bounds_join(spark, docs):
     assert all(n >= 20 for n in got.values())
 
 
-def test_dedup_corpus_collapse_invariance_and_decisions(spark, docs):
-    """dedup_corpus with and without the exact-collapse pre-stage must
-    produce IDENTICAL decisions (byte-equal docs have Jaccard 1), and
-    the decision table must be consistent: every doc present once,
-    exactly one keep per cluster, cluster_id = min member id."""
+def test_dedup_corpus_decisions(spark, docs):
+    """The dedup_corpus decision table must be consistent: every doc
+    present once, exactly one keep per cluster, cluster_id = min member
+    id, and exact duplicates cluster with their originals."""
     import collections
 
     from grokspark.operators import dedup_corpus
@@ -666,16 +667,10 @@ def test_dedup_corpus_collapse_invariance_and_decisions(spark, docs):
     )
     corpus = docs.unionByName(extra)
 
-    def run(collapse):
-        return {
-            r["doc_id"]: (r["cluster_id"], r["keep"])
-            for r in dedup_corpus(
-                corpus, threshold=0.5, n=2, bands=64, collapse_exact=collapse
-            ).collect()
-        }
-
-    a, b = run(True), run(False)
-    assert a == b
+    a = {
+        r["doc_id"]: (r["cluster_id"], r["keep"])
+        for r in dedup_corpus(corpus, threshold=0.5, n=2, bands=64).collect()
+    }
     assert len(a) == corpus.count()
     clusters = collections.defaultdict(list)
     for did, (cid, keep) in a.items():

@@ -146,7 +146,7 @@ def test_pipeline_run_enriches_against_local_dim(spark, tmp_path, monkeypatch):
     seq = spark.createDataFrame(
         list(iter_rows(50)), "doc_id string, tokens array<int>, n_tok int, source string"
     )
-    cfg = PipelineConfig(out_dir=str(tmp_path / "out"), write_sinks=False)
+    cfg = PipelineConfig(out_dir=str(tmp_path / "out"))
     GrokPipeline(spark, cfg).run(seq)
     tree = explain_str(seen["enriched"]).split("\n\n")[0]
     assert "ExistingRDD" in tree  # the seq side, outside the broadcast

@@ -1,7 +1,7 @@
 """Round-2 fixes: per-row regex timeout observability (a pathological
 row must never fail a Spark task), context-aware sre dialect
 translation, NULL-tokens handling in the arrow kernel, pattern
-provenance, and the grokspark.matching parity module."""
+provenance, and the compile/match API."""
 
 from __future__ import annotations
 
@@ -46,10 +46,9 @@ def test_match_against_timeout_is_no_match(hostile):
     assert m is not None and m["f"] == "ok"
 
 
-def test_timeout_on_forced_sre_engine(registry, monkeypatch):
-    """GROKSPARK_ENGINE=sre + timeout must route through a lazily
+def test_timeout_on_sre_engine(registry):
+    """A timeout on an sre-engine pattern must route through a lazily
     compiled regex-module pattern, not TypeError on sre's search()."""
-    monkeypatch.setattr(C, "_ENGINE_PREF", "sre")
     C._ENGINE_CACHE.clear()
     compiled = registry.compile(HOSTILE_EXPR, with_alias_only=True)
     assert compiled.engine.flavor == "sre"
@@ -223,7 +222,7 @@ def test_sre_literal_class_semantics_match_reference_engine():
         ), probe
 
 
-# -- provenance + matching module ---------------------------------------------
+# -- provenance + compile/match API -----------------------------------------
 
 
 def test_patterns_by_file_union_equals_merged():
@@ -243,10 +242,8 @@ def test_patterns_by_file_union_equals_merged():
         patterns_by_file("nonexistent")
 
 
-def test_matching_module_api():
-    from grokspark import matching
-
-    compiled = matching.compile_pattern("%{INT:n} %{WORD:w}")
-    assert matching.match_against(compiled, "42 hello") == {"n": "42", "w": "hello"}
-    assert matching.match_against(compiled, "no digits") is None
-    assert matching.match("%{INT:n}", "abc -7")["n"] == "-7"
+def test_registry_compile_match_api():
+    """The reference's user surface: compile once, match in a loop."""
+    compiled = GrokRegistry.with_default_patterns().compile("%{INT:n} %{WORD:w}")
+    assert compiled.match_against("42 hello") == {"n": "42", "w": "hello"}
+    assert compiled.match_against("no digits") is None
