@@ -112,11 +112,91 @@ _ENGINE_CACHE: dict[tuple, "_EnginePattern"] = {}
 # matches on non-ASCII text — so any POSIX class inside a bracket
 # expression forces the regex-engine fallback (only 1 of the 320
 # builtins uses one).
+#
+# Callers that only need match/no-match (the counts kernel) search a
+# match-only twin instead: ``_capture_free`` turns every capture group of
+# the IR into ``(?:`` — the builtins carry up to 250 groups even in
+# alias-only mode, because their bodies have bare ``(...)`` — and the
+# twin compiles on the engine the full pattern got. The rewrite is
+# refused, and the full pattern searched, when the IR has a
+# backreference, a conditional, or a recursion or subroutine call.
+# Under a timeout the kernel searches ``timeout_pattern()``, like the
+# router. The IR itself (golden files, ``regex_src``) never changes.
 
 
 class _NotSreExpressible(Exception):
     """The pattern needs the reference ``regex`` engine (e.g. POSIX
     bracket classes, whose Unicode semantics sre cannot reproduce)."""
+
+
+# What follows an unescaped ``(`` outside a bracket expression: a named
+# head with its name (``(?<name>``, ``(?P<name>``, ``(?'name'``), a
+# two-char kind (``(?<=``, ``(?<!``, ``(?P=``, ``(?P>``), a numbered or
+# relative call (``(?1``, ``(?-1``), any other ``(?`` + one char
+# (``(?:``, ``(?>``, ``(?(``, ``(?R``, ``(?i``, ...), a backtracking
+# verb (``(*FAIL)``, ``(*SKIP)``, ...: ``(*``), or nothing (a bare
+# capture group).
+_GROUP_HEAD = _sre.compile(
+    r"\((?:\?(?:P?<(?![=!])\w+>|'\w+'|P[=>]|<[=!]|[+-]?\d|.)|\*)?", _sre.DOTALL
+)
+
+
+def _ir_tokens(regex_src: str) -> Iterator[tuple[str, str]]:
+    """The one scanner of the reference-dialect IR: a single pass that
+    tracks escapes and bracket-class state and yields ``(kind, text)``
+    pieces that concatenate back to ``regex_src``:
+
+    - ``"escape"``: a backslash and the char it escapes;
+    - ``"posix"``: a POSIX class ``[:name:]`` inside a bracket expression;
+    - ``"group"``: a group head outside any bracket expression (see
+      ``_GROUP_HEAD``);
+    - ``"char"``: any other single char.
+
+    So literal occurrences of group syntax keep their reference
+    (``regex``-module) semantics: ``[(?<]`` is a class of those four
+    literals, and a bare ``[:digit:]`` outside any enclosing class is a
+    set of the literal chars ``:digt`` (the regex module only treats
+    POSIX classes specially *inside* a set)."""
+    i, n = 0, len(regex_src)
+    in_class = False
+    while i < n:
+        c = regex_src[i]
+        if c == "\\" and i + 1 < n:
+            yield "escape", regex_src[i : i + 2]
+            i += 2
+            continue
+        if in_class:
+            if c == "[" and regex_src.startswith("[:", i):
+                end = regex_src.find(":]", i + 2)
+                if end != -1:
+                    yield "posix", regex_src[i : end + 2]
+                    i = end + 2
+                    continue
+            if c == "]":
+                in_class = False
+            yield "char", c
+            i += 1
+            continue
+        if c == "[":
+            in_class = True
+            yield "char", c
+            i += 1
+            # leading ^ negation, then a literal ] immediately after the
+            # opener (or after ^) is part of the class, not its end
+            if i < n and regex_src[i] == "^":
+                yield "char", "^"
+                i += 1
+            if i < n and regex_src[i] == "]":
+                yield "char", "]"
+                i += 1
+            continue
+        if c == "(":
+            head = _GROUP_HEAD.match(regex_src, i).group()
+            yield "group", head
+            i += len(head)
+            continue
+        yield "char", c
+        i += 1
 
 
 def _to_sre_source(regex_src: str) -> str:
@@ -125,59 +205,64 @@ def _to_sre_source(regex_src: str) -> str:
     :class:`_NotSreExpressible` for POSIX classes inside a bracket
     expression — their reference semantics are Unicode-aware
     (``[[:alpha:]]`` matches 'é'), which no mechanical sre rewrite can
-    reproduce, so those patterns stay on the regex engine.
-
-    Context-aware: a single pass tracks escapes and bracket-class state,
-    so literal occurrences of these sequences keep their reference
-    (``regex``-module) semantics — ``[(?<]`` stays a character class of
-    those four literals, and a bare ``[:digit:]`` outside any enclosing
-    class stays a set of the literal chars ``:digt`` (the regex module
-    only treats POSIX classes specially *inside* a set)."""
+    reproduce, so those patterns stay on the regex engine. Context-aware
+    through ``_ir_tokens``."""
     out: list[str] = []
-    i, n = 0, len(regex_src)
-    in_class = False
-    while i < n:
-        c = regex_src[i]
-        if c == "\\" and i + 1 < n:
-            out.append(regex_src[i : i + 2])
-            i += 2
-            continue
-        if in_class:
-            if c == "[" and regex_src.startswith("[:", i):
-                end = regex_src.find(":]", i + 2)
-                if end != -1:
-                    # [[:alpha:]], [[:^digit:]], ... — Unicode-aware on
-                    # the reference engine; not sre-expressible
-                    raise _NotSreExpressible(regex_src[i : end + 2])
-            if c == "]":
-                in_class = False
-            out.append(c)
-            i += 1
-            continue
-        if c == "[":
-            in_class = True
-            out.append(c)
-            i += 1
-            # leading ^ negation, then a literal ] immediately after the
-            # opener (or after ^) is part of the class, not its end
-            if i < n and regex_src[i] == "^":
-                out.append("^")
-                i += 1
-            if i < n and regex_src[i] == "]":
-                out.append("]")
-                i += 1
-            continue
-        if (
-            c == "("
-            and regex_src.startswith("(?<", i)
-            and not regex_src.startswith(("(?<=", "(?<!"), i)
-        ):
-            out.append("(?P<")
-            i += 3
-            continue
-        out.append(c)
-        i += 1
+    for kind, text in _ir_tokens(regex_src):
+        if kind == "posix":
+            # [[:alpha:]], [[:^digit:]], ... — Unicode-aware on the
+            # reference engine; not sre-expressible
+            raise _NotSreExpressible(text)
+        if kind == "group" and text.startswith("(?<") and text not in ("(?<=", "(?<!"):
+            text = "(?P<" + text[3:]
+        out.append(text)
     return "".join(out)
+
+
+# a named capture head, name included
+_NAMED_HEAD = _sre.compile(r"\(\?(?:P?<\w+>|'\w+')")
+# group heads whose meaning depends on what a group captured or on
+# group numbering: conditionals, recursion and subroutine calls, and
+# the named backreference
+_CAPTURE_DEPENDENT_HEADS = ("(?(", "(?R", "(?&", "(?P>", "(?P=")
+
+
+def _capture_free(regex_src: str) -> Optional[str]:
+    """The match-only rewrite of a reference-dialect IR: every named
+    head (``(?<name>``, ``(?P<name>``, ``(?'name'``) and every bare
+    capture ``(`` becomes ``(?:``; lookaround, atomic, non-capturing
+    and inline-flag heads, backtracking verbs (``(*FAIL)``, ...), and
+    everything inside a bracket expression, stay as they are. Without captures the engine records no group
+    spans, yet the pattern matches exactly the texts the full one does.
+
+    That holds only while nothing reads a capture back, so the rewrite
+    is refused (``None``) when the source has a backreference (``\\1``
+    to ``\\9``, ``\\g``, ``\\k``, ``(?P=``), a conditional ``(?(``, or a
+    recursion or subroutine call (``(?R)``, ``(?1)``, ``(?&``,
+    ``(?P>``)."""
+    out: list[str] = []
+    for kind, text in _ir_tokens(regex_src):
+        if kind == "escape" and text[1] in "123456789gk":
+            return None
+        if kind == "group":
+            if text == "(" or _NAMED_HEAD.fullmatch(text):
+                text = "(?:"
+            elif text.startswith(_CAPTURE_DEPENDENT_HEADS) or text[-1].isdigit():
+                return None
+        out.append(text)
+    return "".join(out)
+
+
+def _sre_compile(regex_src: str):
+    """The sre pattern of a reference-dialect IR (raises when the IR is
+    not sre-expressible)."""
+    import warnings
+
+    with warnings.catch_warnings():
+        # literal '[' inside classes triggers a benign
+        # "possible nested set" FutureWarning
+        warnings.simplefilter("ignore", FutureWarning)
+        return _sre.compile(_to_sre_source(regex_src))
 
 
 @dataclass(frozen=True)
@@ -193,6 +278,10 @@ class _EnginePattern:
     # the reference engine pattern (regex module), compiled on demand
     # when a per-call timeout is requested (sre has no timeout support)
     ref_pattern: object = field(default=None, init=False)
+    # the match-only twin (``_capture_free`` of ``regex_src``) for
+    # callers that need only match/no-match, compiled on first use on
+    # this pattern's engine
+    match_only: object = field(default=None, init=False)
 
     def timeout_pattern(self):
         """The engine pattern whose ``search`` accepts ``timeout=``.
@@ -205,6 +294,26 @@ class _EnginePattern:
             object.__setattr__(self, "ref_pattern", _regex.compile(self.regex_src))
         return self.ref_pattern
 
+    def match_only_pattern(self):
+        """A pattern that matches exactly the texts ``pattern`` matches,
+        with no capture groups where ``_capture_free`` allows the
+        rewrite (else ``pattern`` itself), on ``pattern``'s engine. A
+        rewrite the engine will not compile also falls back to
+        ``pattern``: the twin may only ever be faster, never fail."""
+        if self.match_only is None:
+            src = _capture_free(self.regex_src)
+            pat = self.pattern
+            if src is not None:
+                try:
+                    if self.flavor == "sre":
+                        pat = _sre_compile(src)
+                    else:
+                        pat = _regex.compile(src)
+                except Exception:  # noqa: BLE001 — keep the full pattern
+                    pass
+            object.__setattr__(self, "match_only", pat)
+        return self.match_only
+
 
 def _compile_preferred(regex_src: str):
     """Compile on the fastest engine whose semantics hold; returns
@@ -213,13 +322,7 @@ def _compile_preferred(regex_src: str):
     eagerly — ``timeout_pattern()`` compiles it lazily on the first
     timeout-bounded call (most workloads never pay for both engines)."""
     try:
-        import warnings
-
-        with warnings.catch_warnings():
-            # literal '[' inside classes triggers a benign
-            # "possible nested set" FutureWarning
-            warnings.simplefilter("ignore", FutureWarning)
-            return _sre.compile(_to_sre_source(regex_src)), "sre"
+        return _sre_compile(regex_src), "sre"
     except Exception:  # noqa: BLE001 — dialect not sre-expressible
         pass
     return _regex.compile(regex_src), "regex"

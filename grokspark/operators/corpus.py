@@ -8,7 +8,8 @@ operators:
  -> hash split      (sampling.hash_split train/val/test)
  -> BPE tokenize    (bpe.train_bpe on the TRAIN split only — the
                      leakage-safe convention: val/test must not shape
-                     the vocab — then bpe.apply_bpe_ids corpus-wide)
+                     the vocab — then bpe.apply_bpe_ids' encoding
+                     corpus-wide, inside the pack stage)
  -> sequence pack   (one grouped pack over (split, bucket) — same
                      per-group packing as packing.pack_sequences)
 
@@ -37,7 +38,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from grokspark.operators.bpe import (
-    apply_bpe_ids,
     bpe_vocab,
     cap_word_counts,
     encode_word,

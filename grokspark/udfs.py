@@ -20,11 +20,16 @@ per-row numpy array, no pandas bridge. Two kernels share that decode:
   ``grok_parse_map_udf`` is its one-pattern case and returns ``fields``.
 - ``grok_parse_arrow_kernel`` (mapInArrow) counts ``(route, matched)``
   inside the kernel and returns one small ``(route, matched, n)`` batch
-  per partition, so no per-row output crosses Python -> JVM.
+  per partition, so no per-row output crosses Python -> JVM. It needs
+  only match/no-match, so without a timeout it searches each pattern's
+  capture-free twin (``_EnginePattern.match_only_pattern``: every
+  capture group rewritten to ``(?:``, refused for backreferences and
+  conditionals), which skips the engine's per-group bookkeeping.
 """
 
 from __future__ import annotations
 
+from functools import partial
 from typing import Optional
 
 import numpy as np
@@ -84,11 +89,16 @@ def _require_tokens(from_tokens: bool) -> None:
         )
 
 
-def _router_rt_factory(specs: dict, timeout: Optional[float]):
-    """Per-worker lazy engine compile: pattern name -> hot tuple
-    (search fn, group indices, sorted keys), or False for unknown/NULL
-    pattern names (unroutable rows). Shared by both kernels so
-    timeout/no-match semantics cannot drift between them."""
+def _rt_factory(specs: dict, timeout: Optional[float], match_only: bool = False):
+    """Per-worker lazy engine compile: pattern name -> hot entry, or
+    False for unknown/NULL pattern names (unroutable rows). The search
+    fn is bound once per pattern, with the timeout when there is one,
+    so a row costs one call. The router's entry is the tuple (search
+    fn, group indices, sorted keys); with ``match_only`` (the counts
+    kernel) it is the search fn alone, over the engine's capture-free
+    twin, or over ``timeout_pattern()`` under a timeout, as for the
+    router. Shared by both kernels so timeout/no-match semantics cannot
+    drift between them."""
     runtime: dict = {}
 
     def rt_for(name):
@@ -99,8 +109,13 @@ def _router_rt_factory(specs: dict, timeout: Optional[float]):
                 runtime[name] = False
                 return False
             eng = spec.engine
-            pat = eng.timeout_pattern() if timeout else eng.pattern
-            rt = (pat.search, eng.indices, eng.sorted_names)
+            if timeout:
+                search = partial(eng.timeout_pattern().search, timeout=timeout)
+            elif match_only:
+                search = eng.match_only_pattern().search
+            else:
+                search = eng.pattern.search
+            rt = search if match_only else (search, eng.indices, eng.sorted_names)
             runtime[name] = rt
         return rt
 
@@ -135,7 +150,7 @@ def _parse_batch(
     holds the participating captures in sorted-key order; it is NULL on
     no-match, an unknown/NULL pattern name, NULL tokens or a timeout,
     and ``{}`` for a match of a pattern without captures."""
-    rt_for = _router_rt_factory(specs, timeout)
+    rt_for = _rt_factory(specs, timeout)
     flat, offsets, names = _decode_batch(names, tokens)
     # every capture of every matched row, None where the group did not
     # participate: one extend per row; the filter below keeps the
@@ -153,7 +168,7 @@ def _parse_batch(
             search, indices, sorted_names = rt
             text = flat[lo:hi].decode("utf-8", errors="replace")
             try:
-                m = search(text, timeout=timeout) if timeout else search(text)
+                m = search(text)
             except TimeoutError:
                 timed = True
         timed_out.append(timed)
@@ -234,7 +249,11 @@ def grok_parse_arrow_kernel(
     row goes back: each row adds 1 to a ``(route, matched)`` counter,
     and once the partition's batches run out the kernel yields one
     small batch of per-partition counts. NULL tokens, unknown pattern
-    names and regex timeouts count as unmatched.
+    names and regex timeouts count as unmatched. Without a timeout,
+    rows are searched with the capture-free twin of each pattern, which
+    matches the same texts as the router's full pattern without
+    recording any group; under a timeout, with the router's
+    ``timeout_pattern()``.
 
     Input batch columns:  route, pattern_name, tokens (list<int32>)
     Output batch columns: route string, matched boolean, n bigint
@@ -254,7 +273,7 @@ def grok_parse_arrow_kernel(
     )
 
     def kernel(batches):
-        rt_for = _router_rt_factory(specs, timeout)
+        rt_for = _rt_factory(specs, timeout, match_only=True)
         counts: dict = {}
 
         for batch in batches:
@@ -263,14 +282,12 @@ def grok_parse_arrow_kernel(
             )
             routes = batch.column("route").to_numpy(zero_copy_only=False)
             for route, name, lo, hi in zip(routes, names, offsets, offsets[1:]):
-                rt = rt_for(name)
+                search = rt_for(name)
                 matched = False
-                if rt is not False:
-                    search = rt[0]
+                if search is not False:
                     text = flat[lo:hi].decode("utf-8", errors="replace")
                     try:
-                        m = search(text, timeout=timeout) if timeout else search(text)
-                        matched = m is not None
+                        matched = search(text) is not None
                     except TimeoutError:
                         pass
                 key = (route, matched)

@@ -12,7 +12,7 @@ import re
 import pytest
 from pyspark.sql import functions as F
 
-from tools.capture_plans import record_plans
+from tools.capture_plans import explain_formatted, record_plans
 
 
 def explain_str(df, mode: str = "formatted") -> str:
@@ -20,6 +20,15 @@ def explain_str(df, mode: str = "formatted") -> str:
     with contextlib.redirect_stdout(buf):
         df.explain(mode=mode)
     return buf.getvalue()
+
+
+def test_captured_plans_mask_plan_ids(spark):
+    """Spark's session-wide exchange counters would make two captures
+    of the same plan differ in bytes."""
+    df = spark.range(10).repartition(2).groupBy("id").count()
+    assert re.search(r"\[plan_id=\d+\]", explain_str(df))
+    plan = explain_formatted(df)
+    assert "[plan_id=N]" in plan and not re.search(r"plan_id=\d", plan)
 
 
 def test_filter_and_projection_pushdown(spark, sf_dir):

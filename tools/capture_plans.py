@@ -12,6 +12,7 @@ Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1).
 from __future__ import annotations
 
 import os
+import re
 import sys
 from pathlib import Path
 
@@ -19,10 +20,17 @@ REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 
 
+# Spark numbers exchanges with session-wide counters (``[plan_id=7]``),
+# so one plan captured after different earlier queries differs in bytes;
+# a fixed token leaves a byte diff of two captures to real plan changes
+_PLAN_ID = re.compile(r"\[plan_id=\d+\]")
+
+
 def explain_formatted(df) -> str:
-    return df._sc._jvm.PythonSQLUtils.explainString(
+    plan = df._sc._jvm.PythonSQLUtils.explainString(
         df._jdf.queryExecution(), "formatted"
     )
+    return _PLAN_ID.sub("[plan_id=N]", plan)
 
 
 def record_plans(spark, build):
