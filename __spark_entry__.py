@@ -1762,7 +1762,7 @@ def _video_oracle_rows() -> list[tuple]:
 
 def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL image decode, distributed: deterministic PNG payloads
-    rendered per row in mapInPandas, decoded with the pure-stdlib PNG
+    rendered per row in one Arrow stage, decoded with the pure-stdlib PNG
     codec (zlib+struct — no external codec), integer-exact luma stats.
     Oracle: the identical fabricate+decode run single-process, as
     VALUES."""
@@ -1781,7 +1781,7 @@ def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL audio decode, distributed: deterministic RIFF/WAVE PCM16
-    payloads rendered per row in mapInPandas, decoded with the stdlib
+    payloads rendered per row in one Arrow stage, decoded with the stdlib
     wave codec, integer-exact features (isqrt RMS — no float sqrt).
     Oracle: identical fabricate+decode single-process, as VALUES."""
     from grokspark.operators.audio import extract_audio_features, wav_payload_df
@@ -1918,7 +1918,7 @@ def _jpeg_oracle_rows() -> list[tuple]:
 def q_multimodal_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL baseline-JPEG decode, distributed: deterministic JPEG
     payloads (huffman-coded, mixed 4:4:4/4:2:0 subsampling) rendered
-    per row in mapInPandas and decoded with the pure-Python baseline
+    per row in one Arrow stage and decoded with the pure-Python baseline
     codec — Y-plane-exact luma stats. Oracle: the identical
     fabricate+decode run single-process, as VALUES."""
     from grokspark.operators.multimodal import (
@@ -1932,8 +1932,8 @@ def q_multimodal_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_video_frame_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL frame sampling: GSV1 video containers (PNG frames) parsed
-    distributed, every 2nd frame kept (1->N fan-out inside
-    mapInPandas), frames decoded and aggregated. Oracle: identical
+    distributed, every 2nd frame kept (1->N fan-out inside the
+    Arrow row mapper), frames decoded and aggregated. Oracle: identical
     fabricate -> stride-sample -> decode single-process, as VALUES."""
     from grokspark.operators.multimodal import (
         extract_image_features,

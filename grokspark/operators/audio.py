@@ -5,11 +5,11 @@ standard library parses natively), plus deterministic payload
 fabrication for tests/benches.
 
 Mirrors the PNG design in ``png.py``/``multimodal.py``: opaque
-``binary`` payload column, mapInPandas Arrow batching on the Spark
-side, integer-exact features so the single-process twin oracle matches
-bit-for-bit, and a loud ``NotImplementedError`` for formats the
-container genuinely cannot decode (MP3/OGG/FLAC) instead of a silent
-fake.
+``binary`` payload column, the payload-table shape and Arrow row
+mapper of ``multimodal.py`` on the Spark side, integer-exact features
+so the single-process twin oracle matches bit-for-bit, and a loud
+``NotImplementedError`` for formats the container genuinely cannot
+decode (MP3/OGG/FLAC) instead of a silent fake.
 
 Features are the standard cheap audio-quality signals a training
 pipeline filters on: duration, RMS energy, zero-crossing rate —
@@ -22,11 +22,10 @@ import hashlib
 import io
 import struct
 import wave
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+
+from grokspark.operators.multimodal import PAYLOAD_DDL, map_rows, payload_row
 
 __all__ = [
     "fake_wav",
@@ -143,83 +142,44 @@ def resample_wav(payload: bytes, factor: int) -> bytes:
     return buf.getvalue()
 
 
-# -- Spark faces (same mapInPandas batching as multimodal.py) ----------------
+# -- Spark faces (the row mapper of multimodal.py) ---------------------------
 
 
-def wav_payload_df(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """Render a deterministic WAV payload per row, DISTRIBUTED (the
-    fabrication cost scales out like a real ingest's decode would).
-    Output: (item_id, modality='audio', payload, meta)."""
-    src = df.select(
-        F.col(id_col).cast("string").alias("item_id"), F.col(text_col).alias("_t")
-    )
+def wav_payload_df(df: DataFrame) -> DataFrame:
+    """Render a deterministic WAV payload per ``(doc_id, text)`` row,
+    DISTRIBUTED (the fabrication cost scales out like a real ingest's
+    decode would). Output: the payload table (item_id,
+    modality='audio', payload, meta)."""
 
-    def render(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            payloads = [
-                fake_wav(k, t or "") for k, t in zip(b["item_id"], b["_t"])
-            ]
-            yield pd.DataFrame(
-                {
-                    "item_id": b["item_id"],
-                    "modality": "audio",
-                    "payload": payloads,
-                    "n_bytes": [len(p) for p in payloads],
-                }
-            )
+    def render(doc_id, text):
+        key = str(doc_id)
+        yield payload_row(key, "audio", "audio/wav", fake_wav(key, text or ""))
 
-    return src.mapInPandas(
-        render, "item_id string, modality string, payload binary, n_bytes long"
-    )
+    return map_rows(df.select("doc_id", "text"), render, PAYLOAD_DDL)
 
 
 def extract_audio_features(df: DataFrame) -> DataFrame:
-    """Decode + featurize audio payloads in Arrow batches. Expects
-    (item_id, modality, payload); emits AUDIO_FEATURE_SCHEMA rows."""
+    """Decode + featurize audio payloads. Expects (item_id, modality,
+    payload); emits AUDIO_FEATURE_SCHEMA rows."""
 
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = []
-            for item_id, modality, payload in zip(
-                b["item_id"], b["modality"], b["payload"]
-            ):
-                f = wav_features(payload)
-                rows.append(
-                    {
-                        "item_id": item_id,
-                        "modality": modality,
-                        "n_bytes": len(payload),
-                        "sample_rate": f["sample_rate"],
-                        "n_samples": f["n_samples"],
-                        "duration_ms": f["duration_ms"],
-                        "rms_milli": f["rms_milli"],
-                        "zero_crossings": f["zero_crossings"],
-                        "sha1": hashlib.sha1(bytes(payload)).hexdigest(),
-                    }
-                )
-            yield pd.DataFrame(rows)
+    def extract(item_id, modality, payload):
+        f = wav_features(payload)
+        yield (
+            item_id, modality, len(payload), f["sample_rate"], f["n_samples"],
+            f["duration_ms"], f["rms_milli"], f["zero_crossings"],
+            hashlib.sha1(payload).hexdigest(),
+        )
 
-    return df.mapInPandas(extract, AUDIO_FEATURE_SCHEMA)
+    return map_rows(
+        df.select("item_id", "modality", "payload"), extract, AUDIO_FEATURE_SCHEMA
+    )
 
 
 def resample_audio(df: DataFrame, factor: int) -> DataFrame:
     """Distributed decimation resample: payload -> smaller payload
-    (+ the new byte size), same batching."""
+    (``meta`` carries the new byte size)."""
 
-    def resample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            out = [resample_wav(p, factor) for p in b["payload"]]
-            yield pd.DataFrame(
-                {
-                    "item_id": b["item_id"],
-                    "modality": b["modality"],
-                    "payload": out,
-                    "n_bytes": [len(p) for p in out],
-                }
-            )
+    def resample(item_id, modality, payload):
+        yield payload_row(item_id, modality, "audio/wav", resample_wav(payload, factor))
 
-    return df.select("item_id", "modality", "payload").mapInPandas(
-        resample, "item_id string, modality string, payload binary, n_bytes long"
-    )
+    return map_rows(df.select("item_id", "modality", "payload"), resample, PAYLOAD_DDL)

@@ -38,7 +38,7 @@ and tests.
 from __future__ import annotations
 
 import re
-from typing import Iterable, Optional
+from typing import Callable, Optional
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -54,6 +54,7 @@ __all__ = [
     "apply_bpe",
     "apply_bpe_py",
     "apply_bpe_ids",
+    "bpe_ids_encoder",
     "bpe_vocab",
     "word_counts_df",
     "EOW",
@@ -173,6 +174,26 @@ def apply_bpe_py(
             memo[w] = encode_word(w, ranks)
         out.extend(memo[w])
     return out
+
+
+def bpe_ids_encoder(
+    merges: list[tuple[str, str]], vocab: dict[str, int]
+) -> Callable[[Optional[str]], list[int]]:
+    """Text -> BPE token ids via ``vocab`` (pieces outside it map to
+    ``<unk>`` = 0), memoized per distinct word. The memo lives as long
+    as the returned function, so make one per Arrow batch or group."""
+    ranks = {p: i for i, p in enumerate(merges)}
+    memo: dict[str, list[int]] = {}
+
+    def ids_of(text: Optional[str]) -> list[int]:
+        out: list[int] = []
+        for w in pretokenize(text):
+            if w not in memo:
+                memo[w] = [vocab.get(s, 0) for s in encode_word(w, ranks)]
+            out.extend(memo[w])
+        return out
+
+    return ids_of
 
 
 def bpe_vocab(
@@ -296,19 +317,8 @@ def apply_bpe_ids(
 
     @pandas_udf(T.ArrayType(T.IntegerType()))
     def bpe_ids(texts):
-        ranks = {p: i for i, p in enumerate(merges_local)}
-        memo: dict[str, list[int]] = {}
-        out = []
-        for t in texts:
-            ids: list[int] = []
-            for w in pretokenize(t):
-                if w not in memo:
-                    memo[w] = [
-                        vocab_local.get(s, 0) for s in encode_word(w, ranks)
-                    ]
-                ids.extend(memo[w])
-            out.append(ids)
-        return pd.Series(out)
+        ids_of = bpe_ids_encoder(merges_local, vocab_local)
+        return pd.Series([ids_of(t) for t in texts])
 
     return spread(df, SPREAD_MIN_BYTES).withColumn(
         out_col, bpe_ids(F.col(text_col))

@@ -38,6 +38,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from grokspark.operators.bpe import (
+    bpe_ids_encoder,
     bpe_vocab,
     cap_word_counts,
     encode_word,
@@ -140,19 +141,7 @@ def prepare_corpus(
     vocab_local = dict(vocab)
 
     def pack(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        ranks = {p: i for i, p in enumerate(merges_local)}
-        memo: dict[str, list[int]] = {}
-
-        def ids_of(t) -> list[int]:
-            out: list[int] = []
-            for w in pretokenize(t):
-                if w not in memo:
-                    memo[w] = [
-                        vocab_local.get(s, 0) for s in encode_word(w, ranks)
-                    ]
-                out.extend(memo[w])
-            return out
-
+        ids_of = bpe_ids_encoder(merges_local, vocab_local)
         split = pdf["split"].iloc[0]
         bucket = int(pdf["bucket"].iloc[0])
         packs = pack_sequences_py(
@@ -257,17 +246,6 @@ def _norm_fp_py(text: str) -> str:
     ).hexdigest()
 
 
-def _ngrams_py(text: str, n: int) -> list[str]:
-    """Mirror of dedup.ngrams (distinct, first-seen order irrelevant —
-    used as a set)."""
-    w = _WS.split(text.strip().lower())
-    if len(w) >= n:
-        grams = [" ".join(w[i : i + n]) for i in range(len(w) - n + 1)]
-    else:
-        grams = [" ".join(w)]
-    return list(dict.fromkeys(grams))
-
-
 def _dedup_keep_py(docs: list[tuple[int, str]], threshold: float, n: int) -> set:
     """Mirror of dedup.dedup_corpus' keep set: exact collapse ->
     exact-Jaccard pairs over representatives (the LSH output at
@@ -280,7 +258,7 @@ def _dedup_keep_py(docs: list[tuple[int, str]], threshold: float, n: int) -> set
             reps[fp] = i
     rep_ids = set(reps.values())
     rep_docs = [(i, t) for i, t in docs if i in rep_ids]
-    grams = {i: set(_ngrams_py(t, n)) for i, t in rep_docs}
+    grams = {i: _grams_py(t, n) for i, t in rep_docs}
     ids = sorted(grams)
     parent = {i: i for i in ids}
 

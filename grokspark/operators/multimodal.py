@@ -1,5 +1,7 @@
 """Multimodal column plumbing: opaque binary payloads + typed metadata,
-processed in Arrow batches via mapInPandas.
+processed by one Arrow row mapper (``map_rows``, one mapInArrow stage)
+that every media operator here and in ``grokspark.operators.audio``
+runs on.
 
 PNG payloads get a REAL decode — the pure-stdlib zlib+struct codec in
 ``grokspark.operators.png`` (width/height/integer-exact luma) —
@@ -10,18 +12,22 @@ REAL decode via the stdlib ``wave`` codec (see
 ``grokspark.operators.audio``). Remaining image formats need codecs
 this container lacks, so they raise NotImplementedError.
 
-Payload-table shape: (item_id string, modality string, payload binary,
-meta struct<mime:string, n_bytes:long>).
+Every payload table, image, video and audio alike, has one shape,
+``PAYLOAD_DDL``: (item_id string, modality string, payload binary,
+meta struct<mime:string, n_bytes:bigint>); ``payload_row`` builds its
+rows. Sampled video frames add ``video_id`` and ``frame_idx`` after
+``item_id``.
 """
 
 from __future__ import annotations
 
 import hashlib
-from typing import Iterator
+from collections.abc import Callable, Iterable
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 from grokspark.operators.jpeg import JPEG_MAGIC, fake_jpeg, jpeg_features
 from grokspark.operators.png import (
@@ -43,10 +49,41 @@ __all__ = [
     "sample_video_frames",
 ]
 
+_PAYLOAD_COLS = (
+    "modality string, payload binary, meta struct<mime: string, n_bytes: bigint>"
+)
+PAYLOAD_DDL = "item_id string, " + _PAYLOAD_COLS
+
 FEATURE_SCHEMA = (
     "item_id string, modality string, n_bytes long, "
     "width int, height int, mean_luma double, luma_milli long, sha1 string"
 )
+
+
+def payload_row(item_id: str, modality: str, mime: str, payload: bytes) -> tuple:
+    """One ``PAYLOAD_DDL`` row; ``meta.n_bytes`` is the payload's size."""
+    return (item_id, modality, payload, {"mime": mime, "n_bytes": len(payload)})
+
+
+def map_rows(
+    df: DataFrame, fn: Callable[..., Iterable[tuple]], ddl: str
+) -> DataFrame:
+    """Run ``fn(*row)`` over every row of ``df`` in one mapInArrow
+    stage; ``fn`` yields the output tuples (``ddl`` column order) of
+    one input row, so a row may map to zero, one or many rows. Each
+    Arrow batch (bounded by spark.sql.execution.arrow.maxRecordsPerBatch)
+    crosses into Python once per column (``to_pylist``) and back once
+    (``RecordBatch.from_pylist``)."""
+    schema = to_arrow_schema(StructType.fromDDL(ddl))
+    names = schema.names
+
+    def run(batches: Iterable[pa.RecordBatch]) -> Iterable[pa.RecordBatch]:
+        for batch in batches:
+            cols = [c.to_pylist() for c in batch.columns]
+            rows = [dict(zip(names, out)) for row in zip(*cols) for out in fn(*row)]
+            yield pa.RecordBatch.from_pylist(rows, schema=schema)
+
+    return df.mapInArrow(run, ddl)
 
 
 def decode_image(payload: bytes) -> dict:
@@ -68,30 +105,20 @@ def decode_image(payload: bytes) -> dict:
 
 
 def extract_image_features(df: DataFrame) -> DataFrame:
-    """mapInPandas feature extraction over binary payloads.
+    """Feature extraction over a payload table's ``(item_id, modality,
+    payload)``: one ``decode_image`` per row — the pattern a real codec
+    plugs into. Emits ``FEATURE_SCHEMA`` rows."""
 
-    Batches arrive as Arrow record batches (bounded by
-    spark.sql.execution.arrow.maxRecordsPerBatch); each batch is decoded
-    in one Python call — the pattern a real codec plugs into."""
+    def extract(item_id, modality, payload):
+        f = decode_image(payload)
+        yield (
+            item_id, modality, len(payload), f["width"], f["height"],
+            f["mean_luma"], f["luma_milli"], hashlib.sha1(payload).hexdigest(),
+        )
 
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = [decode_image(p) for p in pdf["payload"]]
-            out = pd.DataFrame(
-                {
-                    "item_id": pdf["item_id"].values,
-                    "modality": pdf["modality"].values,
-                    "n_bytes": [len(p) for p in pdf["payload"]],
-                    "width": [f["width"] for f in feats],
-                    "height": [f["height"] for f in feats],
-                    "mean_luma": [f["mean_luma"] for f in feats],
-                    "luma_milli": [f["luma_milli"] for f in feats],
-                    "sha1": [hashlib.sha1(p).hexdigest() for p in pdf["payload"]],
-                }
-            )
-            yield out
-
-    return df.mapInPandas(extract, schema=FEATURE_SCHEMA)
+    return map_rows(
+        df.select("item_id", "modality", "payload"), extract, FEATURE_SCHEMA
+    )
 
 
 def resize_images(df: DataFrame, max_dim: int) -> DataFrame:
@@ -103,172 +130,78 @@ def resize_images(df: DataFrame, max_dim: int) -> DataFrame:
     ``extract_image_features`` directly. Non-PNG payloads raise (the
     codec gap is loud, never silent)."""
 
-    def resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            thumbs = [thumbnail_png(bytes(p), max_dim) for p in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    "item_id": pdf["item_id"].values,
-                    "modality": pdf["modality"].values,
-                    "payload": thumbs,
-                    "mime": "image/png",
-                    "n_bytes": [len(p) for p in thumbs],
-                }
-            )
+    def resize(item_id, modality, payload):
+        thumb = thumbnail_png(payload, max_dim)
+        yield payload_row(item_id, modality, "image/png", thumb)
 
-    flat = df.select("item_id", "modality", "payload").mapInPandas(
-        resize,
-        schema="item_id string, modality string, payload binary, mime string, n_bytes long",
-    )
-    return flat.select(
-        "item_id", "modality", "payload", F.struct("mime", "n_bytes").alias("meta")
-    )
+    return map_rows(df.select("item_id", "modality", "payload"), resize, PAYLOAD_DDL)
 
 
-def video_payload_df(
-    df: DataFrame, n_frames: int = 4, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """Deterministic video payload table from a text table: each row
-    becomes a GSV1 container of ``n_frames`` PNG frames (see
-    grokspark.operators.png — a real, decodable container; only the
-    per-frame codec is PNG because this environment has no video
-    codecs). Rendered distributed in mapInPandas."""
+def video_payload_df(df: DataFrame, n_frames: int = 4) -> DataFrame:
+    """Deterministic video payload table from a ``(doc_id, text)``
+    table: each row becomes a GSV1 container of ``n_frames`` PNG frames
+    (see grokspark.operators.png — a real, decodable container; only
+    the per-frame codec is PNG because this environment has no video
+    codecs). Rendered distributed."""
 
-    def render(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = [
-                fake_video(str(i), t if t is not None else "", n_frames)
-                for i, t in zip(pdf[id_col], pdf[text_col])
-            ]
-            yield pd.DataFrame(
-                {
-                    "item_id": pdf[id_col].astype(str).values,
-                    "modality": "video",
-                    "payload": payloads,
-                    "mime": "video/x-gsv1",
-                    "n_bytes": [len(p) for p in payloads],
-                }
-            )
+    def render(doc_id, text):
+        key = str(doc_id)
+        video = fake_video(key, text or "", n_frames)
+        yield payload_row(key, "video", "video/x-gsv1", video)
 
-    flat = df.select(id_col, text_col).mapInPandas(
-        render,
-        schema="item_id string, modality string, payload binary, mime string, n_bytes long",
-    )
-    return flat.select(
-        "item_id", "modality", "payload", F.struct("mime", "n_bytes").alias("meta")
-    )
+    return map_rows(df.select("doc_id", "text"), render, PAYLOAD_DDL)
 
 
 def sample_video_frames(df: DataFrame, stride: int = 1) -> DataFrame:
     """REAL frame sampling: parse each GSV1 video payload, keep every
     ``stride``-th frame (indices 0, stride, 2*stride, ...), and emit
-    one IMAGE-payload row per kept frame — the 1->N row fan-out a
-    frame-level training pipeline needs, done inside mapInPandas (an
-    output batch may hold frames of many inputs; Arrow batch sizing
-    caps memory). The result composes with ``extract_image_features``
-    / ``resize_images`` unchanged."""
+    one IMAGE-payload row per kept frame, ``item_id`` =
+    ``<video_id>#<frame_idx>`` — the 1->N row fan-out a frame-level
+    training pipeline needs (an output batch may hold frames of many
+    inputs; Arrow batch sizing caps memory). The result composes with
+    ``extract_image_features`` / ``resize_images`` unchanged."""
     if stride < 1:
         raise ValueError(f"stride must be >= 1, got {stride}")
 
-    def sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for item_id, payload in zip(pdf["item_id"], pdf["payload"]):
-                frames = decode_video(bytes(payload))
-                for idx in range(0, len(frames), stride):
-                    rows.append((item_id, idx, frames[idx], len(frames[idx])))
-            yield pd.DataFrame(
-                rows, columns=["item_id", "frame_idx", "payload", "n_bytes"]
+    def sample(video_id, payload):
+        frames = decode_video(payload)
+        for idx in range(0, len(frames), stride):
+            item_id, *rest = payload_row(
+                f"{video_id}#{idx}", "image", "image/png", frames[idx]
             )
+            yield (item_id, video_id, idx, *rest)
 
-    flat = df.select("item_id", "payload").mapInPandas(
+    return map_rows(
+        df.select("item_id", "payload"),
         sample,
-        schema="item_id string, frame_idx int, payload binary, n_bytes long",
-    )
-    return flat.select(
-        F.concat_ws("#", "item_id", F.col("frame_idx").cast("string")).alias(
-            "item_id"
-        ),
-        F.col("item_id").alias("video_id"),
-        "frame_idx",
-        F.lit("image").alias("modality"),
-        "payload",
-        F.struct(
-            F.lit("image/png").alias("mime"), F.col("n_bytes").alias("n_bytes")
-        ).alias("meta"),
+        "item_id string, video_id string, frame_idx int, " + _PAYLOAD_COLS,
     )
 
 
-def jpeg_payload_df(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """Deterministic REAL-JPEG payload table from a text table — the
-    JPEG twin of ``png_payload_df``. Every other row (by a pure
-    function of the id digest, so partition-independent) is encoded
-    4:2:0 instead of 4:4:4, exercising both subsampling paths of the
-    decoder in the distributed gate."""
+def jpeg_payload_df(df: DataFrame) -> DataFrame:
+    """Deterministic REAL-JPEG payload table from a ``(doc_id, text)``
+    table — the JPEG twin of ``png_payload_df``. Every other row (by a
+    pure function of the id digest, so partition-independent) is
+    encoded 4:2:0 instead of 4:4:4, exercising both subsampling paths
+    of the decoder in the distributed gate."""
 
-    def render(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = [
-                fake_jpeg(
-                    str(i),
-                    t if t is not None else "",
-                    subsample_420=hashlib.sha256(str(i).encode()).digest()[2] % 2 == 0,
-                )
-                for i, t in zip(pdf[id_col], pdf[text_col])
-            ]
-            yield pd.DataFrame(
-                {
-                    "item_id": pdf[id_col].astype(str).values,
-                    "modality": "image",
-                    "payload": payloads,
-                    "mime": "image/jpeg",
-                    "n_bytes": [len(p) for p in payloads],
-                }
-            )
+    def render(doc_id, text):
+        key = str(doc_id)
+        sub = hashlib.sha256(key.encode()).digest()[2] % 2 == 0
+        jpeg = fake_jpeg(key, text or "", subsample_420=sub)
+        yield payload_row(key, "image", "image/jpeg", jpeg)
 
-    flat = df.select(id_col, text_col).mapInPandas(
-        render,
-        schema="item_id string, modality string, payload binary, mime string, n_bytes long",
-    )
-    return flat.select(
-        "item_id",
-        "modality",
-        "payload",
-        F.struct("mime", "n_bytes").alias("meta"),
-    )
+    return map_rows(df.select("doc_id", "text"), render, PAYLOAD_DDL)
 
 
-def png_payload_df(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Deterministic REAL-PNG payload table from a text table: each row
-    becomes a small RGB PNG whose dimensions/pixels are a pure function
-    of (id, text). Rendered distributed in mapInPandas — the shape a
+def png_payload_df(df: DataFrame) -> DataFrame:
+    """Deterministic REAL-PNG payload table from a ``(doc_id, text)``
+    table: each row becomes a small RGB PNG whose dimensions/pixels are
+    a pure function of (id, text). Rendered distributed — the shape a
     real media-ingest stage has (binary column + typed metadata)."""
 
-    def render(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = [
-                fake_png(str(i), t if t is not None else "")
-                for i, t in zip(pdf[id_col], pdf[text_col])
-            ]
-            yield pd.DataFrame(
-                {
-                    "item_id": pdf[id_col].astype(str).values,
-                    "modality": "image",
-                    "payload": payloads,
-                    "mime": "image/png",
-                    "n_bytes": [len(p) for p in payloads],
-                }
-            )
+    def render(doc_id, text):
+        key = str(doc_id)
+        yield payload_row(key, "image", "image/png", fake_png(key, text or ""))
 
-    flat = df.select(id_col, text_col).mapInPandas(
-        render,
-        schema="item_id string, modality string, payload binary, mime string, n_bytes long",
-    )
-    return flat.select(
-        "item_id",
-        "modality",
-        "payload",
-        F.struct("mime", "n_bytes").alias("meta"),
-    )
+    return map_rows(df.select("doc_id", "text"), render, PAYLOAD_DDL)

@@ -197,7 +197,6 @@ def route_match_counts(
     spark: SparkSession,
     seq_df: DataFrame,
     registry: Optional[GrokRegistry] = None,
-    salt_buckets: Optional[int] = None,
 ) -> DataFrame:
     """Transform-only composition of the pipeline: enrich + parse all
     routed sources and return per-(route, matched) counts, in no
@@ -219,11 +218,10 @@ def route_match_counts(
     bridge would materialize a numpy array per row, which costs more
     than the regex match itself — measured +20% end-to-end). Only
     per-partition ``(route, matched, n)`` counts come back; no per-row
-    output crosses Python->JVM. No pre-parse shuffle by default — the
-    scan splitter balances bytes per task; pass ``salt_buckets`` to
-    force a salted repartition (into ``defaultParallelism`` partitions)
-    for file-clustered pathological skew (costs a row->Arrow
-    conversion, see module docstring)."""
+    output crosses Python->JVM. No pre-parse shuffle — the scan
+    splitter balances bytes per task (``PipelineConfig.salt_buckets``
+    is the salted repartition for file-clustered skew, see module
+    docstring)."""
     from grokspark.udfs import grok_parse_arrow_kernel
 
     registry = registry or GrokRegistry.with_default_patterns()
@@ -236,12 +234,6 @@ def route_match_counts(
         name: registry.compile(expr, with_alias_only=True)
         for name, expr in datagen.pattern_exprs().items()
     }
-    if salt_buckets:
-        enriched = enriched.repartition(
-            spark.sparkContext.defaultParallelism,
-            F.col("source"),
-            F.pmod(F.xxhash64("doc_id"), F.lit(salt_buckets)),
-        )
     kernel, ddl = grok_parse_arrow_kernel(compiled_by_name)
     return (
         enriched.select("route", "pattern_name", "tokens")

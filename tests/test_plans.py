@@ -174,14 +174,31 @@ def test_grok_text_corpus_is_local(spark):
     assert "LogicalRDD" not in plan and "ExistingRDD" not in plan, plan
 
 
-def test_route_counts_with_salt_adds_exactly_one_exchange(spark):
-    import __spark_entry__ as entry
-    from grokspark.pipeline import route_match_counts
+def test_pipeline_salt_buckets_adds_exactly_one_exchange(spark, tmp_path, monkeypatch):
+    """``PipelineConfig.salt_buckets`` (the CLI's ``--salt-buckets``)
+    puts exactly one exchange, the salted repartition, in front of a
+    unit's parse."""
+    from grokspark.datagen import iter_rows
+    from grokspark.pipeline import GrokPipeline, PipelineConfig
 
-    seq = entry._grok_seq_df(spark)
-    plain = explain_str(route_match_counts(spark, seq), "simple")
-    salted = explain_str(route_match_counts(spark, seq, salt_buckets=16), "simple")
+    seen = []
+    real_parse = GrokPipeline._parse
+    monkeypatch.setattr(
+        GrokPipeline,
+        "_parse",
+        lambda self, enriched, *a: real_parse(
+            self, seen.append(enriched) or enriched, *a
+        ),
+    )
+    seq = spark.createDataFrame(
+        list(iter_rows(50)), "doc_id string, tokens array<int>, n_tok int, source string"
+    )
+    for name, salt in (("plain", None), ("salted", 16)):
+        cfg = PipelineConfig(out_dir=str(tmp_path / name), salt_buckets=salt)
+        GrokPipeline(spark, cfg).run(seq)
+    plain, salted = (explain_str(df, "simple") for df in seen)
     assert salted.count("Exchange") == plain.count("Exchange") + 1
+    assert "xxhash64(doc_id" in salted and "xxhash64" not in plain
 
 
 def test_agg_uses_whole_stage_codegen(spark, sf_dir):
