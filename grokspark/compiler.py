@@ -356,6 +356,16 @@ def _engine_compile(regex_src: str, aliases: dict[str, str]) -> _EnginePattern:
     return engine
 
 
+def _validate_timeout(timeout: Optional[float]) -> Optional[float]:
+    """The one timeout rule of every search and kernel factory, so
+    ``timeout=0`` cannot mean 'no timeout' on one path and 'instant
+    TimeoutError' on another — positive seconds or None, no third
+    meaning."""
+    if timeout is not None and timeout <= 0:
+        raise ValueError(f"timeout must be positive seconds or None, got {timeout}")
+    return timeout
+
+
 class Matches(dict):
     """The reference's ``Matches`` view (/root/reference/src/lib.rs:115):
     a plain dict of participating captures (sorted key order) that also
@@ -418,11 +428,7 @@ class CompiledPattern:
         """Raw engine search (leftmost, unanchored). Returns a regex
         match object or None. A timeout routes through the reference
         ``regex`` engine (sre has no per-call timeout)."""
-        if timeout is not None:
-            if timeout <= 0:
-                raise ValueError(
-                    f"timeout must be positive seconds or None, got {timeout}"
-                )
+        if _validate_timeout(timeout) is not None:
             return self.engine.timeout_pattern().search(text, timeout=timeout)
         return self.engine.pattern.search(text)
 

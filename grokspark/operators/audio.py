@@ -25,7 +25,12 @@ import wave
 
 from pyspark.sql import DataFrame
 
-from grokspark.operators.multimodal import PAYLOAD_DDL, map_rows, payload_row
+from grokspark.operators.multimodal import (
+    PAYLOAD_DDL,
+    map_rows,
+    payload_row,
+    render_payloads,
+)
 
 __all__ = [
     "fake_wav",
@@ -150,12 +155,7 @@ def wav_payload_df(df: DataFrame) -> DataFrame:
     DISTRIBUTED (the fabrication cost scales out like a real ingest's
     decode would). Output: the payload table (item_id,
     modality='audio', payload, meta)."""
-
-    def render(doc_id, text):
-        key = str(doc_id)
-        yield payload_row(key, "audio", "audio/wav", fake_wav(key, text or ""))
-
-    return map_rows(df.select("doc_id", "text"), render, PAYLOAD_DDL)
+    return render_payloads(df, "audio", "audio/wav", fake_wav)
 
 
 def extract_audio_features(df: DataFrame) -> DataFrame:

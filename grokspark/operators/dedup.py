@@ -869,12 +869,17 @@ def _semdedup_cells(
     )
 
 
-def semdedup_recommended_cells(n_rows: int, target_cell_rows: int = 512) -> int:
-    """Centroid count that keeps expected cell size ~constant — the
-    SemDeDup scale rule (the paper's k ~ 100k on LAION-5B is exactly
-    n/target): per-cell similarity work is quadratic in cell size, so
-    k must grow WITH the corpus, never stay fixed."""
-    return max(8, int(round(n_rows / max(1, target_cell_rows))))
+# expected rows per SemDeDup cell, centroid or sign-LSH alike
+SEMDEDUP_CELL_ROWS = 512
+
+
+def semdedup_recommended_cells(n_rows: int) -> int:
+    """Centroid count that keeps expected cell size ~constant
+    (``SEMDEDUP_CELL_ROWS``) — the SemDeDup scale rule (the paper's
+    k ~ 100k on LAION-5B is exactly n/target): per-cell similarity work
+    is quadratic in cell size, so k must grow WITH the corpus, never
+    stay fixed."""
+    return max(8, int(round(n_rows / SEMDEDUP_CELL_ROWS)))
 
 
 def semdedup(
@@ -953,7 +958,6 @@ def semdedup_lsh(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     seed: int = 42,
-    target_cell_rows: int = 512,
     dim: Optional[int] = None,
 ) -> DataFrame:
     """SemDeDup with SIGN-LSH cells instead of centroid cells — the
@@ -969,7 +973,7 @@ def semdedup_lsh(
     methods by design — the paper's accepted approximation); a NULL
     vector lands in bucket 0, as with ``lsh_bucket_col``. Buckets
     are less balanced than trained cells; auto-sizing targets
-    ``target_cell_rows`` expected rows per bucket."""
+    ``SEMDEDUP_CELL_ROWS`` expected rows per bucket."""
     from grokspark.operators.similarity import (
         _bucketed_vectors,
         _resolve_n_planes,
@@ -978,7 +982,7 @@ def semdedup_lsh(
     )
 
     n_planes = _resolve_n_planes(
-        df, n_planes, "semdedup_lsh", target_bucket_rows=target_cell_rows
+        df, n_planes, "semdedup_lsh", target_bucket_rows=SEMDEDUP_CELL_ROWS
     )
     if dim is None:
         # callers that know the width pass ``dim`` and skip this probe job

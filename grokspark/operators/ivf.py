@@ -1,13 +1,17 @@
-"""IVF-flat approximate-nearest-neighbor: coarse-quantizer partitioned
-index + pruned probe scans.
+"""IVF-flat approximate-nearest-neighbor: the coarse-quantizer face of
+the cell index in ``grokspark.operators.similarity``.
 
-The materialized sign-LSH index (similarity.py) buckets by hyperplane
-signs — data-independent, cheap, but bucket populations follow the data
-distribution blindly. IVF ("inverted file") buckets by NEAREST COARSE
-CENTROID instead: k centroids partition the space adaptively, a query
-probes only the ``nprobe`` nearest centroids' partitions, and recall/
-cost is tuned by (k, nprobe) — the standard large-scale ANN layout
-(FAISS IVF-Flat re-expressed as parquet/Iceberg partitioning).
+The sign-LSH face there buckets by hyperplane signs — data-independent,
+cheap, but bucket populations follow the data distribution blindly.
+IVF ("inverted file") buckets by NEAREST COARSE CENTROID instead: k
+centroids partition the space adaptively, a query probes only the
+``nprobe`` nearest centroids' partitions, and recall/cost is tuned by
+(k, nprobe) — the standard large-scale ANN layout (FAISS IVF-Flat
+re-expressed as parquet/Iceberg partitioning). Both faces share the
+index's dot fold (``_dot_col``/``_fold_dot``), its partitioned writer
+(``_write_cell_index``, cell column ``_centroid`` here) and its exact
+cosine top-k (``ann_brute_force_topk`` over the probed rows); only the
+cell rule and the probe rule are IVF's own.
 
 Centroids come from either:
 
@@ -17,30 +21,36 @@ Centroids come from either:
   ones) — what the driver oracle uses, so DuckDB can recompute the
   exact assignment rule from the same literals.
 
-Assignment parity across engines: per-centroid scores are sequential
-left-to-right double dot products (same fold as ``F.aggregate`` and
-DuckDB's list_dot_product — bit-identical), and argmax ties break to
-the first index in both engines, so Spark and the SQL oracle agree
-bit-for-bit, same as the sign-LSH margin argument (CLAUDE.md).
+Assignment parity across engines: per-centroid scores are the cell
+index's sequential left-to-right double dot products (the same fold on
+the JVM, the driver and in DuckDB's list_dot_product — bit-identical),
+and argmax ties break to the first index in both engines, so Spark and
+the SQL oracle agree bit-for-bit, same as the sign-LSH margin argument
+(CLAUDE.md).
 
 Scale shape: the index build shuffles once (repartition by centroid) so
 each coarse cell is one file run; a probe reads only nprobe of k
 partitions — real PartitionFilters pruning, asserted on EXECUTED scan
 metrics in tests, not explain text. Keep expected cell population
 bounded by growing k with the corpus (same occupancy math as
-``recommended_n_planes``: k ~ n_rows / target_cell_rows; FAISS practice
+``recommended_n_planes``: k ~ n_rows / target cell rows; FAISS practice
 is k ~ sqrt(n_rows)).
 """
 
 from __future__ import annotations
 
 import random
-from typing import Optional, Sequence
+from typing import Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from grokspark.operators.dedup import cosine
+from grokspark.operators.similarity import (
+    _dot_col,
+    _fold_dot,
+    _write_cell_index,
+    ann_brute_force_topk,
+)
 
 __all__ = [
     "seeded_centroids",
@@ -80,34 +90,18 @@ def train_ivf_centroids(
     return [list(map(float, c)) for c in model.clusterCenters()]
 
 
-def _dot(vec_col: str, centroid: Sequence[float]) -> Column:
-    clit = F.array(*[F.lit(float(x)) for x in centroid])
-    return F.aggregate(
-        F.zip_with(F.col(vec_col), clit, lambda x, y: x.cast("double") * y),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
 def ivf_assign_col(vec_col: str, centroids: list[list[float]]) -> Column:
     """Coarse-cell id (0..k-1) of a vector column: argmax dot product,
     first index on ties — pure built-ins, bit-reproducible vs
     ``ivf_assign_of`` and the DuckDB oracle."""
-    dots = F.array(*[_dot(vec_col, c) for c in centroids])
+    dots = F.array(*[_dot_col(vec_col, c) for c in centroids])
     return (F.array_position(dots, F.array_max(dots)) - 1).cast("int")
 
 
 def ivf_assign_of(vec: Sequence[float], centroids: list[list[float]]) -> int:
-    """Driver-side twin of ``ivf_assign_col`` (same sequential fold,
-    same first-index tie break)."""
-    best_i, best = 0, None
-    for i, c in enumerate(centroids):
-        acc = 0.0
-        for x, y in zip(vec, c):
-            acc += float(x) * y
-        if best is None or acc > best:
-            best_i, best = i, acc
-    return best_i
+    """Driver-side twin of ``ivf_assign_col``: the single nearest
+    probe (same fold, same first-index tie break)."""
+    return ivf_probes(vec, centroids, 1)[0]
 
 
 def ivf_probes(
@@ -116,14 +110,9 @@ def ivf_probes(
     """The ``nprobe`` centroid ids nearest the query by dot product
     (descending; index ascending on ties — same sequential fold as the
     assignment), sorted for stable plans."""
-
-    def dot(c):
-        acc = 0.0
-        for x, y in zip(query, c):
-            acc += float(x) * y
-        return acc
-
-    ranked = sorted(((dot(c), -i) for i, c in enumerate(centroids)), reverse=True)
+    ranked = sorted(
+        ((_fold_dot(query, c), -i) for i, c in enumerate(centroids)), reverse=True
+    )
     return sorted(-neg_i for _score, neg_i in ranked[:nprobe])
 
 
@@ -132,19 +121,11 @@ def build_ivf_index(
     index_path: str,
     centroids: list[list[float]],
     vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> None:
-    """Materialize ``df`` as parquet PARTITIONED BY its coarse cell
-    (``_centroid``). One shuffle clusters rows per cell, so each probe
-    later reads a single file run; on a real lake this is an Iceberg
-    table partitioned by the cell id."""
-    (
-        df.withColumn("_centroid", ivf_assign_col(vec_col, centroids))
-        .repartition(F.col("_centroid"))
-        .write.mode("overwrite")
-        .partitionBy("_centroid")
-        .parquet(index_path)
-    )
+    """Materialize ``df`` as the IVF cell index: parquet PARTITIONED BY
+    its coarse cell ``_centroid`` (``_write_cell_index``); on a real
+    lake this is an Iceberg table partitioned by the cell id."""
+    _write_cell_index(df, index_path, "_centroid", ivf_assign_col(vec_col, centroids))
 
 
 def ivf_topk(
@@ -162,13 +143,5 @@ def ivf_topk(
     the top k (ties broken by id). ``nprobe=k_cells`` degrades to
     exact search."""
     probes = ivf_probes(query, centroids, nprobe)
-    candidates = spark.read.parquet(index_path).filter(
-        F.col("_centroid").isin(probes)
-    )
-    qlit = F.array(*[F.lit(float(x)) for x in query])
-    return (
-        candidates.withColumn("score", cosine(F.col(vec_col), qlit))
-        .select(id_col, "score")
-        .orderBy(F.col("score").desc(), F.col(id_col).asc())
-        .limit(k)
-    )
+    candidates = spark.read.parquet(index_path).filter(F.col("_centroid").isin(probes))
+    return ann_brute_force_topk(candidates, query, k, vec_col, id_col)

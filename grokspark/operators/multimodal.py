@@ -16,13 +16,19 @@ Every payload table, image, video and audio alike, has one shape,
 ``PAYLOAD_DDL``: (item_id string, modality string, payload binary,
 meta struct<mime:string, n_bytes:bigint>); ``payload_row`` builds its
 rows. Sampled video frames add ``video_id`` and ``frame_idx`` after
-``item_id``.
+``item_id``. The renderers, which fabricate payload tables from
+``(doc_id, text)`` rows, run on one stage (``render_payloads``) with one
+NULL rule: NULL in, NULL out. A NULL ``doc_id`` gives a NULL
+``item_id`` (and a sampled frame of a NULL ``video_id`` a NULL
+``item_id`` too); payloads are keyed on ``""`` for a NULL id and
+rendered from ``""`` for a NULL text.
 """
 
 from __future__ import annotations
 
 import hashlib
 from collections.abc import Callable, Iterable
+from typing import Optional
 
 import pyarrow as pa
 from pyspark.sql import DataFrame
@@ -60,7 +66,9 @@ FEATURE_SCHEMA = (
 )
 
 
-def payload_row(item_id: str, modality: str, mime: str, payload: bytes) -> tuple:
+def payload_row(
+    item_id: Optional[str], modality: str, mime: str, payload: bytes
+) -> tuple:
     """One ``PAYLOAD_DDL`` row; ``meta.n_bytes`` is the payload's size."""
     return (item_id, modality, payload, {"mime": mime, "n_bytes": len(payload)})
 
@@ -84,6 +92,22 @@ def map_rows(
             yield pa.RecordBatch.from_pylist(rows, schema=schema)
 
     return df.mapInArrow(run, ddl)
+
+
+def render_payloads(
+    df: DataFrame, modality: str, mime: str, make: Callable[[str, str], bytes]
+) -> DataFrame:
+    """The payload table of a ``(doc_id, text)`` table, one row per
+    input row with payload ``make(key, text)``: ``key`` is
+    ``str(doc_id)``, or ``""`` for a NULL id (whose ``item_id`` stays
+    NULL), and a NULL text renders as ``""``."""
+
+    def render(doc_id, text):
+        key = "" if doc_id is None else str(doc_id)
+        item_id = None if doc_id is None else key
+        yield payload_row(item_id, modality, mime, make(key, text or ""))
+
+    return map_rows(df.select("doc_id", "text"), render, PAYLOAD_DDL)
 
 
 def decode_image(payload: bytes) -> dict:
@@ -143,33 +167,29 @@ def video_payload_df(df: DataFrame, n_frames: int = 4) -> DataFrame:
     (see grokspark.operators.png — a real, decodable container; only
     the per-frame codec is PNG because this environment has no video
     codecs). Rendered distributed."""
-
-    def render(doc_id, text):
-        key = str(doc_id)
-        video = fake_video(key, text or "", n_frames)
-        yield payload_row(key, "video", "video/x-gsv1", video)
-
-    return map_rows(df.select("doc_id", "text"), render, PAYLOAD_DDL)
+    return render_payloads(
+        df, "video", "video/x-gsv1", lambda key, text: fake_video(key, text, n_frames)
+    )
 
 
 def sample_video_frames(df: DataFrame, stride: int = 1) -> DataFrame:
     """REAL frame sampling: parse each GSV1 video payload, keep every
     ``stride``-th frame (indices 0, stride, 2*stride, ...), and emit
     one IMAGE-payload row per kept frame, ``item_id`` =
-    ``<video_id>#<frame_idx>`` — the 1->N row fan-out a frame-level
-    training pipeline needs (an output batch may hold frames of many
-    inputs; Arrow batch sizing caps memory). The result composes with
-    ``extract_image_features`` / ``resize_images`` unchanged."""
+    ``<video_id>#<frame_idx>`` (NULL for a NULL ``video_id``) — the
+    1->N row fan-out a frame-level training pipeline needs (an output
+    batch may hold frames of many inputs; Arrow batch sizing caps
+    memory). The result composes with ``extract_image_features`` /
+    ``resize_images`` unchanged."""
     if stride < 1:
         raise ValueError(f"stride must be >= 1, got {stride}")
 
     def sample(video_id, payload):
         frames = decode_video(payload)
         for idx in range(0, len(frames), stride):
-            item_id, *rest = payload_row(
-                f"{video_id}#{idx}", "image", "image/png", frames[idx]
-            )
-            yield (item_id, video_id, idx, *rest)
+            item_id = None if video_id is None else f"{video_id}#{idx}"
+            row = payload_row(item_id, "image", "image/png", frames[idx])
+            yield (item_id, video_id, idx, *row[1:])
 
     return map_rows(
         df.select("item_id", "payload"),
@@ -185,13 +205,11 @@ def jpeg_payload_df(df: DataFrame) -> DataFrame:
     encoded 4:2:0 instead of 4:4:4, exercising both subsampling paths
     of the decoder in the distributed gate."""
 
-    def render(doc_id, text):
-        key = str(doc_id)
+    def make(key, text):
         sub = hashlib.sha256(key.encode()).digest()[2] % 2 == 0
-        jpeg = fake_jpeg(key, text or "", subsample_420=sub)
-        yield payload_row(key, "image", "image/jpeg", jpeg)
+        return fake_jpeg(key, text, subsample_420=sub)
 
-    return map_rows(df.select("doc_id", "text"), render, PAYLOAD_DDL)
+    return render_payloads(df, "image", "image/jpeg", make)
 
 
 def png_payload_df(df: DataFrame) -> DataFrame:
@@ -199,9 +217,4 @@ def png_payload_df(df: DataFrame) -> DataFrame:
     table: each row becomes a small RGB PNG whose dimensions/pixels are
     a pure function of (id, text). Rendered distributed — the shape a
     real media-ingest stage has (binary column + typed metadata)."""
-
-    def render(doc_id, text):
-        key = str(doc_id)
-        yield payload_row(key, "image", "image/png", fake_png(key, text or ""))
-
-    return map_rows(df.select("doc_id", "text"), render, PAYLOAD_DDL)
+    return render_payloads(df, "image", "image/png", fake_png)

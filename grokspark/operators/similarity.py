@@ -2,12 +2,17 @@
 
 - ``ann_brute_force_topk``: exact cosine top-k (the correctness
   baseline; one scan + one top-k, no shuffle of vectors).
-- ``build_lsh_index`` + ``lsh_index_topk``: the 100-TB path — the
-  random-hyperplane bucket is MATERIALIZED as the table's partition
-  column at index-build time, so a query's ``_bucket IN (probes)``
-  filter becomes real partition pruning (PartitionFilters in the scan;
-  non-probed buckets are never read, plan-asserted in
-  tests/test_plans.py).
+- The cell index, shared by sign-LSH here and IVF-flat
+  (``grokspark.operators.ivf``): every vector gets a cell, computed
+  with one sequential dot fold (``_dot_col`` on the JVM, its driver
+  twin ``_fold_dot``); ``_write_cell_index`` writes the rows
+  PARTITIONED BY that cell; a query probes a few cells, so its
+  ``cell IN (probes)`` filter becomes real partition pruning
+  (PartitionFilters in the scan; non-probed cells are never read,
+  plan-asserted in tests/test_plans.py), and ``ann_brute_force_topk``
+  takes the exact cosine top-k of what it read. ``build_lsh_index`` +
+  ``lsh_index_topk`` are the sign-LSH face: the cell is the
+  random-hyperplane bucket ``_bucket``.
 - ``knn_join`` and ``embedding_lsh_pairs``: one bucket-local matmul
   engine (``_bucket_cogroup``) serves both: every probe bucket is
   cogrouped with its member bucket and scored by one numpy matmul;
@@ -25,7 +30,7 @@ from typing import Optional, Sequence
 
 import numpy as np
 import pyarrow as pa
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import arrow_udf
@@ -114,6 +119,42 @@ def _vector_dim(df: DataFrame, vec_col: str) -> int:
     return 1 if row is None else row[0]
 
 
+def _dot_col(vec_col: str, w: Sequence[float]) -> Column:
+    """Dot product of a vector column with the literal ``w``: a
+    sequential left-to-right double fold, the same sum as
+    ``_fold_dot`` and DuckDB's list_dot_product, so a cell computed on
+    the JVM, on the driver and in the SQL oracles agrees bit for bit."""
+    wlit = F.array(*[F.lit(float(x)) for x in w])
+    return F.aggregate(
+        F.zip_with(F.col(vec_col), wlit, lambda x, y: x.cast("double") * y),
+        F.lit(0.0),
+        lambda acc, v: acc + v,
+    )
+
+
+def _fold_dot(vec: Sequence[float], w: Sequence[float]) -> float:
+    """Driver twin of ``_dot_col`` (not ``sum()``, whose float
+    summation is not a plain sequential fold on every Python)."""
+    acc = 0.0
+    for x, y in zip(vec, w):
+        acc += float(x) * y
+    return acc
+
+
+def _write_cell_index(df: DataFrame, path: str, cell_name: str, cell: Column) -> None:
+    """Write ``df`` plus its ``cell`` column as parquet PARTITIONED BY
+    ``cell_name``, the one layout of every materialized ANN index: the
+    cell is a physical partition column, so a probe query's ``IN``
+    filter reaches the scan as PartitionFilters. One shuffle clusters
+    rows by cell before the write, so each cell is one file instead of
+    (input partitions x cells) shards. A partitioned write of no rows
+    leaves no file to read a schema from, so an empty index is one
+    unpartitioned, schema-only file."""
+    clustered = df.withColumn(cell_name, cell).repartition(F.col(cell_name))
+    writer = clustered.write.mode("overwrite")
+    (writer if df.isEmpty() else writer.partitionBy(cell_name)).parquet(path)
+
+
 def ann_brute_force_topk(
     df: DataFrame,
     query: Sequence[float],
@@ -121,13 +162,15 @@ def ann_brute_force_topk(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
 ) -> DataFrame:
-    """Exact cosine top-k against one query vector. The query ships as
-    a literal array; score computed JVM-side; ties broken by id for
-    determinism."""
+    """``(id_col, score)``: the exact cosine top-k of ``df``'s rows
+    against one query vector — over a whole table the correctness
+    baseline, over a cell index's probed rows its ANN answer. The
+    query ships as a literal array; scored JVM-side; ties broken by id
+    for determinism."""
     qlit = F.array(*[F.lit(float(x)) for x in query])
-    scored = df.withColumn("score", cosine(F.col(vec_col), qlit))
     return (
-        scored.select(id_col, "score")
+        df.withColumn("score", cosine(F.col(vec_col), qlit))
+        .select(id_col, "score")
         .orderBy(F.col("score").desc(), F.col(id_col).asc())
         .limit(k)
     )
@@ -137,45 +180,31 @@ def hyperplanes(dim: int, n_planes: int = 8, seed: int = 42) -> list[list[float]
     """Deterministic random hyperplanes for sign-LSH."""
     rng = random.Random(f"grokspark:lsh:{seed}")
     return [[rng.gauss(0.0, 1.0) for _ in range(dim)] for _ in range(n_planes)]
-def lsh_bucket_col(vec_col: str, planes: list[list[float]]):
+
+
+def lsh_bucket_col(vec_col: str, planes: list[list[float]]) -> Column:
     """Sign-pattern bucket id (0..2^n_planes-1) of a vector column —
     pure built-ins: per plane, the sign of the dot product."""
     bucket = F.lit(0)
     for i, plane in enumerate(planes):
-        plit = F.array(*[F.lit(float(x)) for x in plane])
-        dot = F.aggregate(
-            F.zip_with(F.col(vec_col), plit, lambda x, y: x.cast("double") * y),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
+        dot = _dot_col(vec_col, plane)
         bucket = bucket + F.when(dot >= 0, F.lit(1 << i)).otherwise(F.lit(0))
     return bucket
 
 
 def bucket_of(vec: Sequence[float], planes: list[list[float]]) -> int:
     """Sign-pattern bucket of one vector (driver-side; mirrors
-    ``lsh_bucket_col`` bit for bit — sequential left-to-right double
-    accumulation, same as F.aggregate's fold)."""
-    b = 0
-    for i, plane in enumerate(planes):
-        acc = 0.0
-        for x, p in zip(vec, plane):
-            acc += float(x) * p
-        if acc >= 0:
-            b |= 1 << i
-    return b
+    ``lsh_bucket_col`` bit for bit through the same fold)."""
+    return sum(1 << i for i, plane in enumerate(planes) if _fold_dot(vec, plane) >= 0)
 
 
 def _probe_masks(n_planes: int, probe_hamming: int) -> list[int]:
     """XOR masks for all buckets within ``probe_hamming`` bit flips."""
-    masks = [0]
-    for h in range(1, probe_hamming + 1):
-        for bits in itertools.combinations(range(n_planes), h):
-            m = 0
-            for i in bits:
-                m |= 1 << i
-            masks.append(m)
-    return masks
+    return [
+        sum(1 << i for i in bits)
+        for h in range(probe_hamming + 1)
+        for bits in itertools.combinations(range(n_planes), h)
+    ]
 
 
 def hamming_probes(qb: int, n_planes: int, probe_hamming: int) -> list[int]:
@@ -218,7 +247,6 @@ def _bucket_cogroup(
     n_planes: int,
     probe_hamming: int,
     seed: int,
-    salt_members: int,
     kernel,
 ) -> DataFrame:
     """The bucket-local matmul engine under ``knn_join`` and
@@ -238,10 +266,7 @@ def _bucket_cogroup(
 
     Each (query, member) pair lands in exactly one group — the
     member's bucket, probed by exactly one XOR mask — so no dedup pass
-    is needed. ``salt_members`` splits each bucket's members into S
-    slices (hash of the member id) and replicates the probe side xS;
-    a pair still lands in exactly one (bucket, slice) group. The
-    output ids keep ``id_col``'s type."""
+    is needed. The output ids keep ``id_col``'s type."""
     planes = hyperplanes(_vector_dim(df, vec_col), n_planes, seed)
     dim = len(planes[0])
     # bucket via the numpy matrix UDF: the scores are blocked matmuls
@@ -262,18 +287,6 @@ def _bucket_cogroup(
     members = bucketed.select(
         F.col("id").alias("nid"), F.col("vec").alias("nv"), "_bucket"
     )
-    if salt_members > 1:
-        members = members.withColumn(
-            "_salt", F.pmod(F.xxhash64("nid"), F.lit(salt_members)).cast("int")
-        )
-        probes = probes.withColumn(
-            "_salt",
-            F.explode(F.array(*[F.lit(s) for s in range(salt_members)])),
-        )
-        group_l, group_r = ["_probe", "_salt"], ["_bucket", "_salt"]
-    else:
-        group_l, group_r = ["_probe"], ["_bucket"]
-
     id_type = df.schema[id_col].dataType
     out_type = T.StructType(
         [
@@ -308,9 +321,9 @@ def _bucket_cogroup(
     # task (measured on 4 vCPUs at sf0.01: 2.9 -> 2.3 s per knn_join)
     n_part = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     return (
-        probes.repartition(n_part, *group_l)
-        .groupBy(*group_l)
-        .cogroup(members.repartition(n_part, *group_r).groupBy(*group_r))
+        probes.repartition(n_part, "_probe")
+        .groupBy("_probe")
+        .cogroup(members.repartition(n_part, "_bucket").groupBy("_bucket"))
         .applyInArrow(score, out_type)
     )
 
@@ -321,29 +334,17 @@ def build_lsh_index(
     n_planes: int = 8,
     seed: int = 42,
     vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> list[list[float]]:
-    """Materialize ``df`` as a parquet table PARTITIONED BY its LSH
-    bucket. This is what makes LSH-ANN actually prune at scale: the
-    bucket is a physical partition column, so a probe query's
-    ``_bucket IN (...)`` reaches the scan as PartitionFilters and
-    non-probed buckets are never opened. (On a real cluster the same
-    layout is an Iceberg table partitioned/clustered by ``_bucket``.)
+    """Materialize ``df`` as the sign-LSH cell index: parquet
+    PARTITIONED BY its LSH bucket ``_bucket`` (``_write_cell_index``),
+    so a probe query's ``_bucket IN (...)`` prunes non-probed buckets
+    at the scan. (On a real cluster the same layout is an Iceberg
+    table partitioned/clustered by ``_bucket``.)
 
     Returns the hyperplanes used (regenerate with ``hyperplanes(dim,
     n_planes, seed)`` — they are a pure function of the seed)."""
     planes = hyperplanes(_vector_dim(df, vec_col), n_planes, seed)
-    writer = (
-        df.withColumn("_bucket", lsh_bucket_col(vec_col, planes))
-        # cluster rows by bucket before the partitioned write: one file
-        # per bucket instead of (input partitions x buckets) shards —
-        # index builds shuffle once so every probe later reads one file
-        .repartition(F.col("_bucket"))
-        .write.mode("overwrite")
-    )
-    # a partitioned write of no rows leaves no file to read a schema
-    # from; an empty index is one unpartitioned, schema-only file
-    (writer if df.isEmpty() else writer.partitionBy("_bucket")).parquet(index_path)
+    _write_cell_index(df, index_path, "_bucket", lsh_bucket_col(vec_col, planes))
     return planes
 
 
@@ -364,16 +365,8 @@ def lsh_index_topk(
     ``probe_hamming``; at h = n_planes it degrades to exact."""
     planes = hyperplanes(len(query), n_planes, seed)
     probes = hamming_probes(bucket_of(query, planes), n_planes, probe_hamming)
-    candidates = spark.read.parquet(index_path).filter(
-        F.col("_bucket").isin(probes)
-    )
-    qlit = F.array(*[F.lit(float(x)) for x in query])
-    return (
-        candidates.withColumn("score", cosine(F.col(vec_col), qlit))
-        .select(id_col, "score")
-        .orderBy(F.col("score").desc(), F.col(id_col).asc())
-        .limit(k)
-    )
+    candidates = spark.read.parquet(index_path).filter(F.col("_bucket").isin(probes))
+    return ann_brute_force_topk(candidates, query, k, vec_col, id_col)
 
 
 def knn_join(
@@ -384,7 +377,6 @@ def knn_join(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     seed: int = 42,
-    salt_members: int = 1,
 ) -> DataFrame:
     """Approximate k-nearest-neighbors for EVERY row (the batch ANN op
     a training pipeline runs corpus-wide): ``(id, neighbor_id, score,
@@ -412,18 +404,7 @@ def knn_join(
     n_rows/2^n_planes that has to stay bounded (see
     ``recommended_n_planes``). Pass ``n_planes=None`` to auto-size
     from the corpus rowcount (one count(), k-scaled target); an
-    explicit value is trusted as-is, no extra scan.
-
-    ``salt_members`` is the skew control: real embedding distributions
-    can pile into few buckets (measured: a degenerate corpus put all
-    50k vectors into 20 of 1024 buckets and one straggler task carried
-    the stage). Salting splits each bucket's MEMBERS into S slices;
-    per-slice top-k stays correct because top-k merges (the global
-    window sees every slice's winners). Neighbor sets and ranks are
-    IDENTICAL for any S (ties break on nid via the stable sort below);
-    scores can move by a BLAS-blocking ulp since the matmul shape
-    changes. Cost: probe-side shuffle xS; use a few slices when bucket
-    histograms are known-skewed."""
+    explicit value is trusted as-is, no extra scan."""
     n_planes = _resolve_n_planes(
         df, n_planes, "knn_join", target_bucket_rows=max(64, 16 * k)
     )
@@ -433,9 +414,8 @@ def knn_join(
         # the STABLE argsort over nid-ordered members keeps the
         # (score desc, nid asc) order of the global window — an
         # order-oblivious argpartition would keep an arbitrary member
-        # of a score tie and make results depend on group slicing
-        # (caught by the salting-invariance test: the testdata corpus
-        # has duplicate embeddings, i.e. exact ties)
+        # of a score tie (the testdata corpus has duplicate
+        # embeddings, i.e. exact ties)
         sims[qids[:, None] == nids[None, :]] = -np.inf
         top = np.argsort(-sims, axis=1, kind="stable")[:, :k]
         qi = np.repeat(np.arange(len(qids)), top.shape[1])
@@ -444,7 +424,7 @@ def knn_join(
         return qi[keep], ni[keep]
 
     scored = _bucket_cogroup(
-        df, vec_col, id_col, n_planes, probe_hamming, seed, salt_members, top_k
+        df, vec_col, id_col, n_planes, probe_hamming, seed, top_k
     )
     w = Window.partitionBy("qid").orderBy(F.col("score").desc(), F.col("nid").asc())
     return (
@@ -496,7 +476,7 @@ def embedding_lsh_pairs(
         return np.nonzero((qids[:, None] < nids[None, :]) & (sims >= thr))
 
     scored = _bucket_cogroup(
-        df, vec_col, id_col, n_planes, probe_hamming, seed, 1, over_threshold
+        df, vec_col, id_col, n_planes, probe_hamming, seed, over_threshold
     )
     return scored.select(
         F.col("qid").alias("id_a"),

@@ -39,7 +39,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import arrow_udf
 
-from grokspark.compiler import CompiledPattern
+from grokspark.compiler import CompiledPattern, _validate_timeout
 
 __all__ = [
     "grok_parse_map_udf",
@@ -70,15 +70,6 @@ _STATUS_FIELDS = [
     pa.field("fields", pa.map_(pa.string(), pa.string())),
     pa.field("timed_out", pa.bool_(), nullable=False),
 ]
-
-
-def _validate_timeout(timeout: Optional[float]) -> Optional[float]:
-    """Every kernel factory funnels through this so ``timeout=0`` cannot
-    mean 'no timeout' on one path and 'instant TimeoutError' on another
-    — positive seconds or None, no third meaning."""
-    if timeout is not None and timeout <= 0:
-        raise ValueError(f"timeout must be positive seconds or None, got {timeout}")
-    return timeout
 
 
 def _require_tokens(from_tokens: bool) -> None:

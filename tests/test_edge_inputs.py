@@ -58,3 +58,24 @@ def test_renderer_null_text_renders_as_empty(spark, render):
     assert rows[0] == rows[1]
     assert rows[0]["item_id"] == "k"
     assert rows[0]["meta"]["n_bytes"] == len(rows[0]["payload"]) > 0
+
+
+@pytest.mark.parametrize("render", RENDERERS, ids=lambda f: f.__name__)
+def test_renderer_null_id_renders_null_item_id(spark, render):
+    """NULL in, NULL out: a NULL ``doc_id`` keeps ``item_id`` NULL and
+    its payload is keyed on ``""``, like a NULL text."""
+    rows = render(_docs(spark, [(None, "t"), ("", "t")])).collect()
+    assert [r["item_id"] for r in rows] == [None, ""]
+    assert rows[0]["payload"] == rows[1]["payload"]
+    assert rows[0]["meta"] == rows[1]["meta"]
+
+
+def test_sampled_frames_of_a_null_video_id_keep_item_id_null(spark):
+    from grokspark.operators.multimodal import sample_video_frames
+
+    videos = video_payload_df(_docs(spark, [(None, "t"), ("v", "t")]))
+    frames = sample_video_frames(videos, stride=2).collect()
+    got = sorted(
+        ((r["video_id"] or "", r["frame_idx"], r["item_id"]) for r in frames),
+    )
+    assert got == [("", 0, None), ("", 2, None), ("v", 0, "v#0"), ("v", 2, "v#2")]

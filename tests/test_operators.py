@@ -1044,16 +1044,31 @@ def test_knn_join_and_embedding_lsh_pairs_empty_input(emb):
     assert pairs.collect() == []
 
 
-def test_lsh_index_empty_input(spark, emb, tmp_path):
-    """A zero-row input builds an index (the planes come back, no
-    TypeError from the dim probe) that probes to zero rows instead of
-    failing schema inference on a directory with no data file."""
+def _build_and_probe_lsh(spark, df, index):
     from grokspark.operators import build_lsh_index, lsh_index_topk
 
-    index = str(tmp_path / "index")
-    planes = build_lsh_index(emb.limit(0), index, n_planes=8, seed=42)
+    planes = build_lsh_index(df, index, n_planes=8, seed=42)
     assert len(planes) == 8
-    top = lsh_index_topk(spark, index, [1.0] * len(planes[0]), k=10, n_planes=8)
+    return lsh_index_topk(spark, index, [1.0] * len(planes[0]), k=10, n_planes=8)
+
+
+def _build_and_probe_ivf(spark, df, index):
+    from grokspark.operators import build_ivf_index, ivf_topk, seeded_centroids
+
+    centroids = seeded_centroids(64, 16, seed=42)
+    build_ivf_index(df, index, centroids)
+    return ivf_topk(spark, index, [1.0] * 64, centroids, k=10, nprobe=4)
+
+
+@pytest.mark.parametrize(
+    "build_and_probe", [_build_and_probe_lsh, _build_and_probe_ivf], ids=["lsh", "ivf"]
+)
+def test_cell_index_empty_input(spark, emb, tmp_path, build_and_probe):
+    """A zero-row input builds a cell index (for LSH the planes come
+    back, no TypeError from the dim probe) that probes to zero rows
+    instead of failing schema inference on a directory with no data
+    file — both index kinds share the one writer."""
+    top = build_and_probe(spark, emb.limit(0), str(tmp_path / "index"))
     assert top.columns == ["vec_id", "score"]
     assert top.collect() == []
 

@@ -23,12 +23,23 @@ def explain_str(df, mode: str = "formatted") -> str:
 
 
 def test_captured_plans_mask_plan_ids(spark):
-    """Spark's session-wide exchange counters would make two captures
-    of the same plan differ in bytes."""
-    df = spark.range(10).repartition(2).groupBy("id").count()
-    assert re.search(r"\[plan_id=\d+\]", explain_str(df))
+    """Spark's session-wide exchange counters and expression ids would
+    make two captures of the same plan differ in bytes: the same query,
+    built before and after another one, captures byte-equal."""
+
+    def query():
+        return spark.range(10).repartition(2).groupBy("id").count()
+
+    df = query()
+    raw = explain_str(df)
+    assert re.search(r"\[plan_id=\d+\]", raw) and re.search(r"#\d+", raw)
     plan = explain_formatted(df)
     assert "[plan_id=N]" in plan and not re.search(r"plan_id=\d", plan)
+    assert "#N" in plan and not re.search(r"#\d", plan)
+    spark.range(5).selectExpr("id * 2 AS x").groupBy("x").count().collect()
+    again = query()
+    assert explain_str(again) != raw
+    assert explain_formatted(again) == plan
 
 
 def test_filter_and_projection_pushdown(spark, sf_dir):

@@ -80,29 +80,6 @@ def test_knn_join_blocked_matches_fold_path(spark, sf_dir, knn_reference):
         assert abs(score - want[pair][1]) < 1e-9, pair
 
 
-def test_knn_blocked_member_salting_is_result_invariant(spark, sf_dir):
-    """salt_members only changes group fan-out (skew control): the
-    returned (query, neighbor, rank) triples must be identical for any
-    S; scores agree to within BLAS-blocking ulps (matmul vectorization
-    depends on matrix shape, so the last bit can differ)."""
-    from grokspark.operators import knn_join
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").localCheckpoint()
-    base = sorted(
-        (r["vec_id"], r["neighbor_id"], r["rank"], r["score"])
-        for r in knn_join(emb, k=3, n_planes=5, probe_hamming=1).collect()
-    )
-    salted = sorted(
-        (r["vec_id"], r["neighbor_id"], r["rank"], r["score"])
-        for r in knn_join(
-            emb, k=3, n_planes=5, probe_hamming=1, salt_members=4
-        ).collect()
-    )
-    assert [t[:3] for t in base] == [t[:3] for t in salted]
-    for (*_, sa), (*_, sb) in zip(base, salted):
-        assert abs(sa - sb) < 1e-9
-
-
 def test_overfull_warning_fires_for_undersized_explicit_planes():
     from grokspark.operators.similarity import (
         MAX_BUCKET_ROWS,

@@ -20,31 +20,46 @@ REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 
 
-# Spark numbers exchanges with session-wide counters (``[plan_id=7]``),
-# so one plan captured after different earlier queries differs in bytes;
-# a fixed token leaves a byte diff of two captures to real plan changes
+# Spark numbers exchanges (``[plan_id=7]``) and expression ids
+# (``id#9L``) with session-wide counters, so one plan captured after
+# different earlier queries differs in bytes; fixed tokens leave a byte
+# diff of two captures to real plan changes
 _PLAN_ID = re.compile(r"\[plan_id=\d+\]")
+_EXPR_ID = re.compile(r"#\d+")
+
+
+def _explain(df) -> str:
+    return df._sc._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "formatted"
+    )
+
+
+def mask_ids(plan: str) -> str:
+    """``plan`` with every session-wide counter written as ``N``."""
+    return _EXPR_ID.sub("#N", _PLAN_ID.sub("[plan_id=N]", plan))
 
 
 def explain_formatted(df) -> str:
-    plan = df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
-    return _PLAN_ID.sub("[plan_id=N]", plan)
+    """The formatted plan of ``df`` as it is written to a file: ids
+    masked (``mask_ids``)."""
+    return mask_ids(_explain(df))
 
 
 def record_plans(spark, build):
     """Run ``build()`` and return ``(stages, out)``: the formatted plan
     of every DataFrame localCheckpointed while it ran, in call order,
-    and what ``build`` returned. Wraps ``localCheckpoint`` on the
-    session's concrete DataFrame class (Spark 4's classic class, not
-    ``pyspark.sql.DataFrame``) and restores it afterwards."""
+    and what ``build`` returned. The plans keep their expression ids,
+    which tie an operator's output to the inputs that read it;
+    ``mask_ids`` them before comparing captures. Wraps
+    ``localCheckpoint`` on the session's concrete DataFrame class
+    (Spark 4's classic class, not ``pyspark.sql.DataFrame``) and
+    restores it afterwards."""
     cls = type(spark.range(1))
     orig = cls.localCheckpoint
     stages: list[str] = []
 
     def recording(self, *args, **kwargs):
-        stages.append(explain_formatted(self))
+        stages.append(_explain(self))
         return orig(self, *args, **kwargs)
 
     cls.localCheckpoint = recording
@@ -71,7 +86,7 @@ def main() -> None:
         stages, df = record_plans(spark, lambda: qs[name](spark, sf_dir))
         files = {f"{name}_{tag}.txt": explain_formatted(df)}
         for k, plan in enumerate(stages):
-            files[f"{name}_{tag}.stage{k}.txt"] = plan
+            files[f"{name}_{tag}.stage{k}.txt"] = mask_ids(plan)
         for fname, plan in files.items():
             (out_dir / fname).write_text(plan)
             print(f"wrote plans/r06/{fname} ({len(plan)} bytes)")
