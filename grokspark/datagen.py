@@ -9,7 +9,7 @@ Every row is a pure function of its index ``i`` (per-row
 ``random.Random`` seeded with a string — CPython seeds str via SHA-512,
 so generation is process- and order-independent). That makes the
 generator embarrassingly parallel: the Spark path renders rows inside
-``mapInPandas`` over ``spark.range(n)`` with no driver bottleneck, and
+``mapInArrow`` over ``spark.range(n)`` with no driver bottleneck, and
 the pure-Python path (tests, oracle counts) produces byte-identical
 rows.
 
@@ -250,7 +250,9 @@ def sequences_df(spark, n: int, partitions: Optional[int] = None, start: int = 0
     its own row range (row = pure function of index, no shuffle, no
     driver materialization). ``start`` offsets the index range —
     disjoint ranges yield disjoint doc_ids (streaming-soak batches)."""
-    import pandas as pd  # local import: keep module importable without pandas
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
 
     # scale-adaptive default: at least ~12.5k rows per task so the
     # per-task Arrow/python overhead amortizes on small tables (100k
@@ -261,14 +263,16 @@ def sequences_df(spark, n: int, partitions: Optional[int] = None, start: int = 0
         spark.sparkContext.defaultParallelism, max(4, n // 12_500)
     )
 
+    schema = to_arrow_schema(StructType.fromDDL(SEQUENCES_SCHEMA))
+
     def gen(batches):
-        for pdf in batches:
-            rows = [row_for(int(i)) for i in pdf["id"]]
-            yield pd.DataFrame(rows)
+        for batch in batches:
+            rows = [row_for(i) for i in batch.column("id").to_pylist()]
+            yield pa.RecordBatch.from_pylist(rows, schema=schema)
 
     return (
         spark.range(start, start + n, numPartitions=num_parts)
-        .mapInPandas(gen, schema=SEQUENCES_SCHEMA)
+        .mapInArrow(gen, SEQUENCES_SCHEMA)
     )
 
 

@@ -24,9 +24,10 @@ Scale shape (what is distributed and what deliberately is not):
   fit the driver. Merge decisions depend only on counts, so the loop
   is not a per-row operation and gains nothing from the cluster.
 - ``apply_bpe`` is distributed again: the merge ranks broadcast to
-  every worker, applied inside an Arrow-batched pandas UDF with a
-  per-batch word memo — words repeat heavily, so each distinct word
-  is encoded once per batch, not once per occurrence.
+  every worker, applied inside an ``arrow_udf`` by ``bpe_encoder``,
+  made once per Arrow batch so its word memo is per batch — words
+  repeat heavily, so each distinct word is encoded once per batch,
+  not once per occurrence.
 
 Pre-tokenization reuses token_count's piece classes (runs of letters,
 runs of digits, single other non-space chars), so BPE merges never
@@ -38,10 +39,12 @@ and tests.
 from __future__ import annotations
 
 import re
-from typing import Callable, Optional
+from typing import Any, Callable, Optional
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.functions import arrow_udf
 
 from grokspark.plan_policy import SPREAD_MIN_BYTES, spread
 
@@ -54,6 +57,7 @@ __all__ = [
     "apply_bpe",
     "apply_bpe_py",
     "apply_bpe_ids",
+    "bpe_encoder",
     "bpe_ids_encoder",
     "bpe_vocab",
     "word_counts_df",
@@ -176,24 +180,32 @@ def apply_bpe_py(
     return out
 
 
-def bpe_ids_encoder(
-    merges: list[tuple[str, str]], vocab: dict[str, int]
-) -> Callable[[Optional[str]], list[int]]:
-    """Text -> BPE token ids via ``vocab`` (pieces outside it map to
-    ``<unk>`` = 0), memoized per distinct word. The memo lives as long
+def bpe_encoder(
+    merges: list[tuple[str, str]], symbol: Callable[[str], Any]
+) -> Callable[[Optional[str]], list]:
+    """Text -> BPE pieces, each mapped through ``symbol``, memoized per
+    distinct word (NULL text encodes as ``[]``). The memo lives as long
     as the returned function, so make one per Arrow batch or group."""
     ranks = {p: i for i, p in enumerate(merges)}
-    memo: dict[str, list[int]] = {}
+    memo: dict[str, list] = {}
 
-    def ids_of(text: Optional[str]) -> list[int]:
-        out: list[int] = []
+    def encode(text: Optional[str]) -> list:
+        out: list = []
         for w in pretokenize(text):
             if w not in memo:
-                memo[w] = [vocab.get(s, 0) for s in encode_word(w, ranks)]
+                memo[w] = [symbol(s) for s in encode_word(w, ranks)]
             out.extend(memo[w])
         return out
 
-    return ids_of
+    return encode
+
+
+def bpe_ids_encoder(
+    merges: list[tuple[str, str]], vocab: dict[str, int]
+) -> Callable[[Optional[str]], list[int]]:
+    """``bpe_encoder`` with the ``vocab`` lookup: text -> BPE token ids
+    (pieces outside the vocab map to ``<unk>`` = 0)."""
+    return bpe_encoder(merges, lambda s: vocab.get(s, 0))
 
 
 def bpe_vocab(
@@ -232,14 +244,14 @@ def _pieces_col(text):
     )
 
 
-def word_counts_df(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """(word, n) corpus word-frequency table — the one distributed
-    corpus-scale pass of BPE training (explode + partial/final count
-    aggregate; the exchange carries (word, partial count), never
-    text)."""
+def word_counts_df(df: DataFrame) -> DataFrame:
+    """(word, n) word-frequency table of the corpus ``text`` — the one
+    distributed corpus-scale pass of BPE training (explode +
+    partial/final count aggregate; the exchange carries (word, partial
+    count), never text)."""
     return (
         spread(df, SPREAD_MIN_BYTES)
-        .select(F.explode(_pieces_col(F.col(text_col))).alias("word"))
+        .select(F.explode(_pieces_col(F.col("text"))).alias("word"))
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("n"))
     )
@@ -248,7 +260,6 @@ def word_counts_df(df: DataFrame, text_col: str = "text") -> DataFrame:
 def train_bpe(
     df: DataFrame,
     n_merges: int,
-    text_col: str = "text",
     max_words: Optional[int] = None,
 ) -> list[tuple[str, str]]:
     """Train a BPE merge table on a corpus: distributed word count,
@@ -256,70 +267,44 @@ def train_bpe(
     over the bounded frequency table. ``max_words`` caps the table
     (top-N by count desc, word asc — deterministic) for corpora whose
     distinct-word tail shouldn't ride to the driver."""
-    wc = word_counts_df(df, text_col)
+    wc = word_counts_df(df)
     if max_words is not None:
         wc = wc.orderBy(F.col("n").desc(), F.col("word").asc()).limit(max_words)
     counts = {r["word"]: r["n"] for r in wc.collect()}
     return train_bpe_py(counts, n_merges)
 
 
-def apply_bpe(
-    df: DataFrame,
-    merges: list[tuple[str, str]],
-    text_col: str = "text",
-    out_col: str = "bpe_pieces",
-) -> DataFrame:
-    """Adds ``out_col`` (array<string> of BPE pieces). The merge table
-    ships once per executor via closure broadcast; each Arrow batch
-    keeps a word memo so distinct words are encoded once per batch."""
-    import pandas as pd
-    from pyspark.sql import types as T
-    from pyspark.sql.functions import pandas_udf
-
+def apply_bpe(df: DataFrame, merges: list[tuple[str, str]]) -> DataFrame:
+    """Adds ``bpe_pieces`` (array<string>, the BPE pieces of ``text``).
+    The merge table ships once per executor via closure broadcast; each
+    Arrow batch gets its own ``bpe_encoder``, so distinct words are
+    encoded once per batch."""
     merges_local = list(merges)
 
-    @pandas_udf(T.ArrayType(T.StringType()))
-    def bpe(texts):
-        ranks = {p: i for i, p in enumerate(merges_local)}
-        memo: dict[str, list[str]] = {}
-        out = []
-        for t in texts:
-            pieces: list[str] = []
-            for w in pretokenize(t):
-                if w not in memo:
-                    memo[w] = encode_word(w, ranks)
-                pieces.extend(memo[w])
-            out.append(pieces)
-        return pd.Series(out)
+    @arrow_udf("array<string>")
+    def bpe(texts: pa.Array) -> pa.Array:
+        encode = bpe_encoder(merges_local, str)
+        out = [encode(t) for t in texts.to_pylist()]
+        return pa.array(out, pa.list_(pa.string()))
 
-    return spread(df, SPREAD_MIN_BYTES).withColumn(
-        out_col, bpe(F.col(text_col))
-    )
+    return spread(df, SPREAD_MIN_BYTES).withColumn("bpe_pieces", bpe(F.col("text")))
 
 
 def apply_bpe_ids(
-    df: DataFrame,
-    merges: list[tuple[str, str]],
-    vocab: dict[str, int],
-    text_col: str = "text",
-    out_col: str = "tokens",
+    df: DataFrame, merges: list[tuple[str, str]], vocab: dict[str, int]
 ) -> DataFrame:
-    """Adds ``out_col`` (array<int> of BPE token ids via ``vocab``;
-    pieces outside the vocab map to ``<unk>`` = 0). Same batching and
-    memoization as ``apply_bpe`` — one UDF does pretokenize + merge +
-    id lookup, so piece strings never materialize as a column."""
-    import pandas as pd
-    from pyspark.sql import types as T
-    from pyspark.sql.functions import pandas_udf
-
+    """Adds ``tokens`` (array<int> of the BPE token ids of ``text`` via
+    ``vocab``; pieces outside the vocab map to ``<unk>`` = 0). Same
+    batching and memoization as ``apply_bpe`` — one UDF does
+    pretokenize + merge + id lookup, so piece strings never
+    materialize as a column."""
     merges_local = list(merges)
     vocab_local = dict(vocab)
 
-    @pandas_udf(T.ArrayType(T.IntegerType()))
-    def bpe_ids(texts):
+    @arrow_udf("array<int>")
+    def bpe_ids(texts: pa.Array) -> pa.Array:
         ids_of = bpe_ids_encoder(merges_local, vocab_local)
-        return pd.Series([ids_of(t) for t in texts])
+        out = [ids_of(t) for t in texts.to_pylist()]
+        return pa.array(out, pa.list_(pa.int32()))
 
-    return spread(df, SPREAD_MIN_BYTES).withColumn(
-        out_col, bpe_ids(F.col(text_col))
-    )
+    return spread(df, SPREAD_MIN_BYTES).withColumn("tokens", bpe_ids(F.col("text")))

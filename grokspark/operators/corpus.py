@@ -10,8 +10,8 @@ operators:
                      leakage-safe convention: val/test must not shape
                      the vocab — then bpe.apply_bpe_ids' encoding
                      corpus-wide, inside the pack stage)
- -> sequence pack   (one grouped pack over (split, bucket) — same
-                     per-group packing as packing.pack_sequences)
+ -> sequence pack   (packing.pack_groups over (split, bucket) — the
+                     one pack stage packing.pack_sequences also runs)
 
 Output: one packed training table ``(split, bucket, pack_id, n_docs,
 n_tok, doc_ids, tokens, n_truncated)`` — a pure function of the corpus
@@ -48,9 +48,9 @@ from grokspark.operators.bpe import (
 )
 from grokspark.operators.dedup import dedup_corpus
 from grokspark.operators.packing import (
-    _PACK_SCHEMA,
     pack_bucket_col,
     pack_bucket_of,
+    pack_groups,
     pack_sequences_py,
 )
 from grokspark.operators.sampling import hash_split, split_thresholds
@@ -72,11 +72,9 @@ def prepare_corpus(
     threshold: float = 0.5,
     n: int = 2,
     bands: int = 64,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """Quality-filter, dedup, split, BPE-tokenize and pack a raw
-    ``(id, text)`` corpus into training rows (module doc has the full
+    ``(doc_id, text)`` corpus into training rows (module doc has the full
     contract). ``max_words`` caps the word-frequency table that rides
     to the driver for the BPE merge loop (deterministic top-N: count
     desc, word asc) — at corpus scale the distinct-word tail is
@@ -95,22 +93,19 @@ def prepare_corpus(
     if max_len < 1:
         raise ValueError(f"max_len must be >= 1, got {max_len}")
 
-    quality = quality_scores(df, text_col).filter(F.col("quality_keep") == 1)
+    quality = quality_scores(df).filter(F.col("quality_keep") == 1)
     # the filtered set feeds dedup (fingerprints + LSH input) and the
     # kept semi-join — materialize it once so the map-only filter
     # isn't re-scanned per consumer
-    quality = quality.select(id_col, text_col).localCheckpoint()
-    decisions = dedup_corpus(
-        quality, threshold=threshold, n=n, bands=bands,
-        text_col=text_col, id_col=id_col,
-    )
+    quality = quality.select("doc_id", "text").localCheckpoint()
+    decisions = dedup_corpus(quality, threshold=threshold, n=n, bands=bands)
     kept = quality.join(
-        decisions.filter(F.col("keep")).select(id_col), id_col, "left_semi"
-    ).select(id_col, text_col)
-    kept = hash_split(kept, weights, id_col=id_col).localCheckpoint()
+        decisions.filter(F.col("keep")).select("doc_id"), "doc_id", "left_semi"
+    ).select("doc_id", "text")
+    kept = hash_split(kept, weights).localCheckpoint()
 
     train_docs = kept.filter(F.col("split") == "train")
-    wc = word_counts_df(train_docs, text_col)
+    wc = word_counts_df(train_docs)
     if max_words is not None:
         wc = wc.orderBy(F.col("n").desc(), F.col("word").asc()).limit(max_words)
     counts = {r["word"]: r["n"] for r in wc.collect()}
@@ -130,43 +125,15 @@ def prepare_corpus(
     # same merges, same vocab, deterministic encode_word).
     keyed = kept.select(
         "split",
-        pack_bucket_col(id_col, n_buckets).alias("bucket"),
-        F.col(id_col).cast("string").alias("_id"),
-        F.col(text_col).alias("_text"),
+        pack_bucket_col("doc_id", n_buckets).alias("bucket"),
+        F.col("doc_id").cast("string").alias("_id"),
+        F.col("text").alias("_doc"),
     )
-
-    import pandas as pd
-
-    merges_local = list(merges)
-    vocab_local = dict(vocab)
-
-    def pack(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        ids_of = bpe_ids_encoder(merges_local, vocab_local)
-        split = pdf["split"].iloc[0]
-        bucket = int(pdf["bucket"].iloc[0])
-        packs = pack_sequences_py(
-            ((i, ids_of(t)) for i, t in zip(pdf["_id"], pdf["_text"])),
-            max_len,
-        )
-        return pd.DataFrame(
-            {
-                "split": split,
-                "bucket": bucket,
-                "pack_id": [f"{bucket}#{i}" for i in range(len(packs))],
-                "n_docs": [p["n_docs"] for p in packs],
-                "n_tok": [p["n_tok"] for p in packs],
-                "doc_ids": [p["doc_ids"] for p in packs],
-                "tokens": [p["tokens"] for p in packs],
-                "n_truncated": [p["n_truncated"] for p in packs],
-            }
-        )
-
-    out = keyed.groupBy("split", "bucket").applyInPandas(
-        pack, schema="split string, " + _PACK_SCHEMA
-    )
-    return out.select(
-        "split", "bucket", "pack_id", "n_docs", "n_tok",
-        "doc_ids", "tokens", "n_truncated",
+    return pack_groups(
+        keyed,
+        ["split"],
+        max_len,
+        lambda texts: map(bpe_ids_encoder(merges, vocab), texts),
     )
 
 

@@ -1,6 +1,7 @@
 """Deduplication operators: exact, n-gram Jaccard, MinHash+LSH,
 SimHash, embedding-cosine. Entirely built-in DataFrame expressions
-except SimHash's bit-vote (a vectorized pandas UDF over numpy).
+except SimHash's bit-vote (a vectorized numpy kernel in an
+``arrow_udf``).
 
 Scale notes (the design constraint is 10^9+ documents):
 - exact dedup is one hash-aggregate on a fingerprint (shuffle on the
@@ -18,12 +19,11 @@ from __future__ import annotations
 from typing import Optional
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.functions import arrow_udf
 from pyspark.sql.pandas.types import to_arrow_schema
 
 from grokspark import plan_policy
@@ -389,12 +389,11 @@ def minhash_lsh_pairs_vs(
     )
 
 
-def simhash_signatures(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id", bits: int = 64
-) -> DataFrame:
-    """64-bit SimHash over word hashes (vectorized numpy pandas UDF:
-    the per-bit vote matrix doesn't express well in SQL). Near-dup
-    candidates are rows whose signatures differ in few bits.
+def simhash_signatures(df: DataFrame) -> DataFrame:
+    """``(doc_id, simhash)``: 64-bit SimHash of ``text`` over word
+    hashes (vectorized numpy in an ``arrow_udf``: the per-bit vote
+    matrix doesn't express well in SQL); NULL text hashes to 0.
+    Near-dup candidates are rows whose signatures differ in few bits.
 
     The whole Arrow batch is hashed at once: every word of every doc
     goes into one padded byte matrix, FNV-1a folds column-by-column in
@@ -404,11 +403,11 @@ def simhash_signatures(
     loop was the package's slowest path at scale (measured in
     bench_micro.py's ``simhash_*`` scenarios)."""
 
-    @pandas_udf(T.LongType())
-    def simhash(texts: pd.Series) -> pd.Series:
-        return pd.Series(simhash_batch(texts, bits))
+    @arrow_udf("long")
+    def simhash(texts: pa.Array) -> pa.Array:
+        return pa.array(simhash_batch(texts.to_pylist()))
 
-    return df.select(F.col(id_col), simhash(F.col(text_col)).alias("simhash"))
+    return df.select("doc_id", simhash(F.col("text")).alias("simhash"))
 
 
 def simhash_batch(texts, bits: int = 64) -> "np.ndarray":
@@ -494,9 +493,6 @@ def simhash_near_dup_pairs(
     df: DataFrame,
     max_hamming: int = 3,
     bands: int = 4,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    bits: int = 64,
 ) -> DataFrame:
     """SimHash near-duplicate pairs: ``(id_a, id_b, hamming)`` with
     ``hamming <= max_hamming``, EXACT by construction.
@@ -515,11 +511,9 @@ def simhash_near_dup_pairs(
             f"banding guarantees recall only for max_hamming <= bands-1 "
             f"(got max_hamming={max_hamming}, bands={bands})"
         )
-    band_bits = bits // bands
+    band_bits = 64 // bands
     mask = (1 << band_bits) - 1
-    sigs = simhash_signatures(df, text_col, id_col, bits).withColumnRenamed(
-        id_col, "id"
-    )
+    sigs = simhash_signatures(df).withColumnRenamed("doc_id", "id")
     banded = sigs.select(
         "id",
         "simhash",

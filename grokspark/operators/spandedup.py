@@ -55,9 +55,10 @@ layer; this operator belongs to the training-data-pipeline surface
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
+from pyspark.sql.functions import arrow_udf
 
 from grokspark.operators.textops import WINNOW_B, WINNOW_M
 from grokspark.plan_policy import spread
@@ -135,27 +136,20 @@ def _merged_intervals(ps: Column, k: int) -> Column:
     return F.aggregate(ps, empty, step)
 
 
-def duplicate_spans(
-    df: DataFrame,
-    min_len: int = 40,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """All duplicated-span occurrences to remove: ``(id, start, end)``
-    merged intervals (0-based codepoint offsets, end exclusive) for
-    every occurrence of a >= ``min_len``-char corpus-duplicated
-    substring except its globally first ``(doc_id, pos)``."""
+def duplicate_spans(df: DataFrame, min_len: int = 40) -> DataFrame:
+    """All duplicated-span occurrences to remove from ``(doc_id,
+    text)``: ``(doc_id, start, end)`` merged intervals (0-based
+    codepoint offsets, end exclusive) for every occurrence of a >=
+    ``min_len``-char corpus-duplicated substring except its globally
+    first ``(doc_id, pos)``."""
     if min_len < 1:
         raise ValueError(f"min_len must be >= 1, got {min_len}")
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
     k = min_len
 
-    def hashes(texts):
-        return pd.Series(span_hashes_batch(texts, k))
-
-    h_udf = pandas_udf(hashes, T.ArrayType(T.LongType()))
+    @arrow_udf("array<long>")
+    def h_udf(texts: pa.Array) -> pa.Array:
+        hashes = span_hashes_batch(texts.to_pylist(), k)
+        return pa.array(hashes, pa.list_(pa.int64()))
 
     # spread a single-split local scan across the pool BEFORE the
     # Arrow hash stage: one partition means ONE Python worker rolls
@@ -163,8 +157,8 @@ def duplicate_spans(
     # row-shuffle-before-Arrow penalty is dwarfed at this row width).
     # No-op on a cluster where scan splits >> cores.
     base = spread(
-        df.filter(F.col(text_col).isNotNull()).select(
-            F.col(id_col).alias("id"), F.col(text_col).alias("_t")
+        df.filter(F.col("text").isNotNull()).select(
+            F.col("doc_id").alias("id"), F.col("text").alias("_t")
         )
     )
     # (id, pos) packed into ONE long, o = id * 2^21 + pos: the
@@ -228,25 +222,20 @@ def duplicate_spans(
         .agg(F.array_sort(F.collect_list("pos")).alias("ps"))
         .select("id", F.explode(_merged_intervals(F.col("ps"), k)).alias("iv"))
         .select(
-            F.col("id").alias(id_col),
+            F.col("id").alias("doc_id"),
             F.col("iv.start").alias("start"),
             F.col("iv.end").alias("end"),
         )
     )
 
 
-def remove_spans(
-    df: DataFrame,
-    spans: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Cut ``(start, end)`` spans out of each document's text: the
+def remove_spans(df: DataFrame, spans: DataFrame) -> DataFrame:
+    """Cut ``(doc_id, start, end)`` spans out of each document's text: the
     input rows with ``text`` replaced by the cleaned string plus
     ``n_spans`` / ``n_removed_chars``.  The cut is one JVM ``aggregate``
     fold over the doc's sorted interval list — no Python, no shuffle
     beyond the per-doc span collect."""
-    ivs = spans.groupBy(id_col).agg(
+    ivs = spans.groupBy("doc_id").agg(
         F.array_sort(
             F.collect_list(F.struct(F.col("start"), F.col("end")))
         ).alias("_ivs"),
@@ -255,8 +244,8 @@ def remove_spans(
     )
     # spread the corpus side so the interpreted cut fold runs at full
     # width (single parquet split locally; no-op at real scale)
-    joined = spread(df).join(ivs, id_col, "left")
-    text = F.col(text_col)
+    joined = spread(df).join(ivs, "doc_id", "left")
+    text = F.col("text")
     cut = F.aggregate(
         F.col("_ivs"),
         F.struct(F.lit("").alias("s"), F.lit(0).cast("long").alias("last")),
@@ -281,7 +270,7 @@ def remove_spans(
     clean = F.when(F.col("_ivs").isNull(), text).otherwise(cut)
     return joined.select(
         *[
-            clean.alias(text_col) if c == text_col else c
+            clean.alias("text") if c == "text" else c
             for c in df.columns
         ],
         F.coalesce(F.col("n_spans"), F.lit(0)).alias("n_spans"),
@@ -289,20 +278,13 @@ def remove_spans(
     )
 
 
-def span_dedup(
-    df: DataFrame,
-    min_len: int = 40,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def span_dedup(df: DataFrame, min_len: int = 40) -> DataFrame:
     """Compose: find duplicated spans, cut all non-canonical
     occurrences.  Every >= ``min_len``-char substring occurs at most
     once in the returned corpus' concatenation of cleaned texts
     (modulo new junctions created by cutting — same caveat as the
     reference treatment)."""
-    return remove_spans(
-        df, duplicate_spans(df, min_len, text_col, id_col), text_col, id_col
-    )
+    return remove_spans(df, duplicate_spans(df, min_len))
 
 
 # ---------------------------------------------------------------------------

@@ -1,6 +1,7 @@
 """Text-analysis operators: token counting, quality scoring, language
-ID, document fingerprinting. Pure built-in expressions — no Python in
-the data path, so Catalyst fuses everything into the scan projection.
+ID, document fingerprinting. Built-in expressions, so Catalyst fuses
+them into the scan projection; winnowing alone runs a numpy kernel in
+an ``arrow_udf`` (``winnow_batch`` says why).
 
 Each operator documents its exact formula so the DuckDB oracle in
 __spark_entry__.py can reproduce it bit-for-bit (same IEEE ops in the
@@ -9,8 +10,10 @@ same order; integer outputs preferred at comparison points).
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.functions import arrow_udf
 
 from grokspark.plan_policy import SPREAD_MIN_BYTES, spread
 
@@ -315,35 +318,27 @@ def winnow_batch(texts, k: int = WINNOW_K, window: int = WINNOW_W) -> list:
     return out
 
 
-def winnow_fingerprints(
-    df: DataFrame,
-    k: int = WINNOW_K,
-    window: int = WINNOW_W,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def winnow_fingerprints(df: DataFrame) -> DataFrame:
     """Winnowing document fingerprints (Schleimer/Aiken, the MOSS
-    scheme): rolling-hash every character ``k``-gram of the normalized
-    text, slide a ``window`` over consecutive gram hashes, keep each
-    window's MINIMUM, dedupe — ``(id, fp)`` exploded, ready for an
-    inverted-index join. Guarantees: any shared substring of length >=
-    k + window - 1 yields at least one shared fingerprint, and at
-    least one gram per window survives (density ~2/(window+1)).
+    scheme) of ``(doc_id, text)``: rolling-hash every character
+    ``WINNOW_K``-gram of the normalized text, slide a ``WINNOW_W``
+    window over consecutive gram hashes, keep each window's MINIMUM,
+    dedupe — ``(id, fp)`` exploded, ready for an inverted-index join.
+    Guarantees: any shared substring of length >= k + window - 1
+    yields at least one shared fingerprint, and at least one gram per
+    window survives (density ~2/(window+1)).
 
     Executed as an Arrow-batched numpy kernel (``winnow_batch``) —
     see its docstring for why the pure-expression form is unusable
     (interpreted HOF lambdas make it cubic). Docs shorter than k chars
     get the whole-text hash as their single fingerprint."""
-    import pandas as pd
-    from pyspark.sql import types as T
-    from pyspark.sql.functions import pandas_udf
 
-    def fps(texts):
-        return pd.Series(winnow_batch(texts, k, window))
+    @arrow_udf("array<long>")
+    def fps(texts: pa.Array) -> pa.Array:
+        return pa.array(winnow_batch(texts.to_pylist()), pa.list_(pa.int64()))
 
-    fps_udf = pandas_udf(fps, T.ArrayType(T.LongType()))
     return df.select(
-        F.col(id_col).alias("id"), F.explode(fps_udf(F.col(text_col))).alias("fp")
+        F.col("doc_id").alias("id"), F.explode(fps(F.col("text"))).alias("fp")
     )
 
 
@@ -392,10 +387,6 @@ def winnow_pairs(
     df: DataFrame,
     min_shared: int = 2,
     max_fp_df: "int | None" = None,
-    k: int = WINNOW_K,
-    window: int = WINNOW_W,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Near-duplicate pairs by shared winnowing fingerprints:
     ``(id_a, id_b, n_shared)`` for pairs sharing >= ``min_shared``
@@ -419,7 +410,7 @@ def winnow_pairs(
     edge set; on a real cluster, a durable checkpoint/table plays the
     same role) instead of re-running the Python fingerprint kernel per
     branch."""
-    fps = winnow_fingerprints(df, k, window, text_col, id_col).localCheckpoint()
+    fps = winnow_fingerprints(df).localCheckpoint()
     if max_fp_df is not None:
         keep = (
             fps.groupBy("fp")

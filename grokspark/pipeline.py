@@ -472,7 +472,7 @@ class GrokPipeline:
     def _validate_ranged_input(self, seq_df: DataFrame) -> list[str]:
         """Ranged mode re-plans the scan per file-range, so the input
         must be (at most a column-pruning projection over) a bare
-        parquet relation — a filter, computed column, mapInPandas
+        parquet relation — a filter, computed column, mapInArrow
         ingest (read_raw_lines), or other format would be silently
         dropped by the per-range re-read. Fail loudly instead:
         materialize such inputs to parquet first, or leave range_units

@@ -57,10 +57,10 @@ def read_raw_lines(
     library (who has plain ``*.log`` files, not pre-tokenized tables)
     plugs straight into grokspark.
 
-    Encoding runs vectorized in mapInPandas (one Arrow pass, pandas
-    column ops — no per-row Python loop; the same place a real
-    tokenizer would run). ``source`` is a fixed label; if None, each
-    row gets its file's basename sans extension.
+    Encoding runs in one mapInArrow stage (each Arrow batch crosses
+    into Python and back once; the same place a real tokenizer would
+    run). ``source`` is a fixed label; if None, each row gets its
+    file's basename sans extension.
 
     ``id_mode`` picks the doc_id scheme:
 
@@ -81,46 +81,45 @@ def read_raw_lines(
     import hashlib
     import os
 
-    import pandas as pd
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    from grokspark.datagen import SEQUENCES_SCHEMA
 
     if id_mode not in ("content", "split"):
         raise ValueError(f"id_mode must be 'content' or 'split', got {id_mode!r}")
     lines = spark.read.text(path).withColumn("_file", F.input_file_name())
-    fixed_source = source
+    schema = to_arrow_schema(StructType.fromDDL(SEQUENCES_SCHEMA))
 
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def encode(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         from pyspark import TaskContext
 
         pid = TaskContext.get().partitionId() if TaskContext.get() else 0
         offset = 0
-        for pdf in batches:
-            values = pdf["value"].fillna("")
-            encoded = values.str.encode("utf-8")
-            basenames = pdf["_file"].map(os.path.basename)
+        for batch in batches:
+            values = [v or "" for v in batch.column("value").to_pylist()]
+            names = [os.path.basename(f) for f in batch.column("_file").to_pylist()]
             if id_mode == "content":
-                keys = (basenames + "\x00" + values).str.encode("utf-8")
-                ids = basenames.str.cat(
-                    keys.map(lambda b: hashlib.sha1(b).hexdigest()), sep="#"
-                )
+                ids = [
+                    f"{b}#" + hashlib.sha1((b + v).encode("utf-8")).hexdigest()
+                    for b, v in zip(names, values)
+                ]
             else:
-                idx = pd.RangeIndex(offset, offset + len(pdf))
-                ids = basenames.str.cat(
-                    pd.Series(f"{pid}-" + idx.astype(str), index=pdf.index), sep="#"
-                )
-                offset += len(pdf)
-            if fixed_source is not None:
-                sources = pd.Series(fixed_source, index=pdf.index)
-            else:
-                sources = basenames.str.rsplit(".", n=1).str[0]
-            yield pd.DataFrame(
+                ids = [f"{b}#{pid}-{offset + j}" for j, b in enumerate(names)]
+                offset += len(values)
+            tokens = [list(v.encode("utf-8")) for v in values]
+            yield pa.RecordBatch.from_pydict(
                 {
                     "doc_id": ids,
-                    "tokens": encoded.map(list),
-                    "n_tok": encoded.str.len().astype("int32"),
-                    "source": sources,
-                }
+                    "tokens": tokens,
+                    "n_tok": [len(t) for t in tokens],
+                    "source": [
+                        b.rsplit(".", 1)[0] if source is None else source
+                        for b in names
+                    ],
+                },
+                schema=schema,
             )
 
-    return lines.mapInPandas(
-        encode, schema="doc_id string, tokens array<int>, n_tok int, source string"
-    )
+    return lines.mapInArrow(encode, SEQUENCES_SCHEMA)

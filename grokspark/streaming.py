@@ -111,6 +111,18 @@ def with_event_time(df: DataFrame) -> DataFrame:
     )
 
 
+def _router(spark: SparkSession, registry: Optional[GrokRegistry]):
+    """The routes dimension and the router parse UDF (over tokens) for
+    the generator's patterns, compiled from ``registry`` (the default
+    patterns when None)."""
+    registry = registry or GrokRegistry.with_default_patterns()
+    compiled = {
+        name: registry.compile(expr, with_alias_only=True)
+        for name, expr in datagen.pattern_exprs().items()
+    }
+    return datagen.routes_df(spark), grok_parse_router_udf(compiled, from_tokens=True)
+
+
 def stream_windowed_route_counts(
     stream_df: DataFrame,
     registry: Optional[GrokRegistry] = None,
@@ -119,14 +131,7 @@ def stream_windowed_route_counts(
 ) -> DataFrame:
     """Watermarked tumbling-window per-(route, matched) counts — the
     streaming twin of pipeline.route_match_counts."""
-    spark = stream_df.sparkSession
-    registry = registry or GrokRegistry.with_default_patterns()
-    routes = datagen.routes_df(spark)
-    compiled = {
-        name: registry.compile(expr, with_alias_only=True)
-        for name, expr in datagen.pattern_exprs().items()
-    }
-    parse = grok_parse_router_udf(compiled, from_tokens=True)
+    routes, parse = _router(stream_df.sparkSession, registry)
     enriched = (
         with_event_time(stream_df)
         .join(routes, "source", "left")
@@ -197,14 +202,7 @@ def stream_route_sinks(
     Returns a started StreamingQuery; callers await termination. Read
     results back with ``spark.read.parquet(f"{out_dir}/sinks")`` —
     partition discovery exposes batch_id/route/pattern_name columns."""
-    spark = stream_df.sparkSession
-    registry = registry or GrokRegistry.with_default_patterns()
-    compiled = {
-        name: registry.compile(expr, with_alias_only=True)
-        for name, expr in datagen.pattern_exprs().items()
-    }
-    parse = grok_parse_router_udf(compiled, from_tokens=True)
-    routes = datagen.routes_df(spark)
+    routes, parse = _router(stream_df.sparkSession, registry)
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         import os

@@ -113,8 +113,12 @@ def test_route_counts_plan_shape(spark):
         l for l in below_parse.splitlines() if "Exchange" in l and "BroadcastExchange" not in l
     ]
     assert not shuffles_below, shuffles_below
-    # the MapInArrow node's output: per-partition counts, no fields map
-    args = re.search(r"\(\d+\) MapInArrow\n.*\nArguments: .*, \[([^\]]*)\]", plan)
+    # the parse MapInArrow's output: per-partition counts, no fields map.
+    # It is the topmost one; the generator below it is another.
+    parse_id = re.search(r"MapInArrow \((\d+)\)", tree).group(1)
+    args = re.search(
+        rf"\({parse_id}\) MapInArrow\n.*\nArguments: .*, \[([^\]]*)\]", plan
+    )
     assert args, plan
     assert [a.split("#")[0] for a in args.group(1).split(", ")] == ["route", "matched", "n"]
     # the executed plan neither sorts nor range-partitions the counts
